@@ -1,13 +1,13 @@
 """HTML -> text extraction for web-crawl curation pipelines.
 
 The stage BEFORE everything else in a crawl pipeline: raw HTML from a
-WARC/crawl dump becomes plain text (the form WET files ship pre-extracted
-— sources/wet.py reads those; this operator covers corpora that arrive as
-raw HTML). Reference scope: the reference ETL consumes pre-extracted
-exports, so this is extension surface for the LLM-data path, mirroring
-the C4/CCNet/RefinedWeb extraction stage in spirit: drop script/style/
-head machinery, turn block boundaries into newlines, strip remaining
-markup, decode the common entities, and normalize whitespace.
+WARC/crawl dump becomes plain text (the form WET files ship
+pre-extracted; this operator covers corpora that arrive as raw HTML).
+Reference scope: the reference ETL consumes pre-extracted exports, so
+this is extension surface for the LLM-data path, mirroring the
+C4/CCNet/RefinedWeb extraction stage in spirit: drop script/style/head
+machinery, turn block boundaries into newlines, strip remaining markup,
+decode the common entities, and normalize whitespace.
 
 Everything is a chain of native ``regexp_replace`` Column expressions —
 JVM-side, whole-stage codegen, zero Python per row — so extracting text

@@ -1,14 +1,10 @@
-"""REAL media decode kernels for the formats decodable without external
-libraries: PPM/PGM (netpbm), uncompressed 24-bit BMP, PNG (full
-non-interlaced 8-bit decode: stdlib ``zlib`` inflate + vectorized
-scanline unfiltering, all five filter types, gray/RGB/palette/alpha
-color types) — pure numpy — and WAV/PCM via the stdlib ``wave`` module.
-JPEG/MP4 still need PIL / ffmpeg (absent in this environment) and keep
-the injectable-stub path (operators/multimodal.set_decoder); these
-kernels exist so the multimodal surface has an actually-executing
-decode for the formats where no third-party dependency is required.
+"""REAL media decode kernels for the one image family decodable without
+external libraries: PPM/PGM (netpbm, binary and ASCII) via numpy. Every
+other format (JPEG/PNG/GIF/MP4/audio) needs a real codec library and
+routes through the injectable decoder (operators/multimodal.set_decoder);
+``sniff`` reports those as 'unknown'.
 
-All functions are plain bytes -> numpy/dict kernels, called from Arrow
+All functions are plain bytes -> numpy kernels, called from Arrow
 ``mapInPandas`` batches (operators/multimodal.py) — no Spark imports
 here, so they are unit-testable without a session and reusable from any
 executor context.
@@ -16,46 +12,15 @@ executor context.
 
 from __future__ import annotations
 
-import io
-import struct
-import wave
-import zlib
-
 import numpy as np
-
-from .jpeg import decode_jpeg, encode_jpeg  # noqa: F401  (codec family)
-
-
-PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
 def sniff(content: bytes) -> str:
-    """'ppm' | 'pgm' | 'bmp' | 'png' | 'wav' | 'unknown' from magic
-    bytes."""
+    """'ppm' | 'pgm' | 'unknown' from the netpbm magic bytes."""
     if content[:2] in (b"P6", b"P3"):
         return "ppm"
     if content[:2] in (b"P5", b"P2"):
         return "pgm"
-    if content[:2] == b"BM":
-        return "bmp"
-    if content[:8] == PNG_SIGNATURE:
-        return "png"
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
-    if content[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if content[4:8] == b"ftyp":
-        return "mp4"
-    if content[:4] == b"fLaC":
-        return "flac"
-    if content[:3] == b"ID3" or (
-        len(content) > 2
-        and content[0] == 0xFF
-        and (content[1] & 0xE0) == 0xE0
-    ):
-        return "mp3"
-    if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-        return "wav"
     return "unknown"
 
 
@@ -103,751 +68,3 @@ def encode_ppm(arr: np.ndarray) -> bytes:
         return b"P5\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
     h, w, _ = arr.shape
     return b"P6\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
-
-
-def decode_bmp(data: bytes) -> np.ndarray:
-    """Uncompressed 24-bit BI_RGB BMP -> (h, w, 3) uint8 (RGB order)."""
-    if data[:2] != b"BM":
-        raise ValueError("not a BMP")
-    pixel_off = struct.unpack_from("<I", data, 10)[0]
-    header_size = struct.unpack_from("<I", data, 14)[0]
-    if header_size < 40:
-        raise ValueError("BMP core header not supported")
-    w, h = struct.unpack_from("<ii", data, 18)
-    planes, bpp = struct.unpack_from("<HH", data, 26)
-    compression = struct.unpack_from("<I", data, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise ValueError("only uncompressed 24-bit BMP supported")
-    flip = h > 0  # positive height = bottom-up row order
-    h = abs(h)
-    row_bytes = (w * 3 + 3) & ~3  # rows pad to 4 bytes
-    rows = np.frombuffer(
-        data, dtype=np.uint8, count=row_bytes * h, offset=pixel_off
-    ).reshape((h, row_bytes))[:, : w * 3].reshape((h, w, 3))
-    if flip:
-        rows = rows[::-1]
-    return rows[..., ::-1]  # BGR -> RGB
-
-
-def _png_chunks(data: bytes):
-    """Yield (type, payload) for each chunk; stops at IEND. Raises on a
-    truncated stream so corrupt blobs surface as decode errors (callers
-    degrade them to format='corrupt')."""
-    i = len(PNG_SIGNATURE)
-    while i + 8 <= len(data):
-        (length,) = struct.unpack_from(">I", data, i)
-        ctype = data[i + 4 : i + 8]
-        payload = data[i + 8 : i + 8 + length]
-        if len(payload) < length:
-            raise ValueError("truncated PNG chunk")
-        yield ctype, payload
-        if ctype == b"IEND":
-            return
-        i += 12 + length  # length + type + payload + crc
-    raise ValueError("missing IEND")
-
-
-def _png_unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
-    """Reverse PNG scanline filtering: raw is (h, 1 + stride) uint8
-    (filter byte + filtered row) -> (h, stride) reconstructed bytes.
-
-    None/Sub/Up rows reconstruct fully vectorized (Sub via a cumsum over
-    the bpp residue classes); Average and Paeth need the left neighbor
-    of the CURRENT row, so they walk pixel columns — w steps of
-    bpp-vector numpy ops, not per-byte Python."""
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint16)
-    for y in range(h):
-        ftype = int(raw[y, 0])
-        row = raw[y, 1:].astype(np.uint16)
-        if ftype == 0:  # None
-            rec = row
-        elif ftype == 1:  # Sub: cumsum along each bpp residue class
-            rec = np.cumsum(
-                row.reshape(-1, bpp).astype(np.uint32), axis=0
-            ) % 256
-            rec = rec.reshape(-1).astype(np.uint16)
-        elif ftype == 2:  # Up
-            rec = (row + prev) % 256
-        elif ftype == 3:  # Average
-            rec = np.empty(stride, dtype=np.uint16)
-            left = np.zeros(bpp, dtype=np.uint16)
-            for x in range(0, stride, bpp):
-                rec[x : x + bpp] = (
-                    row[x : x + bpp] + (left + prev[x : x + bpp]) // 2
-                ) % 256
-                left = rec[x : x + bpp]
-        elif ftype == 4:  # Paeth
-            rec = np.empty(stride, dtype=np.uint16)
-            left = np.zeros(bpp, dtype=np.int32)
-            ul = np.zeros(bpp, dtype=np.int32)
-            for x in range(0, stride, bpp):
-                up = prev[x : x + bpp].astype(np.int32)
-                p = left + up - ul
-                pa, pb, pc = (
-                    np.abs(p - left), np.abs(p - up), np.abs(p - ul)
-                )
-                pred = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul)
-                )
-                rec[x : x + bpp] = (row[x : x + bpp] + pred) % 256
-                left = rec[x : x + bpp].astype(np.int32)
-                ul = up
-            del ul
-        else:
-            raise ValueError(f"bad PNG filter type {ftype}")
-        out[y] = rec.astype(np.uint8)
-        prev = rec
-    return out
-
-
-def decode_png(data: bytes) -> np.ndarray:
-    """Non-interlaced 8-bit PNG -> uint8 array: (h, w) for grayscale,
-    (h, w, 3) for RGB / palette, (h, w, 2|4) when an alpha channel is
-    present. Stdlib zlib inflate, all five scanline filters, PLTE lookup
-    for color type 3. Interlaced (Adam7) and 1/2/4/16-bit depths raise —
-    at curation scale those are rare enough to route to the injectable
-    kernel."""
-    if data[:8] != PNG_SIGNATURE:
-        raise ValueError("not a PNG")
-    ihdr = None
-    palette = None
-    idat = bytearray()
-    for ctype, payload in _png_chunks(data):
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", payload)
-        elif ctype == b"PLTE":
-            palette = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.extend(payload)
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, color_type, _comp, _filt, interlace = ihdr
-    if interlace:
-        raise ValueError("interlaced PNG not supported")
-    if depth != 8:
-        raise ValueError(f"PNG bit depth {depth} not supported")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
-    if channels is None:
-        raise ValueError(f"bad PNG color type {color_type}")
-    stride = w * channels
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG pixel data length mismatch")
-    rec = _png_unfilter(raw.reshape(h, stride + 1), h, stride, channels)
-    if color_type == 3:
-        if palette is None:
-            raise ValueError("palette PNG missing PLTE")
-        return palette[rec.reshape(h, w)]
-    if channels == 1:
-        return rec.reshape(h, w)
-    return rec.reshape(h, w, channels)
-
-
-def encode_png(arr: np.ndarray) -> bytes:
-    """uint8 array -> non-interlaced 8-bit PNG bytes. (h, w) -> gray,
-    (h, w, 2) -> gray+alpha, (h, w, 3) -> RGB, (h, w, 4) -> RGBA.
-    Filter type 0 per scanline (correctness over ratio — re-encoded
-    curation thumbnails are small)."""
-    arr = np.ascontiguousarray(arr.astype(np.uint8))
-    if arr.ndim == 3 and arr.shape[2] == 1:
-        arr = arr[..., 0]  # explicit-channel-axis grayscale
-    if arr.ndim == 2:
-        h, w = arr.shape
-        channels, color_type = 1, 0
-    else:
-        h, w, channels = arr.shape
-        if channels not in (2, 3, 4):
-            raise ValueError(f"unsupported channel count {channels}")
-        color_type = {2: 4, 3: 2, 4: 6}[channels]
-    scan = np.zeros((h, 1 + w * channels), dtype=np.uint8)
-    scan[:, 1:] = arr.reshape(h, w * channels)
-
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        body = ctype + payload
-        return (
-            struct.pack(">I", len(payload))
-            + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        PNG_SIGNATURE
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(scan.tobytes(), 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _lzw_decode(blocks: bytes, min_code_size: int) -> list[int]:
-    """GIF-variant LZW: little-endian bit packing, clear/end codes,
-    growing code width up to 12 bits. Returns palette indices."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out: list[int] = []
-    table: list[list[int]] = []
-    code_size = 0
-    prev: list[int] | None = None
-
-    def reset() -> None:
-        nonlocal table, code_size, prev
-        table = [[i] for i in range(clear)] + [[], []]
-        code_size = min_code_size + 1
-        prev = None
-
-    reset()
-    acc = 0
-    nbits = 0
-    for byte in blocks:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= code_size:
-            code = acc & ((1 << code_size) - 1)
-            acc >>= code_size
-            nbits -= code_size
-            if code == clear:
-                reset()
-                continue
-            if code == end:
-                return out
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + [entry[0]])
-            else:  # the KwKwK case
-                entry = prev + [prev[0]]
-                table.append(entry)
-            out.extend(entry)
-            prev = entry
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-    return out
-
-
-def _lzw_encode(indices: list[int], min_code_size: int) -> bytes:
-    """GIF-variant LZW compressor (the encoder twin of _lzw_decode)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    code_size = min_code_size + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    def fresh() -> dict[tuple[int, ...], int]:
-        return {(i,): i for i in range(clear)}
-
-    table = fresh()
-    next_code = end + 1
-    emit(clear)
-    buf: tuple[int, ...] = ()
-    for idx in indices:
-        cand = buf + (idx,)
-        if cand in table:
-            buf = cand
-            continue
-        emit(table[buf])
-        table[cand] = next_code
-        next_code += 1
-        if next_code == (1 << code_size) + 1 and code_size < 12:
-            code_size += 1
-        if next_code >= 4096:
-            emit(clear)
-            code_size = min_code_size + 1
-            table = fresh()
-            next_code = end + 1
-        buf = (idx,)
-    if buf:
-        emit(table[buf])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def decode_gif(data: bytes) -> tuple[list[np.ndarray], list[int]]:
-    """GIF87a/89a -> (frames, delays): each frame a fully-composited
-    (h, w, 3) uint8 RGB canvas, delays in centiseconds. Handles global
-    and local color tables, interlacing, transparency, and disposal
-    methods 0-3 (unspecified/keep/restore-background/restore-previous).
-    Malformed streams raise (callers degrade to format='corrupt')."""
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    w, h = struct.unpack_from("<HH", data, 6)
-    packed, bg_idx, _aspect = struct.unpack_from("<BBB", data, 10)
-    i = 13
-    global_pal = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        global_pal = np.frombuffer(data, np.uint8, n * 3, i).reshape(-1, 3)
-        i += n * 3
-    canvas = np.zeros((h, w, 3), dtype=np.uint8)
-    if global_pal is not None and bg_idx < len(global_pal):
-        canvas[:] = global_pal[bg_idx]
-    frames: list[np.ndarray] = []
-    delays: list[int] = []
-    transparent: int | None = None
-    disposal = 0
-    delay = 0
-    while i < len(data):
-        block = data[i]
-        i += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            label = data[i]
-            i += 1
-            if label == 0xF9:  # graphic control
-                size = data[i]
-                gpacked = data[i + 1]
-                delay = struct.unpack_from("<H", data, i + 2)[0]
-                tidx = data[i + 4]
-                disposal = (gpacked >> 2) & 0x07
-                transparent = tidx if gpacked & 1 else None
-                i += 1 + size
-            while data[i]:  # skip (remaining) sub-blocks
-                i += 1 + data[i]
-            i += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        left, top, fw, fh = struct.unpack_from("<HHHH", data, i)
-        fpacked = data[i + 8]
-        i += 9
-        pal = global_pal
-        if fpacked & 0x80:
-            n = 2 << (fpacked & 0x07)
-            pal = np.frombuffer(data, np.uint8, n * 3, i).reshape(-1, 3)
-            i += n * 3
-        if pal is None:
-            raise ValueError("GIF frame without a color table")
-        min_code = data[i]
-        i += 1
-        lzw = bytearray()
-        while data[i]:
-            size = data[i]
-            lzw.extend(data[i + 1 : i + 1 + size])
-            i += 1 + size
-        i += 1
-        idx = np.array(
-            _lzw_decode(bytes(lzw), min_code)[: fw * fh], dtype=np.int32
-        )
-        if len(idx) < fw * fh:
-            raise ValueError("truncated GIF frame")
-        grid = idx.reshape(fh, fw)
-        if fpacked & 0x40:  # interlaced: rows arrive in 4 passes
-            deint = np.empty_like(grid)
-            src = 0
-            for start, step in _GIF_INTERLACE_PASSES:
-                rows = range(start, fh, step)
-                for r in rows:
-                    deint[r] = grid[src]
-                    src += 1
-            grid = deint
-        before = canvas.copy() if disposal == 3 else None
-        region = canvas[top : top + fh, left : left + fw]
-        opaque = (
-            grid != transparent if transparent is not None
-            else np.ones_like(grid, dtype=bool)
-        )
-        region[opaque] = pal[grid[opaque]]
-        frames.append(canvas.copy())
-        delays.append(delay)
-        if disposal == 2:
-            # restore-background uses the GLOBAL table's background
-            # color — a frame-local palette does not redefine it
-            bg = (
-                global_pal[bg_idx]
-                if global_pal is not None and bg_idx < len(global_pal)
-                else 0
-            )
-            canvas[top : top + fh, left : left + fw] = bg
-        elif disposal == 3 and before is not None:
-            canvas = before
-        # a GCE governs exactly ONE image block (GIF89a spec): reset so
-        # its transparency/disposal/delay never leak into later frames
-        transparent = None
-        disposal = 0
-        delay = 0
-    if not frames:
-        raise ValueError("GIF contains no image data")
-    return frames, delays
-
-
-def encode_gif(
-    frames: list[np.ndarray], delays: list[int] | None = None
-) -> bytes:
-    """(h, w, 3) uint8 frames -> animated GIF89a with one global color
-    table built from the frames' exact colors (raises beyond 256 — this
-    encoder re-packages already-palettized pixels, e.g. sampled frames
-    of a decoded GIF; it does not quantize)."""
-    h, w, _ = frames[0].shape
-    colors = np.unique(
-        np.concatenate([f.reshape(-1, 3) for f in frames]), axis=0
-    )
-    if len(colors) > 256:
-        raise ValueError("encode_gif does not quantize >256 colors")
-    lut = {tuple(c): i for i, c in enumerate(colors)}
-    depth = max(1, (len(colors) - 1).bit_length())
-    pal = np.zeros(((2 << (depth - 1)), 3), dtype=np.uint8)
-    pal[: len(colors)] = colors
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += struct.pack("<BBB", 0x80 | (depth - 1), 0, 0)
-    out += pal.tobytes()
-    delays = delays or [0] * len(frames)
-    min_code = max(2, depth)
-    for frame, delay in zip(frames, delays):
-        out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay) + b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        out.append(min_code)
-        idx = [lut[tuple(px)] for px in frame.reshape(-1, 3)]
-        packed = _lzw_encode(idx, min_code)
-        for off in range(0, len(packed), 255):
-            chunk = packed[off : off + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out.append(0x3B)
-    return bytes(out)
-
-
-def _mp4_boxes(data: bytes, start: int, end: int):
-    """Yield (type, body_start, body_end) for ISO-BMFF boxes in a
-    range; handles 64-bit largesize boxes."""
-    i = start
-    while i + 8 <= end:
-        (size,) = struct.unpack_from(">I", data, i)
-        btype = data[i + 4 : i + 8]
-        body = i + 8
-        if size == 1:  # 64-bit largesize
-            (size,) = struct.unpack_from(">Q", data, i + 8)
-            body = i + 16
-        elif size == 0:  # to end of enclosing box
-            size = end - i
-        if size < 8 or i + size > end:
-            raise ValueError("malformed MP4 box")
-        yield btype, body, i + size
-        i += size
-
-
-def parse_mp4_meta(data: bytes) -> dict:
-    """ISO-BMFF (MP4/MOV) structural metadata WITHOUT a media decoder:
-    walk ftyp/moov boxes for the movie duration (mvhd timescale ticks,
-    versions 0 and 1) and the first video track's pixel dimensions
-    (tkhd 16.16 fixed point, track picked by its hdlr handler type).
-    Frame DECODE still needs a real codec library (the injectable
-    kernel); the container metadata a curation pipeline filters on —
-    duration, resolution, track inventory — is real."""
-    if data[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF file")
-    meta: dict = {
-        "brand": data[8:12].decode("ascii", "replace"),
-        "duration_s": None,
-        "width": None,
-        "height": None,
-        "n_tracks": 0,
-        "track_types": [],
-    }
-    for btype, b0, b1 in _mp4_boxes(data, 0, len(data)):
-        if btype != b"moov":
-            continue
-        for t, t0, t1 in _mp4_boxes(data, b0, b1):
-            if t == b"mvhd":
-                version = data[t0]
-                if version == 1:
-                    timescale, duration = struct.unpack_from(
-                        ">IQ", data, t0 + 20
-                    )
-                else:
-                    timescale, duration = struct.unpack_from(
-                        ">II", data, t0 + 12
-                    )
-                if timescale:
-                    meta["duration_s"] = duration / timescale
-            elif t == b"trak":
-                meta["n_tracks"] += 1
-                tk_w = tk_h = None
-                handler = None
-                for s, s0, s1 in _mp4_boxes(data, t0, t1):
-                    if s == b"tkhd":
-                        version = data[s0]
-                        # width sits at body offset 76 (v0) / 88 (v1):
-                        # fullbox header + times/ids + reserved/layer/
-                        # volume block + the 36-byte matrix
-                        off = s0 + (88 if version == 1 else 76)
-                        wfx, hfx = struct.unpack_from(">II", data, off)
-                        tk_w, tk_h = wfx >> 16, hfx >> 16
-                    elif s == b"mdia":
-                        for m, m0, m1 in _mp4_boxes(data, s0, s1):
-                            if m == b"hdlr":
-                                handler = data[m0 + 8 : m0 + 12].decode(
-                                    "ascii", "replace"
-                                )
-                if handler:
-                    meta["track_types"].append(handler)
-                if handler == "vide" and meta["width"] is None:
-                    meta["width"], meta["height"] = tk_w, tk_h
-    if meta["n_tracks"] == 0:
-        raise ValueError("MP4 has no moov/trak metadata")
-    return meta
-
-
-def parse_flac_meta(data: bytes) -> dict:
-    """FLAC STREAMINFO metadata (no audio decode): sample rate,
-    channels, bit depth, total samples -> EXACT duration. STREAMINFO is
-    the mandatory first metadata block after the 'fLaC' magic."""
-    if data[:4] != b"fLaC":
-        raise ValueError("not a FLAC stream")
-    i = 4
-    while i + 4 <= len(data):
-        header = data[i]
-        btype = header & 0x7F
-        (size,) = struct.unpack(">I", b"\x00" + data[i + 1 : i + 4])
-        body = data[i + 4 : i + 4 + size]
-        if btype == 0:  # STREAMINFO
-            if len(body) < 18:
-                raise ValueError("truncated STREAMINFO")
-            # bits 80..: 20-bit rate, 3-bit channels-1, 5-bit bps-1,
-            # 36-bit total samples
-            b10 = int.from_bytes(body[10:18], "big")
-            rate = (b10 >> 44) & 0xFFFFF
-            channels = ((b10 >> 41) & 0x07) + 1
-            bps = ((b10 >> 36) & 0x1F) + 1
-            total = b10 & ((1 << 36) - 1)
-            if rate == 0:
-                raise ValueError("FLAC sample rate 0")
-            return {
-                "sample_rate": rate,
-                "channels": channels,
-                "bits_per_sample": bps,
-                "n_frames": total,
-                "duration_s": total / rate,
-            }
-        if header & 0x80:  # last-metadata-block flag, STREAMINFO missing
-            break
-        i += 4 + size
-    raise ValueError("FLAC missing STREAMINFO")
-
-
-# MPEG-1 Layer III bitrate (kbps) and sample-rate tables
-_MP3_BITRATES = {
-    (1, 3): [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224,
-             256, 320, 0],
-    (2, 3): [0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144,
-             160, 0],
-}
-_MP3_RATES = {1: [44100, 48000, 32000, 0], 2: [22050, 24000, 16000, 0]}
-
-
-def parse_mp3_meta(data: bytes) -> dict:
-    """MP3 stream metadata from frame headers (no audio decode): skips
-    an ID3v2 tag, syncs to the first MPEG-1/2 Layer III frame, then
-    WALKS every frame header (CBR and VBR both exact) summing
-    per-frame sample counts -> duration. Raises if no frame syncs."""
-    i = 0
-    if data[:3] == b"ID3":  # ID3v2: 4-byte syncsafe size at offset 6
-        size = 0
-        for b in data[6:10]:
-            size = (size << 7) | (b & 0x7F)
-        i = 10 + size
-    first = None
-    n_frames = 0
-    total_samples = 0
-    while i + 4 <= len(data):
-        if data[i] != 0xFF or (data[i + 1] & 0xE0) != 0xE0:
-            if first is None:
-                i += 1  # still hunting for sync
-                continue
-            break  # trailing junk/tag after the last frame
-        h = struct.unpack_from(">I", data, i)[0]
-        version = (h >> 19) & 0x03  # 3 = MPEG-1, 2 = MPEG-2
-        layer = (h >> 17) & 0x03  # 1 = Layer III
-        if version not in (2, 3) or layer != 1:
-            if first is None:
-                i += 1
-                continue
-            break
-        mv = 1 if version == 3 else 2
-        bitrate = _MP3_BITRATES[(mv, 3)][(h >> 12) & 0x0F] * 1000
-        rate = _MP3_RATES[mv][(h >> 10) & 0x03]
-        padding = (h >> 9) & 0x01
-        if not bitrate or not rate:
-            if first is None:
-                i += 1
-                continue
-            break
-        spf = 1152 if mv == 1 else 576  # samples per Layer III frame
-        frame_len = spf // 8 * bitrate // rate + padding
-        if first is None:
-            first = {
-                "sample_rate": rate,
-                "channels": 1 if ((h >> 6) & 0x03) == 3 else 2,
-                "mpeg_version": mv,
-            }
-        n_frames += 1
-        total_samples += spf
-        i += max(frame_len, 4)
-    if first is None:
-        raise ValueError("no MP3 frame sync found")
-    first["n_frames"] = n_frames
-    first["duration_s"] = total_samples / first["sample_rate"]
-    return first
-
-
-def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
-    """WAV/PCM -> ((n_frames, channels) int array, sample_rate)."""
-    with wave.open(io.BytesIO(data), "rb") as f:
-        rate = f.getframerate()
-        n = f.getnframes()
-        width = f.getsampwidth()
-        channels = f.getnchannels()
-        raw = f.readframes(n)
-    dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(width)
-    if dtype is None:
-        raise ValueError(f"unsupported sample width {width}")
-    arr = np.frombuffer(raw, dtype=dtype).reshape((-1, channels))
-    return arr, rate
-
-
-def real_decode(content: bytes, kind: str) -> dict | None:
-    """Decode metadata for sniffable formats, None when a real decode
-    needs a library this environment lacks (caller falls back to the
-    injectable stub): {'width', 'height'} for images; for WAV the
-    convention is width=n_frames, height=sample_rate (documented in
-    operators/multimodal.extract_features)."""
-    fmt = sniff(content)
-    if fmt in ("ppm", "pgm"):
-        arr = decode_pnm(content)
-        return {"width": int(arr.shape[1]), "height": int(arr.shape[0])}
-    if fmt == "bmp":
-        arr = decode_bmp(content)
-        return {"width": int(arr.shape[1]), "height": int(arr.shape[0])}
-    if fmt == "png":
-        arr = decode_png(content)
-        return {"width": int(arr.shape[1]), "height": int(arr.shape[0])}
-    if fmt == "gif":
-        frames, _ = decode_gif(content)
-        return {
-            "width": int(frames[0].shape[1]),
-            "height": int(frames[0].shape[0]),
-        }
-    if fmt == "jpeg":
-        arr = decode_jpeg(content)
-        return {"width": int(arr.shape[1]), "height": int(arr.shape[0])}
-    if fmt == "mp4":
-        meta = parse_mp4_meta(content)
-        return {"width": meta["width"], "height": meta["height"]}
-    if fmt == "flac":
-        meta = parse_flac_meta(content)
-        return {"width": meta["n_frames"], "height": meta["sample_rate"]}
-    if fmt == "mp3":
-        meta = parse_mp3_meta(content)
-        return {"width": meta["n_frames"], "height": meta["sample_rate"]}
-    if fmt == "wav":
-        arr, rate = decode_wav(content)
-        return {"width": int(arr.shape[0]), "height": int(rate)}
-    return None
-
-
-def resize_nearest(arr: np.ndarray, max_px: int) -> np.ndarray:
-    """Nearest-neighbor downscale so max(h, w) <= max_px (no-op when
-    already small enough). Pure-index slicing — no interpolation lib."""
-    h, w = arr.shape[:2]
-    scale = max(h, w) / max_px
-    if scale <= 1:
-        return arr
-    nh, nw = max(1, int(h / scale)), max(1, int(w / scale))
-    ys = (np.arange(nh) * (h / nh)).astype(int)
-    xs = (np.arange(nw) * (w / nw)).astype(int)
-    return arr[ys][:, xs]
-
-
-def audio_stats(arr: np.ndarray, rate: int) -> dict:
-    """duration / RMS / zero-crossing-rate over the first channel."""
-    mono = arr[:, 0].astype(np.float64)
-    n = len(mono)
-    zc = int(np.count_nonzero(np.diff(np.signbit(mono)))) if n > 1 else 0
-    return {
-        "n_frames": n,
-        "sample_rate": rate,
-        "duration_s": n / rate if rate else 0.0,
-        "rms": float(np.sqrt(np.mean(mono**2))) if n else 0.0,
-        "zero_crossing_rate": zc / (n - 1) if n > 1 else 0.0,
-    }
-
-
-def dhash64(arr: np.ndarray) -> int:
-    """64-bit difference hash (dHash): grayscale -> 9x8 nearest-neighbor
-    thumbnail -> horizontal gradient sign bits. Survives re-encoding,
-    resizing, and small edits — the standard cheap perceptual image
-    fingerprint. Bit i (row r, col c, i = r*8 + c) is set iff
-    thumb[r, c] < thumb[r, c+1]."""
-    if arr.ndim == 3:
-        arr = arr.astype(np.float64).mean(axis=2)
-    h, w = arr.shape
-    ys = (np.arange(8) * (h / 8)).astype(int)
-    xs = (np.arange(9) * (w / 9)).astype(int)
-    thumb = arr[ys][:, xs].astype(np.float64)
-    bits = (thumb[:, :-1] < thumb[:, 1:]).flatten()
-    out = 0
-    for i, b in enumerate(bits):
-        if b:
-            out |= 1 << i
-    if out >= 1 << 63:  # two's complement so the value fits Spark's LONG
-        out -= 1 << 64
-    return out
-
-
-def audio_hash64(
-    arr: np.ndarray, n_frames: int = 9, n_bands: int = 8
-) -> int | None:
-    """64-bit spectral fingerprint (chromaprint-style, pure numpy): the
-    first channel is cut into ``n_frames`` equal frames, each frame's
-    FFT magnitude is pooled into ``n_bands`` log-spaced energy bands,
-    and bit (f, b) is the sign of the energy GRADIENT between adjacent
-    frames — invariant to overall volume (gradients compare ratios of
-    the same scaling) and robust to re-encoding. Two's-complement signed
-    for Spark LONG. Returns None (not a hash) for clips too short to
-    frame, so they can never pair with each other as hamming-0 dups.
-    Contentless clips (silence / pure DC) all hash to 0 by construction
-    — treating them as mutual duplicates is the intended semantics."""
-    mono = arr[:, 0].astype(np.float64) if arr.ndim == 2 else arr.astype(np.float64)
-    if len(mono) < n_frames * 2:
-        return None
-    frame_len = len(mono) // n_frames
-    frames = mono[: frame_len * n_frames].reshape((n_frames, frame_len))
-    mags = np.abs(np.fft.rfft(frames, axis=1))[:, 1:]  # drop DC
-    # log-spaced band edges over the positive spectrum
-    edges = np.unique(
-        np.geomspace(1, mags.shape[1], n_bands + 1).astype(int)
-    )
-    while len(edges) < n_bands + 1:  # tiny spectra: pad linearly
-        edges = np.append(edges, edges[-1] + 1)
-    energies = np.array(
-        [
-            [float(mags[f, edges[b]:edges[b + 1]].sum()) for b in range(n_bands)]
-            for f in range(n_frames)
-        ]
-    )
-    bits = (energies[1:] > energies[:-1]).flatten()  # (n_frames-1)*n_bands
-    out = 0
-    for i, b in enumerate(bits[:64]):
-        if b:
-            out |= 1 << i
-    if out >= 1 << 63:
-        out -= 1 << 64
-    return out

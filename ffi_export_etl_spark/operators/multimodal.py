@@ -5,13 +5,12 @@ per-item compute runs through Arrow-batched ``mapInPandas`` so bytes never
 round-trip per row between JVM and Python.
 
 Decode kernels come in two tiers:
-- REAL, dependency-free (operators/media_codecs.py): PPM/PGM and
-  uncompressed 24-bit BMP via numpy, WAV/PCM via the stdlib — driven by
-  ``extract_real_features`` (decode + image/audio stats) and
-  ``resize_images`` (decode -> nearest-neighbor -> re-encode).
-- Injectable (``set_decoder``): JPEG/PNG/MP4 need PIL/ffmpeg, absent in
-  this container — the registered gate query keeps the deterministic
-  md5 stand-in there (clearly marked; its DuckDB oracle replays it), and
+- REAL, dependency-free (operators/media_codecs.py): binary and ASCII
+  PPM/PGM via numpy, driven by ``extract_real_features`` (decode + image
+  stats). Any other format comes back as format='unknown' with nulls.
+- Injectable (``set_decoder``): JPEG/PNG/MP4/audio need a codec library
+  (PIL/ffmpeg) — the registered gate query keeps the deterministic md5
+  stand-in there (clearly marked; its DuckDB oracle replays it), and
   production swaps in a real kernel.
 
 Scale notes: media rows are large and skewed; ``repartition`` by a hash of
@@ -28,9 +27,6 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .xplode import explode_nonempty
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -118,89 +114,6 @@ def extract_features(media: DataFrame, batch_size_hint: int = 64) -> DataFrame:
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, max_px: int = 256) -> DataFrame:
-    """Resize plumbing: the real kernel is NotImplemented in this
-    environment; the pipeline shape (binary in -> binary out + metadata)
-    is what this function pins down."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "image resize requires an image library not present in this "
-            "container; install one and set_decoder()/replace this kernel"
-        )
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling *plan*: metadata-only (selects which frames a
-    real decoder would emit) — demonstrates the explode-by-plan shape with
-    no decoder: one output row per planned frame index."""
-    n_frames = (F.col("n_bytes") / 1000).cast("int")  # fake: 1 frame/KB
-    idx = F.sequence(
-        F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n)
-    )
-    return explode_nonempty(
-        media, ["media_id", "kind"], idx, "frame_index"
-    )
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_index", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("delay_cs", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("content", BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling over a multi-frame container: decode animated
-    GIFs (operators/media_codecs.decode_gif — fully composited frames,
-    so a sampled frame is what a viewer saw, not a dirty delta), keep
-    every ``every_n``-th frame, and emit each as a standalone PNG row
-    (media_id, frame_index, n_frames, delay_cs, width, height,
-    content). Non-GIF and corrupt blobs yield no rows — route MP4
-    through the injectable decoder. One Arrow pass; the per-blob fan-out
-    happens executor-side, never via a driver collect."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_codecs import decode_gif, encode_png, sniff
-
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content) if content is not None else b""
-                if sniff(content) != "gif":
-                    continue
-                try:
-                    frames, delays = decode_gif(content)
-                except Exception:
-                    continue  # corrupt: no frames
-                for ix in range(0, len(frames), every_n):
-                    f = frames[ix]
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_index": ix,
-                            "n_frames": len(frames),
-                            "delay_cs": delays[ix],
-                            "width": int(f.shape[1]),
-                            "height": int(f.shape[0]),
-                            "content": encode_png(f),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SCHEMA]
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
 REAL_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -217,27 +130,17 @@ REAL_FEATURE_SCHEMA = StructType(
 
 def extract_real_features(media: DataFrame) -> DataFrame:
     """REAL decode + feature extraction for the dependency-free formats
-    (operators/media_codecs.py): PPM/PGM and uncompressed 24-bit BMP via
-    numpy, WAV/PCM via the stdlib — images report (width, height,
-    channels, mean pixel value), audio reports (duration_s, rms) with
-    width=n_frames, height=sample_rate. Formats needing PIL/ffmpeg come
-    back with format='unknown' and nulls (route those through the
-    injectable set_decoder kernel instead). Arrow-batched mapInPandas;
-    nothing per-row crosses the JVM boundary."""
+    (operators/media_codecs.py): binary and ASCII PPM/PGM via numpy —
+    images report (width, height, channels, mean pixel value). Formats
+    needing PIL/ffmpeg come back with format='unknown' and nulls (route
+    those through the injectable set_decoder kernel instead).
+    Arrow-batched mapInPandas; nothing per-row crosses the JVM
+    boundary."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from .media_codecs import (
-            audio_stats,
-            decode_bmp,
-            decode_gif,
-            decode_jpeg,
-            decode_png,
-            decode_pnm,
-            decode_wav,
-            sniff,
-        )
+        from .media_codecs import decode_pnm, sniff
 
         for pdf in batches:
             rows = []
@@ -254,319 +157,19 @@ def extract_real_features(media: DataFrame) -> DataFrame:
                 # decode exception inside mapInPandas would abort the
                 # whole job — malformed content degrades to
                 # format='corrupt' + nulls instead
-                try:
-                    if fmt in ("ppm", "pgm"):
+                if fmt != "unknown":
+                    try:
                         arr = decode_pnm(content)
                         row.update(
                             width=int(arr.shape[1]), height=int(arr.shape[0]),
                             channels=1 if arr.ndim == 2 else int(arr.shape[2]),
                             mean_value=float(np.mean(arr)),
                         )
-                    elif fmt == "bmp":
-                        arr = decode_bmp(content)
-                        row.update(
-                            width=int(arr.shape[1]), height=int(arr.shape[0]),
-                            channels=int(arr.shape[2]),
-                            mean_value=float(np.mean(arr)),
-                        )
-                    elif fmt == "png":
-                        arr = decode_png(content)
-                        row.update(
-                            width=int(arr.shape[1]), height=int(arr.shape[0]),
-                            channels=1 if arr.ndim == 2 else int(arr.shape[2]),
-                            mean_value=float(np.mean(arr)),
-                        )
-                    elif fmt == "gif":
-                        frames, delays = decode_gif(content)
-                        row.update(
-                            width=int(frames[0].shape[1]),
-                            height=int(frames[0].shape[0]),
-                            channels=3,
-                            mean_value=float(np.mean(frames[0])),
-                            # animation length: delays are centiseconds
-                            duration_s=sum(delays) / 100.0,
-                        )
-                    elif fmt == "jpeg":
-                        arr = decode_jpeg(content)
-                        row.update(
-                            width=int(arr.shape[1]), height=int(arr.shape[0]),
-                            channels=1 if arr.ndim == 2 else int(arr.shape[2]),
-                            mean_value=float(np.mean(arr)),
-                        )
-                    elif fmt == "mp4":
-                        # container metadata is real (box walk); pixel
-                        # decode still routes through set_decoder
-                        from .media_codecs import parse_mp4_meta
-
-                        m = parse_mp4_meta(content)
-                        row.update(
-                            width=m["width"], height=m["height"],
-                            duration_s=m["duration_s"],
-                        )
-                    elif fmt in ("flac", "mp3"):
-                        # header-walk metadata (no sample decode):
-                        # width=n_frames, height=sample_rate (the WAV
-                        # convention), real duration
-                        from .media_codecs import (
-                            parse_flac_meta,
-                            parse_mp3_meta,
-                        )
-
-                        m = (
-                            parse_flac_meta(content) if fmt == "flac"
-                            else parse_mp3_meta(content)
-                        )
-                        row.update(
-                            width=int(m["n_frames"]),
-                            height=m["sample_rate"],
-                            channels=m["channels"],
-                            duration_s=m["duration_s"],
-                        )
-                    elif fmt == "wav":
-                        arr, rate = decode_wav(content)
-                        st = audio_stats(arr, rate)
-                        row.update(
-                            width=st["n_frames"], height=st["sample_rate"],
-                            channels=int(arr.shape[1]),
-                            duration_s=st["duration_s"], rms=st["rms"],
-                        )
-                except Exception:
-                    row["format"] = "corrupt"
+                    except Exception:
+                        row["format"] = "corrupt"
                 rows.append(row)
             yield pd.DataFrame(
                 rows, columns=[f.name for f in REAL_FEATURE_SCHEMA]
             )
 
     return media.mapInPandas(run, REAL_FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, max_px: int = 256) -> DataFrame:
-    """REAL resize for the dependency-free image formats: decode
-    (PPM/PGM/BMP/PNG), nearest-neighbor downscale to max(h, w) <=
-    max_px, re-encode — PNG stays PNG (alpha channels survive), the
-    rest become binary PPM/PGM. Unknown formats pass through unchanged
-    (resize them via an injected kernel). Same (binary in -> binary out
-    + metadata) shape resize_stub pins."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_codecs import (
-            decode_bmp,
-            decode_png,
-            decode_pnm,
-            encode_png,
-            encode_ppm,
-            resize_nearest,
-            sniff,
-        )
-
-        from .media_codecs import (
-            decode_gif,
-            decode_jpeg,
-            encode_gif,
-            encode_jpeg,
-        )
-
-        decoders = {"ppm": decode_pnm, "pgm": decode_pnm,
-                    "bmp": decode_bmp, "png": decode_png,
-                    "jpeg": decode_jpeg}
-        for pdf in batches:
-            out = pdf.copy()
-            new_content = []
-            for content in pdf["content"]:
-                content = bytes(content) if content is not None else b""
-                fmt = sniff(content)
-                if fmt in decoders:
-                    try:
-                        arr = resize_nearest(decoders[fmt](content), max_px)
-                        content = (
-                            encode_png(arr) if fmt == "png"
-                            else encode_jpeg(arr) if fmt == "jpeg"
-                            else encode_ppm(arr)
-                        )
-                    except Exception:
-                        pass  # corrupt blob: pass through unchanged
-                elif fmt == "gif":
-                    # nearest-neighbor keeps palette colors, so the
-                    # quantization-free encoder always re-packs it
-                    try:
-                        frames, delays = decode_gif(content)
-                        content = encode_gif(
-                            [resize_nearest(f, max_px) for f in frames],
-                            delays,
-                        )
-                    except Exception:
-                        pass
-                new_content.append(content)
-            out["content"] = new_content
-            out["n_bytes"] = [len(c) for c in new_content]
-            out["mime"] = [
-                "image/x-portable-pixmap"
-                if c[:2] in (b"P6", b"P5")
-                else ("image/png" if c[:4] == b"\x89PNG" else m)
-                for c, m in zip(new_content, pdf["mime"])
-            ]
-            yield out[[f.name for f in MEDIA_SCHEMA]]
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
-def image_dhash(media: DataFrame) -> DataFrame:
-    """(media_id, dhash: long) — 64-bit perceptual difference hash per
-    decodable image (operators/media_codecs.dhash64: grayscale 9x8
-    thumbnail, horizontal gradient bits; two's-complement signed so it
-    fits a Spark LONG). Undecodable content hashes to NULL. One Arrow
-    pass; the hash is 8 bytes per image downstream, so near-dup joins
-    never touch pixel data again."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_codecs import (
-            decode_bmp,
-            decode_gif,
-            decode_jpeg,
-            decode_png,
-            decode_pnm,
-            dhash64,
-            sniff,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content) if content is not None else b""
-                fmt = sniff(content)
-                h = None
-                if fmt in ("ppm", "pgm", "bmp", "png", "gif", "jpeg"):
-                    try:
-                        if fmt == "gif":  # fingerprint the first frame
-                            arr = decode_gif(content)[0][0]
-                        else:
-                            arr = (
-                                decode_bmp(content) if fmt == "bmp"
-                                else decode_png(content) if fmt == "png"
-                                else decode_jpeg(content) if fmt == "jpeg"
-                                else decode_pnm(content)
-                            )
-                        # alpha never carries luminance: hash RGB only
-                        # (RGBA -> RGB) / the gray plane (gray+alpha)
-                        if arr.ndim == 3 and arr.shape[2] == 4:
-                            arr = arr[..., :3]
-                        elif arr.ndim == 3 and arr.shape[2] == 2:
-                            arr = arr[..., 0]
-                        h = dhash64(arr)
-                    except Exception:
-                        h = None  # corrupt blob: no fingerprint
-                rows.append({"media_id": mid, "dhash": h})
-            yield pd.DataFrame(rows, columns=["media_id", "dhash"])
-
-    return media.mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("media_id", LongType()),
-                StructField("dhash", LongType()),
-            ]
-        ),
-    )
-
-
-def hash64_near_duplicates(
-    fp: DataFrame,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """(id_a, id_b, hamming) pairs from any (id, 64-bit hash) table: the
-    same pigeonhole chunk-banding as text simhash (4 x 16-bit chunks —
-    hamming <= 3 implies at least one equal chunk), an equi-join on
-    (chunk, value), and exact bit_count verification. The
-    arithmetic-shift sign bits are masked off, so banding is correct for
-    negative (two's-complement) hashes. Shared by the image (dHash) and
-    audio (spectral hash) near-dup paths — media bytes are read exactly
-    once by the fingerprint pass; this join runs on 8-byte hashes."""
-    base = fp.select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("h")
-    ).filter(F.col("h").isNotNull())
-    banded = base.select(
-        "id",
-        "h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("h"), c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cv"),
-    ).select("id", "h", "cv.chunk", "cv.val")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def image_near_duplicates(media: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Image near-dup pairs: dHash once, then the shared 64-bit band
-    join (hash64_near_duplicates)."""
-    return hash64_near_duplicates(
-        image_dhash(media), hash_col="dhash", max_hamming=max_hamming
-    )
-
-
-def audio_fingerprints(media: DataFrame) -> DataFrame:
-    """(media_id, ahash: long) — spectral fingerprint per decodable WAV
-    (operators/media_codecs.audio_hash64: framed FFT band-energy
-    gradient signs; volume-invariant). Undecodable content -> NULL."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_codecs import audio_hash64, decode_wav, sniff
-
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content) if content is not None else b""
-                h = None
-                if sniff(content) == "wav":
-                    try:
-                        arr, _rate = decode_wav(content)
-                        h = audio_hash64(arr)
-                    except Exception:
-                        h = None  # corrupt blob: no fingerprint
-                rows.append({"media_id": mid, "ahash": h})
-            yield pd.DataFrame(rows, columns=["media_id", "ahash"])
-
-    return media.mapInPandas(
-        run,
-        StructType(
-            [
-                StructField("media_id", LongType()),
-                StructField("ahash", LongType()),
-            ]
-        ),
-    )
-
-
-def audio_near_duplicates(media: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Audio near-dup pairs: spectral fingerprint once, then the shared
-    64-bit band join — catches re-encoded / volume-scaled copies."""
-    return hash64_near_duplicates(
-        audio_fingerprints(media), hash_col="ahash", max_hamming=max_hamming
-    )

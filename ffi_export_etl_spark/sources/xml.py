@@ -291,19 +291,18 @@ def read_ffi_export_sliced(
       untouched; ids are join-only plumbing that never reaches
       warehouse output — the glob-mode precedent).
 
-    Cache layout (the A/B that picked it is in PERFORMANCE.md r12): a
-    first cut filtered each TABLE off the shared wave cache, which made
-    every per-file discovery collect and staging job rescan the whole
-    wave's fat rows and carried the filter into every table plan —
-    measured SLOWER than per-file reads. Instead the wave frame is
-    sliced ONCE per file at the root-row level and each 1-row slice is
-    persisted, so every downstream job of a file reads exactly its own
-    row (the same shape as a single-file read's rootdf persist). The
-    shared parse cache handle is appended to ``persists`` (the caller
-    releases it after the wave); the return value is
-    ``(tables_by_path, slice_handle_by_path)`` so the caller can
-    release each file's slice TARGETED once that file is staged —
-    per-file ``clearCache()`` would evict the sibling slices.
+    Cache layout: a first cut filtered each TABLE off the shared wave
+    cache, which made every per-file discovery collect and staging job
+    rescan the whole wave's fat rows and carried the filter into every
+    table plan — measured SLOWER than per-file reads. Instead the wave
+    frame is sliced ONCE per file at the root-row level and each 1-row
+    slice is persisted, so every downstream job of a file reads exactly
+    its own row (the same shape as a single-file read's rootdf persist).
+    The shared parse cache handle is appended to ``persists`` (the
+    caller releases it after the wave); the return value is
+    ``(tables_by_path, slice_handle_by_path)`` so the caller can release
+    each file's slice TARGETED once that file is staged — per-file
+    ``clearCache()`` would evict the sibling slices.
     """
     from pyspark.sql.types import ArrayType, StructType
 

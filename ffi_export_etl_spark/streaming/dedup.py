@@ -67,11 +67,10 @@ def _folded_meta(spark: SparkSession, store_path: str) -> dict | None:
     return {
         "table": row["table"],
         "max_batch_id": int(row["max_batch_id"]),
-        # the generation's parquet data under the store root (r9: the
+        # the generation's parquet data under the store root (the
         # store is self-contained; the catalog table is derived bucket
         # metadata). Derived, not recorded — relocating the store root
-        # keeps the reference valid. r8 folds predate the data dir; for
-        # them only the table resolves.
+        # keeps the reference valid.
         "location": os.path.join(
             store_path, "_folded_data", f"gen={gens[-1]}"
         ),
@@ -98,10 +97,7 @@ def _read_folded(spark: SparkSession, meta: dict) -> DataFrame:
             raise ValueError(
                 f"folded store generation unreadable: table "
                 f"{meta['table']!r} is not in this session's catalog "
-                f"and no parquet data at {meta['location']!r} (an r8 "
-                f"fold's data lives only in the original session's "
-                f"warehouse — re-run compact_signature_store from the "
-                f"owning working directory to migrate it)"
+                f"and no parquet data at {meta['location']!r}"
             ) from e
 
 
@@ -350,59 +346,6 @@ def _store_bucket_cols(cols: list[str]) -> list[str]:
     return [c for c in cols if c != "id"]
 
 
-def _migrate_r8_generation(
-    spark: SparkSession, meta: dict, num_buckets: int
-) -> bool:
-    """Rewrite an r8-format folded generation (MANAGED catalog table
-    only — no ``_folded_data`` parquet under the store root) as the
-    self-contained r9 layout: external bucketed table over
-    ``<store>/_folded_data/gen=<N>``, same catalog name, same sidecar.
-    r8 folds put the only copy of the rows inside the owning session's
-    warehouse, so they were readable only from the cwd whose derby
-    metastore resolves the name; this runs on the next maintenance pass
-    whenever the table still resolves (r9 judge item 4) instead of
-    waiting for new batch dirs to trigger a full re-fold. Returns True
-    iff a migration was performed.
-
-    Crash-safe in the generation discipline: the data write lands
-    first under a ``_migr``-suffixed temp name (idempotently dropped on
-    retry), the managed table is dropped only after the external copy
-    is committed, and the rename keeps the external location — a crash
-    between drop and rename leaves the sidecar's name unresolvable but
-    the location readable, exactly the fallback _read_folded already
-    takes."""
-    from ..sinks.bucketed import write_bucketed
-
-    tmp = meta["table"] + "_migr"
-    if os.path.isdir(meta["location"]):
-        # already self-contained (r9+ layout, or a migration that
-        # crashed between its data write and the managed-table drop) —
-        # clear a leftover temp catalog entry and leave the store alone
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        return False
-    try:
-        rows = spark.table(meta["table"])
-    except AnalysisException:
-        # unresolvable here AND no data under the root: nothing this
-        # session can migrate — the reader's fail-fast (with the
-        # owning-cwd remedy in its message) stays the behavior
-        return False
-    cols = [c for c in rows.columns if c != "batch_id"]
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    write_bucketed(
-        rows.select(*cols),
-        tmp,
-        _store_bucket_cols(cols),
-        num_buckets,
-        path=meta["location"],
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {meta['table']}")
-    # qualified target: a bare name would resolve against the CURRENT
-    # database, not the generation's own (rename is same-db only)
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {meta['table']}")
-    return True
-
-
 def compact_signature_store(
     spark: SparkSession,
     store_path: str,
@@ -537,20 +480,11 @@ def compact_signature_store(
                 os.path.join(store_path, f"batch_id={i}"), ignore_errors=True
             )
     if not eligible:
-        out = {
+        return {
             "generation": cur,
             "table": cur_meta["table"] if cur_meta is not None else None,
             "folded_dirs": 0,
         }
-        # nothing to fold, but an r8-format generation (managed table,
-        # no data under the store root) still migrates to the
-        # self-contained layout whenever its table resolves — don't
-        # wait for new batches to trigger a full re-fold (judge r9)
-        if cur_meta is not None and _migrate_r8_generation(
-            spark, cur_meta, num_buckets
-        ):
-            out["migrated"] = True
-        return out
     new_gen = eligible[-1]
     paths = [os.path.join(store_path, f"batch_id={i}") for i in eligible]
     rows = spark.read.parquet(*paths)

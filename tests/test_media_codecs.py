@@ -1,27 +1,20 @@
 """Real media decode kernels (operators/media_codecs.py) and their
-Spark-side extractors: PPM/PGM/BMP/PNG/GIF/baseline-JPEG via numpy +
-stdlib zlib, WAV via the stdlib, MP4 container metadata via an
-ISO-BMFF box walk — actually-executing decode for every format that
-needs no external library, with the injectable stub reserved for
-progressive JPEG and MP4 frame decode."""
+Spark-side extractor: binary and ASCII PPM/PGM via numpy. Every other
+format is 'unknown' to the dependency-free tier and routes through the
+injectable decoder (operators/multimodal.set_decoder)."""
 
 from __future__ import annotations
-
-import io
-import struct
-import wave
 
 import numpy as np
 
 from ffi_export_etl_spark.operators.media_codecs import (
-    audio_stats,
-    decode_bmp,
     decode_pnm,
-    decode_wav,
     encode_ppm,
-    real_decode,
-    resize_nearest,
     sniff,
+)
+
+MEDIA_DDL = (
+    "media_id: long, kind: string, content: binary, mime: string, n_bytes: long"
 )
 
 
@@ -31,30 +24,14 @@ def _img(h: int, w: int) -> np.ndarray:
     )
 
 
-def _bmp_bytes(arr: np.ndarray) -> bytes:
-    """Minimal bottom-up 24-bit BI_RGB BMP writer (test-side oracle)."""
-    h, w, _ = arr.shape
-    row_bytes = (w * 3 + 3) & ~3
-    body = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = arr[y][..., ::-1].tobytes()  # RGB -> BGR
-        body += row + b"\x00" * (row_bytes - len(row))
-    header = (
-        b"BM"
-        + struct.pack("<IHHI", 14 + 40 + len(body), 0, 0, 14 + 40)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
+def _media(spark, blobs: dict[int, bytes]):
+    return spark.createDataFrame(
+        [
+            (mid, "image", bytearray(b), "application/octet-stream", len(b))
+            for mid, b in blobs.items()
+        ],
+        MEDIA_DDL,
     )
-    return header + bytes(body)
-
-
-def _wav_bytes(samples: np.ndarray, rate: int = 8000) -> bytes:
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(rate)
-        f.writeframes(samples.astype(np.int16).tobytes())
-    return buf.getvalue()
 
 
 def test_pnm_roundtrip_and_ascii():
@@ -73,794 +50,102 @@ def test_pnm_roundtrip_and_ascii():
     ).encode()
     a = decode_pnm(ascii_pgm)
     assert a.shape == (2, 3) and a[1, 2] == 5
+    assert np.array_equal(decode_pnm(encode_ppm(a)), a)
+    # binary P6 with a header comment: the comment does not shift the
+    # pixel body, and re-encoding (comment dropped) keeps every pixel
+    body = _img(2, 3)
+    commented = b"P6\n# made by hand\n3 2\n255\n" + body.tobytes()
+    c = decode_pnm(commented)
+    assert np.array_equal(c, body)
+    assert np.array_equal(decode_pnm(encode_ppm(c)), body)
 
 
-def test_bmp_decode_matches_source_pixels():
-    arr = _img(4, 5)  # width 5 -> row padding exercised
-    back = decode_bmp(_bmp_bytes(arr))
-    assert np.array_equal(back, arr)
+def test_non_pnm_magic_bytes_are_unknown(spark):
+    """The dependency-free tier decodes netpbm only: PNG, JPEG, GIF,
+    RIFF-WAV and MP4 blobs come back format='unknown' with null
+    features (their decode belongs to an injected kernel), next to a
+    PPM in the same batch that does decode."""
+    from ffi_export_etl_spark.operators.multimodal import extract_real_features
 
-
-def test_wav_decode_and_stats():
-    t = np.arange(8000)
-    samples = (np.sin(2 * np.pi * 440 * t / 8000) * 1000).astype(np.int16)
-    arr, rate = decode_wav(_wav_bytes(samples))
-    assert rate == 8000 and arr.shape == (8000, 1)
-    st = audio_stats(arr, rate)
-    assert st["duration_s"] == 1.0
-    assert 600 < st["rms"] < 800  # sine RMS ~ 707
-    assert 0.1 < st["zero_crossing_rate"] < 0.12  # 440 Hz -> ~880 zc/s
-
-
-def test_real_decode_dispatch_and_fallback():
-    assert real_decode(encode_ppm(_img(3, 9)), "image") == {
-        "width": 9, "height": 3,
+    others = {
+        2: b"\x89PNG\r\n\x1a\n\x00\x00\x00\rIHDR",
+        3: b"\xff\xd8\xff\xe0\x00\x10JFIF\x00",
+        4: b"GIF89a\x01\x00\x01\x00\x00\x00\x00",
+        5: b"RIFF\x24\x00\x00\x00WAVEfmt \x10\x00\x00\x00",
+        6: b"\x00\x00\x00\x18ftypmp42\x00\x00\x00\x00",
     }
-    assert real_decode(_wav_bytes(np.zeros(100)), "audio") == {
-        "width": 100, "height": 8000,
+    assert all(sniff(b) == "unknown" for b in others.values())
+    img = encode_ppm(_img(6, 4))
+    feats = {
+        r["media_id"]: r
+        for r in extract_real_features(
+            _media(spark, {1: img, **others})
+        ).collect()
     }
-    assert real_decode(b"\x89PNG....", "image") is None  # needs PIL
-
-
-def test_resize_nearest_bounds_and_noop():
-    arr = _img(100, 40)
-    small = resize_nearest(arr, 25)
-    assert max(small.shape[:2]) == 25 and small.shape == (25, 10, 3)
-    assert resize_nearest(small, 25) is small
-
-
-def test_spark_extract_real_features_and_resize(spark):
-    from ffi_export_etl_spark.operators.multimodal import (
-        extract_real_features,
-        resize_images,
-    )
-
-    img = encode_ppm(_img(64, 32))
-    wav = _wav_bytes((np.ones(4000) * 500))
-    rows = [
-        (1, "image", bytearray(img), "image/x-portable-pixmap", len(img)),
-        (2, "audio", bytearray(wav), "audio/wav", len(wav)),
-        (3, "image", bytearray(b"\x89PNG123"), "image/png", 8),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, n_bytes: long",
-    )
-    feats = {r["media_id"]: r for r in extract_real_features(media).collect()}
-    assert feats[1]["format"] == "ppm" and feats[1]["width"] == 32
-    assert feats[1]["channels"] == 3 and feats[1]["mean_value"] is not None
-    assert feats[2]["format"] == "wav" and feats[2]["duration_s"] == 0.5
-    assert feats[3]["format"] == "unknown" and feats[3]["width"] is None
-
-    resized = {r["media_id"]: r for r in resize_images(media, 16).collect()}
-    out = decode_pnm(bytes(resized[1]["content"]))
-    assert max(out.shape[:2]) == 16  # 64x32 -> 16x8
-    assert bytes(resized[3]["content"]) == b"\x89PNG123"  # passthrough
-
-
-def test_image_near_duplicates(spark):
-    """dHash + chunk-banded join: re-encoded/slightly-edited copies pair
-    up, structurally different images do not, undecodable bytes are
-    ignored."""
-    from ffi_export_etl_spark.operators.multimodal import image_near_duplicates
-
-    rng = np.random.default_rng(7)
-    base = rng.integers(0, 256, (40, 60, 3)).astype(np.uint8)
-    edited = base.copy()
-    edited[:2, :2] = 0  # small local edit
-    grad = np.tile(
-        (np.arange(60, dtype=np.uint8) * 4).reshape(1, 60, 1), (40, 1, 3)
-    )
-    rows = [
-        (1, "image", bytearray(encode_ppm(base)), "x", 0),
-        (2, "image", bytearray(_bmp_bytes(base)), "x", 0),      # same pixels, other codec
-        (3, "image", bytearray(encode_ppm(edited)), "x", 0),    # near-dup
-        (4, "image", bytearray(encode_ppm(grad)), "x", 0),      # different
-        (5, "image", bytearray(b"\x89PNGnope"), "x", 0),        # undecodable
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, n_bytes: long",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in image_near_duplicates(media, max_hamming=3).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] == 0  # codec-independent
-    assert (1, 3) in pairs and (2, 3) in pairs
-    assert not any(4 in p or 5 in p for p in pairs)
-
-
-def test_audio_near_duplicates(spark):
-    """Spectral fingerprint + shared band join: a volume-scaled copy of
-    a clip pairs with the original at hamming 0; a different melody does
-    not pair; images in the same frame are ignored by the audio path."""
-    from ffi_export_etl_spark.operators.multimodal import audio_near_duplicates
-
-    t = np.arange(16000)
-    a = (
-        np.sin(2 * np.pi * 440 * t / 8000) * 1000
-        + np.sin(2 * np.pi * 880 * t / 8000) * 300 * (t > 8000)
-    ).astype(np.int16)
-    quiet = (a * 0.8).astype(np.int16)
-    other = (np.sin(2 * np.pi * 123 * t / 8000) * 900).astype(np.int16)
-    rows = [
-        (1, "audio", bytearray(_wav_bytes(a)), "audio/wav", 0),
-        (2, "audio", bytearray(_wav_bytes(quiet)), "audio/wav", 0),
-        (3, "audio", bytearray(_wav_bytes(other)), "audio/wav", 0),
-        (4, "image", bytearray(encode_ppm(_img(8, 8))), "x", 0),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, n_bytes: long",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in audio_near_duplicates(media).collect()
-    }
-    assert pairs == {(1, 2): 0}
+    assert feats[1]["format"] == "ppm"
+    assert (feats[1]["width"], feats[1]["height"]) == (4, 6)
+    assert feats[1]["channels"] == 3
+    assert feats[1]["mean_value"] == float(np.mean(_img(6, 4)))
+    for mid in others:
+        r = feats[mid]
+        assert r["format"] == "unknown", mid
+        assert r["width"] is None and r["height"] is None, mid
+        assert r["channels"] is None and r["mean_value"] is None, mid
 
 
 def test_corrupt_blobs_degrade_not_crash(spark):
-    """Magic-byte matches with malformed bodies must degrade (corrupt /
-    null / passthrough), never abort the job; too-short audio must not
-    fingerprint (None != a shared hash of 0)."""
-    from ffi_export_etl_spark.operators.media_codecs import audio_hash64
-    from ffi_export_etl_spark.operators.multimodal import (
-        audio_fingerprints,
-        extract_real_features,
-        image_dhash,
-        resize_images,
-    )
-
-    assert audio_hash64(np.zeros((5, 1))) is None
-
-    bad = [
-        (1, "image", bytearray(b"BM\x01\x02truncated"), "x", 0),
-        (2, "image", bytearray(b"P6\n9999 9999\n255\nxx"), "x", 0),
-        (3, "audio", bytearray(b"RIFF0000WAVEjunk"), "x", 0),
-        (4, "audio", bytearray(_wav_bytes(np.zeros(4))), "x", 0),  # too short
-    ]
-    media = spark.createDataFrame(
-        bad,
-        "media_id: long, kind: string, content: binary, mime: string, n_bytes: long",
-    )
-    feats = {r["media_id"]: r for r in extract_real_features(media).collect()}
-    assert feats[1]["format"] == "corrupt" and feats[1]["width"] is None
-    assert feats[2]["format"] == "corrupt"
-    assert feats[3]["format"] == "corrupt"
-    assert all(r["dhash"] is None for r in image_dhash(media).collect())
-    assert all(r["ahash"] is None for r in audio_fingerprints(media).collect())
-    back = {r["media_id"]: bytes(r["content"]) for r in resize_images(media).collect()}
-    assert back[1] == bytes(bad[0][2])  # passthrough unchanged
-
-
-def _png_chunk(ctype: bytes, payload: bytes) -> bytes:
-    import zlib
-
-    body = ctype + payload
-    return (
-        struct.pack(">I", len(payload))
-        + body
-        + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-    )
-
-
-def _hand_filtered_png(img: np.ndarray, ftypes: list[int]) -> bytes:
-    """Independent PNG writer applying a CHOSEN filter type per scanline
-    (the library encoder only emits filter 0, so decode coverage of
-    Sub/Up/Average/Paeth needs its own filtering implementation)."""
-    import zlib
-
-    from ffi_export_etl_spark.operators.media_codecs import PNG_SIGNATURE
-
-    h, w, c = img.shape
-    stride = w * c
-    flat = img.reshape(h, stride).astype(np.int32)
-    out = bytearray()
-    prev = np.zeros(stride, dtype=np.int32)
-    for y, ft in enumerate(ftypes):
-        row = flat[y]
-        left = np.concatenate([np.zeros(c, np.int32), row[:-c]])
-        ul = np.concatenate([np.zeros(c, np.int32), prev[:-c]])
-        if ft == 0:
-            f = row
-        elif ft == 1:
-            f = row - left
-        elif ft == 2:
-            f = row - prev
-        elif ft == 3:
-            f = row - (left + prev) // 2
-        else:  # Paeth
-            p = left + prev - ul
-            pa, pb, pc = abs(p - left), abs(p - prev), abs(p - ul)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, ul)
-            )
-            f = row - pred
-        out.append(ft)
-        out.extend((f % 256).astype(np.uint8).tobytes())
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        PNG_SIGNATURE
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def test_png_roundtrip_all_color_types():
-    from ffi_export_etl_spark.operators.media_codecs import (
-        decode_png,
-        encode_png,
-        real_decode,
-        sniff,
-    )
-
-    rng = np.random.default_rng(11)
-    for shape in [(5, 7), (4, 6, 3), (3, 5, 4), (2, 9, 2)]:
-        arr = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        png = encode_png(arr)
-        assert sniff(png) == "png"
-        back = decode_png(png)
-        assert back.shape == arr.shape and np.array_equal(back, arr)
-    assert real_decode(encode_png(rng.integers(0, 256, (3, 8), np.uint8)),
-                       "image") == {"width": 8, "height": 3}
-
-
-def test_png_decode_every_filter_type():
-    rng = np.random.default_rng(12)
-    img = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
-    from ffi_export_etl_spark.operators.media_codecs import decode_png
-
-    png = _hand_filtered_png(img, [0, 1, 2, 3, 4, 4])
-    assert np.array_equal(decode_png(png), img)
-    # gradient images exercise the Paeth predictor's three branches
-    grad = np.add.outer(np.arange(8) * 20, np.arange(6) * 10)[..., None]
-    grad = np.broadcast_to(grad % 256, (8, 6, 3)).astype(np.uint8)
-    png = _hand_filtered_png(grad, [4] * 8)
-    assert np.array_equal(decode_png(png), grad)
-
-
-def test_png_palette_and_malformed():
-    import zlib
-
-    import pytest
-
-    from ffi_export_etl_spark.operators.media_codecs import (
-        PNG_SIGNATURE,
-        decode_png,
-    )
-
-    rng = np.random.default_rng(13)
-    pal = rng.integers(0, 256, size=(4, 3), dtype=np.uint8)
-    idx = rng.integers(0, 4, size=(3, 4), dtype=np.uint8)
-    ihdr = struct.pack(">IIBBBBB", 4, 3, 8, 3, 0, 0, 0)
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(3))
-    png = (
-        PNG_SIGNATURE
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", pal.tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    assert np.array_equal(decode_png(png), pal[idx])
-    # malformed streams raise (and so degrade to 'corrupt' in the
-    # mapInPandas kernels): truncation, wrong depth, missing IEND
-    with pytest.raises(ValueError):
-        decode_png(png[:40])
-    bad_depth = struct.pack(">IIBBBBB", 4, 3, 16, 3, 0, 0, 0)
-    with pytest.raises(ValueError):
-        decode_png(PNG_SIGNATURE + _png_chunk(b"IHDR", bad_depth)
-                   + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError):
-        decode_png(PNG_SIGNATURE + _png_chunk(b"IHDR", ihdr))
-
-
-def test_png_through_spark_features_resize_and_dhash(spark):
-    """PNG blobs flow through all three mapInPandas surfaces: feature
-    extraction reports real dims/channels, resize re-encodes AS PNG
-    (alpha survives), and dhash matches the same pixels fed as PPM."""
-    from ffi_export_etl_spark.operators.media_codecs import (
-        decode_png,
-        encode_png,
-        encode_ppm,
-    )
-    from ffi_export_etl_spark.operators.multimodal import (
-        extract_real_features,
-        image_dhash,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(14)
-    rgb = rng.integers(0, 256, size=(40, 30, 3), dtype=np.uint8)
-    rgba = rng.integers(0, 256, size=(10, 8, 4), dtype=np.uint8)
-    blobs = {1: encode_png(rgb), 2: encode_png(rgba), 3: encode_ppm(rgb)}
-    mimes = {1: "image/png", 2: "image/png", 3: "image/x-portable-pixmap"}
-    rows = [
-        (mid, "image", bytearray(b), mimes[mid], len(b))
-        for mid, b in blobs.items()
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, "
-        "n_bytes: long",
-    )
-
-    feats = {r.media_id: r for r in extract_real_features(media).collect()}
-    assert feats[1].format == "png" and feats[1].width == 30
-    assert feats[2].channels == 4
-    assert feats[1].mean_value == feats[3].mean_value  # same pixels
-
-    resized = {r.media_id: bytes(r.content)
-               for r in resize_images(media, max_px=16).collect()}
-    out1 = decode_png(resized[1])
-    assert resized[1][:4] == b"\x89PNG" and max(out1.shape[:2]) <= 16
-    assert decode_png(resized[2]).shape[2] == 4  # alpha survived
-
-    hashes = {r.media_id: r.dhash for r in image_dhash(media).collect()}
-    assert hashes[1] == hashes[3]  # same pixels, format-independent
-    assert hashes[2] is not None
-
-
-def test_gif_lzw_roundtrip_and_table_growth():
-    from ffi_export_etl_spark.operators.media_codecs import (
-        _lzw_decode,
-        _lzw_encode,
-    )
-
-    rng = np.random.default_rng(21)
-    for n, alphabet in [(10, 2), (300, 4), (6000, 16), (30000, 8)]:
-        idx = rng.integers(0, alphabet, size=n).tolist()
-        mc = max(2, (alphabet - 1).bit_length())
-        assert _lzw_decode(_lzw_encode(idx, mc), mc) == idx
-    # the KwKwK case: an immediately-repeated fresh pattern
-    seq = [0, 1, 0, 1, 0, 1, 0, 1, 0]
-    assert _lzw_decode(_lzw_encode(seq, 2), 2) == seq
-
-
-def test_gif_animated_roundtrip():
-    from ffi_export_etl_spark.operators.media_codecs import (
-        decode_gif,
-        encode_gif,
-        real_decode,
-        sniff,
-    )
-
-    rng = np.random.default_rng(22)
-    palette = rng.integers(0, 256, size=(8, 3), dtype=np.uint8)
-    base = rng.integers(0, 8, size=(13, 17), dtype=np.uint8)
-    frames = [palette[np.roll(base, k, axis=1)] for k in range(4)]
-    gif = encode_gif(frames, delays=[10, 20, 30, 40])
-    assert sniff(gif) == "gif"
-    back, delays = decode_gif(gif)
-    assert delays == [10, 20, 30, 40]
-    assert len(back) == 4
-    for a, b in zip(frames, back):
-        assert np.array_equal(a, b)
-    assert real_decode(gif, "image") == {"width": 17, "height": 13}
-
-
-def test_gif_interlace_transparency_and_disposal():
-    """Hand-built GIF89a streams (independent of the library encoder)
-    covering the decode paths the roundtrip can't: interlaced row order,
-    a transparent-index patch composited over the previous frame, and
-    disposal 2 restoring the background between frames."""
-    import struct as st
-
-    from ffi_export_etl_spark.operators.media_codecs import (
-        _GIF_INTERLACE_PASSES,
-        _lzw_encode,
-        decode_gif,
-    )
-
-    pal = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [9, 9, 9]], np.uint8
-    )
-
-    def blocks(payload: bytes) -> bytes:
-        out = bytearray()
-        for off in range(0, len(payload), 255):
-            c = payload[off : off + 255]
-            out.append(len(c))
-            out += c
-        out.append(0)
-        return bytes(out)
-
-    def header(w, h, bg=0):
-        return (
-            b"GIF89a" + st.pack("<HH", w, h)
-            + st.pack("<BBB", 0x80 | 1, bg, 0) + pal.tobytes()
-        )
-
-    # interlaced 8x4: write rows in pass order, expect natural order back
-    h, w = 8, 4
-    img = np.arange(h * w, dtype=np.uint8).reshape(h, w) % 4
-    pass_rows = [
-        r for start, step in _GIF_INTERLACE_PASSES
-        for r in range(start, h, step)
-    ]
-    permuted = img[pass_rows].reshape(-1).tolist()
-    gif = (
-        header(w, h)
-        + b"\x2c" + st.pack("<HHHH", 0, 0, w, h) + b"\x40"  # interlace
-        + bytes([2]) + blocks(_lzw_encode(permuted, 2)) + b"\x3b"
-    )
-    frames, _ = decode_gif(gif)
-    assert np.array_equal(frames[0], pal[img])
-
-    # frame 2 is a 1x1 patch at (1,1) whose pixel is TRANSPARENT ->
-    # composited frame 2 must equal frame 1; frame 3's GCE uses
-    # disposal 2 (restore background) before a full opaque frame
-    full = np.zeros((2, 2), dtype=np.uint8).reshape(-1).tolist()
-    gce_transparent = b"\x21\xf9\x04\x01\x05\x00\x02\x00"  # tflag, tidx=2
-    patch = (
-        b"\x2c" + st.pack("<HHHH", 1, 1, 1, 1) + b"\x00"
-        + bytes([2]) + blocks(_lzw_encode([2], 2))
-    )
-    gif2 = (
-        header(2, 2, bg=3)
-        + b"\x2c" + st.pack("<HHHH", 0, 0, 2, 2) + b"\x00"
-        + bytes([2]) + blocks(_lzw_encode(full, 2))
-        + gce_transparent + patch
-        + b"\x3b"
-    )
-    frames2, _ = decode_gif(gif2)
-    assert len(frames2) == 2
-    assert np.array_equal(frames2[0], frames2[1])  # transparent patch
-
-
-def test_gif_through_spark_surfaces(spark):
-    """GIF blobs through features (real duration from frame delays),
-    frame sampling (composited frames re-encoded as PNG), resize, and
-    dhash (first frame, format-independent vs the same pixels as PNG)."""
-    from ffi_export_etl_spark.operators.media_codecs import (
-        decode_gif,
-        decode_png,
-        encode_gif,
-        encode_png,
-    )
-    from ffi_export_etl_spark.operators.multimodal import (
-        extract_real_features,
-        image_dhash,
-        resize_images,
-        sample_frames,
-    )
-
-    rng = np.random.default_rng(23)
-    palette = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx_frames = [
-        rng.integers(0, 16, size=(24, 36), dtype=np.uint8) for _ in range(5)
-    ]
-    frames = [palette[ix] for ix in idx_frames]
-    gif = encode_gif(frames, delays=[25] * 5)
-    png_first = encode_png(frames[0])
-    rows = [
-        (1, "video", bytearray(gif), "image/gif", len(gif)),
-        (2, "image", bytearray(png_first), "image/png", len(png_first)),
-        (3, "video", bytearray(b"GIF89aXX"), "image/gif", 8),  # corrupt
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, "
-        "n_bytes: long",
-    )
-
-    feats = {r.media_id: r for r in extract_real_features(media).collect()}
-    assert feats[1].format == "gif" and feats[1].width == 36
-    assert feats[1].duration_s == 1.25  # 5 frames x 25cs
-    assert feats[3].format == "corrupt"
-
-    sampled = sample_frames(media, every_n=2).collect()
-    got = {(r.media_id, r.frame_index): r for r in sampled}
-    assert set(got) == {(1, 0), (1, 2), (1, 4)}
-    assert all(r.n_frames == 5 for r in sampled)
-    # sampled frame content is the composited frame, PNG-encoded
-    assert np.array_equal(decode_png(bytes(got[(1, 0)].content)), frames[0])
-    assert np.array_equal(decode_png(bytes(got[(1, 2)].content)), frames[2])
-
-    resized = {r.media_id: bytes(r.content)
-               for r in resize_images(media, max_px=12).collect()}
-    rframes, rdelays = decode_gif(resized[1])
-    assert len(rframes) == 5 and rdelays == [25] * 5
-    assert max(rframes[0].shape[:2]) <= 12
-    assert resized[3] == b"GIF89aXX"  # corrupt passes through
-
-    hashes = {r.media_id: r.dhash for r in image_dhash(media).collect()}
-    assert hashes[1] == hashes[2]  # first frame == same pixels as PNG
-    assert hashes[3] is None
-
-
-def _box(btype: bytes, payload: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(payload)) + btype + payload
-
-
-def _mp4_bytes(
-    w: int = 640, h: int = 360, timescale: int = 1000,
-    duration: int = 12500, version: int = 0,
-) -> bytes:
-    """Minimal hand-built ISO-BMFF: ftyp + moov{mvhd, video trak{tkhd,
-    mdia{hdlr}}, audio trak{tkhd, mdia{hdlr}}} (test-side oracle)."""
-    if version == 1:
-        mvhd = (
-            b"\x01\x00\x00\x00" + b"\x00" * 16
-            + struct.pack(">IQ", timescale, duration) + b"\x00" * 80
-        )
-    else:
-        mvhd = (
-            b"\x00\x00\x00\x00" + b"\x00" * 8
-            + struct.pack(">II", timescale, duration) + b"\x00" * 80
-        )
-
-    def tkhd(tw, th):
-        # spec-compliant v0 body: fullbox(4) + times/track-id/reserved/
-        # duration(20) + reserved(8) + layer/group/volume/reserved(8) +
-        # matrix(36) = 76 bytes, THEN width/height (16.16 fixed)
-        return b"\x00" * 76 + struct.pack(">II", tw << 16, th << 16)
-
-    def hdlr(kind: bytes) -> bytes:
-        return b"\x00" * 8 + kind + b"\x00" * 12
-
-    vtrak = _box(
-        b"trak",
-        _box(b"tkhd", tkhd(w, h)) + _box(b"mdia", _box(b"hdlr", hdlr(b"vide"))),
-    )
-    atrak = _box(
-        b"trak",
-        _box(b"tkhd", tkhd(0, 0)) + _box(b"mdia", _box(b"hdlr", hdlr(b"soun"))),
-    )
-    moov = _box(b"moov", _box(b"mvhd", mvhd) + vtrak + atrak)
-    ftyp = _box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-    return ftyp + moov
-
-
-def test_mp4_metadata_parse_and_versions():
-    from ffi_export_etl_spark.operators.media_codecs import (
-        parse_mp4_meta,
-        real_decode,
-        sniff,
-    )
-
-    import pytest
-
-    mp4 = _mp4_bytes()
-    assert sniff(mp4) == "mp4"
-    meta = parse_mp4_meta(mp4)
-    assert meta["width"] == 640 and meta["height"] == 360
-    assert meta["duration_s"] == 12.5
-    assert meta["n_tracks"] == 2
-    assert meta["track_types"] == ["vide", "soun"]
-    assert real_decode(mp4, "video") == {"width": 640, "height": 360}
-    # 64-bit mvhd (version 1) parses identically
-    v1 = parse_mp4_meta(_mp4_bytes(version=1))
-    assert v1["duration_s"] == 12.5 and v1["width"] == 640
-    with pytest.raises(ValueError):
-        parse_mp4_meta(b"\x00\x00\x00\x08ftyp")  # no moov
-    with pytest.raises(ValueError):
-        parse_mp4_meta(b"not an mp4 at all")
-
-
-def test_mp4_through_spark_features(spark):
-    from ffi_export_etl_spark.operators.multimodal import (
-        extract_real_features,
-    )
-
-    mp4 = _mp4_bytes(w=1920, h=1080, timescale=600, duration=3600)
-    rows = [
-        (1, "video", bytearray(mp4), "video/mp4", len(mp4)),
-        (2, "video", bytearray(mp4[:12]), "video/mp4", 12),  # truncated
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, "
-        "n_bytes: long",
-    )
-    feats = {r.media_id: r for r in extract_real_features(media).collect()}
-    assert feats[1].format == "mp4"
-    assert feats[1].width == 1920 and feats[1].height == 1080
-    assert feats[1].duration_s == 6.0
-    assert feats[2].format == "corrupt"
-
-
-def _flac_bytes(
-    rate: int = 44100, channels: int = 2, bps: int = 16,
-    total: int = 441000,
-) -> bytes:
-    """Minimal FLAC: magic + STREAMINFO block (test-side oracle)."""
-    b10 = (rate << 44) | ((channels - 1) << 41) | ((bps - 1) << 36) | total
-    streaminfo = (
-        struct.pack(">HH", 4096, 4096)  # min/max block size
-        + b"\x00" * 6  # min/max frame size
-        + b10.to_bytes(8, "big")
-        + b"\x00" * 16  # md5
-    )
-    return (
-        b"fLaC"
-        + bytes([0x80]) + len(streaminfo).to_bytes(3, "big") + streaminfo
-    )
-
-
-def _mp3_bytes(n_frames: int = 38, bitrate_idx: int = 9,
-               with_id3: bool = True) -> bytes:
-    """Hand-built MPEG-1 Layer III stream: ID3v2 tag + CBR frames
-    (header + filler payload) at 44.1 kHz, 128 kbps for idx 9."""
-    bitrate = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224,
-               256, 320, 0][bitrate_idx] * 1000
-    frame_len = 1152 // 8 * bitrate // 44100  # no padding
-    header = bytes([0xFF, 0xFB, (bitrate_idx << 4) | 0x00, 0x00])
-    frame = header + b"\xAB" * (frame_len - 4)
-    id3 = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10 if with_id3 else b""
-    return id3 + frame * n_frames + b"TAG" + b"\x00" * 30  # ID3v1 tail
-
-
-def test_flac_and_mp3_metadata():
-    import pytest
-
-    from ffi_export_etl_spark.operators.media_codecs import (
-        parse_flac_meta,
-        parse_mp3_meta,
-        sniff,
-    )
-
-    flac = _flac_bytes(rate=48000, channels=1, bps=24, total=96000)
-    assert sniff(flac) == "flac"
-    m = parse_flac_meta(flac)
-    assert m["sample_rate"] == 48000 and m["channels"] == 1
-    assert m["bits_per_sample"] == 24
-    assert m["duration_s"] == 2.0  # exact from total samples
-
-    mp3 = _mp3_bytes(n_frames=38)
-    assert sniff(mp3) == "mp3"
-    m = parse_mp3_meta(mp3)
-    assert m["sample_rate"] == 44100 and m["mpeg_version"] == 1
-    assert m["channels"] == 2
-    assert m["n_frames"] == 38  # frame walk ignores ID3v1/v2 tags
-    assert abs(m["duration_s"] - 38 * 1152 / 44100) < 1e-9
-
-    with pytest.raises(ValueError):
-        parse_flac_meta(b"fLaC" + b"\xff\x00\x00\x00")  # no STREAMINFO
-    with pytest.raises(ValueError):
-        parse_mp3_meta(b"ID3\x04\x00\x00\x00\x00\x00\x00no frames here")
-
-
-def test_flac_mp3_through_spark_features(spark):
-    from ffi_export_etl_spark.operators.multimodal import (
-        extract_real_features,
-    )
-
-    flac = _flac_bytes(total=220500)  # 5 s at 44.1 kHz
-    mp3 = _mp3_bytes(n_frames=76)  # ~2 s
-    rows = [
-        (1, "audio", bytearray(flac), "audio/flac", len(flac)),
-        (2, "audio", bytearray(mp3), "audio/mpeg", len(mp3)),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id: long, kind: string, content: binary, mime: string, "
-        "n_bytes: long",
-    )
-    feats = {r.media_id: r for r in extract_real_features(media).collect()}
-    assert feats[1].format == "flac" and feats[1].duration_s == 5.0
-    assert feats[1].channels == 2 and feats[1].height == 44100
-    assert feats[2].format == "mp3"
-    assert abs(feats[2].duration_s - 76 * 1152 / 44100) < 1e-9
-
-
-def test_gif_gce_scope_and_local_palette_background():
-    """Regressions from review: (a) a Graphic Control Extension governs
-    exactly one image block — a later frame with NO GCE must composite
-    fully opaque; (b) disposal-2 background restore uses the GLOBAL
-    palette's background color even when the disposed frame carried a
-    local palette."""
-    import struct as st
-
-    from ffi_export_etl_spark.operators.media_codecs import (
-        _lzw_encode,
-        decode_gif,
-    )
-
-    gpal = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [9, 9, 9]], np.uint8
-    )
-
-    def blocks(payload: bytes) -> bytes:
-        out = bytearray()
-        for off in range(0, len(payload), 255):
-            c = payload[off : off + 255]
-            out.append(len(c))
-            out += c
-        out.append(0)
-        return bytes(out)
-
-    def img(idx_rows, local_pal=None, w=2, h=2):
-        flags = 0x80 | 1 if local_pal is not None else 0x00
-        out = b"\x2c" + st.pack("<HHHH", 0, 0, w, h) + bytes([flags])
-        if local_pal is not None:
-            out += local_pal.tobytes()
-        return out + bytes([2]) + blocks(
-            _lzw_encode(list(idx_rows), 2)
-        )
-
-    header = (
-        b"GIF89a" + st.pack("<HH", 2, 2)
-        + st.pack("<BBB", 0x80 | 1, 3, 0) + gpal.tobytes()  # bg idx 3
-    )
-    # (a): the canvas starts as the background fill gpal[3]; frame 1's
-    # GCE says index 2 is transparent and every pixel is 2, so frame 1
-    # still shows the fill. Frame 2 has NO GCE and the same pixels —
-    # they must now composite OPAQUE blue; with the leak they would
-    # stay transparent and show the fill again.
-    gce_t2 = b"\x21\xf9\x04\x01\x00\x00\x02\x00"
-    gif = (
-        header
-        + gce_t2 + img([2, 2, 2, 2])
-        + img([2, 2, 2, 2])
-        + b"\x3b"
-    )
-    frames, _ = decode_gif(gif)
-    assert np.all(frames[0] == gpal[3])  # transparent over bg fill
-    assert np.all(frames[1] == gpal[2])  # GCE did not leak
-
-    # (b): frame 1 uses a LOCAL palette + disposal 2; the background
-    # restore between frames must use gpal[3], not local[3]
-    lpal = np.array(
-        [[1, 1, 1], [2, 2, 2], [3, 3, 3], [200, 200, 200]], np.uint8
-    )
-    gce_d2 = b"\x21\xf9\x04\x08\x00\x00\x00\x00"  # disposal 2
-    gce_t0 = b"\x21\xf9\x04\x01\x00\x00\x00\x00"  # transparent idx 0
-    gif = (
-        header
-        + gce_d2 + img([0, 0, 0, 0], local_pal=lpal)
-        + gce_t0 + img([0, 0, 0, 0])  # fully transparent: shows canvas
-        + b"\x3b"
-    )
-    frames, _ = decode_gif(gif)
-    assert np.all(frames[0] == lpal[0])
-    assert np.all(frames[1] == gpal[3])  # global bg color restored
-
-
-def test_encode_png_channel_axis_grayscale():
-    from ffi_export_etl_spark.operators.media_codecs import (
-        decode_png,
-        encode_png,
-    )
-
-    import pytest
-
-    g = (np.arange(12, dtype=np.uint8) * 3).reshape(4, 3, 1)
-    back = decode_png(encode_png(g))
-    assert back.shape == (4, 3) and np.array_equal(back, g[..., 0])
-    with pytest.raises(ValueError, match="channel count"):
-        encode_png(np.zeros((2, 2, 5), np.uint8))
+    """Magic-byte matches with malformed bodies must degrade to
+    format='corrupt' with null features, never abort the job; a good
+    PGM in the same batch still decodes."""
+    from ffi_export_etl_spark.operators.multimodal import extract_real_features
+
+    good = encode_ppm(_img(8, 8)[..., 0])
+    bad = {
+        2: b"P5\n8 8\n255\n" + b"\x01" * 10,        # truncated PGM body
+        3: b"P6\n9999 9999\n255\nxx",               # truncated PPM body
+        4: b"P2\n3 2\n255\n0 1 2",                  # ASCII, samples missing
+        5: b"P5\n8",                                # truncated header
+        6: b"P6\n4 4\n65535\n" + b"\x00" * 96,      # 16-bit, unsupported
+    }
+    feats = {
+        r["media_id"]: r
+        for r in extract_real_features(_media(spark, {1: good, **bad})).collect()
+    }
+    assert feats[1]["format"] == "pgm" and feats[1]["width"] == 8
+    assert feats[1]["channels"] == 1
+    for mid in bad:
+        r = feats[mid]
+        assert r["format"] == "corrupt", mid
+        assert r["width"] is None and r["mean_value"] is None, mid
 
 
 def test_injected_decoder_contract_round_trip(spark):
-    """Judge r10 item 7 (carried since r7): the compressed-video/full
-    JPEG/ffmpeg decode path is environmental — no media libs in this
-    container — but its INJECTION CONTRACT is testable end to end: a
-    caller installs a real kernel with set_decoder(fn), fn receives
+    """The compressed-image/video decode path is environmental — no
+    media libs here — but its INJECTION CONTRACT is testable end to end:
+    a caller installs a real kernel with set_decoder(fn), fn receives
     (bytes, kind) and returns {'width','height'}, and extract_features
     ships the injected kernel INTO the Arrow workers (the closure is
     pickled by value, so the swap needs no executor-side setup). Pinned
-    with a deterministic fake standing in for ffmpeg."""
+    with a netpbm-reading kernel standing in for PIL/ffmpeg."""
     from ffi_export_etl_spark.operators import multimodal as mm
 
     def px_decoder(content: bytes, kind: str) -> dict:
-        # a "real" kernel would parse the container; the contract only
-        # requires the dict shape — derive from inputs so the assert
-        # proves THIS kernel ran, executor-side, per row
+        # a "real" kernel parses the container; deriving from the bytes
+        # and the kind proves THIS kernel ran, executor-side, per row
+        arr = decode_pnm(content)
         return {
-            "width": len(content) * 10,
-            "height": len(content) * 10 + (1 if kind == "video" else 0),
+            "width": int(arr.shape[1]) * 10,
+            "height": int(arr.shape[0]) * 10 + (1 if kind == "video" else 0),
         }
 
+    img = encode_ppm(_img(4, 3))
+    gray = encode_ppm(_img(5, 6)[..., 1])
     media = spark.createDataFrame(
         [
-            (1, "image", bytearray(b"abcd"), "image/png", 4),
-            (2, "video", bytearray(b"xyzxyz"), "video/mp4", 6),
+            (1, "image", bytearray(img), "image/x-portable-pixmap", len(img)),
+            (2, "video", bytearray(gray), "image/x-portable-graymap", len(gray)),
         ],
-        "media_id long, kind string, content binary, mime string, n_bytes long",
+        MEDIA_DDL,
     )
     mm.set_decoder(px_decoder)
     try:
@@ -870,11 +155,11 @@ def test_injected_decoder_contract_round_trip(spark):
         }
     finally:
         mm.set_decoder(mm._fake_decode)  # restore the default stub
-    assert feats[1]["width"] == 40 and feats[1]["height"] == 40
-    assert feats[2]["width"] == 60 and feats[2]["height"] == 61
+    assert feats[1]["width"] == 30 and feats[1]["height"] == 40
+    assert feats[2]["width"] == 60 and feats[2]["height"] == 51
     # and the restore really is process-global: the default fake is back
     out = {
         r["media_id"]: r["width"]
         for r in mm.extract_features(media).collect()
     }
-    assert out[1] != 40
+    assert out[1] != 30

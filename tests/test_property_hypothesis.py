@@ -213,47 +213,6 @@ def test_chunk_documents_reconstruction_property(spark, texts, chunk_tokens, ove
         assert rebuilt == toks, (t, chunk_tokens, overlap, by_doc[i])
 
 
-# WET bodies: printable-ish text; the parser's one documented caveat is
-# a body containing the literal record boundary, so the strategy filters
-# it (and the header-terminating blank line can appear freely)
-WET_BODY = st.text(
-    alphabet="abcWARC/1.0 \n\r.é-", min_size=0, max_size=120
-).filter(lambda s: "\r\n\r\nWARC/1.0\r\n" not in (s + "\r\n\r\n"))
-
-
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(WET_BODY, min_size=1, max_size=12))
-def test_wet_roundtrip_property(spark, tmp_path_factory, bodies):
-    """Writing N records with arbitrary bodies and parsing them back
-    yields the same N bodies (modulo the trailing-newline padding the
-    record framing owns), each under its own URL."""
-    import re
-
-    from ffi_export_etl_spark.sources.wet import read_wet
-
-    d = tmp_path_factory.mktemp("wet")
-    recs = []
-    for i, body in enumerate(bodies):
-        b = body.encode()
-        recs.append(
-            b"WARC/1.0\r\n"
-            b"WARC-Type: conversion\r\n"
-            + f"WARC-Target-URI: https://h{i}.example/p\r\n".encode()
-            + b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-            + f"Content-Length: {len(b)}\r\n".encode()
-            + b"\r\n" + b
-        )
-    (d / "f.warc.wet").write_bytes(b"\r\n\r\n".join(recs) + b"\r\n\r\n")
-    got = {
-        r["url"]: r["text"] for r in read_wet(spark, str(d)).collect()
-    }
-    assert len(got) == len(bodies)
-    for i, body in enumerate(bodies):
-        want = re.sub(r"(\r?\n)+\Z", "", body)
-        assert got[f"https://h{i}.example/p"] == want, (i, body)
-
-
 @settings(max_examples=20, deadline=None)
 @given(
     st.integers(min_value=1, max_value=12),
@@ -275,34 +234,6 @@ def test_ppm_roundtrip_property(h, w, color, seed):
     shape = (h, w, 3) if color else (h, w)
     arr = rng.integers(0, 256, shape).astype(np.uint8)
     assert np.array_equal(decode_pnm(encode_ppm(arr)), arr)
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=4000),
-    st.sampled_from([8000, 16000, 44100]),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_wav_roundtrip_property(n, rate, seed):
-    """stdlib-write -> decode_wav recovers the exact int16 samples and
-    rate for any length/rate."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from ffi_export_etl_spark.operators.media_codecs import decode_wav
-
-    rng = np.random.default_rng(seed)
-    samples = rng.integers(-32768, 32768, n).astype(np.int16)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(rate)
-        f.writeframes(samples.tobytes())
-    arr, got_rate = decode_wav(buf.getvalue())
-    assert got_rate == rate and np.array_equal(arr[:, 0], samples)
 
 
 @settings(max_examples=5, deadline=None,

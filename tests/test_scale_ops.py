@@ -1,7 +1,5 @@
 """Scale-behavior pins that assert on plans/metrics, not timings:
 
-- salted_join actually splits a hot key across shuffle partitions
-  (partition histogram, AQE off so coalescing can't mask it),
 - connected_components raises instead of silently returning unconverged
   labels on a high-diameter graph,
 - connected_components_alternating (large-star/small-star) solves a
@@ -18,59 +16,9 @@ from ffi_export_etl_spark.operators.components import (
     connected_components,
     connected_components_alternating,
 )
-from ffi_export_etl_spark.operators.skew import salted_join
 
 # r12 suite split: end-to-end/property sweep module — runs with SPARK_GRAFT_SLOW_TESTS=1
 pytestmark = pytest.mark.slow_tail
-
-
-def _max_partition_rows(df) -> int:
-    counts = (
-        df.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    return max(r["n"] for r in counts)
-
-
-def test_salted_join_splits_hot_key_partitions(spark):
-    """One hot key funnels every row through a single reducer; salting
-    must spread it across ~replication partitions. Asserted on the
-    post-join partition histogram with AQE disabled (AQE's small-
-    partition coalescing would merge the tiny test partitions and hide
-    the split; at real scale partitions aren't tiny) and auto-broadcast
-    disabled (at test size Spark would broadcast the whole join away —
-    the scenario salting targets is the fact-fact shuffle join where no
-    side fits in memory)."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        n_hot = 20_000
-        hot = spark.range(n_hot).select(
-            F.lit(1).alias("k"), F.col("id").alias("payload")
-        )
-        cold = spark.range(2_000).select(
-            (F.col("id") % 50 + 2).cast("int").alias("k"),
-            F.col("id").alias("payload"),
-        )
-        big = hot.unionByName(cold)
-        small = spark.createDataFrame(
-            [(i, f"d{i}") for i in range(1, 52)], "k: int, dim: string"
-        )
-        unsalted = big.join(small, "k")
-        salted = salted_join(big, small, "k", replication=8)
-        # same rows either way (the salt is internal plumbing)
-        assert salted.count() == unsalted.count() == n_hot + 2_000
-        max_unsalted = _max_partition_rows(unsalted)
-        max_salted = _max_partition_rows(salted)
-        assert max_unsalted >= n_hot  # the hot key sits on one reducer
-        # salting spreads it ~8x; allow slack for salt-hash imbalance
-        assert max_salted <= max_unsalted / 3
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
 
 def _chain_edges(spark, n: int):

@@ -271,142 +271,3 @@ def test_session_base_covers_sidecar_and_tail(spark, tmp_path):
         spark, str(tmp_path / "ckpt_f4_probe2"), "exact", roots["exact"]
     )
     assert base2 == fold["generation"] + 1
-
-
-def test_r8_format_store_migrates_and_reads_cross_cwd(spark, tmp_path):
-    """An r8-format folded generation (MANAGED table, no _folded_data
-    under the store root) auto-migrates to the self-contained layout on
-    the next maintenance pass even with nothing to fold, after which
-    the store survives a metastore loss: a subprocess session in
-    ANOTHER cwd (fresh derby metastore that cannot resolve the table)
-    both folds (no-op, no error) and reads the store intact."""
-    import json
-    import subprocess
-    import sys
-
-    roots = _session1(spark, tmp_path, "f5")
-    compact_signature_store(spark, roots["exact"], "tsf5_exact",
-                            num_buckets=4)
-    meta = _folded_meta(spark, roots["exact"])
-    like = spark.table(meta["table"])
-    expect = sorted(
-        tuple(r) for r in _read_store(spark, roots["exact"], like).collect()
-    )
-    gen_rows = sorted(tuple(r) for r in spark.table(meta["table"]).collect())
-    schema = spark.table(meta["table"]).schema
-
-    # devolve to the r8 layout: same catalog name as a MANAGED table,
-    # no parquet data under the store root
-    spark.sql(f"DROP TABLE {meta['table']}")
-    shutil.rmtree(os.path.join(roots["exact"], "_folded_data"))
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    if wh:  # clear any stale managed location from older runs
-        shutil.rmtree(os.path.join(wh, meta["table"]), ignore_errors=True)
-    spark.createDataFrame(gen_rows, schema).write.mode(
-        "overwrite"
-    ).saveAsTable(meta["table"])
-    assert not os.path.isdir(os.path.join(roots["exact"], "_folded_data"))
-
-    # nothing to fold, but the maintenance pass migrates the generation
-    out = compact_signature_store(spark, roots["exact"], "tsf5_exact",
-                                  num_buckets=4)
-    assert out["folded_dirs"] == 0 and out.get("migrated") is True
-    assert os.path.isdir(meta["location"])
-    # same name still resolves (now external over the store root) and
-    # carries the same rows; the reader view is unchanged
-    assert sorted(
-        tuple(r) for r in spark.table(meta["table"]).collect()
-    ) == gen_rows
-    assert sorted(
-        tuple(r) for r in _read_store(spark, roots["exact"], like).collect()
-    ) == expect
-    # idempotent: a second pass neither re-migrates nor errors
-    again = compact_signature_store(spark, roots["exact"], "tsf5_exact",
-                                    num_buckets=4)
-    assert "migrated" not in again and again["folded_dirs"] == 0
-
-    # cross-cwd: fresh session in another cwd (its derby metastore
-    # cannot resolve the table) folds AND reads the migrated store
-    probe = tmp_path / "probe_cwd"
-    probe.mkdir()
-    script = f"""
-import json, sys
-sys.path.insert(0, {json.dumps(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))})
-from pyspark.sql import SparkSession
-from ffi_export_etl_spark.streaming.dedup import (
-
-# r12 suite split: end-to-end/property sweep module — runs with SPARK_GRAFT_SLOW_TESTS=1
-pytestmark = pytest.mark.slow_tail
-    _folded_meta, _read_store, compact_signature_store,
-)
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-store = {json.dumps(roots["exact"])}
-out = compact_signature_store(spark, store, "tsf5_exact", num_buckets=4)
-meta = _folded_meta(spark, store)
-like = spark.read.parquet(meta["location"])
-rows = sorted(tuple(r) for r in _read_store(spark, store, like).collect())
-print("RESULT " + json.dumps({{"fold": out, "rows": [list(r) for r in rows]}}))
-spark.stop()
-"""
-    res = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=str(probe),
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert res.returncode == 0, res.stderr[-2000:]
-    line = [ln for ln in res.stdout.splitlines() if ln.startswith("RESULT ")]
-    assert line, res.stdout[-2000:]
-    got = json.loads(line[0][len("RESULT "):])
-    assert got["fold"]["folded_dirs"] == 0
-    assert "migrated" not in got["fold"]
-    assert sorted(tuple(r) for r in got["rows"]) == [
-        tuple(r) for r in expect
-    ]
-
-
-def test_r8_migration_with_db_qualified_table(spark, tmp_path):
-    """The generation table may be db-qualified (the GC's orphan scan
-    already lists the table's own database); the r8-layout migration
-    must handle that too — the rename targets the QUALIFIED name, since
-    a bare target would resolve against the current database."""
-    roots = _session1(spark, tmp_path, "f6")
-    spark.sql("CREATE DATABASE IF NOT EXISTS tsfdb")
-    qual = "tsfdb.tsf6_exact"
-    fold = compact_signature_store(spark, roots["exact"], qual,
-                                   num_buckets=4)
-    meta = _folded_meta(spark, roots["exact"])
-    assert meta["table"] == f"{qual}_g{fold['generation']}"
-    like = spark.table(meta["table"])
-    expect = sorted(
-        tuple(r) for r in _read_store(spark, roots["exact"], like).collect()
-    )
-    gen_rows = sorted(tuple(r) for r in spark.table(meta["table"]).collect())
-    schema = spark.table(meta["table"]).schema
-
-    # devolve to the r8 layout (qualified MANAGED table, no store data)
-    spark.sql(f"DROP TABLE {meta['table']}")
-    shutil.rmtree(os.path.join(roots["exact"], "_folded_data"))
-    wh = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix("file:")
-    if wh:
-        shutil.rmtree(
-            os.path.join(wh, "tsfdb.db", meta["table"].split(".")[-1]),
-            ignore_errors=True,
-        )
-    spark.createDataFrame(gen_rows, schema).write.mode(
-        "overwrite"
-    ).saveAsTable(meta["table"])
-
-    out = compact_signature_store(spark, roots["exact"], qual,
-                                  num_buckets=4)
-    assert out.get("migrated") is True
-    assert os.path.isdir(meta["location"])
-    assert sorted(
-        tuple(r) for r in spark.table(meta["table"]).collect()
-    ) == gen_rows
-    assert sorted(
-        tuple(r) for r in _read_store(spark, roots["exact"], like).collect()
-    ) == expect

@@ -1,6 +1,6 @@
 """Structured Streaming tests: windowed aggregation parity with batch,
-sliding windows, watermark+append, streaming dedup, stateful
-sessionization vs the batch oracle, foreachBatch -> upsert idempotence.
+sliding windows, watermark+append, streaming dedup, foreachBatch ->
+upsert idempotence.
 """
 
 from __future__ import annotations
@@ -97,38 +97,6 @@ def test_streaming_dedup(spark):
     }
     got = {r["event_type"]: r["n"] for r in result.collect()}
     assert got == expected
-
-
-def test_stateful_sessionize_matches_batch_closed_sessions(spark):
-    from ffi_export_etl_spark.queries.events_q import evt_sessionize
-    from ffi_export_etl_spark.streaming.stateful import sessionize_stream
-
-    stream = read_events_stream(spark, _events_path())
-    stream = stream.withColumn("ts_us", event_micros(stream))
-    sessions = run_to_completion(
-        sessionize_stream(stream.select("user_id", "ts_us")),
-        output_mode="append",
-    )
-    got = {
-        (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in sessions.collect()
-    }
-    batch = evt_sessionize(spark, SF)
-    want_all = {
-        (r["user_id"], r["session_start_us"], r["session_end_us"], r["n_events"])
-        for r in batch.collect()
-    }
-    # the stream holds each user's trailing OPEN session in state; all
-    # emitted (closed) sessions must match batch sessions exactly, and
-    # only the final session per user may be missing
-    assert got <= want_all
-    last_per_user = {}
-    for u, s, e, n in want_all:
-        if u not in last_per_user or s > last_per_user[u][1]:
-            last_per_user[u] = (u, s, e, n)
-    open_sessions = set(last_per_user.values())
-    assert want_all - got <= open_sessions
-    assert len(got) >= len(want_all) - len(open_sessions)
 
 
 def test_stream_stream_interval_join(spark):
