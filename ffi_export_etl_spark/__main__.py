@@ -238,11 +238,12 @@ def curate_stream_main(argv: list[str]) -> int:
 def curate_maintain_main(argv: list[str]) -> int:
     """``python -m ffi_export_etl_spark curate-maintain``: between-
     sessions maintenance for a curate-stream deployment — fold the kept
-    corpus's committed batch dirs (and the quarantine's, if present)
-    into single generations so file counts stay bounded across daemon
-    runs. The in-run ``--kept-compact-every`` cadence does the same
-    thing mid-drain; this command is the cron-able nightly form the
-    sink docstrings point at. Prints one JSON line."""
+    corpus's committed batch dirs (and the quarantine's and signature
+    stores', if given) into single generations so file counts stay
+    bounded across daemon runs. The in-run ``--kept-compact-every``
+    cadence does the same thing mid-drain; this command is the
+    cron-able nightly form the sink docstrings point at. Prints one
+    JSON line."""
     ap = argparse.ArgumentParser(
         prog="python -m ffi_export_etl_spark curate-maintain",
         description="Fold committed kept-corpus (and quarantine) batch "
@@ -253,16 +254,10 @@ def curate_maintain_main(argv: list[str]) -> int:
     ap.add_argument("--num-files", type=int, default=4,
                     help="parquet files per compacted generation")
     ap.add_argument("--exact-store", default=None,
-                    help="also fold this signature store into a bucketed "
-                         "generation table (compact_signature_store)")
+                    help="also fold this signature store into a compacted "
+                         "generation (compact_signature_store)")
     ap.add_argument("--minhash-store", default=None)
     ap.add_argument("--span-store", default=None)
-    ap.add_argument("--store-table-prefix", default="sigstore",
-                    help="catalog-table prefix for folded store "
-                         "generations (<prefix>_<family>_g<N>)")
-    ap.add_argument("--store-buckets", type=int, default=64,
-                    help="bucket count of the folded store tables "
-                         "(bucketed on each family's join key)")
     args = ap.parse_args(argv)
 
     from .session import get_spark, tune
@@ -306,12 +301,8 @@ def curate_maintain_main(argv: list[str]) -> int:
             # never-drained store: a clean no-op, like the kept root
             out[f"{family}_store_generation"] = -1
             continue
-        fold = compact_signature_store(
-            spark, root, f"{args.store_table_prefix}_{family}",
-            num_buckets=args.store_buckets,
-        )
+        fold = compact_signature_store(spark, root, args.num_files)
         out[f"{family}_store_generation"] = fold["generation"]
-        out[f"{family}_store_table"] = fold["table"]
     print(json.dumps(out, sort_keys=True))
     return 0
 

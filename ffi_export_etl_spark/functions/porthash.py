@@ -71,11 +71,6 @@ def spark_perm(x: Column, a: int, b: int) -> Column:
     return (F.lit(a).cast("bigint") * x + F.lit(b)) % F.lit(MERSENNE31)
 
 
-def duck_perm(x_expr: str, a: int, b: int) -> str:
-    """DuckDB fragment matching :func:`spark_perm`."""
-    return f"(CAST({a} AS BIGINT) * {x_expr} + {b}) % {MERSENNE31}"
-
-
 def duck_sign_bucket(
     dim: int,
     plane_offset: int,

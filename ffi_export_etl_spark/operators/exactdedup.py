@@ -5,8 +5,7 @@ operators/minhash.py:138-198).
 The store is (id, key) with key = md5 of the UTF-8 text — the same
 digest the registered exact path (queries/dedup_q.dedup_exact_pack)
 groups by. A new batch joins the store on the digest: one shuffle on a
-16-byte key, never re-reading or re-hashing stored documents. At scale
-the store is written bucketed by key so the increment join co-locates.
+16-byte key, never re-reading or re-hashing stored documents.
 """
 
 from __future__ import annotations

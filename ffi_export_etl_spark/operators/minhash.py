@@ -52,28 +52,6 @@ def signatures_from_shingles(sh: DataFrame, num_perm: int = 32) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int | None = None,
-    num_perm: int = 32,
-    shingle_mode: str = "word",
-) -> DataFrame:
-    """(id, sig: array<bigint>[num_perm]) MinHash signatures.
-
-    Aggregated with groupBy().agg(min...) — map-side partial aggregation
-    keeps the shuffle tiny at scale. ``shingle_mode="char"`` switches to
-    character n-grams for boundary-less scripts (operators/scripts.py).
-    """
-    wide = signatures_from_shingles(
-        build_shingles(docs, id_col, text_col, n, shingle_mode), num_perm
-    )
-    return wide.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig")
-    )
-
-
 def _banded(
     wide_sigs: DataFrame,
     bands: int,
@@ -148,9 +126,9 @@ def minhash_signature_store(
 ) -> DataFrame:
     """(id, band, bucket) — the persistable LSH index of a corpus.
 
-    At scale this table is written bucketed by (band, bucket) so
-    incremental batches join against it WITHOUT re-sketching the corpus:
-    the daily-increment shape for a 100 TB collection."""
+    Persisted as plain parquet, it lets incremental batches join against
+    it on (band, bucket) WITHOUT re-sketching the corpus: the
+    daily-increment shape for a 100 TB collection."""
     sigs = signatures_from_shingles(
         build_shingles(docs, id_col, text_col, n, shingle_mode), num_perm
     )
@@ -314,8 +292,7 @@ def minhash_signature_store_with_sigs(
     candidates store-locally (the simhash store's pattern): estimated
     Jaccard = fraction of agreeing signature positions, no stored
     document ever re-read or re-shingled. Costs num_perm longs per row
-    over the plain (id, band, bucket) store; at scale store it bucketed
-    by (band, bucket) like the plain variant.
+    over the plain (id, band, bucket) store.
 
     The sig array rides THROUGH the band explode (one narrow projection
     after the signature aggregation) rather than joining the banded

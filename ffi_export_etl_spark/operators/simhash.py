@@ -163,8 +163,8 @@ def simhash_signature_store(
     docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """(id, simhash, band, val) — the persistable simhash index of a
-    corpus, mirroring minhash_signature_store: write it bucketed by
-    (band, val) and incremental batches join against it WITHOUT
+    corpus, mirroring minhash_signature_store: persist it and
+    incremental batches join against it on (band, val) WITHOUT
     re-fingerprinting the corpus. Unlike the minhash store, this one
     carries everything verification needs (the 60-bit fingerprint), so
     the incremental path emits FINAL pairs, not just candidates."""

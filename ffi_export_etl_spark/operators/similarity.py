@@ -225,8 +225,8 @@ def signlsh_signature_store(
     deliberately match minhash_signature_store, so
     minhash.incremental_candidate_pairs IS the incremental join for this
     store too (new x stored + new x new, combined-population bucket cap,
-    never stored x stored): write it bucketed by (band, bucket) and daily
-    embedding batches join against it without re-hashing the corpus.
+    never stored x stored): persist it and daily embedding batches
+    join against it without re-hashing the corpus.
     The hyperplanes are deterministic (md5-seeded), so signatures
     computed today and next month agree bit-for-bit."""
     coefs = hyperplane_coefficients(dim, tables * planes_per_table)

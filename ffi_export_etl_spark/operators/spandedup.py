@@ -308,10 +308,10 @@ def span_digest_store(
 ) -> DataFrame:
     """(key) — the persistable DISTINCT window-digest index of a corpus,
     the span-grain member of the engine's signature-store family
-    (exact / minhash / simhash / sign-LSH stores). At scale write it
-    bucketed on ``key`` (streaming/dedup.compact_signature_store) so the daily
-    increment join co-locates without shuffling the stored side; the
-    stored corpus is never re-windowed."""
+    (exact / minhash / simhash / sign-LSH stores). Append it per batch
+    and fold it with streaming/dedup.compact_signature_store; the daily
+    increment joins against it on ``key`` and the stored corpus is
+    never re-windowed."""
     return (
         _windows(docs, id_col, text_col, span_tokens)
         .select(F.col("whash").alias("key"))

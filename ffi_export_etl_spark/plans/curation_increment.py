@@ -23,9 +23,9 @@ re-reading or re-curating the accumulated corpus.
                                      SURVIVORS, appended by the caller)
 
 Cost is proportional to the ARRIVAL, not the corpus: the stored side
-contributes one bucket/digest join per family (bucketed store tables
-co-locate it — see streaming/dedup.compact_signature_store) and is never
-re-sketched. The keeper policy matches the batch pipeline: a new doc
+contributes one bucket/digest join per family (the stores are plain
+parquet, folded into generations by
+streaming/dedup.compact_signature_store) and is never re-sketched. The keeper policy matches the batch pipeline: a new doc
 near-dup to ANY stored doc loses (the stored copy is the canonical one);
 within the new batch, min id wins. Store deltas carry only surviving
 docs, so a rejected near-dup can never become a future canonical copy.
@@ -90,8 +90,8 @@ def curate_increment(
     (minhash_signature_store_with_sigs).
     ``exact_delta`` / ``minhash_delta``: the store rows for the
     survivors; append them (folded nightly by streaming/dedup.
-    compact_signature_store) so
-    tomorrow's increment sees today's corpus.
+    compact_signature_store) so tomorrow's increment sees today's
+    corpus.
 
     ``input_html`` / ``c4_line_clean`` / ``gopher_rules`` mirror the
     batch pipeline's per-document stages (all state-free, so increments

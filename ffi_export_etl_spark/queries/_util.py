@@ -40,11 +40,6 @@ def fmt_date(col: str | Column, alias: str) -> Column:
     return F.date_format(c, "yyyy-MM-dd").alias(alias)
 
 
-def fmt_ts(col: str | Column, alias: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss").alias(alias)
-
-
 # DuckDB-side equivalents (kept next to the Spark helpers so the two
 # dialects stay in sync):
 #   money measure      CAST(x AS DECIMAL(18,2))
@@ -52,7 +47,6 @@ def fmt_ts(col: str | Column, alias: str) -> Column:
 #                        * (1 - CAST(l_discount AS DECIMAL(18,2)))
 #   final cast         CAST(SUM(...) AS DOUBLE)
 #   date string        strftime(d, '%Y-%m-%d')
-#   ts string          strftime(t, '%Y-%m-%d %H:%M:%S')
 DUCK_REVENUE = (
     "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))"
 )

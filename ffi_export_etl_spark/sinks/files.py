@@ -138,10 +138,10 @@ def compact_warehouse(
     loader grows every table's file count without bound — the classic
     small-files problem: at scale the NEXT upsert's existing-keys scan
     (and every reader) pays per-file open/footer latency that dwarfs the
-    data. This is the batch-warehouse twin of the signature-store fold
-    (streaming/dedup.compact_signature_store): run it between batches
-    (cron-able via the warehouse-maintain CLI), idempotent, rows
-    preserved exactly.
+    data. This is the batch-warehouse twin of the streaming sinks'
+    generation fold (streaming/events.compact_window_sink): run it
+    between batches (cron-able via the warehouse-maintain CLI),
+    idempotent, rows preserved exactly.
 
     Mechanics per table (only dirs holding >= ``min_files`` parquet
     files are touched; names starting with ``_`` — ledgers, staging —
@@ -167,9 +167,7 @@ def compact_warehouse(
       crash-safe: on entry, a missing table dir next to a completed tmp
       (``_SUCCESS`` present) promotes the tmp, otherwise a surviving
       old dir is restored; stale tmp/old dirs from finished or aborted
-      runs are cleared before refolding (both this naming and the r10
-      ``<name>._compact_tmp`` suffix form, so pre-r11 crash residue
-      still repairs).
+      runs are cleared before refolding.
 
     Hive-partitioned tables (no top-level parquet, ``key=value``
     subdirs — e.g. the ANN index's per-cell code dirs) fold each
@@ -251,12 +249,6 @@ def _fold_candidates(root: str, partitions: bool = False) -> set[str]:
                 base = n[len(prefix):]
                 break
         if base is None:
-            # r10 suffix naming — recognized so pre-r11 residue repairs
-            for suffix in ("._compact_tmp", "._compact_old"):
-                if n.endswith(suffix):
-                    base = n[: -len(suffix)]
-                    break
-        if base is None:
             if n.startswith(("_", ".")):
                 continue
             base = n
@@ -268,29 +260,18 @@ def _fold_candidates(root: str, partitions: bool = False) -> set[str]:
 def _repair_dir(target_dir: str) -> bool:
     """Crash repair for one fold target (see compact_warehouse): promote
     a completed tmp over a missing dir, else restore the old dir, then
-    clear stale residue — in BOTH staging namings (the r11 underscore
-    prefix and the r10 suffix), preferring the current one. Returns
-    False when no dir exists at all."""
+    clear stale residue. Returns False when no dir exists at all."""
     import shutil
 
     tmp_dir, old_dir = _staging_paths(target_dir)
-    tmp_legacy = target_dir + "._compact_tmp"
-    old_legacy = target_dir + "._compact_old"
     if not os.path.isdir(target_dir):
-        for tmp in (tmp_dir, tmp_legacy):
-            if os.path.isdir(tmp) and os.path.exists(
-                os.path.join(tmp, "_SUCCESS")
-            ):
-                os.rename(tmp, target_dir)  # promote completed fold
-                break
+        if os.path.exists(os.path.join(tmp_dir, "_SUCCESS")):
+            os.rename(tmp_dir, target_dir)  # promote completed fold
+        elif os.path.isdir(old_dir):
+            os.rename(old_dir, target_dir)  # unwind incomplete fold
         else:
-            for old in (old_dir, old_legacy):
-                if os.path.isdir(old):
-                    os.rename(old, target_dir)  # unwind incomplete fold
-                    break
-            else:
-                return False
-    for stale in (tmp_dir, old_dir, tmp_legacy, old_legacy):
+            return False
+    for stale in (tmp_dir, old_dir):
         if os.path.isdir(stale):
             shutil.rmtree(stale)
     return True

@@ -26,10 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at *any* scale factor (region/nation
-# are fixed-size; TPC-H dims grow with sf but region/nation never do).
-BROADCAST_SAFE = ("region", "nation")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -37,11 +33,3 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Load the named tables lazily; nothing is read until an action runs."""
-    return {name: load_table(spark, sf_dir, name) for name in names if
-            os.path.exists(table_path(sf_dir, name))}

@@ -16,10 +16,9 @@ streaming/dedup.py — a replayed micro-batch overwrites its own
 ``batch_id=N`` subdirectory in all three sinks, and within a run batches
 execute serially so each joins exactly the stores its predecessors
 wrote. Compact the stores between sessions with
-dedup.compact_signature_store (generation-aware: the daemon reads the
-folded bucketed generation + post-fold batch dirs back
-transparently); since r9 it is the ONE fold path (the one-shot
-compact_store snapshot sibling is gone).
+dedup.compact_signature_store — the same ``compacted=<max_id>``
+generation fold as the kept corpus below; the daemon reads the newest
+generation + post-fold batch dirs back transparently.
 
 Small-file story (r6): the kept corpus accumulates one parquet dir per
 micro-batch per drain — a cron-driven daemon would grow thousands of
@@ -38,60 +37,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.exactdedup import exact_signature_store
 from ..operators.minhash import minhash_signature_store_with_sigs
 from ..plans.curation_increment import curate_increment
 from .dedup import _read_store, _session_base
 from .events import compact_window_sink, read_window_sink
-
-
-def _kept_max_id(spark: SparkSession, kept_path: str) -> int | None:
-    """Max occupied absolute id of the kept corpus — generation-aware.
-
-    A plain parquet read of a compacted kept root either throws (mixed
-    ``compacted=``/``batch_id=`` partition dir names) or yields no
-    batch_id column, so a continue-mode session base computed that way
-    silently restarts at 0 — new batches then land AT OR BELOW the
-    current generation id, where read_kept skips them and the next
-    compaction DELETES them. This probe combines (a) the local dir
-    listing (committed generations + every batch dir, even uncommitted
-    ones — a crashed dir's id stays burned rather than reused) with
-    (b) the plain batch_id scan for roots the listing can't see
-    (hdfs://, s3a:// — never compacted, since the generation machinery
-    is local-filesystem)."""
-    from .events import _sink_ids
-
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    ids = list(_sink_ids(kept_path, "compacted", committed_only=True))
-    ids += list(_sink_ids(kept_path, "batch_id"))
-    try:
-        # the fallback classes are scoped to the READ — absent root
-        # (AnalysisException) and mixed compacted=/batch_id= partition
-        # names, which Spark 4 raises eagerly at partition discovery as
-        # SparkRuntimeException CONFLICTING_PARTITION_COLUMN_NAMES (the
-        # root shape nightly compaction plus a fresh drain produces;
-        # caught by the daily-ops lifecycle test). ONLY that condition
-        # is swallowed (r8 ADVICE): on a dir-listing-blind root
-        # (hdfs://, s3a://) the scan is the ONLY id source, so any
-        # other runtime read failure must surface — treating it as
-        # "no store" would restart the base at 0 and overwrite
-        # existing batch dirs. The max SCAN below stays OUTSIDE the
-        # guard for the same reason (review r8s2).
-        store = spark.read.parquet(kept_path)
-    except AnalysisException:
-        store = None
-    except SparkRuntimeException as e:
-        if e.getCondition() != "CONFLICTING_PARTITION_COLUMN_NAMES":
-            raise
-        store = None
-    if store is not None and "batch_id" in store.columns:
-        top = store.select(F.max("batch_id")).first()[0]
-        if top is not None:
-            ids.append(int(top))
-    return max(ids) if ids else None
 
 
 def read_kept(spark: SparkSession, kept_path: str) -> DataFrame:
@@ -227,18 +178,8 @@ def streaming_curate(
         roots.append(span_store_path)
         names.append("span")
     if on_existing_store == "continue":
-        # the kept root needs the generation-aware probe; the stores'
-        # folds keep a _session_base-visible sidecar max, so their
-        # plain batch_id scan stays correct
         bases = {
-            root: _session_base(
-                spark, checkpoint, name, root,
-                max_id_fn=(
-                    (lambda r=root: _kept_max_id(spark, r))
-                    if root == kept_path
-                    else None
-                ),
-            )
+            root: _session_base(spark, checkpoint, name, root)
             for name, root in zip(names, roots)
         }
     else:

@@ -17,6 +17,7 @@ import os
 import tempfile
 import uuid
 
+from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -223,6 +224,49 @@ def _sink_ids(
     ]
 
 
+def _sink_max_id(spark: SparkSession, root: str) -> int | None:
+    """Max occupied absolute id of a ``batch_id=``/``compacted=`` sink
+    root (the kept corpus, the signature stores), or None when empty.
+
+    A plain parquet read of a compacted root either throws (mixed
+    ``compacted=``/``batch_id=`` partition dir names) or yields no
+    batch_id column, so a continue-mode session base computed that way
+    silently restarts at 0 — new batches then land AT OR BELOW the
+    current generation id, where the reader skips them and the next
+    compaction DELETES them. This probe combines (a) the local dir
+    listing (committed generations + every batch dir, even uncommitted
+    ones — a crashed dir's id stays burned rather than reused) with
+    (b) the plain batch_id scan for roots the listing can't see
+    (hdfs://, s3a:// — never compacted, since the generation machinery
+    is local-filesystem)."""
+    ids = list(_sink_ids(root, "compacted", committed_only=True))
+    ids += list(_sink_ids(root, "batch_id"))
+    try:
+        # the fallback classes are scoped to the READ — absent root
+        # (AnalysisException) and mixed compacted=/batch_id= partition
+        # names, which Spark 4 raises eagerly at partition discovery as
+        # SparkRuntimeException CONFLICTING_PARTITION_COLUMN_NAMES (the
+        # root shape nightly compaction plus a fresh drain produces;
+        # caught by the daily-ops lifecycle test). ONLY that condition
+        # is swallowed: on a dir-listing-blind root (hdfs://, s3a://)
+        # the scan is the ONLY id source, so any other runtime read
+        # failure must surface — treating it as "no store" would
+        # restart the base at 0 and overwrite existing batch dirs. The
+        # max SCAN below stays OUTSIDE the guard for the same reason.
+        store = spark.read.parquet(root)
+    except AnalysisException:
+        store = None
+    except SparkRuntimeException as e:
+        if e.getCondition() != "CONFLICTING_PARTITION_COLUMN_NAMES":
+            raise
+        store = None
+    if store is not None and "batch_id" in store.columns:
+        top = store.select(F.max("batch_id")).first()[0]
+        if top is not None:
+            ids.append(int(top))
+    return max(ids) if ids else None
+
+
 def compact_window_sink(
     spark: SparkSession,
     out_dir: str,
@@ -239,8 +283,10 @@ def compact_window_sink(
     crashed midway is garbage-collected and redone (never shadowing the
     inputs it was folding), and deletion order cannot lose or duplicate
     rows for ``read_window_sink``. Returns the current generation id
-    (-1 = nothing compacted yet). Also callable between sessions as
-    nightly maintenance, like streaming/dedup.compact_signature_store.
+    (-1 = nothing compacted yet). The one fold of the kept corpus, the
+    quarantine and the signature stores (curate.compact_kept,
+    dedup.compact_signature_store); also callable between sessions as
+    nightly maintenance.
     """
     import shutil
 

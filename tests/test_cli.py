@@ -720,7 +720,7 @@ def test_cli_curate_maintain(spark, tmp_path, capsys):
     assert rep3 == {"kept_generation": -1, "kept_rows": 0}
 
     # --exact-store/--minhash-store: the signature stores fold into
-    # bucketed generation tables (compact_signature_store); a pointed-
+    # compacted generations (compact_signature_store); a pointed-
     # at-but-never-drained store is a clean -1, and the daemon reads
     # the folded view back transparently (library-pinned in
     # test_store_fold; here: CLI wiring + JSON contract)
@@ -729,16 +729,13 @@ def test_cli_curate_maintain(spark, tmp_path, capsys):
         "--exact-store", str(tmp_path / "exm"),
         "--minhash-store", str(tmp_path / "mhm"),
         "--span-store", str(tmp_path / "never_drained_span"),
-        "--store-table-prefix", "climaint", "--store-buckets", "2",
     ])
     assert rc == 0
     rep4 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep4["exact_store_generation"] >= 0
     assert rep4["minhash_store_generation"] >= 0
     assert rep4["span_store_generation"] == -1
-    assert rep4["exact_store_table"] == (
-        f"climaint_exact_g{rep4['exact_store_generation']}"
-    )
+    assert "exact_store_table" not in rep4
     # consumed dirs are gone; only dirs above the generation remain
     # (the newest committed dir is always held back — replay headroom)
     remaining = [
@@ -747,6 +744,7 @@ def test_cli_curate_maintain(spark, tmp_path, capsys):
                                          "batch_id=*"))
     ]
     assert all(i > rep4["exact_store_generation"] for i in remaining)
-    assert rep4["exact_store_table"] in [
-        t.name for t in spark.catalog.listTables()
-    ]
+    assert _glob.glob(os.path.join(
+        str(tmp_path / "exm"),
+        f"compacted={rep4['exact_store_generation']}", "*.parquet",
+    ))

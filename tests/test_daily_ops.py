@@ -7,7 +7,7 @@ shards with an integrity report.
 Every piece is pinned on its own elsewhere; this test pins the
 COMPOSITION a real deployment runs week over week — in particular that
 drains keep deduping correctly against stores that have been folded to
-bucketed tables mid-lifecycle under the SAME checkpoint (the
+compacted generations mid-lifecycle under the SAME checkpoint (the
 non-continue path the replay-headroom rule exists for).
 """
 
@@ -83,10 +83,8 @@ def test_daily_ops_lifecycle(spark, tmp_path):
 
     def _maintain():
         compact_kept(spark, roots["kept"], num_files=1)
-        compact_signature_store(spark, roots["exact"], "dops_exact",
-                                num_buckets=2)
-        compact_signature_store(spark, roots["mh"], "dops_mh",
-                                num_buckets=2)
+        compact_signature_store(spark, roots["exact"], 1)
+        compact_signature_store(spark, roots["mh"], 1)
 
     # ---- day 1: two waves; cross-wave exact dup dedups ----
     _drop("w0", [(1, TEXT_A, "web"), (2, TEXT_B, "web")])

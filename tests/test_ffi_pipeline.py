@@ -74,41 +74,6 @@ def test_explicit_tags_skip_full_discovery(spark, export_path, monkeypatch):
     assert tables["MacroPlot"].count() == 3
 
 
-def test_tagcol_variant_equals_production_reader(spark, export_path, tmp_path):
-    """read_ffi_export_tagcol (the r9 A/B layout: one explode into a
-    (tag, row_json) long cache) must produce IDENTICAL tables to the
-    production reader — single file and multi-file (file-scoped *_ID
-    suffixes included)."""
-    from ffi_export_etl_spark.sources.xml import read_ffi_export_tagcol
-
-    def snap(tables):
-        def nkey(row):
-            return tuple((v is None, v) for v in row)
-
-        return {
-            t: (sorted(df.columns),
-                sorted(map(tuple,
-                           df.select(*sorted(df.columns)).collect()),
-                       key=nkey))
-            for t, df in tables.items()
-        }
-
-    a = snap(read_ffi_export(spark, export_path))
-    b = snap(read_ffi_export_tagcol(spark, export_path))
-    assert a == b
-
-    from tests.ffi_fixture import write_export_xml as _w
-
-    multi_dir = tmp_path / "multi"
-    multi_dir.mkdir()
-    for i in range(3):
-        _w(str(multi_dir / f"e{i}.xml"), uniq=f"m{i}")
-    glob_pat = str(multi_dir / "*.xml")
-    a2 = snap(read_ffi_export(spark, glob_pat))
-    b2 = snap(read_ffi_export_tagcol(spark, glob_pat))
-    assert a2 == b2
-
-
 def test_plot_dedup_and_plot_id(pipeline):
     rows = pipeline.tables["MacroPlot"].collect()
     # MP2 deduped (same PlotID, later DateIn), MP3 dropped (null DateIn)

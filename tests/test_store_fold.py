@@ -1,25 +1,27 @@
-"""streaming/dedup.compact_signature_store: the generation-aware
-bucketed fold of the streaming signature stores, and its transparent
-read-back by the curate daemon (_read_store) across sessions.
+"""streaming/dedup.compact_signature_store: the generation fold of the
+streaming signature stores, and its transparent read-back by the curate
+daemon (_read_store) across sessions.
 
-The contract under test is the window-sink discipline transplanted onto
-catalog tables: newest COMMITTED generation + batch dirs above its id,
-commit marker = the sidecar write's _SUCCESS, crash windows covered by
-the reader rule instead of a transaction log.
+The contract under test is the window-sink discipline
+(streaming/events.py): newest COMMITTED ``compacted=<id>`` generation +
+batch dirs above its id, commit marker = the generation write's
+_SUCCESS, crash windows covered by the reader rule instead of a
+transaction log.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
 
 from ffi_export_etl_spark.streaming.curate import streaming_curate
 from ffi_export_etl_spark.streaming.dedup import (
-    _folded_meta,
     _read_store,
     compact_signature_store,
+    store_row_count,
 )
 
 BASE = (
@@ -73,63 +75,64 @@ def _session1(spark, tmp_path, tag):
     return roots
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _warehouse_files(spark):
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return {
+        os.path.join(d, f) for d, _, files in os.walk(wh) for f in files
+    }
+
+
+def _simhash_store(spark, tmp_path):
+    """A simhash store (fingerprint carried next to the (band, val) join
+    key) with two committed batch dirs."""
+    from ffi_export_etl_spark.operators.simhash import simhash_signature_store
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} a b c d e") for i in range(10)],
+        "doc_id: long, text: string",
+    )
+    root = str(tmp_path / "simhash_store")
+    sigs = simhash_signature_store(docs, "doc_id", "text")
+    sigs.write.parquet(os.path.join(root, "batch_id=0"))
+    sigs.limit(1).write.parquet(os.path.join(root, "batch_id=1"))
+    return root
+
+
 def test_fold_preserves_store_content_and_continues(spark, tmp_path):
-    """Fold both stores after session 1; the reader view is unchanged,
-    and a continue-mode session 2 (lost checkpoint) dedups against the
-    folded corpus exactly as it did against the plain dirs."""
+    """Fold the stores after session 1; the reader view is unchanged,
+    nothing touches the catalog or the session warehouse, and a
+    continue-mode session 2 (lost checkpoint) dedups against the folded
+    corpus exactly as it did against the plain dirs."""
     roots = _session1(spark, tmp_path, "f1")
-    before_exact = sorted(
-        tuple(r)
-        for r in spark.read.parquet(roots["exact"]).drop("batch_id").collect()
-    )
-    fold = compact_signature_store(
-        spark, roots["exact"], "tsf_exact", num_buckets=4
-    )
-    fold_mh = compact_signature_store(
-        spark, roots["mh"], "tsf_mh", num_buckets=4
-    )
-    # replay headroom: of dirs {0, 1} only batch 0 folds — the newest
-    # committed batch may still be unrecorded in the stream's
-    # checkpoint, and folding it would wedge a checkpoint-reuse restart
-    # on the fail-fast guard forever (review r8s2)
-    assert fold["generation"] == 0 and fold["folded_dirs"] == 1
-    assert fold_mh["table"] == "tsf_mh_g0"
-    # consumed dirs are gone; the held-back newest dir remains
-    assert [
-        n for n in sorted(os.listdir(roots["exact"]))
-        if n.startswith("batch_id=")
-    ] == ["batch_id=1"]
-    assert _folded_meta(spark, roots["exact"])["max_batch_id"] == 0
-    # the reader view equals the pre-fold store content
-    like = spark.table("tsf_exact_g0")
-    after = sorted(
-        tuple(r) for r in _read_store(spark, roots["exact"], like).collect()
-    )
-    assert after == before_exact
-    # the folded table is bucketed on the family's join key — the
-    # co-location the daily-increment join rides at scale (the exact
-    # store's key is the content digest; minhash's is (band, bucket))
-    assert "tsf_exact_g0" in [t.name for t in spark.catalog.listTables()]
-    desc = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql("DESCRIBE EXTENDED tsf_exact_g0").collect()
+    stores = [roots["exact"], roots["mh"], _simhash_store(spark, tmp_path)]
+    before = {
+        root: _rows(spark.read.parquet(root).drop("batch_id"))
+        for root in stores
     }
-    assert desc.get("Num Buckets") == "4"
-    assert desc.get("Bucket Columns") == "[`key`]"
-    desc_mh = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql("DESCRIBE EXTENDED tsf_mh_g0").collect()
-    }
-    assert desc_mh.get("Bucket Columns") == "[`band`, `bucket`]"
-
-    # the folded-aware logical count sees table + tail (a plain root
-    # count would report only the held-back dir)
-    from ffi_export_etl_spark.streaming.dedup import store_row_count
-
-    assert store_row_count(spark, roots["exact"]) == len(before_exact)
-    assert store_row_count(
-        spark, str(tmp_path / "absent_store")
-    ) == 0
+    tables = spark.catalog.listTables()
+    warehouse = _warehouse_files(spark)
+    for root in stores:
+        fold = compact_signature_store(spark, root, 1)
+        # replay headroom: of dirs {0, 1} only batch 0 folds — the newest
+        # committed batch may still be unrecorded in the stream's
+        # checkpoint, and folding it would wedge a checkpoint-reuse
+        # restart on the fail-fast guard forever
+        assert fold == {"generation": 0, "folded_dirs": 1}
+        # consumed dirs are gone; the held-back newest dir remains
+        assert sorted(os.listdir(root)) == ["batch_id=1", "compacted=0"]
+        # the reader view equals the pre-fold store content
+        like = spark.read.parquet(os.path.join(root, "compacted=0"))
+        assert _rows(_read_store(spark, root, like)) == before[root]
+        # the folded-aware logical count sees generation + tail (a plain
+        # root count would report only the held-back dir)
+        assert store_row_count(spark, root) == len(before[root])
+    assert spark.catalog.listTables() == tables
+    assert _warehouse_files(spark) == warehouse
+    assert store_row_count(spark, str(tmp_path / "absent_store")) == 0
 
     # session 2, checkpoint lost: near-dup of stored doc 5 drops, fresh
     # doc 10 survives — identical to the unfolded continue-mode test
@@ -155,7 +158,7 @@ def test_fold_preserves_store_content_and_continues(spark, tmp_path):
     rows = spark.read.parquet(roots["kept"]).collect()
     assert {r["id"] for r in rows} == EXPECT_KEPT | {10}
     # session 2's store deltas landed ABOVE the folded generation, and
-    # the session base skipped past both the sidecar max and the
+    # the session base skipped past both the generation and the
     # held-back dir: the lost checkpoint re-delivers all three source
     # files (slots 2-4; re-arrivals dedup away), wave9 among them
     tail_ids = {
@@ -166,66 +169,68 @@ def test_fold_preserves_store_content_and_continues(spark, tmp_path):
     assert tail_ids == {1, 2, 3, 4}
 
     # a second fold picks up the tail minus the new headroom dir and
-    # advances the generation; the superseded table is dropped
-    fold2 = compact_signature_store(
-        spark, roots["exact"], "tsf_exact", num_buckets=4
-    )
-    assert fold2["generation"] == 3 and fold2["folded_dirs"] == 3
-    assert "tsf_exact_g0" not in [t.name for t in spark.catalog.listTables()]
-    assert "tsf_exact_g3" in [t.name for t in spark.catalog.listTables()]
+    # replaces the generation
+    fold2 = compact_signature_store(spark, roots["exact"], 1)
+    assert fold2 == {"generation": 3, "folded_dirs": 3}
+    assert sorted(os.listdir(roots["exact"])) == [
+        "batch_id=4", "compacted=3"
+    ]
 
 
 def test_fold_noop_and_crash_windows(spark, tmp_path):
     """Idempotence + both crash windows: a re-fold with no new dirs is a
     no-op; a resurrected consumed dir (commit-then-clean crash) is
-    excluded by the reader rule and removed by the next fold; an orphan
-    generation table (crash before the sidecar commit) is GC'd."""
+    excluded by the reader rule and removed by the next fold; an
+    uncommitted generation (crash mid-write) is ignored by the reader
+    and removed by the next fold."""
     roots = _session1(spark, tmp_path, "f2")
+    root = roots["exact"]
     # stash a copy of batch 0's dir to simulate the crash window later
     stash = str(tmp_path / "stash_b0")
-    shutil.copytree(os.path.join(roots["exact"], "batch_id=0"), stash)
-    fold = compact_signature_store(
-        spark, roots["exact"], "tsf2_exact", num_buckets=4
-    )
-    view_cols = spark.table(fold["table"])
-    folded_rows = sorted(
-        tuple(r)
-        for r in _read_store(spark, roots["exact"], view_cols).collect()
-    )
+    shutil.copytree(os.path.join(root, "batch_id=0"), stash)
+    fold = compact_signature_store(spark, root, 1)
+    gen_dir = os.path.join(root, f"compacted={fold['generation']}")
+    view_cols = spark.read.parquet(gen_dir)
+    folded_rows = _rows(_read_store(spark, root, view_cols))
     # no-op re-fold: same generation, nothing folded
-    again = compact_signature_store(
-        spark, roots["exact"], "tsf2_exact", num_buckets=4
-    )
-    assert again == {
-        "generation": fold["generation"],
-        "table": fold["table"],
-        "folded_dirs": 0,
-    }
+    again = compact_signature_store(spark, root, 1)
+    assert again == {"generation": fold["generation"], "folded_dirs": 0}
     # commit-then-clean crash: the consumed dir reappears; the reader
     # must not double-count it
-    shutil.copytree(stash, os.path.join(roots["exact"], "batch_id=0"))
-    resurrected = sorted(
-        tuple(r)
-        for r in _read_store(spark, roots["exact"], view_cols).collect()
-    )
-    assert resurrected == folded_rows
+    shutil.copytree(stash, os.path.join(root, "batch_id=0"))
+    assert _rows(_read_store(spark, root, view_cols)) == folded_rows
     # ... and the next fold just removes it (still a no-op fold)
-    third = compact_signature_store(
-        spark, roots["exact"], "tsf2_exact", num_buckets=4
-    )
+    third = compact_signature_store(spark, root, 1)
     assert third["folded_dirs"] == 0
-    assert not os.path.isdir(os.path.join(roots["exact"], "batch_id=0"))
-    # orphan table (fold crashed before its sidecar write): GC'd on the
-    # next maintenance run
-    spark.createDataFrame([(0, "x")], "id: long, key: string").write.mode(
-        "overwrite"
-    ).saveAsTable("tsf2_exact_g99")
-    compact_signature_store(spark, roots["exact"], "tsf2_exact",
-                            num_buckets=4)
-    assert "tsf2_exact_g99" not in [
-        t.name for t in spark.catalog.listTables()
-    ]
-    assert fold["table"] in [t.name for t in spark.catalog.listTables()]
+    assert not os.path.isdir(os.path.join(root, "batch_id=0"))
+    # a generation whose write crashed (no _SUCCESS) must never shadow
+    # the committed one or the dirs above it
+    partial = os.path.join(root, "compacted=99")
+    view_cols.limit(1).write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+    assert _rows(_read_store(spark, root, view_cols)) == folded_rows
+    assert store_row_count(spark, root) == len(folded_rows)
+    after = compact_signature_store(spark, root, 1)
+    assert after == {"generation": fold["generation"], "folded_dirs": 0}
+    assert not os.path.isdir(partial)
+    assert os.path.isdir(gen_dir)
+
+
+def test_retired_fold_layout_raises(spark, tmp_path):
+    """A store still carrying the bucketed-table layout (``_folded/``)
+    must fail loudly, never read as if its folded rows did not exist."""
+    root = str(tmp_path / "old_store")
+    store = spark.createDataFrame([(1, "k1")], "id: long, key: string")
+    store.write.parquet(os.path.join(root, "batch_id=5"))
+    os.makedirs(os.path.join(root, "_folded", "gen=4"))
+    legacy = os.path.join(root, "_folded")
+    for probe in (
+        lambda: _read_store(spark, root, store),
+        lambda: store_row_count(spark, root),
+        lambda: compact_signature_store(spark, root, 1),
+    ):
+        with pytest.raises(ValueError, match=re.escape(legacy)):
+            probe()
 
 
 def test_replay_below_fold_fails_fast(spark, tmp_path):
@@ -233,8 +238,7 @@ def test_replay_below_fold_fails_fast(spark, tmp_path):
     store needs per-batch slots the fold consumed — it must raise, not
     silently treat the whole prior corpus as already-stored."""
     roots = _session1(spark, tmp_path, "f3")
-    compact_signature_store(spark, roots["exact"], "tsf3_exact",
-                            num_buckets=4)
+    compact_signature_store(spark, roots["exact"], 1)
     with pytest.raises(Exception, match="folded through batch"):
         streaming_curate(
             spark,
@@ -249,22 +253,21 @@ def test_replay_below_fold_fails_fast(spark, tmp_path):
 
 
 def test_session_base_covers_sidecar_and_tail(spark, tmp_path):
-    """A continue-mode base after a fold must clear BOTH the sidecar max
-    and the held-back tail dir; and if the tail dirs are somehow gone
-    (dir-scan-blind roots), the sidecar max alone keeps the base
-    monotone (a plain dir scan would restart at 0 and new batches would
-    land below the generation, invisible forever)."""
+    """A continue-mode base after a fold must clear BOTH the generation
+    id and the held-back tail dir; and if the tail dirs are somehow
+    gone, the generation id alone keeps the base monotone (a plain dir
+    scan would restart at 0 and new batches would land below the
+    generation, invisible forever)."""
     from ffi_export_etl_spark.streaming.dedup import _session_base
 
     roots = _session1(spark, tmp_path, "f4")
-    fold = compact_signature_store(spark, roots["exact"], "tsf4_exact",
-                                   num_buckets=4)
+    fold = compact_signature_store(spark, roots["exact"], 1)
     assert fold["generation"] == 0           # headroom held back dir 1
     base = _session_base(
         spark, str(tmp_path / "ckpt_f4_probe"), "exact", roots["exact"]
     )
-    assert base == 2                         # max(sidecar 0, dir 1) + 1
-    # sidecar-only path: with the tail dirs absent the base still
+    assert base == 2                         # max(generation 0, dir 1) + 1
+    # generation-only path: with the tail dirs absent the base still
     # clears the folded generation
     shutil.rmtree(os.path.join(roots["exact"], "batch_id=1"))
     base2 = _session_base(

@@ -549,116 +549,6 @@ def test_streaming_signlsh_family(spark, tmp_path):
     assert got == want and len(want) >= 12
 
 
-def test_fold_survives_metastore_loss(spark, tmp_path):
-    """r9 unification (r8 ADVICE): the folded generation's parquet
-    data lives under the store root and the bucketed catalog table is
-    DERIVED metadata — losing the table name (cwd-dependent derby
-    metastore, or a reset) must cost only bucket co-location, never
-    the folded rows. r8's managed tables held the ONLY copy in the
-    session warehouse: a daemon launched from another directory lost
-    the whole folded store."""
-    import os
-
-    from ffi_export_etl_spark.operators.exactdedup import (
-        exact_pairs_from_stores,
-        exact_signature_store,
-    )
-    from ffi_export_etl_spark.streaming.dedup import (
-        _read_store,
-        compact_signature_store,
-        store_row_count,
-        streaming_incremental_dedup,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for w, rows in enumerate(
-        (
-            [(1, "alpha"), (2, "beta")],
-            [(3, "alpha"), (4, "gamma")],
-            [(5, "delta")],
-        )
-    ):
-        d = str(tmp_path / f"w{w}")
-        spark.createDataFrame(rows, "doc_id: long, text: string").coalesce(
-            1
-        ).write.parquet(d)
-        part = next(e for e in os.listdir(d) if e.endswith(".parquet"))
-        os.rename(os.path.join(d, part), os.path.join(src, f"w{w}.parquet"))
-
-    store_path = str(tmp_path / "store")
-    streaming_incremental_dedup(
-        spark, src, store_path, str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"),
-        sketch=lambda b: exact_signature_store(b, "doc_id", "text"),
-        pair_fn=exact_pairs_from_stores,
-    )
-    before = sorted(
-        tuple(r)
-        for r in spark.read.parquet(store_path).drop("batch_id").collect()
-    )
-    try:
-        fold = compact_signature_store(
-            spark, store_path, "ml_store", num_buckets=4
-        )
-        assert fold["folded_dirs"] >= 1
-        # the generation's data is self-contained under the store root
-        gen_dir = os.path.join(
-            store_path, "_folded_data", f"gen={fold['generation']}"
-        )
-        assert any(f.endswith(".parquet") for f in os.listdir(gen_dir))
-        # simulate a session whose metastore cannot resolve the table
-        # (different launch dir -> different derby metastore_db):
-        # external drop removes only the catalog entry, never the data
-        spark.sql(f"DROP TABLE {fold['table']}")
-        like = spark.read.parquet(gen_dir)
-        got = sorted(
-            tuple(r)
-            for r in _read_store(spark, store_path, like).collect()
-        )
-        assert got == before
-        assert store_row_count(spark, store_path) == len(before)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ml_store_g0")
-        spark.sql("DROP TABLE IF EXISTS ml_store_g1")
-
-
-def test_fold_simhash_buckets_on_join_key(spark, tmp_path):
-    """The simhash store carries the fingerprint for verification; the
-    folded generation must bucket on (band, val) — the increment join
-    key — not on every non-id column."""
-    import os
-
-    from ffi_export_etl_spark.operators.simhash import simhash_signature_store
-    from ffi_export_etl_spark.streaming.dedup import compact_signature_store
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i} a b c d e") for i in range(10)],
-        "doc_id: long, text: string",
-    )
-    store_path = str(tmp_path / "store")
-    os.makedirs(store_path)
-    sigs = simhash_signature_store(docs, "doc_id", "text")
-    # two committed dirs: the newest is replay headroom, batch 0 folds
-    sigs.write.parquet(os.path.join(store_path, "batch_id=0"))
-    sigs.limit(1).write.parquet(os.path.join(store_path, "batch_id=1"))
-    try:
-        fold = compact_signature_store(
-            spark, store_path, "simstore_fold"
-        )
-        assert fold["generation"] == 0
-        desc = spark.sql(
-            f"DESCRIBE TABLE EXTENDED {fold['table']}"
-        ).collect()
-        info = {r["col_name"]: r["data_type"] for r in desc}
-        assert info.get("Bucket Columns") == "[`band`, `val`]", info.get(
-            "Bucket Columns"
-        )
-        assert info.get("Type") == "EXTERNAL", info.get("Type")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS simstore_fold_g0")
-
-
 def test_streaming_verified_minhash_family(spark, tmp_path):
     """The sig-carrying store + verified pair join also compose through
     the streaming hooks: drained pairs equal the batch path's VERIFIED

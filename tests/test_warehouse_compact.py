@@ -10,7 +10,11 @@ import shutil
 
 import pytest
 
-from ffi_export_etl_spark.sinks.files import compact_warehouse, parquet_upsert
+from ffi_export_etl_spark.sinks.files import (
+    _staging_paths,
+    compact_warehouse,
+    parquet_upsert,
+)
 
 
 def _n_parts(d: str) -> int:
@@ -53,8 +57,7 @@ def test_compact_preserves_rows_and_is_idempotent(spark, warehouse):
     assert out["T"]["rows"] == 20
     assert _rows(spark, t) == before_rows
     # no residue from the swap
-    assert not os.path.isdir(t + "._compact_tmp")
-    assert not os.path.isdir(t + "._compact_old")
+    assert not any(os.path.isdir(p) for p in _staging_paths(t))
 
     # rerun: already folded below min_files -> reported skip, untouched
     again = compact_warehouse(spark, warehouse, min_files=2)
@@ -113,20 +116,6 @@ def test_crash_repair_promotes_completed_tmp(spark, warehouse):
     assert out["T"]["action"] == "skipped"  # promoted, already compact
 
 
-def test_crash_repair_promotes_legacy_suffix_tmp(spark, warehouse):
-    """Pre-r11 crash residue used the ``<name>._compact_tmp`` SUFFIX
-    naming; its repair path is kept so an r10-era crashed fold still
-    promotes after the upgrade."""
-    t = os.path.join(warehouse, "T")
-    before = _rows(spark, t)
-    compact_warehouse(spark, warehouse, min_files=2)
-    os.rename(t, t + "._compact_tmp")
-    out = compact_warehouse(spark, warehouse, min_files=2)
-    assert os.path.isdir(t)
-    assert _rows(spark, t) == before
-    assert out["T"]["action"] == "skipped"
-
-
 def test_partitioned_staging_invisible_to_whole_table_readers(
     spark, tmp_path
 ):
@@ -170,16 +159,17 @@ def test_crash_repair_restores_old_when_tmp_incomplete(spark, warehouse):
     """Crash mid-write (no _SUCCESS in tmp) after the table rename: the
     next run unwinds to the pre-fold table and refolds it."""
     t = os.path.join(warehouse, "T")
+    tmp, old = _staging_paths(t)
     before = _rows(spark, t)
-    os.rename(t, t + "._compact_old")
-    os.makedirs(t + "._compact_tmp")  # partial write, no _SUCCESS
-    with open(os.path.join(t + "._compact_tmp", "part-junk.parquet"), "wb") as f:
+    os.rename(t, old)
+    os.makedirs(tmp)  # partial write, no _SUCCESS
+    with open(os.path.join(tmp, "part-junk.parquet"), "wb") as f:
         f.write(b"not parquet")
     out = compact_warehouse(spark, warehouse, min_files=2)
     assert out["T"]["action"] == "compacted"
     assert _rows(spark, t) == before
-    assert not os.path.isdir(t + "._compact_tmp")
-    assert not os.path.isdir(t + "._compact_old")
+    assert not os.path.isdir(tmp)
+    assert not os.path.isdir(old)
 
 
 def test_stale_dirs_cleared_before_refold(spark, warehouse):
@@ -187,8 +177,8 @@ def test_stale_dirs_cleared_before_refold(spark, warehouse):
     cleared, never read into the fold."""
     t = os.path.join(warehouse, "T")
     before = _rows(spark, t)
-    shutil.copytree(t, t + "._compact_old")
-    shutil.copytree(t, t + "._compact_tmp")
+    for stale in _staging_paths(t):
+        shutil.copytree(t, stale)
     out = compact_warehouse(spark, warehouse, min_files=2)
     assert out["T"]["rows"] == 20  # not doubled by the stale copies
     assert _rows(spark, t) == before
