@@ -1,6 +1,7 @@
-"""Datetime normalization (reference ``convert_datetime``,
-/root/reference/parser/functions.py:72-88, and ``to_datenum``,
-functions.py:91-108).
+"""Datetime normalization (the reference's ``convert_datetime``,
+parser/functions.py:72-88). Its date-to-int helper (functions.py:91-108)
+is dead code there (quirk Q2) and has no counterpart here; the scalar
+pack computes its days-since-1900 value inline.
 
 The reference parses arbitrary timestamp strings with dateutil, shifts to
 local wall time, drops the UTC offset, and trims sub-millisecond digits —
@@ -40,11 +41,3 @@ def is_datetime_column(name: str) -> bool:
     """Column-name heuristic the reference applies at ingest
     (parser/xml.py:122-123): any column whose name contains Date or Time."""
     return "Date" in name or "Time" in name
-
-
-def to_datenum(col: Column | str) -> Column:
-    """Date -> int days since 1900-01-01 (functions.py:91-108, the MSSQL
-    datetime-int convention; ordinal - 693595). Dead code in the reference
-    (quirk Q2) but part of its declared function surface."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.datediff(c.cast("date"), F.lit("1900-01-01").cast("date"))

@@ -56,7 +56,6 @@ from pyspark.sql.types import (
 
 __all__ = [
     "word_count_table",
-    "train_bpe",
     "train_bpe_full",
     "apply_bpe",
     "bpe_encode_word",
@@ -107,29 +106,11 @@ def _merge_expr(symbols: Column, a: str, b: str) -> Column:
     )
 
 
-def train_bpe(
-    word_counts: DataFrame,
-    num_merges: int,
-    min_pair_count: int = 2,
-    batch_candidates: int = 64,
-) -> list[tuple[str, str]]:
-    """Learn ``num_merges`` BPE merges from a (word, n) table; returns
-    the ordered merge list [(a, b), ...]. Stops early when no adjacent
-    pair reaches ``min_pair_count``. Driver memory holds only the merge
-    list and one bounded candidate batch per round."""
-    return [
-        (a, b) for a, b, _ in train_bpe_full(
-            word_counts, num_merges, min_pair_count, batch_candidates
-        )
-    ]
-
-
 def _select_batch(
     cands: list,
     floor: int,
     budget: int,
     min_pair_count: int,
-    exact: bool = True,
     vocab: frozenset | set | None = None,
 ) -> list[tuple[str, str, int]]:
     """Maximal EXACTLY-sequential-equivalent merge batch from one
@@ -145,10 +126,10 @@ def _select_batch(
       merge CREATES the token a+b, so ``used`` also carries every
       selected concatenation, and a candidate's own concatenation is
       checked too (two selections producing the same token string would
-      double-create one pair). Both modes apply this, which is what
-      keeps approximate mode's recorded counts exact;
+      double-create one pair), which is also what keeps every selected
+      pair's recorded count exact;
     - a selected pair whose concatenation already EXISTS in the corpus
-      vocabulary (``vocab``) terminates an exact batch after itself:
+      vocabulary (``vocab``) terminates the batch after itself:
       its created pairs ADD to live candidates' stale counts (e.g.
       merging ('ab','c') when an earlier round built 'abc' via
       ('a','bc') grows every ('z','abc') candidate), so the floor bound
@@ -166,17 +147,7 @@ def _select_batch(
       equal-count disjoint survivors fall in the same lexicographic
       order sequential would pick them in.
     - the head candidate is the literal argmax and always correct, tie
-      or not.
-
-    ``exact=False`` is the classic approximate batching instead: walk
-    the whole candidate list, SKIP conflicting pairs and keep selecting
-    disjoint ones, no floor truncation. Batches grow to ~N/2 on real
-    corpora (top BPE pairs share common letters, so the exact rule
-    stops after a few), at the documented cost that the merge ORDER may
-    diverge from sequential where a pair created mid-batch would have
-    out-counted a later selection — selected pairs' recorded counts
-    stay exact (disjointness), and vocab quality is equivalent in
-    practice (the distributed-BPE literature's standard trade)."""
+      or not."""
     selected: list[tuple[str, str, int]] = []
     used: set[str] = set()
     vocab = vocab or frozenset()
@@ -197,20 +168,16 @@ def _select_batch(
             break
         cat = r["a"] + r["b"]
         if {r["a"], r["b"], cat} & used:
-            if exact:
-                floor = max(floor, int(r["cnt"]))
-                break
-            continue  # approximate mode: skip the conflict, keep going
+            floor = max(floor, int(r["cnt"]))
+            break
         selected.append((r["a"], r["b"], int(r["cnt"])))
         used.update((r["a"], r["b"], cat))
-        if exact and cat in vocab:
+        if cat in vocab:
             # vocab aliasing (ADVICE r8): this merge's created pairs
             # stack on top of existing candidates containing `cat`, so
             # the floor can't bound later selections — close the batch
             # with this pair as its final member (see docstring)
             break
-    if not exact:
-        return selected
     keep = selected[:1]
     for a, b, cnt in selected[1:]:
         if cnt <= floor:
@@ -224,12 +191,15 @@ def train_bpe_full(
     num_merges: int,
     min_pair_count: int = 2,
     batch_candidates: int = 64,
-    exact: bool = True,
     _stats: dict | None = None,
 ) -> list[tuple[str, str, int]]:
-    """``train_bpe`` with the winning pair count kept per merge:
+    """Learn ``num_merges`` BPE merges from a (word, n) table: the
+    ordered merge list with the winning pair count kept per merge,
     [(a, b, cnt), ...] — the full merge-table row the driver gate pins
-    (queries/curation_q.py 'bpe_merge' arm).
+    (queries/curation_q.py 'bpe_merge' arm); ``apply_bpe`` takes its
+    (a, b) pairs. Stops early when no adjacent pair reaches
+    ``min_pair_count``. Driver memory holds only the merge list and one
+    bounded candidate batch per round.
 
     Merge selection is BATCHED (r7): one merge per Spark round meant a
     real 50k-merge vocabulary = 50k sequential jobs. Each round now
@@ -240,10 +210,7 @@ def train_bpe_full(
     so; pinned by test). Chained disjoint merges rewrite in a single
     projection, so per-round work stays O(batch x len) while the round
     count drops by the average batch size (A/B in PERFORMANCE.md).
-    ``batch_candidates=1`` recovers the sequential trainer exactly;
-    ``exact=False`` switches to the classic skip-conflicts batching —
-    much larger batches (the 50k-vocab production mode) with a
-    documented possible order divergence (see :func:`_select_batch`).
+    ``batch_candidates=1`` recovers the sequential trainer exactly.
     The recorded cnt per merge equals its sequential-round count
     (disjointness keeps it unchanged by earlier batch members).
     ``_stats``: optional dict, gets ``rounds`` (Spark rounds run) for
@@ -254,7 +221,7 @@ def train_bpe_full(
     # the EXACT token vocabulary is known driver-side: initial distinct
     # characters (one tiny distinct-aggregate, same size class as the
     # merge list) plus the concatenation of every applied merge. Needed
-    # for the exact-mode aliasing stop in _select_batch (ADVICE r8) —
+    # for the aliasing stop in _select_batch (ADVICE r8) —
     # a superset is safe (it only closes batches earlier).
     vocab: set[str] = {
         r["s"]
@@ -298,8 +265,7 @@ def train_bpe_full(
             floor = int(cands[n_cand]["cnt"]) if len(cands) > n_cand else 0
             batch = _select_batch(
                 cands[:n_cand], floor,
-                num_merges - len(merges), min_pair_count, exact,
-                vocab=vocab,
+                num_merges - len(merges), min_pair_count, vocab=vocab,
             )
             merges.extend(batch)
             vocab.update(a + b for a, b, _cnt in batch)
@@ -412,35 +378,3 @@ def apply_bpe(
             )
 
     return narrowed.mapInPandas(run, schema)
-
-
-def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    """Persist a trained merge list as a portable JSON artifact (one
-    object: version + ordered pairs) — train once on the big cluster,
-    apply anywhere (apply_bpe, another engine, a tokenizer library
-    that consumes merge lists). Driver-side: the artifact is model-
-    sized by definition."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(
-            {"format": "bpe-merges", "version": 1,
-             "merges": [[a, b] for a, b in merges]},
-            f, ensure_ascii=False,
-        )
-    os.replace(tmp, path)  # atomic: readers never see a partial file
-
-
-def load_merges(path: str) -> list[tuple[str, str]]:
-    """Load a :func:`save_merges` artifact; validates the header so a
-    wrong file fails loudly instead of tokenizing garbage."""
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        obj = json.load(f)
-    if obj.get("format") != "bpe-merges":
-        raise ValueError(f"{path} is not a bpe-merges artifact")
-    return [(a, b) for a, b in obj["merges"]]

@@ -1,18 +1,15 @@
 """Connected components over a pair/edge list — near-duplicate CLUSTERING.
 
 Pairwise dedup finds edges (jaccard/minhash/simhash/cosine pairs); turning
-"A~B, B~C" into one keep-group requires the transitive closure. This is
-the canonical iterative Spark algorithm: min-label propagation to a fixed
-point.
-
-Algorithm (alternating contraction, bounded iterations):
+"A~B, B~C" into one keep-group requires the transitive closure.
+``dedup_clusters`` computes it with the large-star/small-star
+contraction (Kiveris et al., :func:`connected_components_alternating`):
+O(log n) rounds on any graph shape. The textbook min-label propagation,
   label(v) <- v
   repeat: label(v) <- min(label(v), min over neighbors u of label(u))
-until no label changes. Each round is one join + one aggregation; rounds
-needed = graph diameter (near-dup clusters are tiny, so 3-5 rounds in
-practice; ``max_iter`` guards pathological chains). At extreme scale the
-large-star/small-star variant (Kiveris et al.) halves round counts; the
-join shape below is the same.
+until no label changes, needs O(diameter) rounds; it stays as
+:func:`connected_components`, the reference the contraction is checked
+against.
 
 The per-round convergence check is a set fingerprint of the round's
 output, OBSERVED during the round's own checkpoint materialization
@@ -123,7 +120,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    require_convergence: bool = True,
 ) -> DataFrame:
     """(id, component) for every vertex in ``edges``; component = min
     vertex id reachable. Edges are undirected (both directions added).
@@ -131,9 +127,8 @@ def connected_components(
     BOUND: min-label propagation moves a label ONE hop per round, so
     convergence needs O(graph diameter) rounds — right for near-dup
     clusters (diameter 2-5), degenerate for long chains. Rather than
-    silently returning unconverged labels after ``max_iter``, this raises
-    (``require_convergence=False`` restores the old behavior); for
-    high-diameter graphs use :func:`connected_components_alternating`,
+    silently returning unconverged labels after ``max_iter``, this raises;
+    for high-diameter graphs use :func:`connected_components_alternating`,
     which needs O(log n) rounds on a chain."""
     spark = edges.sparkSession
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -182,7 +177,7 @@ def connected_components(
             break
         prev = cur
     adj.unpersist()
-    if not converged and require_convergence:
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(labels still changing) — the graph's diameter exceeds "
@@ -409,23 +404,14 @@ def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    method: str = "alternating",
 ) -> DataFrame:
     """Assign every document a cluster id (= min doc id of its near-dup
     component; singletons cluster to themselves) and mark the keeper.
 
-    ``method='alternating'`` (default) runs the large-star/small-star
-    contraction — O(log n) rounds on ANY graph shape, so an adversarial
-    long chain in the near-dup edges cannot blow the round count.
-    ``method='labelprop'`` keeps min-label propagation (O(diameter)
-    rounds, slightly cheaper per round) for known-shallow cluster graphs.
-    Both are pinned result-identical by tests."""
-    if method == "alternating":
-        comp = connected_components_alternating(pairs)
-    elif method == "labelprop":
-        comp = connected_components(pairs)
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    Components come from the large-star/small-star contraction —
+    O(log n) rounds on ANY graph shape, so an adversarial long chain in
+    the near-dup edges cannot blow the round count."""
+    comp = connected_components_alternating(pairs)
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(comp, "id", "left")

@@ -1,6 +1,5 @@
-"""Incremental EXACT dedup — the content-hash counterpart of the three
-sketch-family signature stores (minhash / simhash / sign-LSH, see
-operators/minhash.py:138-198).
+"""Incremental EXACT dedup — the content-hash counterpart of the MinHash
+signature store (operators/minhash.py).
 
 The store is (id, key) with key = md5 of the UTF-8 text — the same
 digest the registered exact path (queries/dedup_q.dedup_exact_pack)
@@ -21,36 +20,6 @@ def exact_signature_store(
     return docs.select(
         F.col(id_col).alias("id"),
         F.md5(F.encode(F.col(text_col), "UTF-8")).alias("key"),
-    )
-
-
-def exact_pairs_from_stores(nw: DataFrame, stored: DataFrame) -> DataFrame:
-    """(id_a, id_b, key) pairs between an already-sketched new index and
-    the stored index (plus new x new): the store-level join, shared by
-    the batch increment and the streaming driver."""
-    cross = nw.alias("n").join(stored.alias("s"), "key").select(
-        F.least(F.col("n.id"), F.col("s.id")).alias("id_a"),
-        F.greatest(F.col("n.id"), F.col("s.id")).alias("id_b"),
-        "key",
-    ).filter(F.col("id_a") != F.col("id_b"))
-    within = nw.alias("n").join(nw.alias("m"), "key").select(
-        F.col("n.id").alias("id_a"), F.col("m.id").alias("id_b"), "key"
-    ).filter(F.col("id_a") < F.col("id_b"))
-    return cross.unionByName(within).distinct()
-
-
-def incremental_exact_pairs(
-    new_docs: DataFrame,
-    stored: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id_a, id_b, key) exact-duplicate pairs INVOLVING the new batch:
-    new x stored via the digest join plus new x new within the batch —
-    stored x stored never re-pairs (same contract as the sketch
-    increments)."""
-    return exact_pairs_from_stores(
-        exact_signature_store(new_docs, id_col, text_col), stored
     )
 
 

@@ -93,7 +93,7 @@ def winnow_fingerprints(
     selection) so each intermediate is a bound, multi-referenced
     attribute. The original single-expression form inlined the token
     split and the whole gram-hash array into every per-element lambda
-    reference (the word_shingles pitfall), re-hashing all grams once
+    reference (the shingle-inlining pitfall), re-hashing all grams once
     per window position — O(n_grams * n_grams * k) md5 work per doc,
     measured 188s to materialize sf0.1 where this form takes ~2s.
     (bench/sweep count() runs never caught it: the fingerprint column
@@ -152,7 +152,7 @@ def winnow_overlap_pairs(
     # per-doc fingerprints are distinct, so a bucket never repeats an
     # id: the shared sorted in-bucket (i, j>i) expansion gives
     # id_a < id_b strict (operators/bucketpairs.py — sorting happens IN
-    # the aggregation, the word_shingles inlining pitfall)
+    # the aggregation, the shingle-inlining pitfall)
     from .bucketpairs import bucket_pairs
 
     return (

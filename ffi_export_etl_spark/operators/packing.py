@@ -26,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .xplode import explode_nonempty
-
 DEFAULT_BLOCK_SIZE = 100_000
 
 
@@ -103,44 +101,4 @@ def pack_sequences(
         .cast("int")
         .alias("offset_in_seq"),
         F.expr(f"(cum - 1) div {capacity}").alias("last_seq"),
-    )
-
-
-def sequence_manifest(packed: DataFrame, capacity: int) -> DataFrame:
-    """The data-loader view of a packed corpus: one row per
-    (seq_id, document slice) — (seq_id, id, doc_tok_start, seq_tok_start,
-    n_toks) — where sequence seq_id's tokens [seq_tok_start,
-    seq_tok_start + n_toks) come from tokens [doc_tok_start,
-    doc_tok_start + n_toks) of document id.
-
-    ``packed`` is pack_sequences' output (same ``capacity``). A document
-    spanning sequences [first_seq, last_seq] contributes one slice per
-    sequence it touches — a NARROW per-row explode over that span (no
-    shuffle, fan-out = spans touched, bounded by n_tokens/capacity + 1).
-    Within each sequence the slices tile it exactly: consecutive,
-    non-overlapping, summing to ``capacity`` (the final sequence may be
-    short) — property-tested, and exactly the contract a training data
-    loader needs to reassemble sequences without re-tokenizing.
-    """
-    seq = F.col("s")
-    seq_start = seq.cast("long") * capacity  # global offset where s begins
-    slice_start = F.greatest(F.col("tok_offset"), seq_start)
-    slice_end = F.least(
-        F.col("tok_offset") + F.col("n_tokens"), seq_start + capacity
-    )
-    return (
-        explode_nonempty(
-            packed,
-            ["id", "tok_offset", "n_tokens"],
-            F.sequence("first_seq", "last_seq"), "s",
-        )
-        .filter(F.col("n_tokens") > 0)
-        .select(
-            seq.alias("seq_id"),
-            "id",
-            (slice_start - F.col("tok_offset")).cast("int")
-            .alias("doc_tok_start"),
-            (slice_start - seq_start).cast("int").alias("seq_tok_start"),
-            (slice_end - slice_start).cast("int").alias("n_toks"),
-        )
     )

@@ -1,7 +1,7 @@
 """Product quantization (PQ) — compressed embeddings + ADC search.
 
-The missing tier between the int8 scalar quantizer (similarity.py
-quantized_topk, 4x compression) and full vectors: PQ splits each
+The missing tier between the int8 scalar quantizer (operators/quantize.py,
+4x compression) and full vectors: PQ splits each
 D-dim vector into M subvectors, k-means-quantizes each subspace to K
 centroids, and stores only the M one-byte-ish codes — D*8 bytes ->
 M bytes (e.g. 32-dim float64 = 256 B -> 4 B at M=4), the compression
@@ -404,140 +404,6 @@ def _adc_scores(
             ).alias("adc_dist")
         )
     )
-
-
-def pq_decode(
-    codes: DataFrame, codebooks: DataFrame, out_col: str = "recon"
-) -> DataFrame:
-    """(id, recon: array<double>) — reconstruct each coded vector as the
-    concatenation of its M looked-up centroids (sub order). Narrow:
-    codes explode to M rows, broadcast-join the model-sized codebooks,
-    one id-grain shuffle to reassemble."""
-    exploded = codes.select(
-        "id", F.posexplode("codes").alias("sub", "cell")
-    )
-    return (
-        exploded.join(F.broadcast(codebooks), ["sub", "cell"])
-        .groupBy("id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "centroid"))),
-                    lambda s: s["centroid"],
-                )
-            ).alias(out_col)
-        )
-    )
-
-
-def gram_matrix(df: DataFrame, a_col: str, b_col: str, dim: int):
-    """sum over rows of outer(a, b) as a numpy (dim, dim) array — the
-    cross-Gram that OPQ's Procrustes update needs (A = sum x xhat^T).
-
-    Arrow kernel by necessity, not convenience (the documented
-    no-Column-form exception): the Column form would be dim^2 sum
-    aggregates (4096 exprs at dim=64 — Catalyst compile time alone
-    dwarfs the data pass). Instead each Arrow batch emits ONE d x d
-    partial (a numpy matmul), so the collect is
-    O(batches x dim^2) — model-sized, never row-sized — and the driver
-    folds the partials."""
-    import numpy as np
-    import pandas as pd  # noqa: F401 — kernel dependency, driver-checked
-
-    def run(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = _np.stack(pdf[a_col].to_numpy())
-            b = _np.stack(pdf[b_col].to_numpy())
-            yield _pd.DataFrame({"g": [(a.T @ b).ravel().tolist()]})
-
-    parts = (
-        df.select(a_col, b_col)
-        .mapInPandas(run, "g array<double>")
-        .collect()  # one row per Arrow batch — model-sized by design
-    )
-    out = np.zeros((dim, dim))
-    for r in parts:
-        out += np.array(r["g"]).reshape(dim, dim)
-    return out
-
-
-def fit_opq(
-    vectors: DataFrame,
-    dim: int,
-    m: int = 4,
-    k: int = 16,
-    opq_iters: int = 4,
-    pq_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-):
-    """OPQ-NP (Ge et al., "Optimized Product Quantization", CVPR 2013):
-    learn an orthonormal rotation R so PQ quantizes R@x with lower
-    error, alternating (1) PQ codebook fit on the rotated corpus and
-    (2) the Procrustes rotation update R = (U V^T)^T from the SVD of
-    A = sum x xhat^T. Returns (R as dim rows of dim floats, codebooks
-    DataFrame trained under the final R). Serve with
-    ``reduce_embeddings(df, vec_col, k=dim, components=R)`` -> encode.
-
-    Scale split (the pcasem/pq fit-vs-transform discipline): every
-    corpus-sized step is distributed — the rotation is a plan-literal
-    Column fold, codebook training the grouped Lloyd shuffle, the Gram
-    one Arrow pass emitting d x d partials — while the SVD runs on the
-    driver over a dim x dim matrix (model-sized). Fit is numpy-twin-
-    pinned (tests/test_pq.py); there is no SQL oracle for an iterative
-    SVD fit, the same split PCA uses.
-
-    Honest measurement (PERFORMANCE.md r7): on the sf0.1 synthetic
-    embeddings the rotation cuts quantization error ~7% but does NOT
-    raise recall — those vectors are near-isotropic, OPQ's no-gain
-    case; on correlated real embeddings the rotation is the standard
-    fix. The WIN case is pinned too (r8, tests/test_pq.py): on a
-    fixed anisotropic fixture (skewed diagonal + cross-subspace mix)
-    the rotation must cut quantization error to <= 0.6x plain PQ AND
-    raise ADC recall — so a shape-preserving math regression here is
-    caught, not silently absorbed. For recall on low-structure corpora
-    use :func:`pq_topk_rerank` (measured 18% -> 61% at rerank=100)."""
-    import numpy as np
-
-    from .reduce import reduce_embeddings
-
-    R = np.eye(dim)
-    x = vectors.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("_x")
-    )
-    codebooks = None
-    for _ in range(max(opq_iters, 0)):
-        comps = [[float(v) for v in row] for row in R]
-        rotated = reduce_embeddings(
-            vectors, vec_col, k=dim, components=comps, out_col="_rot"
-        ).select(id_col, F.col("_rot").alias(vec_col))
-        codebooks = pq_train(
-            rotated, dim, m=m, k=k, iters=pq_iters,
-            id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-        )
-        codes = pq_encode(
-            rotated, codebooks, dim, m=m,
-            id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-        )
-        recon = pq_decode(codes, codebooks)
-        a = gram_matrix(x.join(recon, "id"), "_x", "recon", dim)
-        u, _, vt = np.linalg.svd(a)
-        R = (u @ vt).T
-    comps = [[float(v) for v in row] for row in R]
-    rotated = reduce_embeddings(
-        vectors, vec_col, k=dim, components=comps, out_col="_rot"
-    ).select(id_col, F.col("_rot").alias(vec_col))
-    codebooks = pq_train(
-        rotated, dim, m=m, k=k, iters=pq_iters,
-        id_col=id_col, vec_col=vec_col, round_digits=round_digits,
-    )
-    return comps, codebooks
 
 
 def ivfpq_topk(

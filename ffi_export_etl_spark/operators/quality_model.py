@@ -1,20 +1,9 @@
-"""Model-based document quality filtering (the FineWeb-Edu /
-DataComp-style shape): instead of hand-tuned thresholds, train a
-classifier on labeled examples and keep documents above a probability
-cut.
-
-Built on Spark MLlib (public pyspark.ml API): featurization is the
-engine's own native-Column quality signals (no Python in the row
-loop), assembled into a vector; the model is L2 logistic regression
-with a fixed seed and deterministic LBFGS optimization, so two fits of
-the same data produce the same coefficients. Scoring is one
-model.transform pass — JVM-side, linear in the corpus, broadcastable
-coefficients — the right shape for scoring 100 TB against a model
-trained once on a small labeled set.
-
-This stays pytest-pinned (an iterative optimizer has no SQL oracle);
-the FEATURES it consumes are the same ones text_stats_pack pins at the
-driver gate.
+"""Model-based document quality signals (the FineWeb-Edu /
+DataComp-style classifier input): per-document native-Column features
+— length, mean word length, stopword ratio, alphabetic ratio and the
+Gopher repetition signals — in one scan with no Python in the row
+loop. ``FEATURE_COLS`` names them in a fixed order; the curation gate
+(queries/curation_q.py) pins them against its DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -22,12 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "quality_features",
-    "train_quality_model",
-    "score_quality",
-    "filter_by_quality",
-]
+__all__ = ["quality_features"]
 
 FEATURE_COLS = [
     "f_n_words",
@@ -85,117 +69,4 @@ def quality_features(
             F.col("dup_line_frac").alias("f_dup_line_frac"),
         ),
         "id",
-    )
-
-
-def train_quality_model(
-    labeled: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    label_col: str = "label",
-    reg_param: float = 0.01,
-    max_iter: int = 50,
-):
-    """Fit the L2 logistic quality model on (text, label 0/1) examples;
-    returns a fitted PipelineModel (assembler + LR) whose transform
-    adds ``probability``/``prediction``."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    # Zero training examples is a caller error, but left to MLlib it
-    # surfaces as an opaque "Nothing has been added to this summarizer"
-    # from inside the LR fit — fail with the actual problem instead.
-    # Guard the INPUT (a near-free narrow probe), not the feature DAG:
-    # feats.isEmpty() would evaluate the whole featurization twice.
-    if labeled.isEmpty():
-        raise ValueError(
-            "train_quality_model: the labeled set is empty — cannot fit "
-            "on zero examples"
-        )
-    feats = quality_features(labeled, id_col, text_col).join(
-        labeled.select(
-            F.col(id_col).alias("id"),
-            F.col(label_col).cast("double").alias("label"),
-        ),
-        "id",
-    )
-    assembler = VectorAssembler(
-        inputCols=FEATURE_COLS, outputCol="features"
-    )
-    lr = LogisticRegression(
-        featuresCol="features",
-        labelCol="label",
-        regParam=reg_param,
-        maxIter=max_iter,
-        standardization=True,
-    )
-    fitted = Pipeline(stages=[assembler, lr]).fit(feats)
-    # Strip the LR training summary by round-tripping the fitted model
-    # through ML persistence (loaded models carry no summary; public
-    # API, coefficients identical — pinned by the determinism test).
-    # The summary holds a SparkSession reference that Spark serializes
-    # INTO the transform UDF's task closure; that closure only stays
-    # serializable while the session's lazy observationManager field is
-    # untouched, and any DataFrame.observe in the session (the CC
-    # convergence fingerprints ride checkpoints that way) materializes
-    # it — after which scoring dies with NotSerializableException:
-    # ObservationManager. The summary is training-diagnostics the
-    # scorer never reads; dropping it also keeps data-sized prediction
-    # frames out of every task broadcast.
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.ml import PipelineModel
-
-    tmp = tempfile.mkdtemp(prefix="qm_model_")
-    try:
-        # explicit file: scheme — a schemeless path resolves against
-        # fs.defaultFS, so on a cluster whose default FS is not local
-        # the model would land remotely while rmtree cleans only the
-        # empty local dir (one leaked model dir per training call)
-        path = "file:" + os.path.join(tmp, "pm")
-        fitted.save(path)
-        return PipelineModel.load(path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def score_quality(
-    docs: DataFrame,
-    model,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, quality_prob) — P(label=1) per document from a fitted
-    model; one featurize scan + one JVM transform."""
-    from pyspark.ml.functions import vector_to_array
-
-    feats = quality_features(docs, id_col, text_col)
-    return (
-        model.transform(feats)
-        .select(
-            "id",
-            vector_to_array(F.col("probability"))
-            .getItem(1)
-            .alias("quality_prob"),
-        )
-    )
-
-
-def filter_by_quality(
-    docs: DataFrame,
-    model,
-    min_prob: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep documents the model scores at or above ``min_prob``."""
-    scores = score_quality(docs, model, id_col, text_col)
-    return docs.join(
-        scores.filter(F.col("quality_prob") >= min_prob).select(
-            F.col("id").alias(id_col)
-        ),
-        id_col,
     )

@@ -65,7 +65,6 @@ def interval_join(
     end_col: str,
     bin_width: int,
     key: str | None = None,
-    broadcast_intervals: bool = False,
 ) -> DataFrame:
     """Inner join of ``facts`` rows onto every ``intervals`` row whose
     half-open range ``[start_col, end_col)`` contains ``facts.ts_col``
@@ -86,11 +85,9 @@ def interval_join(
     is monotone over int64, so coverage holds for negative timestamps.
     Empty/inverted intervals (end <= start) match nothing by definition
     and are dropped before the explode (``sequence`` would DESCEND on an
-    inverted range, not return empty).
-
-    ``broadcast_intervals=True`` pins a broadcast of the EXPLODED
-    interval table — only for interval sets known to stay driver-small
-    after fan-out; the default shuffle join lets AQE decide at runtime.
+    inverted range, not return empty). The equi-join is a plain shuffle
+    join; AQE turns it into a broadcast at runtime when the exploded
+    interval table measures small.
     """
     if bin_width <= 0:
         raise ValueError("bin_width must be a positive integer")
@@ -111,8 +108,6 @@ def interval_join(
             ),
         )
     )
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     on = [_BIN] + ([key] if key else [])
     return (
         f.join(iv, on=on)

@@ -3,7 +3,7 @@ the SemDeDup / embedding-clustering literature runs before k-means at
 corpus scale: projecting to the top-k principal axes cuts the ANN /
 SemDeDup cell-assignment cost by dim/k and removes noise directions.
 
-Built on public pyspark.ml PCA (the quality_model.py precedent):
+Built on public pyspark.ml PCA:
 fitting computes the covariance eigendecomposition from ONE pass over
 the corpus (the model is k x dim — driver/model-sized); transforming is
 one JVM matrix-multiply projection per row, no Python in the row path.

@@ -118,8 +118,8 @@ def stratified_take(
     Multi-traversal contract: the input lineage is read up to four
     times (counts, survivors x2 branches, rescue probe) — for a bare
     table scan that is four narrow scans, cheap; callers passing an
-    EXPENSIVE derived frame should persist/checkpoint it first (the
-    cache_windows convention in operators/spandedup.py)."""
+    EXPENSIVE derived frame should persist/checkpoint it first and own
+    the release."""
     h = _key_hash(key_col, salt)
     ord_ = h % MERSENNE31
     lbl = F.col(label_col)

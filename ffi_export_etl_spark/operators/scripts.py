@@ -43,21 +43,6 @@ NO_BOUNDARY_SCRIPTS = tuple(
 )
 
 
-def script_counts(col: Column | str) -> Column:
-    """map<string,int> of per-script letter counts for a text column.
-
-    One ``regexp_count`` per script class, all in the same projection —
-    whole-stage codegen, one pass over the string per class."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.create_map(
-        *[
-            x
-            for name, (cls, _) in SCRIPT_CLASSES.items()
-            for x in (F.lit(name), F.regexp_count(c, F.lit(cls)))
-        ]
-    )
-
-
 def dominant_script(col: Column | str) -> Column:
     """Script with the highest letter count ('und' if none). Ties break
     by SCRIPT_CLASSES order (boundary-less scripts first, see module

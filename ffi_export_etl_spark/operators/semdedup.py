@@ -5,8 +5,7 @@ through semantic deduplication").
 The scheme: k-means the corpus embeddings, then search for near-dup
 pairs ONLY within each cluster — the quadratic cosine comparison runs on
 corpus/k-sized cells instead of the whole corpus, which is the entire
-trick that makes semantic dedup feasible at web scale. Pairs above the
-threshold form components; one keeper survives per component.
+trick that makes semantic dedup feasible at web scale.
 
 Built by composing this engine's existing primitives, all JVM-side:
 - operators/similarity.lloyd_cells — deterministic, engine-portable
@@ -14,15 +13,12 @@ Built by composing this engine's existing primitives, all JVM-side:
 - a within-cell self-join + rounded cosine for pair generation (ONE
   shuffle by cell; a configurable cell-size cap skips degenerate cells
   instead of letting one hot cell go quadratic on the whole corpus —
-  same discipline as the LSH bucket caps);
-- operators/components.dedup_clusters — large-star/small-star connected
-  components + min-id keeper per component.
+  same discipline as the LSH bucket caps).
 
-Keeper policy is min-id (deterministic, consistent with the MinHash and
-sign-LSH dedup paths). The paper keeps the member LEAST similar to its
-cluster centroid instead; that choice changes WHICH duplicate survives,
-never how many — min-id keeps the whole engine's keeper semantics in one
-place (components.dedup_clusters).
+Pairs above the threshold feed operators/components.dedup_clusters like
+every other pair family, so the keeper policy is the engine's min-id
+one. The paper keeps the member LEAST similar to its cluster centroid
+instead; that choice changes WHICH duplicate survives, never how many.
 
 Cross-cell misses are inherent to the approximation: a duplicate pair
 split by a cluster boundary is not compared. Exactly-identical vectors
@@ -35,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import dedup_clusters
 from .similarity import as_double, cosine, lloyd_cells
 
 DEFAULT_MAX_CELL = 10_000
@@ -87,23 +82,3 @@ def semdedup_pairs(
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cell", "cos")
     )
-
-
-def semantic_dedup(
-    vectors: DataFrame,
-    dim: int,
-    k: int = 16,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 2,
-    max_cell_size: int | None = DEFAULT_MAX_CELL,
-) -> DataFrame:
-    """(id_col, cluster_id, is_keeper) — every vector labeled with its
-    semantic-dup component (min id; singletons cluster to themselves)
-    and whether it survives dedup."""
-    pairs = semdedup_pairs(
-        vectors, dim, k=k, threshold=threshold, id_col=id_col,
-        vec_col=vec_col, iters=iters, max_cell_size=max_cell_size,
-    ).select("id_a", "id_b")
-    return dedup_clusters(vectors, pairs, id_col=id_col)

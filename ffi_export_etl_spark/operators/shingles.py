@@ -27,27 +27,6 @@ def tokens(text: Column) -> Column:
     return F.split(text, r"\s+")
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of ``text`` (empty array if too short).
-
-    Built from n shifted array slices folded with zip_with — O(len) per
-    document. (The naive transform(sequence, i -> element_at(toks, i+j))
-    formulation re-evaluates the split() for every element access because
-    Catalyst inlines the unaliased expression into the lambda — O(len^2)
-    and 10x wall-clock on real documents.)
-    """
-    t = tokens(text)
-    length = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    shingle = F.slice(t, 1, length)
-    for j in range(1, n):
-        shingle = F.zip_with(
-            shingle,
-            F.slice(t, 1 + j, length),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.array_distinct(shingle)
-
-
 def word_shingle_arrays(
     docs: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
@@ -63,9 +42,12 @@ def word_shingle_arrays(
     text is never shuffled (candidate joins shuffle by shingle, not id).
     """
     # Two-step projection: materialize the token array ONCE, then build
-    # shingles from the attribute — word_shingles references its input
-    # n+1 times, and CollapseProject keeps the split un-inlined only when
-    # it is already a separate multi-referenced alias.
+    # shingles from the attribute — the zip_with fold references its
+    # input n+1 times, and CollapseProject keeps the split un-inlined
+    # only when it is already a separate multi-referenced alias. (The
+    # naive transform(sequence, i -> element_at(toks, i+j)) form
+    # re-evaluates the split per element access: O(len^2), 10x wall
+    # clock on real documents.)
     toks = spread_per_doc(docs, id_col).select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
     )

@@ -159,88 +159,35 @@ def _banded(fp: DataFrame) -> DataFrame:
     ).select("id", "simhash", "bv.band", "bv.val")
 
 
-def simhash_signature_store(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, simhash, band, val) — the persistable simhash index of a
-    corpus, mirroring minhash_signature_store: persist it and
-    incremental batches join against it on (band, val) WITHOUT
-    re-fingerprinting the corpus. Unlike the minhash store, this one
-    carries everything verification needs (the 60-bit fingerprint), so
-    the incremental path emits FINAL pairs, not just candidates."""
-    return _banded(simhash_fingerprints(docs, id_col, text_col))
-
-
 def _pairs_from_buckets(
-    tagged: DataFrame,
-    max_hamming: int,
-    max_bucket_size: int | None,
-    require_new: bool,
+    banded: DataFrame, max_hamming: int, max_bucket_size: int | None
 ) -> DataFrame:
-    """(id_a, id_b, hamming) from a (band, val, id, simhash[, is_new])
-    table: ONE shuffle — the shared capped bucket-pair expansion
+    """(id_a, id_b, hamming) from a (band, val, id, simhash) table: ONE
+    shuffle — the shared capped bucket-pair expansion
     (operators/bucketpairs.py). Hamming verification runs INSIDE the
     explode projection (map-side, before the distinct), so shuffle
     volume after the groupBy tracks true near-dups, not collisions."""
-    fields = ["id", "simhash"] + (["is_new"] if require_new else [])
 
     def pair(x, y):
-        cols = [
+        return F.struct(
             x["id"].alias("id_a"),
             y["id"].alias("id_b"),
             F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias(
                 "hamming"
             ),
-        ]
-        if require_new:
-            cols.append((x["is_new"] | y["is_new"]).alias("any_new"))
-        return F.struct(*cols)
-
-    out = bucket_pairs(
-        tagged, ["band", "val"], F.struct(*fields), pair, max_bucket_size
-    ).filter(
-        (F.col("p.hamming") <= max_hamming)
-        & (F.col("p.id_a") != F.col("p.id_b"))
-    )
-    if require_new:
-        out = out.filter(F.col("p.any_new"))
-    return out.select("p.id_a", "p.id_b", "p.hamming").distinct()
-
-
-def incremental_simhash_pairs(
-    new_store: DataFrame,
-    stored_store: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """(id_a, id_b, hamming) near-dup pairs INVOLVING a new batch: the
-    daily-increment shape. new x stored pairs come from a band-bucket
-    equi-join against the persisted index, plus new x new — never
-    stored x stored (already deduped). Verification is pure fingerprint
-    arithmetic over columns both stores carry, so stored documents are
-    never re-read. Equals the full-recompute pair set restricted to
-    pairs with at least one new id (pinned by test).
-
-    Same ONE-shuffle shape as minhash.incremental_candidate_pairs: the
-    stored side is semi-joined (broadcast of the new batch's DISTINCT
-    bucket list) down to the buckets the new batch touches, rows are
-    tagged new/stored, and pairs come from per-bucket sorted arrays.
-    The cap applies to the COMBINED bucket population, like the
-    one-shot path; every stored row of a touched bucket survives the
-    semi-join, so the cap sees the full population."""
-    new_buckets = new_store.select("band", "val").distinct()
-    stored_touched = stored_store.join(
-        F.broadcast(new_buckets), ["band", "val"], "left_semi"
-    )
-    tagged = stored_touched.select(
-        "id", "simhash", "band", "val", F.lit(False).alias("is_new")
-    ).unionByName(
-        new_store.select(
-            "id", "simhash", "band", "val", F.lit(True).alias("is_new")
         )
-    )
-    return _pairs_from_buckets(
-        tagged, max_hamming, max_bucket_size, require_new=True
+
+    return (
+        bucket_pairs(
+            banded, ["band", "val"], F.struct("id", "simhash"), pair,
+            max_bucket_size,
+        )
+        .filter(
+            (F.col("p.hamming") <= max_hamming)
+            & (F.col("p.id_a") != F.col("p.id_b"))
+        )
+        .select("p.id_a", "p.id_b", "p.hamming")
+        .distinct()
     )
 
 
@@ -269,6 +216,4 @@ def simhash_near_duplicates(
     expansion; the old banded self-join read it twice), so the persist
     bought nothing and stranded a cached plan per call.)"""
     fp = simhash_fingerprints(docs, id_col, text_col)
-    return _pairs_from_buckets(
-        _banded(fp), max_hamming, max_bucket_size, require_new=False
-    )
+    return _pairs_from_buckets(_banded(fp), max_hamming, max_bucket_size)

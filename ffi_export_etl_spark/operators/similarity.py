@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..functions.porthash import hyperplane_coefficients, md5_long
 from .minhash import DEFAULT_MAX_BUCKET
-from .quantize import quantize_embedding
 
 
 def as_double(vec: Column) -> Column:
@@ -181,36 +180,6 @@ def lsh_topk(
     )
 
 
-def scaled_lsh_config(
-    n_vectors: int,
-    target_bucket: int = 64,
-    base_tables: int = 4,
-    base_planes: int = 8,
-    recall_p: float = 0.9,
-) -> tuple[int, int]:
-    """(tables, planes_per_table) sized for a corpus of ``n_vectors``.
-
-    Planes grow with log2(n / target_bucket) so the EXPECTED bucket
-    population n/2^planes stays near ``target_bucket`` as the corpus
-    grows — at 10^9 vectors that is ~24 planes, not the 8 that fit a
-    640-row test table. Each extra plane multiplies per-table match
-    probability by p (the per-plane agreement probability of a pair at
-    the dedup threshold, ~0.9 for cosine >= 0.8), so tables scale by
-    (1/p)^extra_planes to hold overall recall 1-(1-p^planes)^L roughly
-    level. The registered gate query pins the small-corpus constants so
-    the DuckDB oracle can replay them as literals; production callers
-    size with this helper."""
-    import math
-
-    planes = max(
-        base_planes,
-        math.ceil(math.log2(max(n_vectors, 1) / max(target_bucket, 1))),
-    )
-    planes = min(planes, 62)  # bucket id must fit a signed 64-bit int
-    tables = math.ceil(base_tables * (1.0 / recall_p) ** (planes - base_planes))
-    return tables, planes
-
-
 def signlsh_signature_store(
     vectors: DataFrame,
     dim: int,
@@ -270,8 +239,7 @@ def lsh_banded_pairs(
     sign pattern, e.g. a pile of near-zero or boilerplate-identical
     vectors, is the one quadratic risk; members of a dropped bucket can
     still meet through their other tables), and intra-array pairs are
-    emitted with array expressions. Size tables/planes for the corpus
-    with scaled_lsh_config.
+    emitted with array expressions.
 
     Recall for a pair with angular similarity s is 1-(1-s^p)^L: more
     tables buy recall, more planes-per-table buy precision (smaller
@@ -487,114 +455,6 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "nbr_id", "cos", "rnk")
-    )
-
-
-def quantized_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-    rescore_factor: int = 4,
-    round_digits: int = 6,
-    include_self: bool = False,
-) -> DataFrame:
-    """Two-stage ANN over int8-quantized embeddings — the memory-bandwidth
-    scale path (operators/quantize.py composed with top-k search).
-
-    Stage 1 ranks candidates with INTEGER-ONLY arithmetic over the int8
-    codes: cosine over dequantized codes equals
-    ``int_dot / sqrt(int_aa * int_bb)`` because the per-vector scales
-    cancel, so the candidate scan multiplies bytes (1/4 the memory
-    traffic of the float corpus) and needs one sqrt per pair. Stage 2
-    re-scores only the top ``k * rescore_factor`` candidates per query
-    against the full-precision vectors, so the returned ``cos`` values
-    are bit-identical to :func:`brute_force_topk` for every surviving
-    neighbor — quantization affects recall only, never the reported
-    score. Same output schema as brute_force_topk.
-    """
-    q8 = F.col("q8")
-
-    def codes_and_norm(df: DataFrame, out_id: str):
-        # int self-norm of the codes: sum of squares <= dim * 127^2
-        return df.select(
-            F.col(id_col).alias(out_id),
-            quantize_embedding(F.col(vec_col)).alias("q8"),
-        ).select(
-            out_id,
-            q8.getField("codes").alias(f"c_{out_id}"),
-            F.aggregate(
-                F.transform(
-                    q8.getField("codes"),
-                    lambda c: (c.cast("long") * c.cast("long")),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias(f"nn_{out_id}"),
-        )
-
-    corpus8 = codes_and_norm(vectors, "nbr_id")
-    query8 = codes_and_norm(
-        queries.withColumnRenamed(query_id_col, id_col), "query_id"
-    )
-    int_dot = F.aggregate(
-        F.zip_with(
-            F.col("c_nbr_id"),
-            F.col("c_query_id"),
-            lambda x, y: x.cast("long") * y.cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    on = (
-        F.lit(True) if include_self
-        else F.col("nbr_id") != F.col("query_id")
-    )
-    approx = (
-        corpus8.join(F.broadcast(query8), on)
-        .withColumn(
-            "ascore",
-            F.round(
-                int_dot
-                / F.sqrt((F.col("nn_nbr_id") * F.col("nn_query_id")).cast("double")),
-                round_digits,
-            ),
-        )
-        .select("query_id", "nbr_id", "ascore")
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("ascore").desc(), F.col("nbr_id")
-    )
-    cand = (
-        approx.withColumn("arnk", F.row_number().over(w1))
-        .filter(F.col("arnk") <= k * rescore_factor)
-        .select("query_id", "nbr_id")
-    )
-    # exact re-score of the survivors: candidates are n_queries * k *
-    # rescore_factor rows — broadcast them into the corpus scan
-    v = vectors.select(
-        F.col(id_col).alias("nbr_id"), as_double(F.col(vec_col)).alias("v")
-    )
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qv"),
-    )
-    rescored = (
-        v.join(F.broadcast(cand), "nbr_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn(
-            "cos", F.round(cosine(F.col("v"), F.col("qv")), round_digits)
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("nbr_id")
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w2))
         .filter(F.col("rnk") <= k)
         .select("query_id", "nbr_id", "cos", "rnk")
     )

@@ -21,10 +21,9 @@ fixed-width token windows:
 - The corpus scan tokenizes and fans out overlapping ``span_tokens``
   windows per document (posexplode over a sequence — narrow,
   executor-side, no shuffle). The window table feeds two subplans
-  (digest aggregation + join-back) whose exchange children differ, so
-  by default the fan-out runs twice per action; ``cache_windows=True``
-  persists it for scan-dominated corpora (the minhash cache_shingles
-  contract — caller owns the release).
+  (digest aggregation + join-back) whose exchange children differ
+  (partial-agg vs raw), so ReuseExchange cannot deduplicate them and the
+  fan-out runs twice per action — the price of holding no cached plan.
 - Window digests aggregate once (map-side combined groupBy on the
   16-byte md5) to find digests with more than one occurrence; the
   keeper occurrence per digest is the (min doc id, min pos) — computed
@@ -57,7 +56,6 @@ from .xplode import posexplode_nonempty
 __all__ = [
     "duplicate_spans",
     "remove_duplicate_spans",
-    "release_span_caches",
     "span_digest_store",
     "incremental_remove_duplicate_spans",
     "remove_contaminated_spans",
@@ -125,38 +123,13 @@ def duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     span_tokens: int = DEFAULT_SPAN_TOKENS,
-    cache_windows: bool = False,
 ) -> DataFrame:
     """(id, pos, whash) — every NON-KEEPER occurrence of a duplicated
     window: its digest occurs more than once corpus-wide and this
     occurrence is not the (min id, min pos) canonical one. The raw
     material for removal, also useful as a contamination/copying report
-    on its own.
-
-    ``cache_windows``: the window fan-out feeds both the digest
-    aggregation and the join-back, and their exchange children differ
-    (partial-agg vs raw), so ReuseExchange cannot deduplicate them — by
-    default the corpus is tokenized and window-hashed twice per action.
-    True persists the window table (corpus-token-sized) so the scan
-    runs once — right when the corpus scan dominates (real 100 TB
-    runs); the caller owns the release via
-    ``release_span_caches(result)`` — the persisted handle rides on the
-    result as ``result._span_persisted`` (the curation
-    ``_curation_persisted`` pattern), so a long-lived session never
-    strands a corpus-token-sized cached plan."""
-    w = _windows(docs, id_col, text_col, span_tokens)
-    if cache_windows:
-        w = w.persist()
-    out = _non_keeper(w)
-    out._span_persisted = [w] if cache_windows else []
-    return out
-
-
-def release_span_caches(result: DataFrame) -> None:
-    """Unpersist the window cache a ``cache_windows=True`` call attached
-    to its result (no-op for uncached results)."""
-    for df in getattr(result, "_span_persisted", []):
-        df.unpersist()
+    on its own."""
+    return _non_keeper(_windows(docs, id_col, text_col, span_tokens))
 
 
 def _merged_cut_intervals(starts: Column, span_tokens: int) -> Column:
@@ -280,7 +253,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     span_tokens: int = DEFAULT_SPAN_TOKENS,
-    cache_windows: bool = False,
 ) -> DataFrame:
     """Schema: (id, text, n_removed_tokens, n_dup_windows). ``text`` has
     every duplicated-window occurrence (except the corpus-wide first)
@@ -288,16 +260,9 @@ def remove_duplicate_spans(
     remaining tokens with single spaces (the engine's scrub normalizes
     whitespace the same way, so the output composes with the curation
     chain), while documents with NO duplicated spans pass through with
-    their original text byte-for-byte (n_removed_tokens = 0).
-    ``cache_windows``: see duplicate_spans — pass True when the corpus
-    scan dominates so the window fan-out materializes once; the
-    persisted handle rides on the result (release_span_caches)."""
-    dups = duplicate_spans(
-        docs, id_col, text_col, span_tokens, cache_windows
-    )
-    out = _rebuild_cleaned(docs, dups, id_col, text_col, span_tokens)
-    out._span_persisted = getattr(dups, "_span_persisted", [])
-    return out
+    their original text byte-for-byte (n_removed_tokens = 0)."""
+    dups = duplicate_spans(docs, id_col, text_col, span_tokens)
+    return _rebuild_cleaned(docs, dups, id_col, text_col, span_tokens)
 
 
 def span_digest_store(

@@ -203,7 +203,6 @@ def strip_boilerplate_lines(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_docs: int = 5,
-    broadcast_boiler: bool = False,
 ):
     """Remove lines that repeat across >= ``min_docs`` DISTINCT documents
     (site headers, navigation, legal footers) — the C4/RefinedWeb-style
@@ -221,11 +220,9 @@ def strip_boilerplate_lines(
     The boilerplate set is NOT assumed small: at 100 TB of web text with
     ``min_docs=5`` the lines repeated across documents (shared footers /
     nav / disclaimers) number in the tens of millions, which would kill a
-    forced driver broadcast. Default is therefore a plain anti-join on
+    forced driver broadcast. The join is therefore a plain anti-join on
     the normalized line — a shuffle hash/sort-merge join that AQE still
-    converts to broadcast AT RUNTIME when the set measures small. Pass
-    ``broadcast_boiler=True`` only when the set is known tiny (e.g. a
-    curated hand-list) to pin the broadcast up front.
+    converts to broadcast AT RUNTIME when the set measures small.
     """
     lines = posexplode_nonempty(
         docs, [F.col(id_col).alias("id")],
@@ -239,8 +236,6 @@ def strip_boilerplate_lines(
         .filter(F.col("n_docs") >= min_docs)
         .select("bline")
     )
-    if broadcast_boiler:
-        boiler = F.broadcast(boiler)
     kept = lines.join(
         boiler, F.trim(F.col("line")) == F.col("bline"), "left_anti"
     )

@@ -14,10 +14,7 @@ Catalyst expressions.
 Scale notes:
 - ``unique`` needs a distinct count. Exact ``count_distinct`` joins the
   same single aggregate via Catalyst's expand (one extra shuffle shared
-  by ALL unique checks, not one each); at corpus scale prefer
-  ``unique(col, approx=True)`` — HLL++ (bounded memory, no expand) with
-  the violation count accurate to the sketch's rsd. The gate arm pins
-  the exact form; the approx form is pinned against it in tests.
+  by ALL unique checks, not one each).
 - Fraction thresholds use integer micro-unit arithmetic
   (``violations * 1_000_000 <= frac_micro * n_rows``) so the pass/fail
   decision is engine-portable — no float division anywhere.
@@ -50,8 +47,6 @@ class _Check:
     threshold: int
     # row-level violation condition (None for aggregate-level checks)
     cond: Column | None = field(default=None, compare=False)
-    approx: bool = False
-    rsd: float = 0.05
 
 
 class CheckSuite:
@@ -126,18 +121,11 @@ class CheckSuite:
 
     # -- aggregate-level checks ---------------------------------------
 
-    def unique(self, col: str, max_violations: int = 0,
-               approx: bool = False, rsd: float = 0.05) -> "CheckSuite":
-        """Violations = non-null count - distinct count.
-
-        Exact by default (shares ONE expand with every other exact
-        unique check); ``approx=True`` swaps in HLL++ for the scale
-        path — violation count then carries the sketch's rsd and the
-        pass decision should use a threshold above the noise floor.
-        """
+    def unique(self, col: str, max_violations: int = 0) -> "CheckSuite":
+        """Violations = non-null count - distinct count (exact; shares
+        ONE expand with every other unique check)."""
         return self._add(
-            _Check(f"unique:{col}", "unique", col, max_violations,
-                   None, approx=approx, rsd=rsd)
+            _Check(f"unique:{col}", "unique", col, max_violations, None)
         )
 
     def min_rows(self, n: int) -> "CheckSuite":
@@ -164,13 +152,8 @@ class CheckSuite:
                 )
             elif c.kind == "unique":
                 nn = F.count(F.col(c.column))
-                nd = (F.approx_count_distinct(F.col(c.column), c.rsd)
-                      if c.approx else F.count_distinct(F.col(c.column)))
-                # clamp: HLL++ can OVERestimate, making nn - nd negative
-                aggs.append(
-                    F.greatest(F.lit(0).cast("bigint"), (nn - nd))
-                    .cast("bigint").alias(f"v_{i}")
-                )
+                nd = F.count_distinct(F.col(c.column))
+                aggs.append((nn - nd).cast("bigint").alias(f"v_{i}"))
             else:  # min_rows — violation derived from _n below
                 aggs.append(F.lit(0).cast("bigint").alias(f"v_{i}"))
         wide = df.groupBy(*by).agg(*aggs) if by else df.agg(*aggs)
@@ -217,10 +200,10 @@ class CheckSuite:
 
 def format_failures(rows) -> str | None:
     """One-line description of the failed checks in a collected report
-    (None when everything passed) — shared by assert_suite and callers
-    that already hold the report and want the message without a second
-    run (e.g. the curate CLI reuses the report's n_rows as its input
-    count, saving a corpus scan)."""
+    (None when everything passed), for callers that already hold the
+    report and want the message without a second run (e.g. the curate
+    CLI reuses the report's n_rows as its input count, saving a corpus
+    scan)."""
     failed = [r for r in rows if not r["passed"]]
     if not failed:
         return None
@@ -229,14 +212,3 @@ def format_failures(rows) -> str | None:
         f" of {r['n_rows']} rows)" for r in failed
     )
     return f"data-quality checks failed: {lines}"
-
-
-def assert_suite(df: DataFrame, suite: CheckSuite) -> None:
-    """Raise ValueError listing every failed check (pipeline gate form).
-
-    The collect here is bounded by the NUMBER OF CHECKS (suite-sized,
-    not data-sized) — the single underlying scan happened in run().
-    """
-    msg = format_failures(suite.run(df).collect())
-    if msg:
-        raise ValueError(msg)

@@ -448,43 +448,51 @@ def process_exports_glob(
     pending = ledger.pending(files)
     if not pending:
         return {}
-    tables = read_ffi_export(spark, pending)
-    pipe = FFIPipeline(spark, tables)
-    pipe.run()
-    # CONCURRENT per-table upserts (r8; shared helper r10 — see
-    # _upsert_concurrently for the full contract: one InheritableThread
-    # worker per target, same-target aliases chained, per-table failure
-    # isolation). Spark's scheduler interleaves the jobs; the shared
-    # upstream persists are read-only.
-    work: list[tuple[str, object, tuple[str, ...]]] = []
-    for name in list(pipe.tables):
-        if name in EXCLUDED_TABLES:
-            continue
-        df = pipe.tables[name]
-        target_name = (maps.target_for(name) if maps else None) or name
-        if maps:
-            df = maps.project(df, target_name)
-        keys = _keys_for(name, df.columns)
-        if keys is None:
-            continue
-        work.append((target_name, df, keys))
-    loaded, failed = _upsert_concurrently(spark, work, warehouse_dir)
-    audit_log_append(
-        spark,
-        [
-            {
-                "User": os.environ.get("USER", "spark"),
-                "Time": str(int(time.time())),
-                "Table": t,
-                "ChangeType": "INSERT",
-                "Changes": n,
-            }
-            for t, n in loaded.items()
-            if n
-        ],
-        os.path.join(warehouse_dir, "UpdateLog"),
-    )
-    for path in pending:
-        ledger.mark(path, failed_tables=failed)
-    spark.catalog.clearCache()  # see process_exports: release batch caches
+    # release only this batch's cached frames (process_exports' targeted
+    # release): clearCache() would also evict every frame the host
+    # session has cached
+    persists: list = []
+    pipe = None
+    try:
+        tables = read_ffi_export(spark, pending, persists=persists)
+        pipe = FFIPipeline(spark, tables)
+        pipe.run()
+        # CONCURRENT per-table upserts (r8; shared helper r10 — see
+        # _upsert_concurrently for the full contract: one InheritableThread
+        # worker per target, same-target aliases chained, per-table failure
+        # isolation). Spark's scheduler interleaves the jobs; the shared
+        # upstream persists are read-only.
+        work: list[tuple[str, object, tuple[str, ...]]] = []
+        for name in list(pipe.tables):
+            if name in EXCLUDED_TABLES:
+                continue
+            df = pipe.tables[name]
+            target_name = (maps.target_for(name) if maps else None) or name
+            if maps:
+                df = maps.project(df, target_name)
+            keys = _keys_for(name, df.columns)
+            if keys is None:
+                continue
+            work.append((target_name, df, keys))
+        loaded, failed = _upsert_concurrently(spark, work, warehouse_dir)
+        audit_log_append(
+            spark,
+            [
+                {
+                    "User": os.environ.get("USER", "spark"),
+                    "Time": str(int(time.time())),
+                    "Table": t,
+                    "ChangeType": "INSERT",
+                    "Changes": n,
+                }
+                for t, n in loaded.items()
+                if n
+            ],
+            os.path.join(warehouse_dir, "UpdateLog"),
+        )
+        for path in pending:
+            ledger.mark(path, failed_tables=failed)
+    finally:
+        for df in persists + (pipe.persists if pipe else []):
+            df.unpersist()
     return loaded

@@ -147,9 +147,9 @@ def curate_documents(
 
     ``funnel`` (default None, inert): pass a list to collect
     (stage_name, frame, text_col) at every enabled stage boundary —
-    the audit hook behind :func:`curation_funnel` and the CLI's
-    ``--funnel``; see :func:`count_funnel_stages` for pricing."""
-    # ``funnel``: optional AUDIT collector (see curation_funnel). When a
+    the audit hook behind the CLI's ``curate --funnel``; see
+    :func:`count_funnel_stages` for pricing."""
+    # ``funnel``: optional AUDIT collector. When a
     # list is passed, every enabled stage appends (stage_name, frame,
     # text_col_name) at its output boundary — frames only, no actions;
     # counting them is the caller's (priced) choice. None = zero-cost
@@ -661,29 +661,6 @@ def count_funnel_stages(stages: list, out: DataFrame | None = None) -> list[dict
         }
         for i in range(len(frames))
     ]
-
-
-def curation_funnel(docs: DataFrame, **kwargs) -> list[dict]:
-    """Audit mode for curate_documents: run the identical pipeline and
-    report, per enabled stage, how many documents (and how many chars
-    of text) survived it — the operator's answer to "why did my corpus
-    shrink 40%?" before committing a 100 TB run. Returns
-    [{stage, docs, chars}] in pipeline order, ending with the
-    "packed_output" row from the returned corpus itself.
-
-    The rows come from the very frames the pipeline flowed (the
-    ``funnel`` collector kwarg, not a re-implementation), so the report
-    cannot drift from the real pipeline — pinned by the equality test
-    between the funnel's terminal count and a plain curate_documents
-    run. Rewrite stages (html extraction, boilerplate, span cuts) show
-    up as chars shrinking at constant docs; drop stages as docs
-    shrinking; epoch upsampling as the one row where docs GROWS."""
-    stages: list = []
-    out = curate_documents(docs, funnel=stages, **kwargs)
-    try:
-        return count_funnel_stages(stages, out)
-    finally:
-        release_curation_caches(out)
 
 
 def release_curation_caches(result: DataFrame) -> None:

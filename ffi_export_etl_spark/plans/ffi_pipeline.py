@@ -92,13 +92,14 @@ def method_table_name(method: str) -> str:
     )
 
 
-def _mu_from_pairs(
-    pairs: list,
+def _methods_and_units(
+    long: DataFrame,
 ) -> tuple[list[str], dict[str, list[str]]]:
-    """(methods, units_by_method) from collected (Method_Name,
-    Method_UnitSystem) rows/tuples — the driver-side reduction shared
-    by the per-file collect and the batch driver's wave-level collect
-    (r12), so both paths fold the rows identically."""
+    """ONE distinct-collect over (Method_Name, Method_UnitSystem) yields
+    both the method list and each method's unit systems — the unit
+    fan-out then needs no further Spark jobs (A6 distinct-collect is
+    driver-side by design; it should cost one job, not one per method)."""
+    pairs = long.select("Method_Name", "Method_UnitSystem").distinct().collect()
     units_by_method: dict[str, set] = {}
     for r in pairs:
         if r[0] is not None:
@@ -108,17 +109,6 @@ def _mu_from_pairs(
         m: sorted(u for u in us if u is not None)
         for m, us in units_by_method.items()
     }
-
-
-def _methods_and_units(
-    long: DataFrame,
-) -> tuple[list[str], dict[str, list[str]]]:
-    """ONE distinct-collect over (Method_Name, Method_UnitSystem) yields
-    both the method list and each method's unit systems — the unit
-    fan-out then needs no further Spark jobs (A6 distinct-collect is
-    driver-side by design; it should cost one job, not one per method)."""
-    pairs = long.select("Method_Name", "Method_UnitSystem").distinct().collect()
-    return _mu_from_pairs(pairs)
 
 
 def _backfill(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
@@ -142,11 +132,6 @@ class FFIPipeline:
         # the overlapped per-file driver releases them per FILE instead
         # of clearCache()-ing the whole session (r11)
         self.persists: list[DataFrame] = []
-        # NOTE (r12 NEGATIVE, PERFORMANCE.md): injecting wave-level
-        # pre-collected discovery results here was A/B'd and REJECTED —
-        # the per-file cost is the EAV materialization compute, not the
-        # collect-round latency, so batching the collects saved ~0.2s a
-        # file while the wave unions cost seconds.
 
     # ------------------------------------------------------------------
     # extract

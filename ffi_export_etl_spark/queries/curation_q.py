@@ -78,7 +78,7 @@ INCR_MIN_WORDS = 20  # curate_increment's default quality floor
 # stay fully exercised.
 INCR_SLICE_MOD = 3
 
-# ---- BPE arms (r5, judge item 6): train_bpe/apply_bpe driver-gated.
+# ---- BPE arms (r5, judge item 6): train_bpe_full/apply_bpe driver-gated.
 # A fixed merge count unrolls into a linear DuckDB CTE chain (one
 # pair-count + argmax + merge-rewrite step per merge); the rewrite uses
 # the boundary-safe double-separator string form so plain replace() is
@@ -87,7 +87,7 @@ INCR_SLICE_MOD = 3
 # cross-pins apply_bpe's rank-greedy Arrow kernel against the
 # in-training-order definition.
 BPE_MERGES = 12
-BPE_MIN_PAIR = 2  # train_bpe's default early-stop floor
+BPE_MIN_PAIR = 2  # train_bpe_full's default early-stop floor
 BPE_SAMPLE_MOD = 17  # doc_id % 17 == 0 -> the tokenized-sample docs
 
 
@@ -627,7 +627,7 @@ _INCR_CTES, _INCR_ARMS = _incr_sql()
 
 
 def _bpe_sql() -> tuple[str, str]:
-    """(cte_chain, union_arms) replaying train_bpe + apply_bpe with the
+    """(cte_chain, union_arms) replaying train_bpe_full + apply_bpe with the
     merge loop UNROLLED to BPE_MERGES linear CTE steps. Words live as
     double-separator-joined strings (chr(31) — never in the whitespace
     tokens both engines split on): the pattern SEP a SEPSEP b SEP only

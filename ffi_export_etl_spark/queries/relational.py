@@ -72,8 +72,8 @@ def f_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     and convert_datetime normalization.
 
     PlotID/EventID-style key synthesis (parser/xml.py:158-175): an id is
-    built from normalized name parts + a date; to_datenum
-    (parser/functions.py:91-108) is days since 1900-01-01;
+    built from normalized name parts + a date; the reference's datenum
+    helper (parser/functions.py:91-108) is days since 1900-01-01;
     convert_datetime (parser/functions.py:72-88) parses heterogeneous
     timestamp strings and renders millisecond wall clock."""
     from ..functions.datetime_norm import normalize_datetime

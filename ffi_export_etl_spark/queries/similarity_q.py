@@ -203,10 +203,8 @@ IVFPQ_CENTROIDS = [
 # permutation is an exact-binary orthonormal rotation whose
 # plan-literal fold does NO float summation (each output coordinate is
 # plus-or-minus exactly one input coordinate), so the rotated doubles
-# are bit-identical cross-engine by construction — the fit/transform
-# split again: the LEARNED rotation (fit_opq's iterative SVD) stays
-# pytest-pinned against its numpy twin, the serving-path composition
-# rides the gate.
+# are bit-identical cross-engine by construction, so the serving-path
+# composition rides the gate with no fitted rotation in the loop.
 OPQ_PERM = [(j * 29 + 7) % DIM for j in range(DIM)]  # 29 coprime to 64
 OPQ_SIGN = [1.0 if (j * 3 + 1) % 5 < 3 else -1.0 for j in range(DIM)]
 OPQ_ROT = [

@@ -367,50 +367,3 @@ def _manifest_from_footers(
         rows,
         f"file string, n_rows long, first_key {key_type}, last_key {key_type}",
     )
-
-
-def plan_shard_assignment(
-    manifest: DataFrame,
-    world_size: int,
-    weight_col: str | None = None,
-) -> dict[int, list[str]]:
-    """Partition the written shards across ``world_size`` data-parallel
-    readers, balanced by row count (or ``weight_col`` — e.g.
-    ``file_bytes`` from a checksummed manifest when shard byte sizes
-    are skewed): the driver-side plan a training launcher consumes so
-    every rank streams a DISJOINT, near-equal share without a central
-    coordinator at read time. Deterministic: greedy longest-first
-    (LPT) onto the currently-lightest rank, ties broken by rank index
-    and file name — the same manifest always yields the same plan, so
-    a restarted job re-derives identical assignments.
-
-    Driver-side by design: the manifest is one row per SHARD (file
-    count, not corpus size — the same boundedness as the manifest
-    write itself). Ranks beyond the shard count get empty lists
-    (caller's signal to shrink world_size or rows_per_shard)."""
-    if world_size < 1:
-        raise ValueError(f"world_size must be >= 1, got {world_size}")
-    w = weight_col or "n_rows"
-    rows = manifest.select("file", w).collect()
-    missing = [r["file"] for r in rows if r[w] is None]
-    if missing:
-        # file_bytes is NULL for shards the stat pass could not reach
-        # (unresolvable URI — the verifier treats NULL as unchecked); a
-        # silent 0 would pile every unknown-size shard on one rank, so
-        # refuse with the fix spelled out (review r8)
-        raise ValueError(
-            f"weight_col {w!r} is NULL for {len(missing)} shard(s) "
-            f"(e.g. {missing[0]!r}); balance by n_rows instead, or "
-            "regenerate the manifest where the files are reachable"
-        )
-    shards = sorted(
-        ((int(r[w]), r["file"]) for r in rows),
-        key=lambda t: (-t[0], t[1]),
-    )
-    loads = [0] * world_size
-    plan: dict[int, list[str]] = {r: [] for r in range(world_size)}
-    for weight, fname in shards:
-        rank = min(range(world_size), key=lambda r: (loads[r], r))
-        plan[rank].append(fname)
-        loads[rank] += weight
-    return plan

@@ -68,12 +68,6 @@ def discover_structure(path: str) -> tuple[str | None, str | None, list[str]]:
     return ns, root, list(tags)
 
 
-def discover_tags(path: str) -> tuple[str | None, list[str]]:
-    """(namespace URI or None, depth-1 tags) — see discover_structure."""
-    ns, _root, tags = discover_structure(path)
-    return ns, tags
-
-
 def discover_columns(
     path: str,
 ) -> tuple[str | None, str | None, dict[str, list[str]]]:
@@ -137,7 +131,6 @@ def read_ffi_export(
     spark: SparkSession,
     path: str | list[str],
     tags: Iterable[str] | None = None,
-    apply_casts: bool = True,
     persists: list | None = None,
 ) -> dict[str, DataFrame]:
     """Read one FFI export (or a glob of exports) into {table: DataFrame}.
@@ -221,7 +214,7 @@ def read_ffi_export(
             df = rootdf.select(F.col(tag).cast("string").alias(tag)).filter(
                 F.col(tag).isNotNull()
             )
-            out[tag] = ingest_casts(df) if apply_casts else df
+            out[tag] = ingest_casts(df)
             continue
         df = rows.select(*lead, "_r.*")
         # Native XML may surface attributes (none in FFI exports) or value
@@ -238,7 +231,7 @@ def read_ffi_export(
         else:
             exprs = [F.col(c).cast("string").alias(c) for c in cols]
         df = df.select(*exprs)
-        out[tag] = ingest_casts(df) if apply_casts else df
+        out[tag] = ingest_casts(df)
     return out
 
 
@@ -264,7 +257,6 @@ def read_ffi_export_sliced(
     paths: list[str],
     root: str,
     colsets: dict[str, dict[str, list[str]]],
-    apply_casts: bool = True,
     persists: list | None = None,
 ) -> tuple[dict[str, dict[str, DataFrame]], dict[str, DataFrame]]:
     """ONE distributed parse of MANY export files, sliced back into
@@ -361,7 +353,7 @@ def read_ffi_export_sliced(
                 for c in keep
             ]
             df = flat.select(*exprs)
-            tables[tag] = ingest_casts(df) if apply_casts else df
+            tables[tag] = ingest_casts(df)
         out[path] = tables
     return out, slices
 

@@ -1,30 +1,22 @@
-"""Continuous-ingest near-duplicate detection: the incremental signature
-stores driven by Structured Streaming — MinHash by default
-(operators/minhash.py:138-198), any store family via the pluggable
-``sketch``/``pair_fn`` hooks (exact content-hash ingest dedup pinned by
-test; simhash/sign-LSH stores satisfy the same contract).
+"""Signature stores of the streaming curation daemon
+(streaming/curate.py): the persisted (id, band, bucket) index each
+micro-batch joins against and then appends to, so stored x stored is
+never re-paired and no stored document is re-read or re-sketched — the
+shape that keeps dedup cost proportional to the ARRIVAL rate instead of
+the corpus size.
 
-The daily-increment batch shape generalizes to a stream: each
-micro-batch of newly-arrived documents is sketched ONCE, joined against
-the persisted (id, band, bucket) index for candidates involving anything
-seen before, and then appended to that index — stored x stored is never
-re-paired, and no stored document is ever re-read or re-sketched. At
-100 TB this is the shape that keeps dedup cost proportional to the
-ARRIVAL rate instead of the corpus size.
-
-Exactly-once contract (same discipline as the event ingest in
-tests/test_streaming.py): Structured Streaming may re-run a micro-batch
+Exactly-once contract: Structured Streaming may re-run a micro-batch
 after a failure, so each batch overwrites its own ``batch_id=N``
 subdirectory (Hive-partition layout, so the roots read back with
 batch_id as a partition column) — a replayed batch overwrites itself
-instead of appending a duplicate, and the non-partitioned per-subdir
-write leaves a schema-carrying file even for an empty batch. Within one run, micro-batches
-execute serially, so the store a batch joins against contains exactly
-the batches before it; the union of per-batch candidate pairs over any
-file arrival order equals the one-shot LSH candidate set (every pair
-(a, b) is emitted by whichever batch processes the LATER of the two
-docs — the earlier one is by then stored, or they share a batch).
-Pinned by tests/test_streaming.py.
+instead of appending a duplicate. Within one run, micro-batches execute
+serially, so the store a batch joins against contains exactly the
+batches before it (``_read_store``'s ``before_batch`` pruning).
+
+This module holds the store's reader (``_read_store``,
+``store_row_count``), the ``continue``-mode batch-id base
+(``_session_base``) and the between-sessions fold
+(``compact_signature_store``) onto the events.py generation protocol.
 """
 
 from __future__ import annotations
@@ -35,10 +27,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.minhash import (
-    incremental_candidate_pairs,
-    minhash_signature_store,
-)
 from .events import _sink_ids, _sink_max_id, compact_window_sink
 
 
@@ -167,107 +155,6 @@ def _session_base(
         "ignore"
     ).json(sidecar)
     return int(spark.read.json(sidecar).first()["base"])
-
-
-def streaming_incremental_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    store_path: str,
-    pairs_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
-    max_bucket_size: int | None = None,
-    max_files_per_trigger: int = 1,
-    sketch=None,
-    pair_fn=None,
-    on_existing_store: str = "replay",
-):
-    """Drain ``source_dir`` (parquet doc files) with availableNow,
-    emitting candidate near-dup pairs to ``pairs_path`` and growing the
-    signature store at ``store_path``. Returns the finished query.
-
-    ``on_existing_store`` declares the intent when a FRESH checkpoint is
-    started against a non-empty store — the driver cannot infer it:
-
-    - ``"replay"`` (default): the run is a re-delivery of the same
-      arrivals; each batch overwrites its slot, output unchanged (the
-      exactly-once idempotence contract).
-    - ``"continue"``: the run continues a prior session over new
-      arrivals; batch ids offset past the store's max (stable per
-      checkpoint via a sidecar), so the prior corpus stays stored and
-      everything already seen dedups away. NOTE: the recommended
-      continuation path is simply REUSING the same checkpoint (Spark
-      then skips processed files and numbers new batches above the old
-      ones — correct with no mode flag); "continue" exists for when the
-      checkpoint is gone.
-
-    ``max_bucket_size=None`` by default: the cap is computed against the
-    store-so-far, which drifts from the one-shot population while the
-    corpus is still arriving; callers who want the cap at steady state
-    pass it explicitly.
-
-    The store FAMILY is pluggable: ``sketch(batch) -> index rows`` and
-    ``pair_fn(new_index, stored_index) -> (id_a, id_b, ...)`` default to
-    the MinHash store, but any of the engine's signature stores slots in
-    — e.g. exact content-hash streaming ingest dedup is
-    ``sketch=lambda b: exact_signature_store(b, id, text)`` with
-    ``pair_fn=exact_pairs_from_stores`` (pinned by test), and the
-    simhash/sign-LSH stores follow the same contract.
-    """
-    schema = spark.read.parquet(source_dir).schema  # footer-only probe
-    if sketch is None:
-        sketch = lambda b: minhash_signature_store(  # noqa: E731
-            b, id_col, text_col, n=n, num_perm=num_perm, bands=bands
-        )
-    if pair_fn is None:
-        pair_fn = lambda nw, st: incremental_candidate_pairs(  # noqa: E731
-            nw, st, max_bucket_size=max_bucket_size
-        )
-    if on_existing_store not in ("replay", "continue"):
-        raise ValueError("on_existing_store must be 'replay' or 'continue'")
-    if on_existing_store == "continue":
-        store_base = _session_base(spark, checkpoint, "store", store_path)
-        pairs_base = _session_base(spark, checkpoint, "pairs", pairs_path)
-    else:
-        store_base = pairs_base = 0
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bs = batch.sparkSession
-        # sketch ONCE; feeds the join and the sink
-        new_banded = sketch(batch).localCheckpoint()
-        stored = _read_store(
-            bs, store_path, new_banded, before_batch=store_base + batch_id
-        )
-        pairs = pair_fn(new_banded, stored)
-        # each batch overwrites ITS OWN batch_id=N subdirectory (replay
-        # idempotence), written non-partitioned so even an all-empty
-        # batch leaves a schema-carrying file — a pairs dir where no
-        # duplicate was ever found still reads back with the right
-        # schema (a partitionBy write of an empty frame leaves nothing)
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_path, f"batch_id={pairs_base + batch_id}")
-        )
-        new_banded.write.mode("overwrite").parquet(
-            os.path.join(store_path, f"batch_id={store_base + batch_id}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def compact_signature_store(

@@ -5,8 +5,11 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from ffi_export_etl_spark.plans.batch_driver import process_exports
 from tests.ffi_fixture import build_export_xml, write_export_xml
+from tests.test_concurrent_packs import _persisted_noncheckpoint_ids
 
 
 def _second_export(path: str) -> str:
@@ -101,6 +104,33 @@ def test_batched_mode_matches_sequential(spark, tmp_path):
 
     # rerun is a ledger no-op
     assert process_exports_batched(spark, str(exports / "*.xml"), wh_bat) == {}
+
+
+@pytest.mark.parametrize(
+    "loader",
+    ["process_exports", "process_exports_batched", "process_exports_glob"],
+)
+def test_loader_releases_only_its_own_caches(spark, tmp_path, loader):
+    """A loader embedded in a long-lived session releases exactly the
+    frames it cached: an unrelated persisted frame stays cached, and
+    none of the loader's own persisted frames outlive the call."""
+    from ffi_export_etl_spark.plans import batch_driver
+
+    exports = tmp_path / "exports"
+    exports.mkdir()
+    write_export_xml(str(exports / "export1.xml"))
+    _second_export(str(exports / "export2.xml"))
+    host = spark.range(50).selectExpr("id * 2 AS v").persist()
+    try:
+        assert host.count() == 50
+        before = _persisted_noncheckpoint_ids(spark)
+        getattr(batch_driver, loader)(
+            spark, str(exports / "*.xml"), str(tmp_path / "wh")
+        )
+        assert host.storageLevel.useMemory, "host cache was evicted"
+        assert _persisted_noncheckpoint_ids(spark) - before == set()
+    finally:
+        host.unpersist()
 
 
 def test_batched_mode_with_fieldmaps(spark, tmp_path):

@@ -1,8 +1,9 @@
-"""plans/curation.curation_funnel: the per-stage survival audit over
-the composed pipeline — "which stage shrank my corpus". The funnel rows
-come from the frames the pipeline actually flowed (the ``funnel``
-collector kwarg), so the core contract is that the report CANNOT drift
-from a plain curate_documents run with the same arguments.
+"""The curation funnel: the per-stage survival audit over the composed
+pipeline — "which stage shrank my corpus". The funnel rows come from
+the frames the pipeline actually flowed (curate_documents' ``funnel``
+collector kwarg, counted by count_funnel_stages — the calls the CLI's
+``curate --funnel`` makes), so the core contract is that the report
+CANNOT drift from a plain curate_documents run with the same arguments.
 """
 
 from __future__ import annotations
@@ -13,8 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ffi_export_etl_spark.plans.curation import (
+    count_funnel_stages,
     curate_documents,
-    curation_funnel,
     release_curation_caches,
 )
 
@@ -52,10 +53,21 @@ def bench_set(spark):
 KW = dict(min_words=20, jaccard_threshold_pct=50, capacity=64)
 
 
+def _funnel(docs, **kwargs) -> list[dict]:
+    """[{stage, docs, chars}] for one curate_documents run, ending with
+    the "packed_output" row — the CLI's ``curate --funnel`` calls."""
+    stages: list = []
+    out = curate_documents(docs, funnel=stages, **kwargs)
+    try:
+        return count_funnel_stages(stages, out)
+    finally:
+        release_curation_caches(out)
+
+
 def test_funnel_matches_plain_pipeline_and_orders_stages(
     spark, docs, bench_set
 ):
-    report = curation_funnel(
+    report = _funnel(
         docs, benchmark=bench_set, boilerplate_min_docs=3, **KW
     )
     stages = [r["stage"] for r in report]
@@ -84,14 +96,14 @@ def test_funnel_matches_plain_pipeline_and_orders_stages(
 
 
 def test_funnel_reflects_enabled_stages_only(spark, docs):
-    report = curation_funnel(docs, **KW)
+    report = _funnel(docs, **KW)
     assert [r["stage"] for r in report] == [
         "input", "scrub", "neardup_keepers", "min_words", "packed_output",
     ]
 
 
 def test_funnel_epoch_stage_grows_docs(spark, docs):
-    report = curation_funnel(
+    report = _funnel(
         docs, epochs={"books": 2.0}, **KW
     )
     by = {r["stage"]: r for r in report}
@@ -132,7 +144,7 @@ def test_funnel_marks_structural_stages(spark):
         [(9, "the quick brown fox jumps over the lazy dog " * 3)],
         "bench_id: long, text: string",
     )
-    report = curation_funnel(
+    report = _funnel(
         docs,
         url_col="url",
         dedup_urls=True,
@@ -172,7 +184,7 @@ def test_funnel_marks_quality_and_mixture_stages(spark):
     ref = spark.createDataFrame(
         [(" ".join(f"a{i}" for i in range(60)),)], "text: string"
     )
-    report = curation_funnel(
+    report = _funnel(
         docs,
         max_dup_line_frac=0.9,
         max_top_bigram_frac=0.9,
@@ -210,7 +222,7 @@ def test_funnel_c4_and_gopher_marks(spark):
                              "web")],
         "doc_id: long, text: string, source: string",
     )
-    report = curation_funnel(
+    report = _funnel(
         docs, c4_line_clean=True, gopher_rules=True,
         min_words=5, jaccard_threshold_pct=50, capacity=64,
     )

@@ -36,13 +36,11 @@ def test_all_five_dedup_families_registered():
 
 
 def test_incremental_exact_store(spark):
-    """operators/exactdedup.py: the content-hash increment matches the
-    full-corpus exact grouping restricted to new-involving pairs, and
-    drop_known_duplicates keeps exactly the never-seen content."""
+    """operators/exactdedup.py: drop_known_duplicates against the
+    content-hash store keeps exactly the never-seen content."""
     from ffi_export_etl_spark.operators.exactdedup import (
         drop_known_duplicates,
         exact_signature_store,
-        incremental_exact_pairs,
     )
 
     rows = [(i, f"text {i % 6}") for i in range(12)]  # 6 contents x2
@@ -51,25 +49,6 @@ def test_incremental_exact_store(spark):
     new_docs = docs.filter("doc_id >= 8")  # 8..11 -> contents 2,3,4,5
 
     store = exact_signature_store(stored_docs)
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in incremental_exact_pairs(new_docs, store).collect()
-    }
-    # full recompute restricted to pairs with at least one new id
-    full = (
-        docs.withColumn("k", F.md5(F.encode("text", "UTF-8")))
-        .alias("a")
-        .join(
-            docs.withColumn("k", F.md5(F.encode("text", "UTF-8"))).alias("b"),
-            "k",
-        )
-        .filter("a.doc_id < b.doc_id")
-        .filter("a.doc_id >= 8 or b.doc_id >= 8")
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    )
-    assert pairs == {(r["id_a"], r["id_b"]) for r in full.collect()}
-    assert len(pairs) == 4  # 8<->2, 9<->3, 10<->4, 11<->5
-
     # ingest filter: all 4 new docs repeat stored content -> none kept
     assert drop_known_duplicates(new_docs, store).count() == 0
     # fresh content passes; an in-batch dup keeps only the min id

@@ -57,12 +57,12 @@ def test_query_executes_on_empty_corpus(spark, empty_sf_dir, name):
 def test_bpe_trains_to_no_merges_on_empty(spark):
     from ffi_export_etl_spark.operators.bpe import (
         apply_bpe,
-        train_bpe,
+        train_bpe_full,
         word_count_table,
     )
 
     empty = spark.createDataFrame([], "doc_id: long, text: string")
-    merges = train_bpe(word_count_table(empty, "text"), num_merges=5)
+    merges = train_bpe_full(word_count_table(empty, "text"), num_merges=5)
     assert merges == []
     assert apply_bpe(empty, merges, "text").count() == 0
 
@@ -72,15 +72,3 @@ def test_lloyd_cells_empty_vectors(spark):
 
     empty = spark.createDataFrame([], "vec_id: long, embedding: array<float>")
     assert lloyd_cells(empty, dim=4, k=2, iters=2).count() == 0
-
-
-def test_quality_model_fit_raises_clearly_on_empty(spark):
-    from ffi_export_etl_spark.operators.quality_model import (
-        train_quality_model,
-    )
-
-    empty = spark.createDataFrame(
-        [], "doc_id: long, text: string, label: double"
-    )
-    with pytest.raises(ValueError, match="zero examples"):
-        train_quality_model(empty)

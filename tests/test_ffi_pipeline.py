@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 from ffi_export_etl_spark.plans.ffi_pipeline import FFIPipeline
-from ffi_export_etl_spark.sources.xml import discover_tags, read_ffi_export
+from ffi_export_etl_spark.sources.xml import discover_structure, read_ffi_export
 from tests.ffi_fixture import build_export_xml, write_export_xml
 
 
@@ -28,7 +28,7 @@ def pipeline(spark, export_path):
 
 
 def test_discover_tags(export_path):
-    ns, tags = discover_tags(export_path)
+    ns, _root, tags = discover_structure(export_path)
     assert ns == "http://tempuri.org/FFIExport.xsd"
     assert "MacroPlot" in tags and "AttributeData" in tags
     assert len(tags) == len(set(tags))

@@ -13,7 +13,10 @@ from ffi_export_etl_spark.functions.idents import (
 )
 from ffi_export_etl_spark.operators.asof import asof_join
 from ffi_export_etl_spark.operators.minhash import minhash_near_duplicates
-from ffi_export_etl_spark.operators.shingles import jaccard_pairs, word_shingles
+from ffi_export_etl_spark.operators.shingles import (
+    jaccard_pairs,
+    word_shingle_arrays,
+)
 from ffi_export_etl_spark.operators.simhash import simhash_near_duplicates
 from ffi_export_etl_spark.operators.similarity import brute_force_topk, lsh_topk
 
@@ -38,10 +41,13 @@ def test_asof_join_basic(spark):
 
 
 def test_word_shingles_short_text(spark):
-    df = spark.createDataFrame([("a b",), ("a b c d",)], ["text"])
-    rows = df.select(word_shingles(F.col("text"), 3).alias("s")).collect()
-    assert rows[0]["s"] == []
-    assert rows[1]["s"] == ["a b c", "b c d"]
+    df = spark.createDataFrame([(0, "a b"), (1, "a b c d")], ["id", "text"])
+    rows = {
+        r["id"]: r["shs"]
+        for r in word_shingle_arrays(df, "id", "text", 3).collect()
+    }
+    assert rows[0] == []
+    assert rows[1] == ["a b c", "b c d"]
 
 
 @pytest.fixture(scope="module")
@@ -352,32 +358,6 @@ def test_quantized_ann_recall(spark, sf_oracle):
     assert len(e & a) >= 40  # >= 8/10 average over 5 queries
 
 
-def test_quantized_topk_two_stage(spark, sf_oracle):
-    from pyspark.sql import functions as F
-
-    from ffi_export_etl_spark.operators.similarity import quantized_topk
-
-    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, queries, "vec_id", "embedding", "query_id", 10)
-    quant = quantized_topk(
-        emb, queries, "vec_id", "embedding", "query_id", k=10, rescore_factor=4
-    )
-    e_rows = {(r["query_id"], r["nbr_id"]): r["cos"] for r in exact.collect()}
-    q_rows = {(r["query_id"], r["nbr_id"]): r["cos"] for r in quant.collect()}
-    # per-query result size is exactly k
-    assert len(q_rows) == 50
-    # int8 candidate ranking recovers >= 8/10 of true neighbors on average
-    common = e_rows.keys() & q_rows.keys()
-    assert len(common) >= 40
-    # exact re-scoring: every surviving neighbor's cosine is bit-identical
-    # to the brute-force score (quantization affects recall, not scores)
-    for key in common:
-        assert q_rows[key] == e_rows[key]
-
-
 def test_pack_sequences_known_answer_and_block_invariance(spark):
     from pyspark.sql import functions as F
 
@@ -460,36 +440,6 @@ def test_incremental_minhash_matches_full_recompute(spark, sf_oracle):
     involving_new = {p for p in full if p[0] % 5 == 0 or p[1] % 5 == 0}
     assert inc == involving_new
     assert inc  # the split corpus actually produces candidates
-
-
-def test_incremental_simhash_matches_full_recompute(spark, sf_oracle):
-    """The simhash clone of the minhash daily-increment shape: pairs from
-    new x stored + new x new store joins equal the full recompute
-    restricted to pairs involving a new id — and verification runs on
-    store columns alone (stored docs never re-fingerprinted)."""
-    from ffi_export_etl_spark.operators.simhash import (
-        incremental_simhash_pairs,
-        simhash_near_duplicates,
-        simhash_signature_store,
-    )
-
-    d = spark.read.parquet(f"{sf_oracle}/documents.parquet")
-    stored_docs = d.filter(F.col("doc_id") % 5 != 0)
-    new_docs = d.filter(F.col("doc_id") % 5 == 0)
-    stored = simhash_signature_store(stored_docs, "doc_id", "text")
-    newb = simhash_signature_store(new_docs, "doc_id", "text")
-
-    inc = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in incremental_simhash_pairs(newb, stored).collect()
-    }
-    full = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_duplicates(d, "doc_id", "text").collect()
-    }
-    involving_new = {p for p in full if p[0] % 5 == 0 or p[1] % 5 == 0}
-    assert inc == involving_new
-    assert inc  # the split corpus actually produces pairs
 
 
 def test_incremental_signlsh_matches_full_recompute(spark, sf_oracle):
@@ -647,12 +597,8 @@ def test_simhash_large_doc_no_ansi_overflow(spark):
 
 
 def test_lsh_banded_pairs_bucket_cap_and_config(spark, sf_oracle):
-    """The sign-LSH candidate generator must honor max_bucket_size, and
-    the corpus-sizing helper must widen planes/tables with N."""
-    from ffi_export_etl_spark.operators.similarity import (
-        lsh_banded_pairs,
-        scaled_lsh_config,
-    )
+    """The sign-LSH candidate generator must honor max_bucket_size."""
+    from ffi_export_etl_spark.operators.similarity import lsh_banded_pairs
 
     e = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
     uncapped = lsh_banded_pairs(e, 64, max_bucket_size=None).count()
@@ -662,12 +608,6 @@ def test_lsh_banded_pairs_bucket_cap_and_config(spark, sf_oracle):
     assert capped < uncapped
     # generous cap changes nothing
     assert lsh_banded_pairs(e, 64, max_bucket_size=10_000).count() == uncapped
-
-    # config helper: small corpora keep the base; 10^9 vectors get ~24
-    # planes and more tables to hold recall
-    assert scaled_lsh_config(640) == (4, 8)
-    tables, planes = scaled_lsh_config(1_000_000_000)
-    assert planes == 24 and tables > 4
 
 
 def test_sampling_null_keys_not_dropped(spark):
@@ -720,22 +660,13 @@ def test_strip_boilerplate_lines(spark):
         for r in strip_boilerplate_lines(docs, min_docs=10).collect()
     }
     assert full[1] == f"{header}\nunique one\n{footer}"
-    # both join strategies produce identical results
-    bcast = {
-        r["id"]: r["text"]
-        for r in strip_boilerplate_lines(
-            docs, min_docs=5, broadcast_boiler=True
-        ).collect()
-    }
-    assert bcast == out
 
 
 def test_strip_boilerplate_join_strategy_in_plan(spark):
     """The boilerplate set must NOT be force-broadcast by default: at
     100 TB it is tens of millions of lines. With auto-broadcast disabled
-    (simulating a huge measured set) the default plan must fall back to a
-    shuffle join, while broadcast_boiler=True pins the broadcast hint
-    regardless of the threshold."""
+    (simulating a huge measured set) the plan must fall back to a
+    shuffle join."""
     from ffi_export_etl_spark.operators.textproc import strip_boilerplate_lines
 
     docs = spark.createDataFrame(
@@ -752,16 +683,11 @@ def test_strip_boilerplate_join_strategy_in_plan(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         p_default = plan(strip_boilerplate_lines(docs, min_docs=5))
-        p_hinted = plan(
-            strip_boilerplate_lines(docs, min_docs=5, broadcast_boiler=True)
-        )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # default: no forced broadcast anywhere (AQE may still pick one at
-    # runtime from real stats — that is the point)
+    # no forced broadcast anywhere (AQE may still pick one at runtime
+    # from real stats — that is the point)
     assert "BroadcastHashJoin" not in p_default
-    # hinted: the anti-join broadcasts even with the threshold off
-    assert "BroadcastHashJoin" in p_hinted
 
 
 def test_repetition_scores(spark):
@@ -1060,13 +986,14 @@ def test_bm25_matches_pure_python_reference(spark):
 
 
 def test_bpe_train_matches_pure_python_reference(spark):
-    """Distributed train_bpe vs an independent dict-based BPE trainer
-    (count pairs over the word-count dict, greedy max with lexicographic
-    tiebreak): identical ordered merge lists."""
+    """Distributed train_bpe_full vs an independent dict-based BPE
+    trainer (count pairs over the word-count dict, greedy max with
+    lexicographic tiebreak): identical ordered merge lists, counts
+    included."""
     from collections import Counter
 
     from ffi_export_etl_spark.operators.bpe import (
-        train_bpe,
+        train_bpe_full,
         word_count_table,
     )
 
@@ -1080,7 +1007,7 @@ def test_bpe_train_matches_pure_python_reference(spark):
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
     wc = word_count_table(docs)
-    got = train_bpe(wc, num_merges=12)
+    got = train_bpe_full(wc, num_merges=12)
 
     # independent reference over the same word counts
     counts = Counter(w for t in texts for w in t.lower().split())
@@ -1097,7 +1024,7 @@ def test_bpe_train_matches_pure_python_reference(spark):
         if best[1] < 2:
             break
         a, b = best[0]
-        expect.append((a, b))
+        expect.append((a, b, best[1]))
         for w, syms in words.items():
             out, i = [], 0
             while i < len(syms):
@@ -1117,7 +1044,7 @@ def test_bpe_apply_roundtrip_and_rank_greedy_equivalence(spark):
     from ffi_export_etl_spark.operators.bpe import (
         apply_bpe,
         bpe_encode_word,
-        train_bpe,
+        train_bpe_full,
         word_count_table,
     )
 
@@ -1126,7 +1053,9 @@ def test_bpe_apply_roundtrip_and_rank_greedy_equivalence(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    merges = train_bpe(word_count_table(docs), num_merges=8)
+    merges = [
+        (a, b) for a, b, _ in train_bpe_full(word_count_table(docs), 8)
+    ]
     assert merges, "expected at least one merge on this corpus"
     ranks = {p: i for i, p in enumerate(merges)}
 
@@ -1143,7 +1072,7 @@ def test_bpe_apply_roundtrip_and_rank_greedy_equivalence(spark):
 def test_bpe_empty_and_degenerate_inputs(spark):
     from ffi_export_etl_spark.operators.bpe import (
         apply_bpe,
-        train_bpe,
+        train_bpe_full,
         word_count_table,
     )
 
@@ -1151,7 +1080,7 @@ def test_bpe_empty_and_degenerate_inputs(spark):
         [(0, "a b c"), (1, ""), (2, "x")], ["doc_id", "text"]
     )
     # no adjacent pairs anywhere -> no merges learned
-    assert train_bpe(word_count_table(docs), num_merges=5) == []
+    assert train_bpe_full(word_count_table(docs), num_merges=5) == []
     out = {r.doc_id: r for r in apply_bpe(docs, []).collect()}
     assert out[0].bpe_tokens == ["a", "b", "c"]
     assert out[1].bpe_tokens == [] and out[1].n_bpe == 0
@@ -1163,7 +1092,7 @@ def test_bpe_apply_matches_training_tokenization_on_unicode_ws(spark):
     sides (regression for a str.split() mismatch)."""
     from ffi_export_etl_spark.operators.bpe import (
         apply_bpe,
-        train_bpe,
+        train_bpe_full,
         word_count_table,
     )
 
@@ -1171,7 +1100,9 @@ def test_bpe_apply_matches_training_tokenization_on_unicode_ws(spark):
     docs = spark.createDataFrame([(0, text)], ["doc_id", "text"])
     wc = {r.word: r.n for r in word_count_table(docs).collect()}
     assert wc == {"aa\u00a0bb": 3, "cc": 2}  # NBSP is not a separator
-    merges = train_bpe(word_count_table(docs), num_merges=6)
+    merges = [
+        (a, b) for a, b, _ in train_bpe_full(word_count_table(docs), 6)
+    ]
     out = apply_bpe(docs, merges).first()
     # tokens reassemble to the SAME words training saw
     assert "".join(out.bpe_tokens) == text.replace(" ", "")
@@ -1233,90 +1164,6 @@ def test_bigram_lm_scoring_matches_pure_python(spark):
     assert got[0].avg_neg_logprob < got[1].avg_neg_logprob
     # single-word doc still defined (BOS bigram)
     assert got[2].n_bigrams == 1
-
-
-@pytest.mark.slow_tail  # r12 suite split
-def test_quality_model_separates_and_is_deterministic(spark):
-    """Model-based quality filtering (operators/quality_model.py):
-    trained on clean-vs-spam labels it separates a held-out pair, two
-    fits of the same data produce identical coefficients, and
-    filter_by_quality keeps exactly the high-probability side."""
-    from ffi_export_etl_spark.operators.quality_model import (
-        filter_by_quality,
-        score_quality,
-        train_quality_model,
-    )
-
-    clean = [
-        f"the quick brown fox number {i} jumps over a lazy dog and "
-        f"then it runs far away to the old barn in the field"
-        for i in range(12)
-    ]
-    spam = [
-        "buy now " * 14 + "!!!! $$$$ ####",
-        "aaaa bbbb " * 12,
-        "zzz " * 25,
-        "click here click here click here " * 5,
-    ] * 3
-    labeled = spark.createDataFrame(
-        [(i, t, 1) for i, t in enumerate(clean)]
-        + [(100 + i, t, 0) for i, t in enumerate(spam)],
-        ["doc_id", "text", "label"],
-    )
-    model = train_quality_model(labeled)
-    model2 = train_quality_model(labeled)
-    assert (
-        model.stages[-1].coefficients.toArray().tolist()
-        == model2.stages[-1].coefficients.toArray().tolist()
-    )
-
-    held = spark.createDataFrame(
-        [
-            (0, "a quick gray wolf number nine jumps over the small "
-                "fence and then it walks to the new barn by the road"),
-            (1, "order today order today order today " * 6),
-        ],
-        ["doc_id", "text"],
-    )
-    probs = {r.id: r.quality_prob for r in score_quality(held, model).collect()}
-    assert probs[0] > probs[1]
-    kept = filter_by_quality(held, model, min_prob=(probs[0] + probs[1]) / 2)
-    assert [r.doc_id for r in kept.collect()] == [0]
-
-
-def test_bpe_merge_artifact_roundtrip(spark, tmp_path):
-    """save_merges/load_merges: the JSON artifact round-trips and the
-    reloaded merges tokenize identically; a wrong file fails loudly."""
-    import json
-
-    import pytest as _pytest
-
-    from ffi_export_etl_spark.operators.bpe import (
-        apply_bpe,
-        load_merges,
-        save_merges,
-        train_bpe,
-        word_count_table,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "lower lowest lowly slower slowest " * 3) for i in range(4)],
-        "doc_id long, text string",
-    )
-    merges = train_bpe(word_count_table(docs), num_merges=8)
-    assert merges
-    p = str(tmp_path / "artifacts" / "merges.json")
-    save_merges(merges, p)
-    reloaded = load_merges(p)
-    assert reloaded == merges
-    a = {r["doc_id"]: r["bpe_tokens"] for r in apply_bpe(docs, merges).collect()}
-    b = {r["doc_id"]: r["bpe_tokens"] for r in apply_bpe(docs, reloaded).collect()}
-    assert a == b
-    bad = str(tmp_path / "bad.json")
-    with open(bad, "w") as f:
-        json.dump({"something": "else"}, f)
-    with _pytest.raises(ValueError, match="bpe-merges"):
-        load_merges(bad)
 
 
 def test_simhash_band_construction_scale_properties():
@@ -1413,36 +1260,6 @@ def test_simhash_bucket_cap_bounds_candidate_volume(spark):
     )
 
 
-def test_incremental_simhash_respects_combined_cap(spark):
-    """The increment's cap sees the COMBINED (stored + new) bucket
-    population: a hub split across store and batch is still dropped."""
-    from ffi_export_etl_spark.operators.minhash import DEFAULT_MAX_BUCKET
-    from ffi_export_etl_spark.operators.simhash import (
-        incremental_simhash_pairs,
-        simhash_signature_store,
-    )
-
-    n = DEFAULT_MAX_BUCKET + 20
-    docs = spark.createDataFrame(
-        [(i, "same exact boilerplate page body") for i in range(n)],
-        "doc_id: long, text: string",
-    )
-    stored = simhash_signature_store(
-        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text"
-    )
-    newb = simhash_signature_store(
-        docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text"
-    )
-    assert incremental_simhash_pairs(newb, stored).count() == 0
-    half = n // 2
-    assert (
-        incremental_simhash_pairs(
-            newb, stored, max_bucket_size=None
-        ).count()
-        == n * (n - 1) // 2 - half * (half - 1) // 2  # minus stored x stored
-    )
-
-
 def test_bpe_batched_equals_sequential_in_fewer_rounds(spark, sf_oracle):
     """The r7 batched merge selection is EXACTLY the sequential trainer
     — identical ordered merge list AND per-merge counts — while running
@@ -1469,56 +1286,15 @@ def test_bpe_batched_equals_sequential_in_fewer_rounds(spark, sf_oracle):
     )
 
 
-def test_bpe_approximate_batching_cuts_rounds_same_quality(
-    spark, sf_oracle
-):
-    """exact=False (classic skip-conflicts batching, the 50k-vocab
-    production mode): rounds drop by multiples, and although the merge
-    ORDER may diverge from sequential on tie-heavy corpora (documented
-    in _select_batch — this synthetic corpus is maximally tied), the
-    learned vocabulary compresses the corpus just as well."""
-    from ffi_export_etl_spark.operators.bpe import (
-        apply_bpe,
-        train_bpe_full,
-        word_count_table,
-    )
-
-    docs = spark.read.parquet(f"{sf_oracle}/documents.parquet").limit(200)
-    wc = word_count_table(docs).localCheckpoint()
-    seq_stats: dict = {}
-    seq = train_bpe_full(wc, 32, batch_candidates=1, _stats=seq_stats)
-    ap_stats: dict = {}
-    ap = train_bpe_full(
-        wc, 32, batch_candidates=256, exact=False, _stats=ap_stats
-    )
-    assert ap_stats["rounds"] * 3 <= seq_stats["rounds"], (
-        ap_stats, seq_stats,
-    )
-    assert len(ap) == len(seq)
-
-    def total_tokens(merges):
-        return (
-            apply_bpe(docs, [(a, b) for a, b, _ in merges])
-            .agg(F.sum("n_bpe"))
-            .collect()[0][0]
-        )
-
-    t_seq, t_ap = total_tokens(seq), total_tokens(ap)
-    # equivalent compression: within 2% of the sequential vocabulary
-    assert t_ap <= t_seq * 1.02, (t_ap, t_seq)
-
-
 @pytest.mark.slow_tail  # r12 suite split
 def test_bpe_exact_batching_grows_on_zipf_corpus(spark):
-    """Judge r7 item 6: the exact-mode batch-growth claim measured on a
-    REALISTIC corpus, not just the maximally-tied synthetic one where
-    it degenerates. Words drawn from an English-like letter frequency
-    with Zipf-distributed counts (well-separated head): exact batching
-    must stay BIT-IDENTICAL to the sequential trainer while cutting
-    rounds materially (measured 48 -> 28 here, ~1.7x; the tied
-    synthetic corpus only managed 90 -> 83), and approximate batching
-    cuts rounds by an order of magnitude (48 -> 4). Numbers in
-    PERFORMANCE.md r8."""
+    """Judge r7 item 6: the batch-growth claim measured on a REALISTIC
+    corpus, not just the maximally-tied synthetic one where it
+    degenerates. Words drawn from an English-like letter frequency with
+    Zipf-distributed counts (well-separated head): batching must stay
+    BIT-IDENTICAL to the sequential trainer while cutting rounds
+    materially (measured 48 -> 28 here, ~1.7x; the tied synthetic
+    corpus only managed 90 -> 83). Numbers in PERFORMANCE.md r8."""
     import numpy as np
 
     from ffi_export_etl_spark.operators.bpe import train_bpe_full
@@ -1549,21 +1325,12 @@ def test_bpe_exact_batching_grows_on_zipf_corpus(spark):
     ex = train_bpe_full(
         wc, 48, min_pair_count=2, batch_candidates=64, _stats=ex_stats
     )
-    ap_stats: dict = {}
-    ap = train_bpe_full(
-        wc, 48, min_pair_count=2, batch_candidates=256, exact=False,
-        _stats=ap_stats,
-    )
     assert ex == seq  # bit-identical: order, pairs, AND counts
     # real batch growth on a separated-head corpus (vs ~1.08x on the
     # tied synthetic corpus)
     assert ex_stats["rounds"] <= 0.7 * seq_stats["rounds"], (
         ex_stats, seq_stats,
     )
-    assert ap_stats["rounds"] * 6 <= seq_stats["rounds"], (
-        ap_stats, seq_stats,
-    )
-    assert len(ap) == len(seq)
 
 
 def test_bpe_select_batch_aliasing_stops_exact_mode():
@@ -1588,17 +1355,17 @@ def test_bpe_select_batch_aliasing_stops_exact_mode():
         return {"a": a, "b": b, "cnt": cnt}
 
     # 1. ADVICE's literal case: batch selects ('a','b'); later candidate
-    #    ('ab','d') contains the concat -> exact-mode conflict stop
+    #    ('ab','d') contains the concat -> conflict stop
     #    (merging (a,b) would INCREASE ('ab','d')'s count).
     cands = [row("a", "b", 100), row("ab", "d", 60), row("e", "f", 50)]
-    got = _select_batch(cands, 0, 10, 2, exact=True)
+    got = _select_batch(cands, 0, 10, 2)
     assert got == [("a", "b", 100)], got
 
     # 2. concat collision: ('a','bc') and ('ab','c') both produce token
     #    'abc' — double-creation would sum one pair's count across two
     #    merges, so the second must conflict-stop the batch.
     cands = [row("a", "bc", 100), row("ab", "c", 70), row("x", "y", 60)]
-    got = _select_batch(cands, 0, 10, 2, exact=True)
+    got = _select_batch(cands, 0, 10, 2)
     assert got == [("a", "bc", 100)], got
 
     # 3. vocab aliasing: the selected head's concat already exists as a
@@ -1606,24 +1373,18 @@ def test_bpe_select_batch_aliasing_stops_exact_mode():
     #    counts; the batch closes with the head as its final member
     #    (head-alone is the literal argmax, trivially exact).
     cands = [row("ab", "c", 100), row("x", "y", 90)]
-    got = _select_batch(cands, 0, 10, 2, exact=True, vocab={"abc"})
+    got = _select_batch(cands, 0, 10, 2, vocab={"abc"})
     assert got == [("ab", "c", 100)], got
     # same list without the vocab hit: both disjoint pairs selected
-    got = _select_batch(cands, 0, 10, 2, exact=True, vocab=set())
+    got = _select_batch(cands, 0, 10, 2, vocab=set())
     assert got == [("ab", "c", 100), ("x", "y", 90)], got
 
     # 4. mid-batch vocab aliasing: the aliasing pair is kept as the
     #    LAST member (its own count is invariant under the disjoint
     #    prefix; the inflation only affects post-batch rounds).
     cands = [row("x", "y", 100), row("ab", "c", 80), row("p", "q", 70)]
-    got = _select_batch(cands, 0, 10, 2, exact=True, vocab={"abc"})
+    got = _select_batch(cands, 0, 10, 2, vocab={"abc"})
     assert got == [("x", "y", 100), ("ab", "c", 80)], got
-
-    # 5. approximate mode SKIPS aliased candidates instead of stopping
-    #    (that skip is what keeps approx-mode recorded counts exact).
-    cands = [row("a", "b", 100), row("ab", "d", 60), row("x", "y", 50)]
-    got = _select_batch(cands, 0, 10, 2, exact=False)
-    assert got == [("a", "b", 100), ("x", "y", 50)], got
 
 
 def test_split_by_cluster_is_leakage_safe(spark, sf_oracle):
@@ -1746,47 +1507,6 @@ def test_stratified_take_prefilter_matches_plain_window(spark):
             ).collect()
         }
         assert forced == want, n
-
-
-def test_quality_scoring_survives_session_observations(spark):
-    """Regression (r10s2): once ANY DataFrame.observe runs in the
-    session — the CC convergence fingerprints ride checkpoints that way
-    — the session's lazy observationManager materializes, and an LR
-    model whose training summary still holds the SparkSession can no
-    longer serialize into score_quality's task closure
-    (NotSerializableException: ObservationManager; surfaced as an
-    order-dependent full-suite-only failure). train_quality_model now
-    strips the summary via ML persistence; this pins the interaction
-    explicitly rather than via file ordering."""
-    from ffi_export_etl_spark.operators.components import (
-        _checkpoint_with_checksum,
-    )
-    from ffi_export_etl_spark.operators.quality_model import (
-        score_quality,
-        train_quality_model,
-    )
-
-    # materialize the session's observationManager, as any CC/pagerank
-    # round in the same session would
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "u long, v long")
-    _ck, fp = _checkpoint_with_checksum(edges)
-    assert fp[0] == 2
-
-    labeled = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " * 3, 1)
-         for i in range(6)]
-        + [(100 + i, "buy now " * 20 + "!!!! $$$$", 0) for i in range(6)],
-        ["doc_id", "text", "label"],
-    )
-    model = train_quality_model(labeled)
-    assert not model.stages[-1].hasSummary  # the strip is the fix
-    held = spark.createDataFrame(
-        [(0, "a quick gray wolf walks to the old barn " * 3)],
-        ["doc_id", "text"],
-    )
-    probs = {r["id"]: r["quality_prob"] for r in
-             score_quality(held, model).collect()}  # must not raise
-    assert 0 in probs
 
 
 def test_jaccard_cache_shingles_equivalent(docs):

@@ -333,94 +333,22 @@ def test_rerank_improves_recall_and_matches_exact_restriction(spark, pq_fix):
         ], q
 
 
-def _np_rotate(vecs, R):
-    import numpy as np
-
-    return {i: np.asarray(R) @ v for i, v in vecs.items()}
-
-
-def test_fit_opq_matches_numpy_twin_and_reduces_error(spark, pq_fix):
-    """fit_opq (OPQ-NP): the distributed loop — plan-literal rotation,
-    grouped-Lloyd codebooks, Arrow-kernel Gram, driver SVD — replayed
-    end-to-end in numpy; the learned rotation is orthonormal and cuts
-    the training quantization error vs unrotated PQ."""
-    import numpy as np
-
-    from ffi_export_etl_spark.operators.pq import fit_opq
-
-    vecs, df, books, codes = pq_fix
-    OPQ_ITERS, PQ_ITERS = 2, ITERS
-
-    got_R, got_books = fit_opq(
-        df, DIM, m=M, k=K, opq_iters=OPQ_ITERS, pq_iters=PQ_ITERS
-    )
-    got_R = np.array(got_R)
-
-    # numpy replica of the exact same loop
-    R = np.eye(DIM)
-    for _ in range(OPQ_ITERS):
-        rot = _np_rotate(vecs, R)
-        cents = _np_train(rot)
-        npcodes = _np_encode(rot, cents)
-        d_sub = DIM // M
-        A = np.zeros((DIM, DIM))
-        for i, v in vecs.items():
-            xh = np.concatenate(
-                [cents[(s, npcodes[i][s])] for s in range(M)]
-            )
-            A += np.outer(v, xh)
-        u, _, vt = np.linalg.svd(A)
-        R = (u @ vt).T
-    assert got_R == pytest.approx(R, abs=1e-6)
-    # orthonormal: R R^T = I
-    assert got_R @ got_R.T == pytest.approx(np.eye(DIM), abs=1e-9)
-
-    # final codebooks match the twin's fit under the final rotation
-    rot = _np_rotate(vecs, R)
-    want_cents = _np_train(rot)
-    got_cents = {
-        (r["sub"], r["cell"]): r["centroid"] for r in got_books.collect()
-    }
-    assert set(got_cents) == set(want_cents)
-    for key, c in want_cents.items():
-        assert got_cents[key] == pytest.approx(list(c), abs=1e-5), key
-
-    # the rotation helps on clustered data: quantization error of the
-    # rotated fit <= the unrotated fit's (both measured in numpy)
-    def quant_err(data, cents, codes_):
-        return sum(
-            ((np.concatenate(
-                [cents[(s, codes_[i][s])] for s in range(M)]
-            ) - v) ** 2).sum()
-            for i, v in data.items()
-        )
-
-    base_cents = _np_train(vecs)
-    base_err = quant_err(vecs, base_cents, _np_encode(vecs, base_cents))
-    opq_err = quant_err(rot, want_cents, _np_encode(rot, want_cents))
-    assert opq_err <= base_err * 1.001, (opq_err, base_err)
-
-
 def test_opq_rotation_composes_with_encode_and_rerank(spark, pq_fix):
-    """The OPQ serving path end-to-end: rotate with the learned R
-    (reduce_embeddings plan-literal fold), encode against the rotated
-    codebooks, ADC + exact re-rank in the ROTATED space — rotation is
-    orthogonal so L2 ranks are preserved and rerank=corpus recovers the
-    exact neighbors of the original space."""
-    import numpy as np
-
-    from ffi_export_etl_spark.operators.pq import (
-        fit_opq,
-        pq_encode,
-        pq_topk_rerank,
-    )
+    """The OPQ serving path end-to-end: rotate with a fixed orthonormal
+    R (reduce_embeddings plan-literal fold), train and encode in the
+    rotated space, ADC + exact re-rank there — rotation is orthogonal
+    so L2 ranks are preserved and rerank=corpus recovers the exact
+    neighbors of the original space."""
+    from ffi_export_etl_spark.operators.pq import pq_topk_rerank
     from ffi_export_etl_spark.operators.reduce import reduce_embeddings
 
     vecs, df, _, _ = pq_fix
-    R, books = fit_opq(df, DIM, m=M, k=K, opq_iters=1, pq_iters=2)
+    Rm, _ = np.linalg.qr(np.random.RandomState(3).randn(DIM, DIM))
+    R = [[float(x) for x in row] for row in Rm]
     rotated = reduce_embeddings(
         df, "embedding", k=DIM, components=R, out_col="_rot"
     ).select("vec_id", F.col("_rot").alias("embedding"))
+    books = pq_train(rotated, DIM, m=M, k=K, iters=ITERS)
     codes = pq_encode(rotated, books, DIM, m=M)
     queries = rotated.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -477,111 +405,6 @@ def test_ivfpq_rerank_full_stack(spark, pq_fix):
         assert sorted(got[q]) == [
             (rk + 1, i) for rk, (_, i) in enumerate(want)
         ], q
-
-
-def _quant_err_and_recall(spark, df, books, queries_n=10, topk=5):
-    """Quantization error + ADC recall@topk for a (vec_id, embedding)
-    frame against trained codebooks, via the REAL operators (encode +
-    pq_topk); exact ranks from the collected vectors."""
-    d_sub = DIM // M
-    vecs = {
-        r["vec_id"]: np.array(r["embedding"], dtype=float)
-        for r in df.collect()
-    }
-    cents = {
-        (r["sub"], r["cell"]): np.array(r["centroid"], dtype=float)
-        for r in books.collect()
-    }
-    codes = pq_encode(df, books, DIM, m=M)
-    err = 0.0
-    for r in codes.collect():
-        xhat = np.concatenate(
-            [cents[(s, c)] for s, c in enumerate(r["codes"])]
-        )
-        err += float(((vecs[r["id"]] - xhat) ** 2).sum())
-    queries = df.filter(F.col("vec_id") < queries_n).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = {}
-    for r in pq_topk(
-        codes, books, queries, k=topk, dim=DIM, m=M
-    ).collect():
-        got.setdefault(r["query_id"], set()).add(r["nbr_id"])
-    hits = tot = 0
-    for q in range(queries_n):
-        ex = sorted(
-            (float(((vecs[i] - vecs[q]) ** 2).sum()), i)
-            for i in vecs
-            if i != q
-        )[:topk]
-        hits += len(got[q] & {i for _, i in ex})
-        tot += topk
-    return err, hits / tot
-
-
-@pytest.mark.slow_tail  # r12 suite split
-def test_opq_beats_pq_on_anisotropic_corpus(spark):
-    """OPQ's WIN case, pinned (judge r7 item 4): on a deliberately
-    anisotropic corpus — isotropic base vectors stretched by a fixed
-    skewed diagonal then mixed across the subspace boundaries by a
-    fixed rotation, applied IN-PLAN via the reduce_embeddings literal
-    fold — the learned OPQ-NP rotation must beat plain PQ on BOTH
-    quantization error and ADC recall. On the isotropic base the same
-    pipeline must show near-parity (the documented no-gain case), so a
-    shape-preserving regression in the rotate/SVD path that helped
-    nothing (or 'helped' isotropic data) trips one of the two pins.
-    Measured (this fixture, opq_iters=4): error ratio ~0.33 aniso /
-    ~0.9 iso; recall ~0.5 -> ~0.7 aniso."""
-    from ffi_export_etl_spark.operators.pq import fit_opq
-    from ffi_export_etl_spark.operators.reduce import reduce_embeddings
-
-    rng = np.random.RandomState(11)
-    n = 240
-    base = np.round(rng.randn(n, DIM), 4)
-    stretch = np.diag([6.0, 5.0, 4.0, 3.0, 0.5, 0.4, 0.3, 0.2])
-    mix, _ = np.linalg.qr(np.random.RandomState(3).randn(DIM, DIM))
-    T = [[float(x) for x in row] for row in (mix @ stretch)]
-
-    base_df = spark.createDataFrame(
-        [(i, [float(x) for x in base[i]]) for i in range(n)],
-        "vec_id: long, embedding: array<double>",
-    ).localCheckpoint(eager=True)
-
-    def run_pair(df, opq_iters=4):
-        books_pq = pq_train(df, DIM, m=M, k=K, iters=ITERS)
-        pq_err, pq_rec = _quant_err_and_recall(spark, df, books_pq)
-        R, books_opq = fit_opq(
-            df, DIM, m=M, k=K, opq_iters=opq_iters, pq_iters=ITERS
-        )
-        rot = reduce_embeddings(
-            df, "embedding", k=DIM, components=R, out_col="_rot"
-        ).select(
-            "vec_id", F.col("_rot").alias("embedding")
-        ).localCheckpoint(eager=True)
-        # rotation is orthogonal: rotated-space error and exact ranks
-        # are directly comparable with the unrotated run's
-        opq_err, opq_rec = _quant_err_and_recall(spark, rot, books_opq)
-        return pq_err, pq_rec, opq_err, opq_rec
-
-    # the anisotropy applied in-plan (plan-literal matrix fold)
-    aniso_df = reduce_embeddings(
-        base_df, "embedding", k=DIM, components=T, out_col="_a"
-    ).select(
-        "vec_id", F.col("_a").alias("embedding")
-    ).localCheckpoint(eager=True)
-
-    a_pq_err, a_pq_rec, a_opq_err, a_opq_rec = run_pair(aniso_df)
-    assert a_opq_err <= 0.6 * a_pq_err, (a_opq_err, a_pq_err)
-    assert a_opq_rec >= a_pq_rec + 0.05, (a_opq_rec, a_pq_rec)
-
-    i_pq_err, i_pq_rec, i_opq_err, i_opq_rec = run_pair(base_df)
-    # near-parity on the no-gain case: no dramatic improvement (the
-    # aniso gain must come from the geometry, not an artifact) and no
-    # regression beyond Lloyd-seeding noise
-    assert 0.7 * i_pq_err <= i_opq_err <= 1.15 * i_pq_err, (
-        i_opq_err, i_pq_err,
-    )
-    assert abs(i_opq_rec - i_pq_rec) <= 0.15, (i_opq_rec, i_pq_rec)
 
 
 def test_opq_arm_gather_rotation_equals_reduce_embeddings_fold(spark):

@@ -14,7 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from ffi_export_etl_spark.operators.shingles import word_shingles
+from ffi_export_etl_spark.operators.shingles import word_shingle_arrays
 from tests.test_reference_parity_funcs import py_parse_list_val
 
 # r12 suite split: end-to-end/property sweep module — runs with SPARK_GRAFT_SLOW_TESTS=1
@@ -39,13 +39,12 @@ def py_shingles(text: str, n: int = 3) -> list[str]:
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.lists(TOKEN, min_size=1, max_size=40))
 def test_word_shingles_property(spark, texts):
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [
-        r[0]
-        for r in df.select(word_shingles(F.col("text"), 3).alias("s")).collect()
-    ]
-    want = [py_shingles(t) for t in texts]
-    assert [sorted(g) for g in got] == [sorted(w) for w in want]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    got = {
+        r["id"]: sorted(r["shs"])
+        for r in word_shingle_arrays(df, "id", "text", 3).collect()
+    }
+    assert got == {i: sorted(py_shingles(t)) for i, t in enumerate(texts)}
 
 
 @settings(max_examples=5, deadline=None,
@@ -369,34 +368,6 @@ def test_epoch_upsample_property(spark, rows, ea):
         else:
             n = 1
         assert sorted(got.get(i, [])) == list(range(n)), (i, src, ea)
-
-
-@settings(max_examples=20, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    weights=st.lists(st.integers(1, 10_000), min_size=1, max_size=60),
-    world=st.integers(1, 12),
-)
-def test_plan_shard_assignment_invariants(spark, weights, world):
-    """plan_shard_assignment properties under arbitrary shard weights:
-    (1) disjoint cover of every shard; (2) greedy-on-lightest spread
-    bound — max rank load - min rank load <= max single weight, an
-    invariant of placing each item on the currently-lightest rank in
-    ANY order (inductive: spread starts 0 and placing w on the min
-    keeps every load within max-weight of it); (3) determinism."""
-    from ffi_export_etl_spark.sinks.shards import plan_shard_assignment
-
-    manifest = spark.createDataFrame(
-        [(f"f{i:04d}.parquet", w) for i, w in enumerate(weights)],
-        "file string, n_rows long",
-    )
-    plan = plan_shard_assignment(manifest, world)
-    files = [f for fs in plan.values() for f in fs]
-    assert len(files) == len(weights) == len(set(files))
-    wmap = {f"f{i:04d}.parquet": w for i, w in enumerate(weights)}
-    loads = [sum(wmap[f] for f in plan[r]) for r in range(world)]
-    assert max(loads) - min(loads) <= max(weights), (loads, weights)
-    assert plan_shard_assignment(manifest, world) == plan
 
 
 @settings(max_examples=5, deadline=None,

@@ -5,12 +5,10 @@ shingle_mode="char")."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ffi_export_etl_spark.operators.scripts import (
     dominant_script,
     needs_char_shingles,
-    script_counts,
 )
 from ffi_export_etl_spark.operators.shingles import (
     build_shingles,
@@ -44,15 +42,6 @@ def test_dominant_script_labels(spark):
     }
     for i, _, want in SAMPLES:
         assert got[i] == want, (i, got[i], want)
-
-
-def test_script_counts_mixed_text(spark):
-    df = spark.createDataFrame(
-        [("hello мир 你好",)], "text: string"
-    )
-    m = df.select(script_counts("text").alias("m")).first()["m"]
-    assert m["latin"] == 5 and m["cyrillic"] == 3 and m["han"] == 2
-    assert m["thai"] == 0
 
 
 def test_needs_char_shingles_routing(spark):

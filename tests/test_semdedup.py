@@ -1,5 +1,5 @@
 """SemDeDup composition (operators/semdedup.py): cluster-local cosine
-dedup — pair gen confined to k-means cells, min-id keeper per component."""
+dedup — pair gen confined to k-means cells."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from ffi_export_etl_spark.operators.semdedup import (
-    semantic_dedup,
-    semdedup_pairs,
-)
+from ffi_export_etl_spark.operators.semdedup import semdedup_pairs
 from ffi_export_etl_spark.operators.similarity import cosine_pairs
 
 DIM = 4
@@ -37,18 +34,19 @@ def _corpus(spark):
 
 
 def test_semantic_dedup_planted_groups(spark):
+    """k=4 cells: every pair inside a planted group is found and
+    nothing else — the singletons pair with no one."""
     vecs = _corpus(spark)
-    out = semantic_dedup(vecs, DIM, k=4, threshold=0.999).collect()
-    by_id = {r["vec_id"]: r for r in out}
-    assert len(by_id) == 11
-    for g in (0, 1, 2):
-        ids = [g * 10 + j for j in range(3)]
-        clusters = {by_id[i]["cluster_id"] for i in ids}
-        assert clusters == {g * 10}, (g, clusters)
-        keepers = [i for i in ids if by_id[i]["is_keeper"]]
-        assert keepers == [g * 10]
-    for s in (90, 91):
-        assert by_id[s]["cluster_id"] == s and by_id[s]["is_keeper"]
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in semdedup_pairs(vecs, DIM, k=4, threshold=0.999).collect()
+    }
+    assert got == {
+        (g * 10 + a, g * 10 + b)
+        for g in (0, 1, 2)
+        for a in range(3)
+        for b in range(a + 1, 3)
+    }
 
 
 def test_k1_equals_exact_all_pairs(spark):
@@ -74,12 +72,11 @@ def test_identical_vectors_share_a_cell(spark):
     vecs = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
     cells = semdedup_pairs(vecs, 5, k=3, threshold=1.0).collect()
     pair_ids = {(r["id_a"], r["id_b"]) for r in cells}
-    out = semantic_dedup(vecs, 5, k=3, threshold=1.0)
-    # identical vectors can never split across cells, so each of the 5
-    # directions (8 exact copies each) collapses to exactly one keeper
-    kept = sorted(r["vec_id"] for r in out.filter("is_keeper").collect())
-    assert kept == [0, 1, 2, 3, 4]
-    assert len(pair_ids) >= 5
+    # identical vectors can never split across cells, so every pair of
+    # the 8 exact copies of each of the 5 directions is found
+    assert pair_ids == {
+        (a, b) for a in range(40) for b in range(a + 1, 40) if a % 5 == b % 5
+    }
 
 
 def test_cell_cap_skips_degenerate_cells(spark):

@@ -368,59 +368,6 @@ def test_shard_curriculum_order(spark, tmp_path):
     assert seen == sorted(seen)  # global nondecreasing curriculum
 
 
-def test_plan_shard_assignment_balanced_and_deterministic(spark, tmp_path):
-    """plan_shard_assignment (r8): disjoint covering assignment, LPT
-    balance within one max-shard weight, deterministic across calls,
-    empty ranks beyond the shard count, weight_col override."""
-    import pytest as _pytest
-
-    from ffi_export_etl_spark.sinks.shards import (
-        plan_shard_assignment,
-        write_training_shards,
-    )
-
-    df = spark.range(300).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 3).alias("x")
-    )
-    out = str(tmp_path / "plan_shards")
-    manifest = write_training_shards(
-        df, out, "doc_id", rows_per_shard=40, num_partitions=4
-    )
-    n_files = manifest.count()
-    assert n_files >= 6
-
-    plan = plan_shard_assignment(manifest, 3)
-    # disjoint cover
-    all_files = [f for fs in plan.values() for f in fs]
-    assert len(all_files) == n_files == len(set(all_files))
-    assert set(all_files) == {r["file"] for r in manifest.collect()}
-    # balance: max rank load - min rank load <= max single shard weight
-    weights = {r["file"]: r["n_rows"] for r in manifest.collect()}
-    loads = [sum(weights[f] for f in plan[r]) for r in range(3)]
-    assert max(loads) - min(loads) <= max(weights.values()), (
-        loads, weights,
-    )
-    # deterministic
-    assert plan_shard_assignment(manifest, 3) == plan
-    # ranks beyond the shard count get empty lists
-    wide = plan_shard_assignment(manifest, n_files + 5)
-    assert sum(1 for fs in wide.values() if not fs) == 5
-    assert all(len(fs) <= 1 for fs in wide.values())
-    # weight_col override consumes any manifest numeric column
-    plan_w = plan_shard_assignment(manifest, 3, weight_col="n_rows")
-    assert plan_w == plan
-    with _pytest.raises(ValueError):
-        plan_shard_assignment(manifest, 0)
-    # NULL weights refuse with guidance instead of crashing or silently
-    # piling unknown-size shards on one rank (review r8)
-    withnull = manifest.withColumn(
-        "file_bytes",
-        F.when(F.col("n_rows") >= 30, None).otherwise(F.col("n_rows")),
-    )
-    with _pytest.raises(ValueError, match="file_bytes"):
-        plan_shard_assignment(withnull, 3, weight_col="file_bytes")
-
-
 def test_write_training_shards_jsonl_format(spark, tmp_path):
     """data_format='jsonl' (+gzip): the layout most LLM training loaders
     stream — same deterministic stream order and manifest contract, the

@@ -100,30 +100,6 @@ def test_dup_dense_single_doc_bounded(spark):
     assert row["n_dup_windows"] == (500 * L - L + 1) - L
 
 
-def test_cache_windows_handle_released(spark):
-    """cache_windows=True attaches the persisted window frame to the
-    result; release_span_caches drops it (no stranded cached plans in a
-    long-lived session)."""
-    from ffi_export_etl_spark.operators.spandedup import (
-        release_span_caches,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, _words("a", 12)), (2, _words("a", 12))],
-        "doc_id long, text string",
-    )
-    out = remove_duplicate_spans(docs, span_tokens=L, cache_windows=True)
-    handles = out._span_persisted
-    assert len(handles) == 1
-    out.collect()
-    assert handles[0].storageLevel.useMemory
-    release_span_caches(out)
-    assert not handles[0].storageLevel.useMemory
-    # and the uncached path attaches no handles
-    plain = remove_duplicate_spans(docs, span_tokens=L)
-    assert plain._span_persisted == []
-
-
 def test_span_dedup_matches_oracle_on_corpus(spark, sf_small):
     """Full-value parity with the DuckDB twin on the real documents
     table at the registered span width (20 tokens)."""

@@ -86,29 +86,13 @@ def _warehouse_files(spark):
     }
 
 
-def _simhash_store(spark, tmp_path):
-    """A simhash store (fingerprint carried next to the (band, val) join
-    key) with two committed batch dirs."""
-    from ffi_export_etl_spark.operators.simhash import simhash_signature_store
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i} a b c d e") for i in range(10)],
-        "doc_id: long, text: string",
-    )
-    root = str(tmp_path / "simhash_store")
-    sigs = simhash_signature_store(docs, "doc_id", "text")
-    sigs.write.parquet(os.path.join(root, "batch_id=0"))
-    sigs.limit(1).write.parquet(os.path.join(root, "batch_id=1"))
-    return root
-
-
 def test_fold_preserves_store_content_and_continues(spark, tmp_path):
     """Fold the stores after session 1; the reader view is unchanged,
     nothing touches the catalog or the session warehouse, and a
     continue-mode session 2 (lost checkpoint) dedups against the folded
     corpus exactly as it did against the plain dirs."""
     roots = _session1(spark, tmp_path, "f1")
-    stores = [roots["exact"], roots["mh"], _simhash_store(spark, tmp_path)]
+    stores = [roots["exact"], roots["mh"]]
     before = {
         root: _rows(spark.read.parquet(root).drop("batch_id"))
         for root in stores

@@ -41,32 +41,6 @@ def test_signature_store_disk_roundtrip_incremental(spark, sf_small, tmp_path):
     assert from_disk  # the split corpus actually produces candidates
 
 
-def test_simhash_store_disk_roundtrip_incremental(spark, sf_small, tmp_path):
-    """simhash signature store written as parquet, read back,
-    incremental pairs against the ON-DISK store == in-memory."""
-    from ffi_export_etl_spark.operators.simhash import (
-        incremental_simhash_pairs,
-        simhash_signature_store,
-    )
-
-    d = spark.read.parquet(f"{sf_small}/documents.parquet")
-    stored_docs = d.filter(F.col("doc_id") % 5 != 0)
-    new_docs = d.filter(F.col("doc_id") % 5 == 0)
-    stored = simhash_signature_store(stored_docs, "doc_id", "text")
-    newb = simhash_signature_store(new_docs, "doc_id", "text")
-    in_memory = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in incremental_simhash_pairs(newb, stored).collect()
-    }
-    from_disk = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in incremental_simhash_pairs(
-            newb, _on_disk(spark, stored, tmp_path, "simhash_store")
-        ).collect()
-    }
-    assert from_disk == in_memory
-
-
 def test_signlsh_store_disk_roundtrip_incremental(spark, sf_small, tmp_path):
     """sign-LSH signature store written as parquet, read back,
     incremental candidates against the ON-DISK store == in-memory

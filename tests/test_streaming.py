@@ -304,301 +304,6 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     assert spark.read.parquet(target).count() == 140
 
 
-def _dedup_corpus(spark):
-    """30 docs in 3 arrival waves with planted near-dups WITHIN and
-    ACROSS waves (doc i and i+100 share 9 of 10 tokens)."""
-    rows = []
-    for i in range(15):
-        base = " ".join(f"w{i}_{j}" for j in range(10))
-        rows.append((i, base))
-        rows.append((i + 100, base.rsplit(" ", 1)[0] + " tail"))
-    return spark.createDataFrame(rows, "doc_id: long, text: string")
-
-
-@pytest.mark.slow_tail  # r12 suite split
-def test_streaming_incremental_dedup_equals_one_shot(spark, tmp_path):
-    """streaming/dedup.py: draining the corpus file-by-file through the
-    foreachBatch signature store must land EXACTLY the one-shot LSH
-    candidate set — every pair is emitted by whichever micro-batch sees
-    the later doc (the earlier is stored by then, or same-batch), and
-    stored x stored is never re-paired."""
-    from ffi_export_etl_spark.operators.minhash import (
-        lsh_candidate_pairs,
-        minhash_signature_store,
-        signatures_from_shingles,
-    )
-    from ffi_export_etl_spark.operators.shingles import shingle_table
-    from ffi_export_etl_spark.streaming.dedup import streaming_incremental_dedup
-
-    docs = _dedup_corpus(spark)
-    src = str(tmp_path / "src")
-    # 3 files -> 3 micro-batches (maxFilesPerTrigger=1); each wave is
-    # written separately so every file is non-empty
-    import os
-
-    os.makedirs(src)
-    for w in range(3):
-        wave = docs.filter(F.col("doc_id") % 3 == w).coalesce(1)
-        wdir = str(tmp_path / f"wave{w}")
-        wave.write.parquet(wdir)
-        part = next(
-            e for e in os.listdir(wdir) if e.endswith(".parquet")
-        )
-        os.rename(os.path.join(wdir, part), os.path.join(src, f"w{w}.parquet"))
-
-    streaming_incremental_dedup(
-        spark,
-        src,
-        store_path=str(tmp_path / "store"),
-        pairs_path=str(tmp_path / "pairs"),
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    sigs = signatures_from_shingles(shingle_table(docs, "doc_id", "text"))
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(sigs, max_bucket_size=None).collect()
-    }
-    assert got == want and len(want) >= 15
-
-    # the store holds every doc's banded signatures exactly once, and
-    # three batch partitions exist (serial micro-batches)
-    store = spark.read.parquet(str(tmp_path / "store"))
-    assert store.select("batch_id").distinct().count() == 3
-    full = minhash_signature_store(docs, "doc_id", "text")
-    assert store.count() == full.count()
-    assert store.select("id").distinct().count() == 30
-
-    # exactly-once: a fresh-checkpoint replay overwrites each batch_id
-    # partition instead of appending — pair set and store are unchanged
-    streaming_incremental_dedup(
-        spark,
-        src,
-        store_path=str(tmp_path / "store"),
-        pairs_path=str(tmp_path / "pairs"),
-        checkpoint=str(tmp_path / "ckpt2"),
-    )
-    again = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    assert again == want
-    assert spark.read.parquet(str(tmp_path / "store")).count() == full.count()
-
-
-def test_streaming_exact_ingest_dedup(spark, tmp_path):
-    """The pluggable store family: exact content-hash streaming dedup —
-    wave 2 repeats two of wave 1's texts and adds one in-batch dup; the
-    emitted pairs identify every repeat, and the store's never-seen keys
-    reconstruct the dedup decision."""
-    import os
-
-    from ffi_export_etl_spark.operators.exactdedup import (
-        exact_pairs_from_stores,
-        exact_signature_store,
-    )
-    from ffi_export_etl_spark.streaming.dedup import streaming_incremental_dedup
-
-    w1 = [(1, "alpha"), (2, "beta"), (3, "gamma")]
-    w2 = [(10, "alpha"), (11, "beta"), (12, "delta"), (13, "delta")]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for name, rows in (("w1", w1), ("w2", w2)):
-        d = str(tmp_path / name)
-        spark.createDataFrame(rows, "doc_id: long, text: string").coalesce(
-            1
-        ).write.parquet(d)
-        part = next(e for e in os.listdir(d) if e.endswith(".parquet"))
-        os.rename(os.path.join(d, part), os.path.join(src, f"{name}.parquet"))
-
-    streaming_incremental_dedup(
-        spark,
-        src,
-        store_path=str(tmp_path / "store"),
-        pairs_path=str(tmp_path / "pairs"),
-        checkpoint=str(tmp_path / "ckpt"),
-        sketch=lambda b: exact_signature_store(b, "doc_id", "text"),
-        pair_fn=exact_pairs_from_stores,
-    )
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    assert pairs == {(1, 10), (2, 11), (12, 13)}
-    store = spark.read.parquet(str(tmp_path / "store"))
-    assert store.count() == 7 and store.select("key").distinct().count() == 4
-
-
-@pytest.mark.slow_tail  # r12 suite split
-def test_streaming_simhash_family(spark, tmp_path):
-    """The simhash store satisfies the pluggable streaming contract too:
-    draining the 3-wave corpus emits the same verified pair set as the
-    one-shot batch path."""
-    import os
-
-    from ffi_export_etl_spark.operators.simhash import (
-        incremental_simhash_pairs,
-        simhash_near_duplicates,
-        simhash_signature_store,
-    )
-    from ffi_export_etl_spark.streaming.dedup import streaming_incremental_dedup
-
-    # longer docs than the minhash corpus: a 1-token change in a
-    # 50-token doc keeps most fingerprint-bit margins wide, so the pair
-    # survives the hamming<=3 gate (10-token docs flip too many bits)
-    rows = []
-    for i in range(15):
-        toks = [f"w{i}_{j}" for j in range(50)]
-        rows.append((i, " ".join(toks)))
-        rows.append((i + 100, " ".join(toks[:-1] + ["tail"])))
-    docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for w in range(3):
-        wave = docs.filter(F.col("doc_id") % 3 == w).coalesce(1)
-        wdir = str(tmp_path / f"wave{w}")
-        wave.write.parquet(wdir)
-        part = next(e for e in os.listdir(wdir) if e.endswith(".parquet"))
-        os.rename(os.path.join(wdir, part), os.path.join(src, f"w{w}.parquet"))
-
-    streaming_incremental_dedup(
-        spark,
-        src,
-        store_path=str(tmp_path / "store"),
-        pairs_path=str(tmp_path / "pairs"),
-        checkpoint=str(tmp_path / "ckpt"),
-        sketch=lambda b: simhash_signature_store(b, "doc_id", "text"),
-        pair_fn=incremental_simhash_pairs,
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_duplicates(docs, "doc_id", "text").collect()
-    }
-    assert got == want and len(want) >= 5
-
-
-def test_streaming_signlsh_family(spark, tmp_path):
-    """The fourth store family: sign-LSH over streaming embedding waves.
-    The union of per-batch candidate pairs equals the one-shot bucket
-    collision set (same contract as minhash — the store schema is
-    deliberately identical, so incremental_candidate_pairs is shared)."""
-    import os
-
-    from ffi_export_etl_spark.operators.minhash import (
-        incremental_candidate_pairs,
-    )
-    from ffi_export_etl_spark.operators.similarity import (
-        signlsh_signature_store,
-    )
-    from ffi_export_etl_spark.streaming.dedup import streaming_incremental_dedup
-
-    DIM = 8
-    rows = []
-    for i in range(12):
-        base = [1.0 if j == i % 4 else 0.05 * j for j in range(DIM)]
-        rows.append((i, base))
-        rows.append((i + 100, [x * 1.001 for x in base]))  # near-dup
-    vecs = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for w in range(2):
-        wave = vecs.filter(F.col("vec_id") % 2 == w).coalesce(1)
-        wdir = str(tmp_path / f"wave{w}")
-        wave.write.parquet(wdir)
-        part = next(e for e in os.listdir(wdir) if e.endswith(".parquet"))
-        os.rename(os.path.join(wdir, part), os.path.join(src, f"w{w}.parquet"))
-
-    streaming_incremental_dedup(
-        spark,
-        src,
-        store_path=str(tmp_path / "store"),
-        pairs_path=str(tmp_path / "pairs"),
-        checkpoint=str(tmp_path / "ckpt"),
-        sketch=lambda b: signlsh_signature_store(b, DIM, "vec_id", "embedding"),
-        pair_fn=lambda nw, st: incremental_candidate_pairs(
-            nw, st, max_bucket_size=None
-        ),
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    # one-shot: all pairs sharing any (band, bucket)
-    store = signlsh_signature_store(vecs, DIM, "vec_id", "embedding")
-    a, b = store.alias("a"), store.alias("b")
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-        .collect()
-    }
-    assert got == want and len(want) >= 12
-
-
-def test_streaming_verified_minhash_family(spark, tmp_path):
-    """The sig-carrying store + verified pair join also compose through
-    the streaming hooks: drained pairs equal the batch path's VERIFIED
-    near-dup set (estimated-Jaccard gate), not just bucket candidates."""
-    import os
-
-    from ffi_export_etl_spark.operators.minhash import (
-        incremental_verified_pairs,
-        minhash_near_duplicates,
-        minhash_signature_store_with_sigs,
-    )
-    from ffi_export_etl_spark.streaming.dedup import streaming_incremental_dedup
-
-    docs = _dedup_corpus(spark)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for w in range(2):
-        wave = docs.filter(F.col("doc_id") % 2 == w).coalesce(1)
-        wdir = str(tmp_path / f"wave{w}")
-        wave.write.parquet(wdir)
-        part = next(e for e in os.listdir(wdir) if e.endswith(".parquet"))
-        os.rename(os.path.join(wdir, part), os.path.join(src, f"w{w}.parquet"))
-
-    streaming_incremental_dedup(
-        spark,
-        src,
-        store_path=str(tmp_path / "store"),
-        pairs_path=str(tmp_path / "pairs"),
-        checkpoint=str(tmp_path / "ckpt"),
-        sketch=lambda b: minhash_signature_store_with_sigs(b, "doc_id", "text"),
-        pair_fn=lambda nw, st: incremental_verified_pairs(
-            nw, st, threshold_pct=20, max_bucket_size=None
-        ),
-    )
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    # batch truth: exact-Jaccard-verified pairs at the same threshold.
-    # estimated (signature) Jaccard agrees with exact on this corpus:
-    # planted near-dups sit far above 20%, non-pairs at ~0.
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_near_duplicates(
-            docs, "doc_id", "text", threshold_pct=20, max_bucket_size=None
-        ).select("id_a", "id_b").collect()
-    }
-    assert got == want and len(want) >= 15
-
-
 @pytest.mark.slow_tail  # r12 suite split
 def test_compacting_window_sink_bounds_file_count(spark, tmp_path):
     """r5 judge item 8: the windowed file sink's small-file growth is

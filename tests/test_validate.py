@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ffi_export_etl_spark.operators.validate import CheckSuite, assert_suite
+from ffi_export_etl_spark.operators.validate import CheckSuite, format_failures
 
 
 def _report(df, suite):
@@ -38,7 +38,7 @@ def test_row_checks_count_violations(spark):
     assert all(r["n_rows"] == 4 for r in rep.values())
 
 
-def test_unique_exact_and_approx_and_min_rows(spark):
+def test_unique_and_min_rows(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b"), (4, None)], "id bigint, k string"
     )
@@ -55,14 +55,6 @@ def test_unique_exact_and_approx_and_min_rows(spark):
     assert rep["min_rows:4"]["passed"]
     assert rep["min_rows:10"]["n_violations"] == 6
     assert not rep["min_rows:10"]["passed"]
-
-    # approx form agrees with exact on small cardinalities
-    rep2 = _report(df, CheckSuite().unique("k", approx=True, max_violations=0))
-    assert rep2["unique:k"]["n_violations"] == 1
-    # and can never report negative violations when HLL overestimates
-    wide = spark.range(0, 2000).selectExpr("cast(id as string) AS u")
-    rep3 = _report(wide, CheckSuite().unique("u", approx=True))
-    assert rep3["unique:u"]["n_violations"] >= 0
 
 
 def test_null_fraction_micro_math(spark):
@@ -129,12 +121,14 @@ def test_single_scan_plan(spark):
     assert plan.count("Range") == 1
 
 
-def test_assert_suite_raises_with_detail(spark):
+def test_format_failures_names_failed_checks(spark):
     df = spark.createDataFrame([(1,), (1,)], "id bigint")
-    with pytest.raises(ValueError, match="unique:id"):
-        assert_suite(df, CheckSuite().unique("id"))
-    # passing suite is silent
-    assert_suite(df, CheckSuite().not_null("id"))
+    msg = format_failures(CheckSuite().unique("id").run(df).collect())
+    assert msg == (
+        "data-quality checks failed: unique:id (1 violations of 2 rows)"
+    )
+    # a passing suite has no message
+    assert format_failures(CheckSuite().not_null("id").run(df).collect()) is None
 
 
 def test_documents_suite(spark, sf_oracle):
