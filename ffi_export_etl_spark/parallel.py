@@ -37,7 +37,7 @@ def run_parallel(
     ``max_workers`` unset one thread runs per task (the gate packs
     submit 2-5 multi-second Spark builds); bounded, the task list is
     sliced round-robin across ``max_workers`` threads (the batch
-    driver's ~17 upserts on 8 threads).
+    driver's ~17 upserts on 16 threads).
 
     ``collect_errors=False`` (default) re-raises the first failure
     after all threads join — every task still runs to completion or

@@ -121,8 +121,10 @@ def _prepare_file(
     ``persists`` (even on failure, so the caller can release them)."""
     tables = read_ffi_export(spark, path, persists=persists)
     pipe = FFIPipeline(spark, tables)
-    pipe.run()
-    persists.extend(pipe.persists)
+    try:
+        pipe.run()
+    finally:
+        persists.extend(pipe.persists)
     work: list[tuple[str, object, tuple[str, ...]]] = []
     for name in list(pipe.tables):
         if name in EXCLUDED_TABLES:
@@ -327,8 +329,10 @@ def process_exports_batched(
             else:
                 continue  # failed the pre-scan: stays pending
             pipe = FFIPipeline(spark, tables)
-            pipe.run()
-            persists.extend(pipe.persists)
+            try:
+                pipe.run()
+            finally:
+                persists.extend(pipe.persists)
             to_stage = [
                 name for name in list(pipe.tables)
                 if name not in EXCLUDED_TABLES

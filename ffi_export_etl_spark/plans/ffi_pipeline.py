@@ -128,10 +128,13 @@ class FFIPipeline:
         self.tables = TableRegistry(spark, tables)
         self.admin_unit: str | None = None
         self.version: str | None = None
-        # frames this pipeline persisted (the two discovery caches) —
-        # the overlapped per-file driver releases them per FILE instead
-        # of clearCache()-ing the whole session (r11)
+        # frames this pipeline persisted (the deduplicated MacroPlot and
+        # SampleEvent, and the two EAV long frames discovery collects
+        # over) — the loaders release them per FILE instead of
+        # clearCache()-ing the whole session (r11)
         self.persists: list[DataFrame] = []
+        # SampleEvent joined to MacroPlot, before the team columns
+        self._events: DataFrame | None = None
 
     # ------------------------------------------------------------------
     # extract
@@ -149,7 +152,10 @@ class FFIPipeline:
         """PlotID / EventID synthesis (xml.py:126-195).
 
         The reference probes lookup tables row-by-row inside .apply; here
-        each probe family is ONE broadcast left join."""
+        each probe family is ONE broadcast left join. The deduplicated
+        MacroPlot and SampleEvent are cached: MacroPlot, SampleEvent,
+        ProjectVisit and the EAV chains all read them, and uncached each
+        reader would run the keep-first windows again."""
         reg = self.tables["RegistrationUnit"].select(
             "RegistrationUnit_GUID", "RegistrationUnit_Name"
         )
@@ -171,7 +177,9 @@ class FFIPipeline:
             mp.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
+            .persist()
         )
+        self.persists.append(mp)
         self.tables["MacroPlot"] = mp
 
         plots = mp.select(
@@ -193,7 +201,9 @@ class FFIPipeline:
             se.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
+            .persist()
         )
+        self.persists.append(se)
         self.tables["SampleEvent"] = se
 
     # ------------------------------------------------------------------
@@ -289,9 +299,12 @@ class FFIPipeline:
 
         Round 1 is ONE collect — attr_long's methods+units — that fully
         materializes the shared XML parse cache and the attr_long
-        persist. A ``.first()`` warmer is NOT enough: limit pushdown
-        computes a single cache partition, and every later concurrent
-        job would re-parse the rest — the r8 double-parse negative
+        persist, and with them the MacroPlot and SampleEvent caches
+        (attr_long joins SampleEvent, which broadcasts MacroPlot), so
+        no round-2 job fills a cache a sibling is reading. A
+        ``.first()`` warmer is NOT enough: limit pushdown computes a
+        single cache partition, and every later concurrent job would
+        re-parse the rest — the r8 double-parse negative
         (PERFORMANCE.md) in concurrent form. Round 2 runs the four
         remaining independent discovery actions concurrently on
         InheritableThread workers, each riding the warm parse cache;
@@ -543,6 +556,7 @@ class FFIPipeline:
         joined = se.join(
             mp, F.col("SampleEvent_Plot_GUID") == F.col("MacroPlot_GUID"), "left"
         )
+        self._events = joined
         team_cols: dict[str, tuple[str, str]] = {}
         for table, prefix in _SAMPLE_TABLES_FOR_EVENTS.items():
             fcol, ecol = f"{prefix}FieldTeam", f"{prefix}EntryTeam"
@@ -608,7 +622,11 @@ class FFIPipeline:
                 "left",
             )
             .join(
-                t["SampleEvent"].select(
+                # the events before their team joins: each team frame
+                # keeps one row per event, so those left joins change
+                # neither the rows nor GUID/Date, and this branch skips
+                # their pivots and windows
+                self._events.select(
                     F.col("SampleEvent_GUID").alias("_se_guid"),
                     F.col("SampleEvent_Date").alias("_se_date"),
                 ),
@@ -653,7 +671,11 @@ class FFIPipeline:
         self.tables["SampleEvent"] = (
             t["SampleEvent"]
             .join(
-                visit,
+                # one narrow row per event, like the plots lookup. As a
+                # shuffle join AQE makes it a broadcast at run time only
+                # when the visit side finishes before the event side's
+                # exchange starts, so the plan would depend on timing
+                F.broadcast(visit),
                 F.col("SampleEvent_GUID") == F.col("_mm_guid"),
                 "left",
             )

@@ -23,6 +23,11 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce the shuffles inside cached plans too. Off (the
+    # default), every persisted frame keeps spark.sql.shuffle.partitions
+    # partitions: each read of it runs that many tasks, and a table
+    # written straight from one lands as several part files.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # AQE coalesces batch shuffles from stats, but STREAMING stateful ops
     # pin state to exactly spark.sql.shuffle.partitions tasks and AQE
     # does not apply — 200 (the default) is wrong on local[32] and on a
@@ -90,7 +95,6 @@ def find_jdbc_jar() -> str | None:
 def get_spark(
     app_name: str = "ffi-export-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
@@ -101,12 +105,9 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -45,13 +45,23 @@ def parquet_upsert(
     concurrent upserts to one target need a table format with a commit
     protocol (Delta/Iceberg) — single-writer here, like the reference's
     one-process loader.
+
+    The stored keys are read in one pass with the key columns' schema
+    taken from ``df``: no schema-inference job, and a part file that
+    lacks a key column reads it as NULL, which matches nothing (as with
+    MERGE). There is no ``distinct`` on the stored keys: a left_anti
+    join gives the same rows whether or not its right side repeats a
+    key, and Catalyst does not drop the extra shuffle by itself.
     """
     from pyspark.sql import Observation
+    from pyspark.sql.types import StructType
 
     if os.path.isdir(target_dir) and any(
         f.endswith(".parquet") for f in os.listdir(target_dir)
     ):
-        existing = spark.read.parquet(target_dir).select(*key_cols).distinct()
+        existing = spark.read.schema(
+            StructType([df.schema[k] for k in key_cols])
+        ).parquet(target_dir)
         new_rows = df.join(existing, list(key_cols), "left_anti")
     else:
         new_rows = df
@@ -93,19 +103,37 @@ class ProcessedLedger:
         self.path = path
 
     def processed(self) -> set[str]:
+        """Files with a complete record. A record torn by a crash inside
+        ``mark`` — the last line without its newline, or that fragment
+        once a later ``mark`` has closed its line — is skipped, so its
+        file stays pending and reloads idempotently (insert-if-absent)
+        instead of blocking every later run."""
         if not os.path.exists(self.path):
             return set()
+        done: set[str] = set()
         with open(self.path) as f:
-            return {json.loads(line)["file"] for line in f if line.strip()}
+            for line in f:
+                if line.endswith("\n"):
+                    try:
+                        done.add(json.loads(line)["file"])
+                    except ValueError:  # a torn record, or a blank line
+                        pass
+        return done
 
     def mark(self, file: str, *, failed_tables: Sequence[str] = ()) -> bool:
         """Record ``file`` as processed iff no tables failed (the
         reference's gate); returns True when recorded."""
         if failed_tables:
             return False
-        rec = {"file": file, "ts": int(time.time())}
-        with open(self.path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        rec = json.dumps({"file": file, "ts": int(time.time())}) + "\n"
+        with open(self.path, "a+b") as f:
+            # start a fresh line after a torn record, so this one is
+            # not glued onto it
+            if f.tell() > 0:
+                f.seek(-1, os.SEEK_END)
+                if f.read(1) != b"\n":
+                    rec = "\n" + rec
+            f.write(rec.encode())
         return True
 
     def pending(self, files: Sequence[str]) -> list[str]:

@@ -16,7 +16,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     # Modest local parallelism: test correctness, not throughput.
-    s = get_spark(app_name="ffi-etl-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark(app_name="ffi-etl-tests", master="local[4]")
     yield s
     s.stop()
 

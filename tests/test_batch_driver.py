@@ -133,6 +133,34 @@ def test_loader_releases_only_its_own_caches(spark, tmp_path, loader):
         host.unpersist()
 
 
+@pytest.mark.parametrize(
+    "loader",
+    ["process_exports", "process_exports_batched", "process_exports_glob"],
+)
+def test_loader_releases_caches_of_a_failed_pipeline(
+    spark, tmp_path, monkeypatch, loader
+):
+    """A pipeline that fails after discovery has filled its caches:
+    the loader still releases every one of them."""
+    from ffi_export_etl_spark.plans import batch_driver
+
+    def fail(self):
+        raise RuntimeError("transform failed")
+
+    monkeypatch.setattr(batch_driver.FFIPipeline, "_attr_to_many", fail)
+    exports = tmp_path / "exports"
+    exports.mkdir()
+    write_export_xml(str(exports / "export1.xml"))
+    before = _persisted_noncheckpoint_ids(spark)
+    try:
+        getattr(batch_driver, loader)(
+            spark, str(exports / "*.xml"), str(tmp_path / "wh")
+        )
+    except RuntimeError:
+        pass  # glob mode isolates per batch: the failure propagates
+    assert _persisted_noncheckpoint_ids(spark) - before == set()
+
+
 def test_batched_mode_with_fieldmaps(spark, tmp_path):
     """Batched mode applies FieldMap projection BEFORE key derivation,
     exactly like the sequential loop (keys resolve against renamed

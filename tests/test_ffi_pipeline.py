@@ -157,6 +157,35 @@ def test_visit_id(pipeline):
     assert visits["NORTHPLOT120240601"] is None
 
 
+def test_project_visit_skips_the_team_joins(pipeline):
+    """ProjectVisit reads the events before their team joins: each team
+    frame keeps one row per event, so its plan needs none of them."""
+    pv = pipeline.tables["ProjectVisit"]
+    plan = pv._jdf.queryExecution().analyzed().toString()
+    assert "SampleEvent_GUID" in plan
+    assert "FieldTeam" not in plan
+
+
+def test_single_file_load_writes_one_part_file_per_table(spark, tmp_path):
+    """The cached per-file frames are coalesced like any other plan, so
+    a small export lands one part file per warehouse table."""
+    import glob
+    import os
+
+    from ffi_export_etl_spark.plans.batch_driver import process_exports
+
+    exports = tmp_path / "exports"
+    exports.mkdir()
+    write_export_xml(str(exports / "export1.xml"))
+    wh = str(tmp_path / "wh")
+    loaded = process_exports(spark, str(exports / "*.xml"), wh)
+    tables = loaded[str(exports / "export1.xml")]
+    assert {"MacroPlot", "SampleEvent", "ProjectVisit"} <= set(tables)
+    for table in tables:
+        parts = glob.glob(os.path.join(wh, table, "*.parquet"))
+        assert len(parts) == 1, (table, len(parts))
+
+
 def test_sample_guid_generated(pipeline):
     s = pipeline.tables["Trees_Individuals_Sample"].collect()
     assert len(s) == 1

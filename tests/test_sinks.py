@@ -112,12 +112,78 @@ def test_parquet_upsert_insert_if_absent(spark, tmp_path):
     assert vals["P2"] == "b"  # WHEN NOT MATCHED: existing row untouched
 
 
+def test_parquet_upsert_duplicate_stored_keys(spark, tmp_path):
+    """The stored keys are read without ``distinct``: a key repeated
+    across part files still blocks its replay, and counts once."""
+    target = str(tmp_path / "warehouse" / "plot")
+    stored = spark.createDataFrame([("P1", "a"), ("P2", "b")], ["PlotID", "attr"])
+    stored.write.parquet(target)
+    stored.write.mode("append").parquet(target)
+    replay = spark.createDataFrame(
+        [("P1", "x"), ("P2", "y"), ("P3", "z")], ["PlotID", "attr"]
+    )
+    assert parquet_upsert(spark, replay, target, ["PlotID"]) == 1
+    assert parquet_upsert(spark, replay, target, ["PlotID"]) == 0
+    final = spark.read.parquet(target)
+    assert sorted(r["PlotID"] for r in final.collect()) == [
+        "P1", "P1", "P2", "P2", "P3",
+    ]
+
+
+def test_parquet_upsert_part_files_missing_a_key_column(spark, tmp_path):
+    """Part files may carry different column subsets. A stored file that
+    lacks a key column reads it as NULL, which matches nothing (as with
+    MERGE), instead of failing the read."""
+    import glob
+    import shutil
+
+    target = tmp_path / "warehouse" / "transect"
+    target.mkdir(parents=True)
+    parts = [
+        spark.createDataFrame([("E1", "a")], ["EventID", "attr"]),
+        spark.createDataFrame(
+            [("E2", "T2", "b")], ["EventID", "Transect", "attr"]
+        ),
+    ]
+    # name the file without the key first: a schema inferred from one
+    # file takes the first in path order
+    for i, part in enumerate(parts):
+        staged = str(tmp_path / f"staged{i}")
+        part.coalesce(1).write.parquet(staged)
+        (src,) = glob.glob(os.path.join(staged, "*.parquet"))
+        shutil.move(src, str(target / f"part-{i}.parquet"))
+    target = str(target)
+    batch = spark.createDataFrame(
+        [("E1", "T1", "c"), ("E2", "T2", "d")], ["EventID", "Transect", "attr"]
+    )
+    assert parquet_upsert(spark, batch, target, ["EventID", "Transect"]) == 1
+    final = spark.read.option("mergeSchema", "true").parquet(target)
+    rows = {(r["EventID"], r["Transect"], r["attr"]) for r in final.collect()}
+    assert rows == {("E1", None, "a"), ("E1", "T1", "c"), ("E2", "T2", "b")}
+
+
 def test_processed_ledger(tmp_path):
     ledger = ProcessedLedger(str(tmp_path / "ledger.jsonl"))
     assert ledger.pending(["f1.xml", "f2.xml"]) == ["f1.xml", "f2.xml"]
     assert ledger.mark("f1.xml") is True
     assert ledger.mark("f2.xml", failed_tables=["Plot"]) is False
     assert ledger.pending(["f1.xml", "f2.xml"]) == ["f2.xml"]
+
+
+def test_processed_ledger_survives_a_torn_record(tmp_path):
+    """A crash inside ``mark`` can leave the last record half-written:
+    that file stays pending instead of every later run failing, and the
+    next ``mark`` starts its own line."""
+    path = tmp_path / "ledger.jsonl"
+    ledger = ProcessedLedger(str(path))
+    assert ledger.mark("f1.xml") is True
+    with open(path, "a") as f:
+        f.write('{"file": "f2.xml", "ts')
+    files = ["f1.xml", "f2.xml", "f3.xml"]
+    assert ledger.pending(files) == ["f2.xml", "f3.xml"]
+    assert ledger.mark("f3.xml") is True
+    assert ledger.processed() == {"f1.xml", "f3.xml"}
+    assert ledger.pending(files) == ["f2.xml"]
 
 
 def test_csv_dump_debug_sink(spark, tmp_path):
