@@ -9,10 +9,10 @@ an implicit key-uniqueness assertion.
 Spark-first re-expression: ``groupBy(index).pivot(field, values).agg(first)``.
 
 Scale design:
-- pass ``field_names`` whenever the pivot domain is known (here it always
-  is: the field dictionary tables MethodAttribute/SampleAttribute carry it)
-  — that skips Spark's distinct-collect pre-job and keeps the schema stable
-  across batches, which matters far more at 100 TB than locally;
+- ``field_names`` is the known pivot domain (the field dictionary tables
+  MethodAttribute/SampleAttribute carry it) — that skips Spark's
+  distinct-collect pre-job and keeps the schema stable across batches,
+  which matters far more at 100 TB than locally;
 - ``strict=True`` reproduces the pandas uniqueness assertion as an explicit
   distributed check (one aggregation, fails fast with offending keys);
 - the pivot itself is a single shuffle on the index columns with map-side
@@ -53,32 +53,25 @@ def eav_pivot(
     index_cols: Sequence[str],
     field_col: str,
     value_col: str,
-    field_names: Sequence[str] | None = None,
+    field_names: Sequence[str],
     strict: bool = False,
 ) -> DataFrame:
     """Pivot an EAV long table wide: one row per distinct index tuple, one
-    column per field name, cell = first observed value.
-
-    ``field_names=None`` falls back to Spark's distinct-value collection
-    (data-dependent schema, exactly the reference's behavior of deriving
-    columns from the data, parser/xml.py:255-258); passing the list is the
-    scale path.
-    """
+    column per name in ``field_names``, cell = first observed value."""
     if strict:
         assert_unique_pivot_keys(df, index_cols, field_col)
-    grouped = df.groupBy(*[F.col(c) for c in index_cols])
-    if field_names is not None:
-        pivoted = grouped.pivot(field_col, list(field_names))
-    else:
-        pivoted = grouped.pivot(field_col)
-    return pivoted.agg(F.first(F.col(value_col), ignorenulls=True))
+    return (
+        df.groupBy(*[F.col(c) for c in index_cols])
+        .pivot(field_col, list(field_names))
+        .agg(F.first(F.col(value_col), ignorenulls=True))
+    )
 
 
 def split_by_column_values(
-    df: DataFrame, col: str, values: Sequence[str] | None = None
+    df: DataFrame, col: str, values: Sequence[str]
 ) -> dict[str, DataFrame]:
-    """Partition a table into one DataFrame per distinct value of ``col``,
-    dropping the column — the reference's per-unit-system table fan-out
+    """Partition a table into one DataFrame per value in ``values``,
+    dropping ``col`` — the reference's per-unit-system table fan-out
     (parser/xml.py:290-302, 355-367).
 
     The per-value loop is driver-side because each value names an output
@@ -86,10 +79,4 @@ def split_by_column_values(
     equality filter over the SAME parent plan, so with the parent cached
     this is value-count scans of cached data, not of source files.
     """
-    if values is None:
-        values = [
-            r[0]
-            for r in df.select(col).distinct().collect()
-            if r[0] is not None
-        ]
     return {v: df.filter(F.col(col) == v).drop(col) for v in values}

@@ -22,7 +22,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.ffi_pipeline import EXCLUDED_TABLES, FFIPipeline
@@ -53,36 +53,92 @@ def _keys_for(table: str, columns: list[str]) -> tuple[str, ...] | None:
     return tuple(keys) or None
 
 
+def _pending(
+    export_glob: str, warehouse_dir: str
+) -> tuple[ProcessedLedger, list[str]]:
+    """The warehouse's processed-file ledger and the glob's files it has
+    not recorded yet, in path order."""
+    os.makedirs(warehouse_dir, exist_ok=True)
+    ledger = ProcessedLedger(os.path.join(warehouse_dir, "_processed.jsonl"))
+    return ledger, ledger.pending(sorted(globmod.glob(export_glob)))
+
+
+def _run_pipeline(
+    spark: SparkSession, tables: dict[str, DataFrame], persists: list
+) -> dict[str, DataFrame]:
+    """Extract + transform one export's tables; appends every frame the
+    pipeline persisted to ``persists`` (even on failure, so the caller
+    can release them)."""
+    pipe = FFIPipeline(spark, tables)
+    try:
+        pipe.run()
+    finally:
+        persists.extend(pipe.persists)
+    return pipe.tables
+
+
+def _work_list(
+    tables: dict[str, DataFrame],
+    maps: LoadMaps | None,
+    order_col: str | None = None,
+) -> list[tuple[str, DataFrame, tuple[str, ...]]]:
+    """(target_name, df, key_cols) per warehouse table: excluded source
+    tables are skipped, the LoadMaps projection runs BEFORE the keys are
+    resolved (so they resolve against renamed columns), and a table
+    with no stable key is not a warehouse table. ``order_col`` (batched
+    mode's staged file sequence) threads through the projection and
+    keeps the earliest row per key — identical to sequential per-file
+    loads, where a later file's duplicate keys anti-join away."""
+    keep = (order_col,) if order_col else ()
+    work = []
+    for name, df in tables.items():
+        if name in EXCLUDED_TABLES:
+            continue
+        target_name = (maps.target_for(name) if maps else None) or name
+        if maps:
+            df = maps.project(df, target_name, keep_cols=keep)
+        keys = _keys_for(name, [c for c in df.columns if c not in keep])
+        if keys is None:
+            continue
+        if order_col:
+            w = Window.partitionBy(*keys).orderBy(order_col)
+            df = (
+                df.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn", order_col)
+            )
+        work.append((target_name, df, keys))
+    return work
+
+
 def _upsert_concurrently(
     spark: SparkSession,
-    work: list[tuple[str, object, tuple[str, ...]]],
+    work: list[tuple[str, DataFrame, tuple[str, ...]]],
     warehouse_dir: str,
 ) -> tuple[dict[str, int], list[str]]:
-    """Run ``work`` — (target_name, df, key_cols) triples — as CONCURRENT
-    per-table upserts; returns ({target: rows_inserted}, [failed targets]).
+    """The load step of every mode: run ``work`` — (target_name, df,
+    key_cols) triples — as CONCURRENT per-table upserts, then append
+    one UpdateLog record per target that inserted rows; returns
+    ({target: rows_inserted}, [failed targets]).
 
     The ~17 table loads are independent jobs over disjoint target dirs,
     each small enough that the scheduler never saturates — run serially
-    they WERE the batch floor (each pays its own job-submission + plan
+    they were the batch floor (each pays its own job-submission + plan
     execution latency while the cluster idles). One bounded
-    InheritableThread worker per TARGET (NOT a ThreadPoolExecutor: under
-    PYSPARK_PIN_THREAD — the default since 3.2 — every plain Python
+    InheritableThread worker per TARGET (``parallel.run_parallel``, NOT a
+    ThreadPoolExecutor: under PYSPARK_PIN_THREAD every plain Python
     thread that touches py4j pins a JVM thread that is only released
-    when InheritableThread's cleanup runs, so a daemon calling this per
-    arriving batch would otherwise leak threads per batch; review r8,
-    shared helper r10: parallel.run_parallel). A single wave beats two
-    8-wide waves (alternating A/B at x16: median upsert phase ~5.0s ->
-    ~4.6s). Items that share a target name (a fieldmap can alias two
-    source tables to one target) CHAIN inside that target's worker —
-    parquet_upsert is single-writer per target dir — and their counts
-    sum. collect_errors keeps per-table failure isolation, exactly as
-    in the serial loop; a worker that died before reaching its target
-    leaves it absent from the result map, which counts as failed so the
-    ledger records it for the next batch retry.
+    when InheritableThread's cleanup runs). Items that share a target
+    name (a fieldmap can alias two source tables to one target) CHAIN
+    inside that target's worker — parquet_upsert is single-writer per
+    target dir — and their counts sum. collect_errors keeps per-table
+    failure isolation (parser/xml.py:699-707); a worker that died
+    before reaching its target leaves it absent from the result map,
+    which counts as failed so the ledger records it for a retry.
     """
     from ..parallel import run_parallel
 
-    by_target: dict[str, list[tuple[object, tuple[str, ...]]]] = {}
+    by_target: dict[str, list[tuple[DataFrame, tuple[str, ...]]]] = {}
     for target_name, df, keys in work:
         by_target.setdefault(target_name, []).append((df, keys))
 
@@ -105,39 +161,36 @@ def _upsert_concurrently(
     )
     loaded = {t: counts[t] for t in by_target if t in counts}
     failed = [t for t in by_target if t not in counts]
+    audit_log_append(
+        spark,
+        [
+            {
+                "User": os.environ.get("USER", "spark"),
+                "Time": str(int(time.time())),
+                "Table": t,
+                "ChangeType": "INSERT",
+                "Changes": n,
+            }
+            for t, n in loaded.items()
+            if n
+        ],
+        os.path.join(warehouse_dir, "UpdateLog"),
+    )
     return loaded, failed
 
 
-def _prepare_file(
+def _prepare(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     maps: LoadMaps | None,
     persists: list,
-) -> list[tuple[str, object, tuple[str, ...]]]:
-    """per-file mode's transform phase: parse + pipeline + build the
-    upsert work list. Driver-paced (discovery collects, Catalyst
-    analysis) — exactly the half that overlaps with the PREVIOUS file's
-    upsert jobs in process_exports. Appends every frame it persisted to
-    ``persists`` (even on failure, so the caller can release them)."""
+) -> list[tuple[str, DataFrame, tuple[str, ...]]]:
+    """Parse + pipeline + the upsert work list for one export (or, in
+    glob mode, a list of exports read as one). Appends every frame it
+    persisted to ``persists`` (even on failure, so the caller can
+    release them)."""
     tables = read_ffi_export(spark, path, persists=persists)
-    pipe = FFIPipeline(spark, tables)
-    try:
-        pipe.run()
-    finally:
-        persists.extend(pipe.persists)
-    work: list[tuple[str, object, tuple[str, ...]]] = []
-    for name in list(pipe.tables):
-        if name in EXCLUDED_TABLES:
-            continue
-        df = pipe.tables[name]
-        target_name = (maps.target_for(name) if maps else None) or name
-        if maps:
-            df = maps.project(df, target_name)
-        keys = _keys_for(name, df.columns)
-        if keys is None:
-            continue  # no stable key -> not a warehouse table
-        work.append((target_name, df, keys))
-    return work
+    return _work_list(_run_pipeline(spark, tables, persists), maps)
 
 
 def process_exports(
@@ -148,66 +201,31 @@ def process_exports(
 ) -> dict[str, dict[str, int]]:
     """Process every pending export file; returns {file: {table: rows}}.
 
-    r11 (judge item 4 — the per-file tail): overlapping file i+1's
-    prepare (parse + discovery + plan building) with file i's upsert
-    wave on an InheritableThread was A/B'd and REJECTED — see
-    PERFORMANCE.md "Round 11: per_file prepare/upsert overlap
-    (NEGATIVE)". The loop stays sequential; what this round kept is the
-    ``_prepare_file`` split and the TARGETED per-file cache release
-    (the persisted handles ride back through ``persists``), replacing
-    the end-of-file ``clearCache()`` that also clobbered every other
-    cache in the session — a loader embedded in a long-lived session no
-    longer evicts its host's unrelated cached frames.
+    Files run one after another; each file's tables load concurrently.
+    A file that fails to parse or transform records ``{}`` and stays
+    pending (the reference's loop would crash here, xml_to_rdb.py:39-49),
+    so it is retried on the next run once fixed; a failed table load
+    blocks the file's ledger mark. The frames a file cached are released
+    once it is loaded (nothing from a finished file is read again), and
+    only those: a loader embedded in a long-lived session keeps its
+    host's caches.
     """
-    os.makedirs(warehouse_dir, exist_ok=True)
-    ledger = ProcessedLedger(os.path.join(warehouse_dir, "_processed.jsonl"))
+    ledger, pending = _pending(export_glob, warehouse_dir)
     results: dict[str, dict[str, int]] = {}
-    files = sorted(globmod.glob(export_glob))
-    pending = ledger.pending(files)
     for path in pending:
         persists: list = []
         try:
-            work = _prepare_file(spark, path, maps, persists)
+            work = _prepare(spark, path, maps, persists)
         except Exception:
-            # file-level isolation: a malformed export must not abort
-            # the batch (the reference's loop would crash here,
-            # xml_to_rdb.py:39-49). Not marked in the ledger -> retried
-            # on the next run once fixed.
             results[path] = {}
+        else:
+            results[path], failed = _upsert_concurrently(
+                spark, work, warehouse_dir
+            )
+            ledger.mark(path, failed_tables=failed)
+        finally:
             for df in persists:
                 df.unpersist()
-            continue
-        # CONCURRENT per-table upserts (r10), same helper as the glob
-        # mode: the loads read this file's warm shared persists, and
-        # run serially they were the per-file floor (~14 tables x the
-        # job-submission + plan latency each). Per-table failure
-        # isolation (xml.py:699-707) is preserved bitwise: a failed
-        # table lands in `failed` and blocks the ledger mark, exactly
-        # as the serial loop did.
-        loaded, failed = _upsert_concurrently(spark, work, warehouse_dir)
-        audit_log_append(
-            spark,
-            [
-                {
-                    "User": os.environ.get("USER", "spark"),
-                    "Time": str(int(time.time())),
-                    "Table": t,
-                    "ChangeType": "INSERT",
-                    "Changes": n,
-                }
-                for t, n in loaded.items()
-                if n
-            ],
-            os.path.join(warehouse_dir, "UpdateLog"),
-        )
-        ledger.mark(path, failed_tables=failed)
-        results[path] = loaded
-        # release this file's cached frames (rootdf + the EAV longs are
-        # persisted for intra-file reuse; across thousands of files the
-        # cache would otherwise churn executor memory for no benefit —
-        # nothing from a finished file is ever read again)
-        for df in persists:
-            df.unpersist()
     return results
 
 
@@ -218,56 +236,33 @@ def process_exports_batched(
     maps: LoadMaps | None = None,
 ) -> dict[str, int]:
     """Batch-mode loading: transform every pending file into a parquet
-    STAGING area (append per table), then upsert ONCE per table from the
-    staged scans.
+    STAGING area, then upsert ONCE per table from the staged scans.
+    Returns {table: rows_inserted}.
 
     The per-file mode above issues files x tables upserts (each upsert =
     read existing + anti-join + append); with thousands of small exports
     that write amplification dominates. Batch mode collapses it to one
-    upsert per TABLE — the scale shape. Staging through parquet (rather
-    than unioning N live pipeline plans) keeps the final upsert plans
-    flat: a lazy union of N per-file pipelines makes Catalyst analysis
-    super-linear in N (measured: 16 files took LONGER than the
-    sequential loop before staging; see PERFORMANCE.md). Failure
-    isolation: a file whose transform/staging write fails stays pending
-    and is retried next run; a failed table load fails the batch's
-    ledger mark for that table's files. Returns {table: rows_inserted}.
+    upsert per TABLE. Staging through parquet (rather than unioning N
+    live pipeline plans) keeps the final upsert plans flat: a lazy union
+    of N per-file pipelines makes Catalyst analysis super-linear in N.
 
-    Dedup note: cross-file duplicate keys resolve keep-first in file
-    order (the staged ``_file_seq`` partition), matching the replay
-    semantics of sequential per-file loads.
+    - **Extract:** every file that passes the driver-side pre-scan
+      (``discover_columns``, also the per-file validity gate) joins one
+      shared ``read_ffi_export_sliced`` parse when the wave is sliceable;
+      each file's pipeline runs over its own slice, with the same tags,
+      columns and rows as a single-file read.
+    - **Stage:** a file's table writes run concurrently, each into its
+      own ``<table>/_file_seq=<seq>`` partition (seq = the file's index
+      in the pending list). A file whose pipeline or staging fails stays
+      pending; its partial dirs carry a seq the final scan prunes away.
+    - **Load:** the staged scans go through the same work list and
+      concurrent upserts as the other modes; cross-file duplicate keys
+      resolve keep-first in file order, matching sequential per-file
+      loads. A failed table load fails the ledger mark of every file.
 
-    r11 (judge item 3 — the staging floor): a file's ~17 table writes
-    are INDEPENDENT jobs over disjoint dirs reading the file's warm
-    persists, so they run concurrently (the _upsert_concurrently
-    pattern; serial they were 0.25s x 17 x files of pure
-    job-round/committer latency — the measured bound of the whole
-    mode). Each file stages into its OWN partition dir
-    (``<table>/_file_seq=<seq>``, seq = the file's index in the
-    PENDING list): the seq survives as a partition column exactly like
-    the old literal column, and a file that failed HALFWAY through its
-    staging writes leaves only dirs the final scan PRUNES AWAY (the
-    pre-r11 append layout let a failed file's partial rows load with a
-    seq that collided with the next file's — both fixed by making the
-    layout carry the isolation).
-
-    r12 (judge item 3 — the pipeline-run floor): the wave shares ONE
-    distributed XML parse. The per-file ``read_ffi_export`` paid a
-    reader ``load()`` (schema inference over the file), a distributed
-    parse-cache fill and the Catalyst analysis of a fresh lineage PER
-    FILE — the measured bound once staging went concurrent (~29s of
-    the 37s x8 wall). Now every file that passes the driver-side
-    iterparse pre-scan (``discover_columns`` — the same O(file)
-    stream the reader always ran, one level deeper) joins a single
-    ``read_ffi_export_sliced`` parse, and each file's pipeline runs
-    over ITS OWN slice: same tags, same columns, same rows as a
-    single-file read (probed table-by-table), with the per-file
-    pipelines' discovery collects riding the one warm shared cache.
-    Per-file failure isolation is UNCHANGED: a malformed file fails
-    the pre-scan and stays pending; a file whose pipeline or staging
-    fails still isolates into ``continue``; cache release is now
-    TARGETED per file (the r11 per_file-mode hygiene — clearCache
-    would evict the sibling slices' shared parse).
+    Caches are released per file (and the shared parse after the wave),
+    never with ``clearCache()``: that would evict the sibling slices and
+    the host session's own caches.
     """
     from ..parallel import run_parallel
     from ..sources.xml import (
@@ -276,10 +271,7 @@ def process_exports_batched(
         sliceable_paths,
     )
 
-    os.makedirs(warehouse_dir, exist_ok=True)
-    ledger = ProcessedLedger(os.path.join(warehouse_dir, "_processed.jsonl"))
-    files = sorted(globmod.glob(export_glob))
-    pending = ledger.pending(files)
+    ledger, pending = _pending(export_glob, warehouse_dir)
     staging_root = os.path.join(
         warehouse_dir, f"_staging_batch_{int(time.time() * 1000)}"
     )
@@ -293,9 +285,9 @@ def process_exports_batched(
                 colsets[path] = cols
                 roots[path] = root
         except Exception:
-            continue  # malformed: stays pending, exactly as before
+            continue  # malformed: stays pending
     shared: dict[str, dict] = {}
-    shared_slices: dict[str, object] = {}
+    shared_slices: dict[str, DataFrame] = {}
     shared_persists: list = []
     wave = [p for p in pending if p in colsets]
     if (
@@ -328,101 +320,55 @@ def process_exports_batched(
                 )
             else:
                 continue  # failed the pre-scan: stays pending
-            pipe = FFIPipeline(spark, tables)
-            try:
-                pipe.run()
-            finally:
-                persists.extend(pipe.persists)
-            to_stage = [
-                name for name in list(pipe.tables)
-                if name not in EXCLUDED_TABLES
-            ]
+            tables = _run_pipeline(spark, tables, persists)
 
-            def _stage(name: str, seq: int = seq, pipe=pipe) -> str:
-                pipe.tables[name].write.mode("overwrite").parquet(
+            def _stage(name: str, seq: int = seq, tables=tables) -> str:
+                tables[name].write.mode("overwrite").parquet(
                     os.path.join(staging_root, name, f"_file_seq={seq}")
                 )
                 return name
 
             done, errs = run_parallel(
-                {n: (lambda n=n: _stage(n)) for n in to_stage},
+                {
+                    n: (lambda n=n: _stage(n))
+                    for n in tables
+                    if n not in EXCLUDED_TABLES
+                },
                 max_workers=16,
                 collect_errors=True,
             )
             if errs:
                 raise next(iter(errs.values()))
-            file_staged = list(done)
         except Exception:
-            continue  # stays pending; retried next run (partial staging
-            #            dirs carry a seq the final scan filters OUT)
+            continue  # stays pending; retried next run
         finally:
-            # targeted release of THIS file's caches (pipeline
-            # discovery persists + any fallback parse cache) — the
-            # shared wave parse must survive the sibling files
+            # release THIS file's caches only: the shared wave parse
+            # must survive the sibling files
             for df in persists:
                 df.unpersist()
         ok_files.append(path)
         ok_seqs.append(seq)
-        staged.update(file_staged)
+        staged.update(done)
     for df in shared_persists:  # staging done: release the wave parse
         df.unpersist()
-    loaded: dict[str, int] = {}
-    failed: list[str] = []
-    for name in sorted(staged):
-        # mergeSchema: files may stage different column subsets; absent
-        # columns read as nulls (= unionByName(allowMissingColumns)).
-        # _file_seq comes back as a partition column; restricting it to
-        # the fully-staged files is partition PRUNING, so a failed
-        # file's partial dirs are never even scanned.
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", os.path.join(staging_root, name))
-            .parquet(os.path.join(staging_root, name))
-            .filter(F.col("_file_seq").isin(ok_seqs))
-        )
-        target_name = (maps.target_for(name) if maps else None) or name
-        if maps:
-            # project first (matching the sequential loop), threading the
-            # file-sequence bookkeeping column through the whitelist
-            df = maps.project(df, target_name, keep_cols=("_file_seq",))
-        keys = _keys_for(name, [c for c in df.columns if c != "_file_seq"])
-        if keys is None:
-            continue
-        # earliest file wins on cross-file duplicate keys — identical to
-        # sequential per-file loads (later files' dup keys anti-join away)
-        w = Window.partitionBy(*keys).orderBy("_file_seq")
-        df = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_file_seq")
-        )
-        try:
-            loaded[target_name] = parquet_upsert(
-                spark, df, os.path.join(warehouse_dir, target_name), list(keys)
-            )
-        except Exception:
-            failed.append(target_name)
-    shutil.rmtree(staging_root, ignore_errors=True)
-    audit_log_append(
-        spark,
-        [
-            {
-                "User": os.environ.get("USER", "spark"),
-                "Time": str(int(time.time())),
-                "Table": t,
-                "ChangeType": "INSERT",
-                "Changes": n,
-            }
-            for t, n in loaded.items()
-            if n
-        ],
-        os.path.join(warehouse_dir, "UpdateLog"),
+    # mergeSchema: files may stage different column subsets; absent
+    # columns read as nulls (= unionByName(allowMissingColumns)).
+    # _file_seq comes back as a partition column; restricting it to the
+    # fully-staged files is partition PRUNING, so a failed file's
+    # partial dirs are never even scanned.
+    scans = {
+        name: spark.read.option("mergeSchema", "true")
+        .option("basePath", os.path.join(staging_root, name))
+        .parquet(os.path.join(staging_root, name))
+        .filter(F.col("_file_seq").isin(ok_seqs))
+        for name in sorted(staged)
+    }
+    loaded, failed = _upsert_concurrently(
+        spark, _work_list(scans, maps, order_col="_file_seq"), warehouse_dir
     )
+    shutil.rmtree(staging_root, ignore_errors=True)
     for path in ok_files:
         ledger.mark(path, failed_tables=failed)
-    # r12: no blanket clearCache — every cache this mode created was
-    # released TARGETED above (per-file pipeline persists + the shared
-    # wave parse), so an embedded host session keeps its own caches.
     return loaded
 
 
@@ -436,67 +382,27 @@ def process_exports_glob(
     (the reader's glob mode — one row per file) and transformed by ONE
     pipeline run, then upserted once per table.
 
-    This is the true 100 TB shape: per-file driver overhead (method
-    discovery, per-table jobs) is paid once per BATCH, not once per file,
-    and the cluster sees one big distributed parse instead of thousands
-    of small ones. Semantics: the union of files is treated as one
-    export, so cross-file duplicate keys resolve by the PIPELINE's own
-    deterministic rules (e.g. latest-DateIn plot wins) — the reference's
-    rules applied globally rather than in file-arrival order. Failure
-    isolation is batch-level; use process_exports for per-file isolation.
+    Per-file driver overhead (method discovery, per-table jobs) is paid
+    once per BATCH, not once per file, and the cluster sees one big
+    distributed parse instead of thousands of small ones. Semantics: the
+    union of files is treated as one export, so cross-file duplicate
+    keys resolve by the PIPELINE's own deterministic rules (e.g.
+    latest-DateIn plot wins) — the reference's rules applied globally
+    rather than in file-arrival order. Failure isolation is batch-level
+    (an extract or transform error propagates); use process_exports for
+    per-file isolation. Only this batch's cached frames are released.
     Returns {table: rows_inserted}.
     """
-    os.makedirs(warehouse_dir, exist_ok=True)
-    ledger = ProcessedLedger(os.path.join(warehouse_dir, "_processed.jsonl"))
-    files = sorted(globmod.glob(export_glob))
-    pending = ledger.pending(files)
+    ledger, pending = _pending(export_glob, warehouse_dir)
     if not pending:
         return {}
-    # release only this batch's cached frames (process_exports' targeted
-    # release): clearCache() would also evict every frame the host
-    # session has cached
     persists: list = []
-    pipe = None
     try:
-        tables = read_ffi_export(spark, pending, persists=persists)
-        pipe = FFIPipeline(spark, tables)
-        pipe.run()
-        # CONCURRENT per-table upserts (r8; shared helper r10 — see
-        # _upsert_concurrently for the full contract: one InheritableThread
-        # worker per target, same-target aliases chained, per-table failure
-        # isolation). Spark's scheduler interleaves the jobs; the shared
-        # upstream persists are read-only.
-        work: list[tuple[str, object, tuple[str, ...]]] = []
-        for name in list(pipe.tables):
-            if name in EXCLUDED_TABLES:
-                continue
-            df = pipe.tables[name]
-            target_name = (maps.target_for(name) if maps else None) or name
-            if maps:
-                df = maps.project(df, target_name)
-            keys = _keys_for(name, df.columns)
-            if keys is None:
-                continue
-            work.append((target_name, df, keys))
+        work = _prepare(spark, pending, maps, persists)
         loaded, failed = _upsert_concurrently(spark, work, warehouse_dir)
-        audit_log_append(
-            spark,
-            [
-                {
-                    "User": os.environ.get("USER", "spark"),
-                    "Time": str(int(time.time())),
-                    "Table": t,
-                    "ChangeType": "INSERT",
-                    "Changes": n,
-                }
-                for t, n in loaded.items()
-                if n
-            ],
-            os.path.join(warehouse_dir, "UpdateLog"),
-        )
-        for path in pending:
-            ledger.mark(path, failed_tables=failed)
     finally:
-        for df in persists + (pipe.persists if pipe else []):
+        for df in persists:
             df.unpersist()
+    for path in pending:
+        ledger.mark(path, failed_tables=failed)
     return loaded

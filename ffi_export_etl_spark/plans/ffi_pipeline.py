@@ -2,7 +2,8 @@
 
 Reference: class FFIFile in /root/reference/parser/xml.py — an eager,
 single-threaded pandas pipeline. Here every stage declares a lazy DataFrame
-plan over a TableRegistry; Catalyst prunes/pushes/broadcasts, and nothing
+plan in a plain ``{table: DataFrame}`` dict (the reference's ``_data_map``,
+parser/xml.py:43); Catalyst prunes/pushes/broadcasts, and nothing
 materializes until a sink action. Stage map (SURVEY.md section 3.2):
 
   extract():   _parse_idents       xml.py:126-195  (J6/J7 lookups -> joins,
@@ -40,7 +41,6 @@ from ..functions.idents import (
     visit_id,
 )
 from ..operators.pivot import eav_pivot, split_by_column_values
-from ..registry import TableRegistry
 
 # Source tables never loaded to the warehouse (parser/xml.py:44-46).
 EXCLUDED_TABLES = (
@@ -70,7 +70,7 @@ _SAMPLE_AUDIT_COLS = (
 )
 
 _SAMPLE_TABLES_FOR_EVENTS = {
-    # registry table -> column prefix for team aliases (xml.py:452-482)
+    # table -> column prefix for team aliases (xml.py:452-482)
     "SurfaceFuels_Duff_Litter_Sample": "Duff",
     "SurfaceFuels_1000Hr_Sample": "Hr",
     "SurfaceFuels_Fine_Sample": "Fine",
@@ -125,7 +125,7 @@ class FFIPipeline:
 
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
         self.spark = spark
-        self.tables = TableRegistry(spark, tables)
+        self.tables = dict(tables)
         self.admin_unit: str | None = None
         self.version: str | None = None
         # frames this pipeline persisted (the deduplicated MacroPlot and
@@ -240,7 +240,8 @@ class FFIPipeline:
         self._process_events()
         self._process_projects()
 
-        self.tables.drop("SampleData", "SampleRow", "AttributeRow", "AttributeData")
+        for name in ("SampleData", "SampleRow", "AttributeRow", "AttributeData"):
+            self.tables.pop(name, None)
 
     # -- EAV observations -> per-method wide tables (xml.py:197-302) ----
 
@@ -428,7 +429,6 @@ class FFIPipeline:
                 )
             wide = wide.na.drop(subset=["EventID"])
             self._register_by_unit(wide, method, suffix="Attribute",
-                                   drop_unit_when_single=True,
                                    drop_unit_when_multi=False,
                                    units=units_by_method[method])
 
@@ -458,14 +458,13 @@ class FFIPipeline:
         wide: DataFrame,
         method: str,
         suffix: str,
-        drop_unit_when_single: bool,
         drop_unit_when_multi: bool,
-        units: list[str] | None = None,
+        units: list[str],
     ) -> None:
         """Unit-system fan-out (xml.py:290-302, 355-367): one table per
-        unit system when several exist; English keeps the bare name.
-        ``units`` passes the (already-collected) unit list so the split
-        issues no extra Spark job."""
+        unit system when several exist; English keeps the bare name, and
+        a single unit system drops the column. ``units`` is the
+        already-collected unit list, so the split runs no Spark job."""
         table_name = method_table_name(method)
         units = split_by_column_values(wide, "Method_UnitSystem", units)
         if len(units) > 1:
@@ -479,8 +478,7 @@ class FFIPipeline:
                 )
                 self.tables[name] = df
         else:
-            df = wide.drop("Method_UnitSystem") if drop_unit_when_single else wide
-            self.tables[f"{table_name}_{suffix}"] = df
+            self.tables[f"{table_name}_{suffix}"] = wide.drop("Method_UnitSystem")
 
     # -- EAV sample metadata -> per-method _Sample tables (xml.py:304-367)
 
@@ -543,7 +541,6 @@ class FFIPipeline:
             # that here would fan the pivot out one row per attribute.
             wide = wide.withColumn("SampleData_Original_GUID", generated_guid())
             self._register_by_unit(wide, method, suffix="Sample",
-                                   drop_unit_when_single=True,
                                    drop_unit_when_multi=True,
                                    units=units_by_method[method])
 
@@ -684,7 +681,7 @@ class FFIPipeline:
 
     # ------------------------------------------------------------------
 
-    def run(self) -> TableRegistry:
+    def run(self) -> dict[str, DataFrame]:
         self.extract()
         self.transform()
         return self.tables

@@ -6,9 +6,9 @@ columns (/root/reference/parser/xml.py:101-124). The reference ET.parses
 the whole DOM on one thread; here:
 
 1. **Tag discovery** is a streaming driver-side pre-scan (iterparse over
-   depth-1 start events only — no DOM, O(file) bytes, O(#tags) memory).
-   The XML namespace is discovered from the root tag exactly like the
-   reference's regex (parser/xml.py:41, functions.py:111-121).
+   the tags and their child tags — no DOM, O(file) bytes, O(#columns)
+   memory). The XML namespace is discovered from the root tag exactly
+   like the reference's regex (parser/xml.py:41, functions.py:111-121).
 2. **Extraction** uses Spark's native XML reader (Spark 4) in a SINGLE
    pass: one ``rowTag`` read at the ROOT tag parses the whole document
    once (distributed JVM parse), is cached, and every per-tag table is a
@@ -45,42 +45,19 @@ def strip_namespace(tag: str) -> str:
     return _NS_RE.sub("", tag, count=1)
 
 
-def discover_structure(path: str) -> tuple[str | None, str | None, list[str]]:
-    """Stream the file once on the driver; return (namespace URI or None,
-    root tag, ordered distinct depth-1 tags). Never builds a DOM."""
-    ns: str | None = None
-    root: str | None = None
-    tags: dict[str, None] = {}
-    depth = 0
-    for event, elem in ET.iterparse(path, events=("start", "end")):
-        if event == "start":
-            depth += 1
-            if depth == 1:
-                m = _NS_RE.match(elem.tag)
-                ns = m.group(1) if m else None
-                root = strip_namespace(elem.tag)
-            elif depth == 2:
-                tags[strip_namespace(elem.tag)] = None
-        else:
-            depth -= 1
-            if depth >= 1:
-                elem.clear()  # keep memory O(1)
-    return ns, root, list(tags)
-
-
 def discover_columns(
     path: str,
 ) -> tuple[str | None, str | None, dict[str, list[str]]]:
     """Stream the file once on the driver; return (namespace URI or
     None, root tag, {depth-1 tag: ordered distinct depth-2 child
-    tags}). The same single iterparse pass as discover_structure, one
-    level deeper: the child-tag sets are what lets a MULTI-file parse
-    be sliced back into per-file tables with exactly the columns a
-    single-file parse of that file would have surfaced (a tag's struct
-    fields union across files in a shared parse; a file must not see a
-    sibling's columns). A value-only depth-1 element (no children)
-    maps to an empty list. Raises like discover_structure on
-    malformed XML — the batch driver's per-file validity gate."""
+    tags}). Never builds a DOM. The keys are the file's tables; the
+    child-tag sets are what lets a MULTI-file parse be sliced back into
+    per-file tables with exactly the columns a single-file parse of
+    that file would have surfaced (a tag's struct fields union across
+    files in a shared parse; a file must not see a sibling's columns).
+    A value-only depth-1 element (no children) maps to an empty list.
+    Raises on malformed XML — the batch driver's per-file validity
+    gate."""
     ns: str | None = None
     root: str | None = None
     cols: dict[str, dict[str, None]] = {}
@@ -127,48 +104,19 @@ def ingest_casts(df: DataFrame) -> DataFrame:
     return df.select(*exprs)
 
 
-def read_ffi_export(
+def _parse(
     spark: SparkSession,
     path: str | list[str],
-    tags: Iterable[str] | None = None,
-    persists: list | None = None,
-) -> dict[str, DataFrame]:
-    """Read one FFI export (or a glob of exports) into {table: DataFrame}.
-
-    SINGLE-PASS: the document is parsed once with ``rowTag`` = the root
-    element (one row per file, children nested as arrays of structs),
-    cached, and each table is an explode + flatten of the cached frame —
-    N tags cost one distributed parse, not N. The cached frame is one row
-    per FILE (like the reference's whole-DOM parse, parser/xml.py:39-41);
-    the unit of scale-out is the file, exactly the batch driver's glob.
-
-    All columns are StringType (no inference), matching the reference's
-    stringly-typed ingest (parser/xml.py:115). Tags absent from a given
-    file contribute no rows (null array -> explode drops them).
-    """
-    import glob as globmod
-
-    from pyspark.sql.types import ArrayType, StructType
-
-    # driver-side structure discovery handles globs and explicit file
-    # lists by unioning tag sets across matches (cheap streaming scan).
-    # With ``tags=`` passed explicitly, discovery is SKIPPED entirely:
-    # only the root tag is needed, read from the first file's header.
-    if isinstance(path, list):
-        matches = path
-    else:
-        matches = sorted(globmod.glob(path)) or [path]
-    if tags is not None:
-        root = discover_root(matches[0])
-        tags = list(tags)
-    else:
-        root = None
-        discovered: dict[str, None] = {}
-        for m in matches:
-            _, root, file_tags = discover_structure(m)
-            for t in file_tags:
-                discovered[t] = None
-        tags = list(discovered)
+    root: str | None,
+    multi: bool,
+    persists: list | None,
+) -> DataFrame:
+    """The one distributed parse of both readers: ``rowTag`` = the root
+    element, so one row per FILE with the children nested as arrays of
+    structs, no inference. A multi-file parse carries each row's
+    ``_file``. The frame is cached (MEMORY_AND_DISK) — every per-tag
+    table reads it — and appended to ``persists`` so the caller can
+    release it without ``clearCache()``-ing the whole session."""
     rootdf = (
         spark.read.format("xml")
         .option("rowTag", root)
@@ -176,63 +124,104 @@ def read_ffi_export(
         .option("ignoreNamespace", "true")
         .load(path)
     )
-    field_types = {f.name: f.dataType for f in rootdf.schema.fields}
-    # Multi-file reads must FILE-SCOPE the surrogate integer ids
-    # (MethodAtt_ID, SampleRow_ID, ...): the reference assigns them per
-    # export, so two files reuse the same numbers for unrelated rows and
-    # a union parse would fan every id equi-join out across files. Each
-    # ``*_ID`` value gets a '#<md5-8 of its file path>' suffix — ids are
-    # join-only plumbing (no warehouse output keeps an *_ID column), so
-    # the scoping is invisible downstream. Derived business keys
-    # (PlotID/EventID/VisitID) contain no '_ID' suffix and are untouched.
-    multi = len(matches) > 1
     if multi:
         rootdf = rootdf.withColumn("_file", F.input_file_name())
-    # ONE distributed parse feeds every per-tag select below (storage is
-    # MEMORY_AND_DISK; evicted LRU once the batch driver moves on).
-    # ``persists`` (r11): callers that process many files in one session
-    # get the cached-frame handle back for a TARGETED release — the
-    # overlapped per-file driver can no longer clearCache() between
-    # files without nuking the next file's freshly built caches.
     rootdf.persist()
     if persists is not None:
         persists.append(rootdf)
-    out: dict[str, DataFrame] = {}
+    return rootdf
+
+
+def _flatten_tag(
+    src: DataFrame, tag: str, keep: list[str] | None = None
+) -> DataFrame:
+    """One table of a root-tag parse: the rows of ``tag`` (an array of
+    structs, a struct, or a value-only element) as string columns with
+    the ingest casts applied; ``keep`` restricts the columns (None: all).
+
+    A multi-file parse carries a ``_file`` column and must FILE-SCOPE
+    the surrogate integer ids (MethodAtt_ID, SampleRow_ID, ...): the
+    reference assigns them per export, so two files reuse the same
+    numbers for unrelated rows and a union parse would fan every id
+    equi-join out across files. Each ``*_ID`` value gets a '#<md5-8 of
+    its file path>' suffix — ids are join-only plumbing (no warehouse
+    output keeps an *_ID column), so the scoping is invisible
+    downstream. Derived business keys (PlotID/EventID/VisitID) contain
+    no '_ID' suffix and are untouched."""
+    from pyspark.sql.types import ArrayType, StructType
+
+    multi = "_file" in src.columns
     lead = ["_file"] if multi else []
-    for tag in tags:
-        dt = field_types.get(tag)
-        if dt is None:
-            continue  # not in any file of this glob
-        if isinstance(dt, ArrayType):
-            rows = rootdf.select(*lead, F.explode(F.col(tag)).alias("_r"))
-        elif isinstance(dt, StructType):
-            # tag appears at most once per file -> plain struct column
-            rows = rootdf.select(*lead, F.col(tag).alias("_r")).filter(
-                F.col("_r").isNotNull()
-            )
-        else:  # value-only element
-            df = rootdf.select(F.col(tag).cast("string").alias(tag)).filter(
-                F.col(tag).isNotNull()
-            )
-            out[tag] = ingest_casts(df)
-            continue
-        df = rows.select(*lead, "_r.*")
-        # Native XML may surface attributes (none in FFI exports) or value
-        # columns; keep string typing uniform.
-        cols = [c for c in df.columns if c != "_file"]
-        if multi:
-            fid = F.substring(F.md5(F.col("_file")), 1, 8)
-            exprs = [
-                F.concat(F.col(c).cast("string"), F.lit("#"), fid).alias(c)
-                if c.endswith("_ID")
-                else F.col(c).cast("string").alias(c)
-                for c in cols
-            ]
-        else:
-            exprs = [F.col(c).cast("string").alias(c) for c in cols]
-        df = df.select(*exprs)
-        out[tag] = ingest_casts(df)
-    return out
+    dt = src.schema[tag].dataType
+    if isinstance(dt, ArrayType):
+        flat = src.select(*lead, F.explode(F.col(tag)).alias("_r")).select(
+            *lead, "_r.*"
+        )
+    elif isinstance(dt, StructType):
+        # tag appears at most once per file -> plain struct column
+        flat = (
+            src.select(*lead, F.col(tag).alias("_r"))
+            .filter(F.col("_r").isNotNull())
+            .select(*lead, "_r.*")
+        )
+    else:  # value-only element: its single column is the tag
+        flat = src.select(*lead, tag).filter(F.col(tag).isNotNull())
+    # Native XML may surface attributes (none in FFI exports) or value
+    # columns; keep string typing uniform.
+    fid = F.substring(F.md5(F.col("_file")), 1, 8) if multi else None
+    exprs = [
+        F.concat(F.col(c).cast("string"), F.lit("#"), fid).alias(c)
+        if multi and c.endswith("_ID")
+        else F.col(c).cast("string").alias(c)
+        for c in flat.columns
+        if c != "_file" and (keep is None or c in keep)
+    ]
+    return ingest_casts(flat.select(*exprs))
+
+
+def read_ffi_export(
+    spark: SparkSession,
+    path: str | list[str],
+    tags: Iterable[str] | None = None,
+    persists: list | None = None,
+) -> dict[str, DataFrame]:
+    """Read one FFI export (or a glob or list of exports) into
+    {table: DataFrame}.
+
+    SINGLE-PASS: the documents are parsed once (:func:`_parse`) and each
+    table is an explode + flatten of the cached frame — N tags cost one
+    distributed parse, not N. The cached frame is one row per FILE (like
+    the reference's whole-DOM parse, parser/xml.py:39-41); the unit of
+    scale-out is the file, exactly the batch driver's glob.
+
+    The tags are the union of every file's depth-1 tags
+    (:func:`discover_columns`); with ``tags=`` passed, that scan is
+    skipped and only the first file's root element is read. All columns
+    are StringType (no inference), matching the reference's
+    stringly-typed ingest (parser/xml.py:115). Tags absent from a given
+    file contribute no rows (null array -> explode drops them).
+    """
+    import glob as globmod
+
+    if isinstance(path, list):
+        matches = path
+    else:
+        matches = sorted(globmod.glob(path)) or [path]
+    if tags is not None:
+        root = discover_root(matches[0])
+    else:
+        root = None
+        discovered: dict[str, None] = {}
+        for m in matches:
+            _, root, file_cols = discover_columns(m)
+            discovered.update(dict.fromkeys(file_cols))
+        tags = discovered
+    rootdf = _parse(spark, path, root, len(matches) > 1, persists)
+    return {
+        tag: _flatten_tag(rootdf, tag)
+        for tag in tags
+        if tag in rootdf.columns  # absent tags: in no file of this glob
+    }
 
 
 _SAFE_BASENAME_RE = re.compile(r"^[A-Za-z0-9._-]+$")
@@ -261,13 +250,8 @@ def read_ffi_export_sliced(
 ) -> tuple[dict[str, dict[str, DataFrame]], dict[str, DataFrame]]:
     """ONE distributed parse of MANY export files, sliced back into
     per-file ``{table: DataFrame}`` dicts — the batch driver's shared
-    wave parse (r12, judge item 3).
-
-    The per-file batched loader paid one ``spark.read.format("xml")``
-    load (schema inference over the file), one distributed parse fill
-    and one Catalyst analysis round PER FILE; here the whole wave pays
-    ONE load and ONE cached parse, and every per-file pipeline's
-    discovery collects ride the shared warm cache.
+    wave parse: one reader ``load()`` and one cached parse for the wave
+    instead of one per file.
 
     Per-file semantics are preserved by construction:
 
@@ -278,38 +262,22 @@ def read_ffi_export_sliced(
     - each table is the shared frame filtered to the file (basename
       equality on ``input_file_name()`` — caller guarantees
       :func:`sliceable_paths`);
-    - ``*_ID`` surrogate values carry the multi-read file-scope suffix
-      (a constant within each slice, so intra-file id equi-joins are
-      untouched; ids are join-only plumbing that never reaches
-      warehouse output — the glob-mode precedent).
+    - ``*_ID`` surrogate values carry the multi-file scope suffix of
+      :func:`_flatten_tag` (a constant within each slice, so intra-file
+      id equi-joins are untouched).
 
-    Cache layout: a first cut filtered each TABLE off the shared wave
-    cache, which made every per-file discovery collect and staging job
-    rescan the whole wave's fat rows and carried the filter into every
-    table plan — measured SLOWER than per-file reads. Instead the wave
-    frame is sliced ONCE per file at the root-row level and each 1-row
-    slice is persisted, so every downstream job of a file reads exactly
-    its own row (the same shape as a single-file read's rootdf persist).
-    The shared parse cache handle is appended to ``persists`` (the
-    caller releases it after the wave); the return value is
+    Cache layout: the wave frame is sliced ONCE per file at the
+    root-row level and each 1-row slice is persisted, so every
+    downstream job of a file reads exactly its own row (the same shape
+    as a single-file read's cached parse); filtering each table off the
+    shared cache instead measured slower than per-file reads. The
+    shared parse handle is appended to ``persists`` (the caller
+    releases it after the wave); the return value is
     ``(tables_by_path, slice_handle_by_path)`` so the caller can release
-    each file's slice TARGETED once that file is staged — per-file
-    ``clearCache()`` would evict the sibling slices.
+    each file's slice once that file is staged — ``clearCache()`` would
+    evict the sibling slices.
     """
-    from pyspark.sql.types import ArrayType, StructType
-
-    rootdf = (
-        spark.read.format("xml")
-        .option("rowTag", root)
-        .option("inferSchema", "false")
-        .option("ignoreNamespace", "true")
-        .load(paths)
-        .withColumn("_file", F.input_file_name())
-    )
-    rootdf.persist()
-    if persists is not None:
-        persists.append(rootdf)
-    field_types = {f.name: f.dataType for f in rootdf.schema.fields}
+    rootdf = _parse(spark, paths, root, True, persists)
     basename = F.element_at(F.split(F.col("_file"), "/"), -1)
     out: dict[str, dict[str, DataFrame]] = {}
     slices: dict[str, DataFrame] = {}
@@ -318,42 +286,10 @@ def read_ffi_export_sliced(
             basename == os.path.basename(path)
         ).persist()
         slices[path] = slice_df
-        fid = F.substring(F.md5(F.col("_file")), 1, 8)
-        tables: dict[str, DataFrame] = {}
-        for tag, file_cols in colsets[path].items():
-            dt = field_types.get(tag)
-            if dt is None:
-                continue  # tag parsed to nothing in every file
-            if isinstance(dt, ArrayType):
-                flat = slice_df.select(
-                    "_file", F.explode(F.col(tag)).alias("_r")
-                ).select("_file", "_r.*")
-            elif isinstance(dt, StructType):
-                flat = (
-                    slice_df.select("_file", F.col(tag).alias("_r"))
-                    .filter(F.col("_r").isNotNull())
-                    .select("_file", "_r.*")
-                )
-            else:  # value-only element
-                flat = slice_df.select(
-                    "_file", F.col(tag).cast("string").alias(tag)
-                ).filter(F.col(tag).isNotNull())
-            avail = [c for c in flat.columns if c != "_file"]
-            # restrict to the file's OWN columns (value-only elements
-            # discover no children; their single column is the tag)
-            keep = (
-                [c for c in avail if c in set(file_cols)]
-                if file_cols
-                else avail
-            )
-            exprs = [
-                F.concat(F.col(c).cast("string"), F.lit("#"), fid).alias(c)
-                if c.endswith("_ID")
-                else F.col(c).cast("string").alias(c)
-                for c in keep
-            ]
-            df = flat.select(*exprs)
-            tables[tag] = ingest_casts(df)
-        out[path] = tables
+        # value-only elements discover no children: keep their one column
+        out[path] = {
+            tag: _flatten_tag(slice_df, tag, file_cols or None)
+            for tag, file_cols in colsets[path].items()
+            if tag in rootdf.columns  # tag parsed to nothing in every file
+        }
     return out, slices
-

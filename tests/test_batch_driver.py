@@ -111,9 +111,10 @@ def test_batched_mode_matches_sequential(spark, tmp_path):
     ["process_exports", "process_exports_batched", "process_exports_glob"],
 )
 def test_loader_releases_only_its_own_caches(spark, tmp_path, loader):
-    """A loader embedded in a long-lived session releases exactly the
-    frames it cached: an unrelated persisted frame stays cached, and
-    none of the loader's own persisted frames outlive the call."""
+    """A loader embedded in a long-lived session leaves the host's state
+    alone: an unrelated persisted frame stays cached, none of the
+    loader's own persisted frames outlive the call, and the session's
+    temp views are the host's — one named like a loader table included."""
     from ffi_export_etl_spark.plans import batch_driver
 
     exports = tmp_path / "exports"
@@ -121,16 +122,21 @@ def test_loader_releases_only_its_own_caches(spark, tmp_path, loader):
     write_export_xml(str(exports / "export1.xml"))
     _second_export(str(exports / "export2.xml"))
     host = spark.range(50).selectExpr("id * 2 AS v").persist()
+    spark.range(3).createOrReplaceTempView("MacroPlot")
     try:
         assert host.count() == 50
         before = _persisted_noncheckpoint_ids(spark)
+        views = sorted(t.name for t in spark.catalog.listTables())
         getattr(batch_driver, loader)(
             spark, str(exports / "*.xml"), str(tmp_path / "wh")
         )
         assert host.storageLevel.useMemory, "host cache was evicted"
         assert _persisted_noncheckpoint_ids(spark) - before == set()
+        assert spark.table("MacroPlot").columns == ["id"]
+        assert sorted(t.name for t in spark.catalog.listTables()) == views
     finally:
         host.unpersist()
+        spark.catalog.dropTempView("MacroPlot")
 
 
 @pytest.mark.parametrize(
@@ -161,30 +167,52 @@ def test_loader_releases_caches_of_a_failed_pipeline(
     assert _persisted_noncheckpoint_ids(spark) - before == set()
 
 
-def test_batched_mode_with_fieldmaps(spark, tmp_path):
-    """Batched mode applies FieldMap projection BEFORE key derivation,
-    exactly like the sequential loop (keys resolve against renamed
-    columns; the file-seq bookkeeping threads through the whitelist)."""
-    import os
-
-    from ffi_export_etl_spark.plans.batch_driver import process_exports_batched
+@pytest.mark.parametrize(
+    "loader",
+    ["process_exports", "process_exports_batched", "process_exports_glob"],
+)
+def test_batched_mode_with_fieldmaps(spark, tmp_path, loader):
+    """Every mode applies FieldMap projection BEFORE key derivation
+    (keys resolve against renamed columns; batched mode threads its
+    file-seq bookkeeping through the whitelist), and a target that two
+    source tables alias sums both loads in its count and its UpdateLog
+    records."""
+    from ffi_export_etl_spark.plans import batch_driver
     from ffi_export_etl_spark.plans.fieldmap import LoadMaps
 
     exports = tmp_path / "exports"
     exports.mkdir()
     write_export_xml(str(exports / "export1.xml"))
+    fine_cols = ["EventID", "AttributeData_DataRow_GUID", "Hits"]
     maps = LoadMaps(
-        table_map={"SampleEvent": "EventFact"},
-        field_maps={"EventFact": [("EventID", "EventID"),
-                                  ("PlotID", "PlotID")]},
+        table_map={
+            "SampleEvent": "EventFact",
+            "SurfaceFuels_Fine_Attribute": "Fine",
+            "SurfaceFuels_Fine_Metric_Attribute": "Fine",
+        },
+        field_maps={
+            "EventFact": [("EventID", "EventID"), ("PlotID", "PlotID")],
+            "Fine": [(c, c) for c in fine_cols],
+        },
     )
     wh = str(tmp_path / "wh")
-    loaded = process_exports_batched(
+    loaded = getattr(batch_driver, loader)(
         spark, str(exports / "*.xml"), wh, maps=maps
     )
+    if loader == "process_exports":
+        (loaded,) = loaded.values()  # {file: {table: rows}}
     assert loaded.get("EventFact", 0) == 2
     back = spark.read.parquet(os.path.join(wh, "EventFact"))
     assert sorted(back.columns) == ["EventID", "PlotID"]
+
+    # one English and one Metric row, chained into one target
+    assert loaded["Fine"] == 2
+    fine = spark.read.parquet(os.path.join(wh, "Fine"))
+    assert sorted(fine.columns) == sorted(fine_cols)
+    assert fine.count() == 2
+    audit = spark.read.parquet(os.path.join(wh, "UpdateLog"))
+    changes = [r["Changes"] for r in audit.filter("Table = 'Fine'").collect()]
+    assert sum(changes) == 2
 
 
 def test_glob_mode_single_pipeline(spark, tmp_path):

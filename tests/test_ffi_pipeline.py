@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 from ffi_export_etl_spark.plans.ffi_pipeline import FFIPipeline
-from ffi_export_etl_spark.sources.xml import discover_structure, read_ffi_export
+from ffi_export_etl_spark.sources.xml import discover_columns, read_ffi_export
 from tests.ffi_fixture import build_export_xml, write_export_xml
 
 
@@ -28,10 +28,11 @@ def pipeline(spark, export_path):
 
 
 def test_discover_tags(export_path):
-    ns, _root, tags = discover_structure(export_path)
+    ns, _root, cols = discover_columns(export_path)
     assert ns == "http://tempuri.org/FFIExport.xsd"
-    assert "MacroPlot" in tags and "AttributeData" in tags
-    assert len(tags) == len(set(tags))
+    assert "MacroPlot" in cols and "AttributeData" in cols
+    assert "MacroPlot_GUID" in cols["MacroPlot"]
+    assert all(len(c) == len(set(c)) for c in cols.values())
 
 
 def test_ingest_strings_and_guid_upper(spark, export_path):
@@ -61,14 +62,14 @@ def test_single_pass_read(spark, export_path, monkeypatch):
 
 
 def test_explicit_tags_skip_full_discovery(spark, export_path, monkeypatch):
-    # passing tags= must not stream every file through discover_structure;
+    # passing tags= must not stream every file through discover_columns;
     # only the first file's root element is read (discover_root)
     import ffi_export_etl_spark.sources.xml as xmlmod
 
     def boom(path):
         raise AssertionError("full discovery must be skipped with tags=")
 
-    monkeypatch.setattr(xmlmod, "discover_structure", boom)
+    monkeypatch.setattr(xmlmod, "discover_columns", boom)
     tables = read_ffi_export(spark, export_path, tags=["MacroPlot"])
     assert set(tables) == {"MacroPlot"}
     assert tables["MacroPlot"].count() == 3
