@@ -192,43 +192,22 @@ def curate_stream_main(argv: list[str]) -> int:
         profile_store_path=args.profile_store,
         funnel_store_path=args.funnel_store,
     )
-    # a drain that processed ZERO batches (source files already consumed
-    # by the checkpoint) against fresh roots leaves no output dirs — a
-    # clean no-op run must print its JSON line, not an AnalysisException
-    def _rows(path: str) -> int:
-        # folded-aware logical count: after nightly maintenance has
-        # folded a store into its generation table, a plain
-        # read.parquet(root).count() sees only the post-fold tail dirs
-        # and silently under-reports. Absent root = clean zero (the
-        # zero-batch drain); anything else — corrupt footer,
-        # permission/auth failure — must surface, not print rows: 0
-        from .streaming.dedup import store_row_count
-
-        return store_row_count(spark, path)
-
-    def _sink_rows(path: str) -> int:
-        # ONE generation-aware count idiom for both window-sink roots
-        # (kept corpus and quarantine — compaction turns either into
-        # mixed compacted=/batch_id= dirs where a plain read throws
-        # CONFLICTING_PARTITION_COLUMN_NAMES); a zero-batch drain may
-        # have created no root at all (AnalysisException from the
-        # listing, ValueError = the reader's explicit empty-sink signal)
-        from .streaming.events import read_window_sink
-
-        try:
-            return read_window_sink(spark, path).count()
-        except (AnalysisException, ValueError):
-            return 0
+    # logical counts through the generation layout: 0 for a root a
+    # zero-batch drain never created; a corrupt footer or an IO/auth
+    # failure surfaces instead of printing rows: 0
+    from .streaming.dedup import store_row_count
 
     out = {
-        "kept_rows": _sink_rows(args.kept),
-        "exact_store_rows": _rows(args.exact_store),
-        "minhash_store_rows": _rows(args.minhash_store),
+        key: store_row_count(spark, root)
+        for key, root in (
+            ("kept_rows", args.kept),
+            ("exact_store_rows", args.exact_store),
+            ("minhash_store_rows", args.minhash_store),
+            ("span_store_rows", args.span_store),
+            ("quarantined_rows", args.quarantine),
+        )
+        if root is not None
     }
-    if args.span_store is not None:
-        out["span_store_rows"] = _rows(args.span_store)
-    if args.quarantine is not None:
-        out["quarantined_rows"] = _sink_rows(args.quarantine)
     if out["kept_rows"] == 0:
         out["note"] = "no batches processed or empty kept corpus"
     print(json.dumps(out, sort_keys=True))
@@ -261,48 +240,34 @@ def curate_maintain_main(argv: list[str]) -> int:
     args = ap.parse_args(argv)
 
     from .session import get_spark, tune
-    from .streaming.curate import compact_kept, read_kept
-    from .streaming.events import compact_window_sink, read_window_sink
-
-    from pyspark.sql.utils import AnalysisException
+    from .streaming.dedup import compact_signature_store, store_row_count
+    from .streaming.events import compact_generations
 
     spark = tune(get_spark(app_name="ffi-etl-curate-maintain"))
     spark.sparkContext.setLogLevel("ERROR")
 
-    def _rows(reader, path):
-        # an empty/never-drained sink is a clean zero, not a traceback
-        # (the curate-stream CLI's _kept_rows pattern; review r8)
-        try:
-            return reader(spark, path).count()
-        except (AnalysisException, ValueError):
-            return 0
-
+    # an absent root (cron before the first drain) folds to -1 and
+    # counts 0 — a clean zero-work report, not a traceback
     out: dict = {
-        "kept_generation": compact_kept(
+        "kept_generation": compact_generations(
             spark, args.kept, num_files=args.num_files
         ),
-        "kept_rows": _rows(read_kept, args.kept),
+        "kept_rows": store_row_count(spark, args.kept),
     }
-    if args.quarantine is not None and os.path.isdir(args.quarantine):
-        out["quarantine_generation"] = compact_window_sink(
+    if args.quarantine is not None:
+        out["quarantine_generation"] = compact_generations(
             spark, args.quarantine, num_files=args.num_files
         )
-        out["quarantined_rows"] = _rows(read_window_sink, args.quarantine)
-    from .streaming.dedup import compact_signature_store
-
+        out["quarantined_rows"] = store_row_count(spark, args.quarantine)
     for family, root in (
         ("exact", args.exact_store),
         ("minhash", args.minhash_store),
         ("span", args.span_store),
     ):
-        if root is None:
-            continue
-        if not os.path.isdir(root):
-            # never-drained store: a clean no-op, like the kept root
-            out[f"{family}_store_generation"] = -1
-            continue
-        fold = compact_signature_store(spark, root, args.num_files)
-        out[f"{family}_store_generation"] = fold["generation"]
+        if root is not None:
+            out[f"{family}_store_generation"] = compact_signature_store(
+                spark, root, args.num_files
+            )
     print(json.dumps(out, sort_keys=True))
     return 0
 

@@ -167,7 +167,7 @@ def compact_warehouse(
     small-files problem: at scale the NEXT upsert's existing-keys scan
     (and every reader) pays per-file open/footer latency that dwarfs the
     data. This is the batch-warehouse twin of the streaming sinks'
-    generation fold (streaming/events.compact_window_sink): run it
+    generation fold (streaming/events.compact_generations): run it
     between batches (cron-able via the warehouse-maintain CLI),
     idempotent, rows preserved exactly.
 

@@ -17,18 +17,19 @@ streaming/dedup.py — a replayed micro-batch overwrites its own
 execute serially so each joins exactly the stores its predecessors
 wrote. Compact the stores between sessions with
 dedup.compact_signature_store — the same ``compacted=<max_id>``
-generation fold as the kept corpus below; the daemon reads the newest
+generation fold as the kept corpus; the daemon reads the newest
 generation + post-fold batch dirs back transparently.
 
-Small-file story (r6): the kept corpus accumulates one parquet dir per
+Small-file story: the kept corpus accumulates one parquet dir per
 micro-batch per drain — a cron-driven daemon would grow thousands of
 kilobyte dirs per day and directory listing would eventually dominate
 reads. ``kept_compact_every`` folds committed batch dirs into
-``compacted=<max_id>`` generations mid-run (the streaming/events.py
-window-sink machinery — the committed-generation reader rule makes it
-crash/replay-safe with no transaction log); ``read_kept`` is the
-matching reader, valid on both the plain and the compacted layout.
-``compact_kept`` runs the same fold as between-session maintenance.
+``compacted=<max_id>`` generations mid-run, and the curate-maintain
+CLI runs the same fold between sessions. Every root here (kept corpus,
+quarantine, signature stores) uses the one streaming/events.py
+generation layout: read it with ``events.read_generations``, fold it
+with ``events.compact_generations``; the committed-generation listing
+makes both crash/replay-safe with no transaction log.
 """
 
 from __future__ import annotations
@@ -42,23 +43,7 @@ from ..operators.exactdedup import exact_signature_store
 from ..operators.minhash import minhash_signature_store_with_sigs
 from ..plans.curation_increment import curate_increment
 from .dedup import _read_store, _session_base
-from .events import compact_window_sink, read_window_sink
-
-
-def read_kept(spark: SparkSession, kept_path: str) -> DataFrame:
-    """Read the curated corpus: newest committed generation + batch dirs
-    above its id (identical rule to events.read_window_sink — on a
-    never-compacted sink this is simply every committed batch dir)."""
-    return read_window_sink(spark, kept_path)
-
-
-def compact_kept(
-    spark: SparkSession, kept_path: str, num_files: int = 4
-) -> int:
-    """Between-session maintenance: fold all committed kept batch dirs
-    (plus the previous generation) into one ``compacted=<max_id>``
-    generation of ``num_files`` files. Returns the generation id."""
-    return compact_window_sink(spark, kept_path, num_files=num_files)
+from .events import _live_dirs, _sink_ids, compact_generations
 
 
 def funnel_drop_rates(spark: SparkSession, funnel_store_path: str) -> DataFrame:
@@ -111,7 +96,10 @@ def streaming_curate(
     through curate_increment; returns the finished query. ``curate_kw``
     forwards to curate_increment (min_words, jaccard_threshold_pct,
     shingle_mode, ...). Read the curated corpus back with
-    ``spark.read.parquet(kept_path)`` (batch_id is a partition column).
+    ``events.read_generations(spark, kept_path)`` — a plain
+    ``spark.read.parquet(kept_path)`` raises
+    CONFLICTING_PARTITION_COLUMN_NAMES once the corpus is folded, and
+    reads uncommitted batch dirs before that.
 
     ``on_existing_store``: see streaming/dedup.py — "replay" (default)
     treats a fresh checkpoint over existing stores as an idempotent
@@ -127,9 +115,7 @@ def streaming_curate(
 
     ``kept_compact_every``: every N batches, fold the kept corpus's
     committed batch dirs into one generation (file count stays
-    O(kept_files_per_generation + N), not O(total batches)); read the
-    corpus with ``read_kept`` once compaction is on — a plain
-    root-level read would see mixed partition dir names.
+    O(kept_files_per_generation + N), not O(total batches)).
 
     ``input_suite`` (operators/validate.CheckSuite): per-batch quality
     gate, run on each micro-batch BEFORE any curation or store work
@@ -144,7 +130,7 @@ def streaming_curate(
     as the kept corpus (triggered on the count of committed quarantine
     dirs — failing batches are sparse in batch-id space, so the kept
     sink's id-modulus cadence could never fire for them); read it back
-    with ``read_window_sink`` once compaction is on.
+    with ``events.read_generations``.
 
     ``profile_store_path``: append one mergeable profile row per batch
     (operators/profile.profile_batch over the batch's KEPT rows, read
@@ -211,8 +197,6 @@ def streaming_curate(
                 # on the COUNT of committed quarantine dirs instead
                 # (one driver-side listing per failing batch).
                 if kept_compact_every:
-                    from .events import _sink_ids
-
                     committed = _sink_ids(
                         quarantine_path, "batch_id", committed_only=True
                     )
@@ -220,7 +204,7 @@ def streaming_curate(
                         sum(1 for i in committed if i < cur_slot)
                         >= kept_compact_every
                     ):
-                        compact_window_sink(
+                        compact_generations(
                             bs,
                             quarantine_path,
                             num_files=kept_files_per_generation,
@@ -316,7 +300,7 @@ def streaming_curate(
         ):
             # only absolute ids < this batch's slot are committed
             # predecessors; this batch's own dir stays out of the fold
-            compact_window_sink(
+            compact_generations(
                 bs,
                 kept_path,
                 num_files=kept_files_per_generation,
@@ -406,25 +390,19 @@ def replay_quarantine(
     ``batch_id <= generation`` dirs (compaction's documented crash
     window: already folded, shadowed by the reader rule) are deleted
     with it — otherwise removing the generation would resurrect their
-    stale rows (review r8). Between-sessions maintenance like
-    compact_kept: the owning stream must not be running (single-writer,
-    as everywhere in this sink family).
+    stale rows. Between-sessions maintenance like curate-maintain: the
+    owning stream must not be running (single-writer, as everywhere in
+    this sink family).
     """
     import shutil
     import uuid as _uuid
 
-    from .events import _sink_ids
     from ..operators.validate import format_failures
 
-    gens = sorted(_sink_ids(quarantine_path, "compacted", committed_only=True))
-    cur = gens[-1] if gens else -1
-    units = [("compacted", cur)] if cur >= 0 else []
-    units += [
-        ("batch_id", i)
-        for i in sorted(
-            _sink_ids(quarantine_path, "batch_id", committed_only=True)
-        )
-        if i > cur
+    cur, live = _live_dirs(quarantine_path)
+    units = [
+        (kind, int(uid))
+        for kind, uid in (os.path.basename(p).split("=") for p in live)
     ]
     if not units:
         empty = {

@@ -8,7 +8,12 @@ Patterns provided:
 - tumbling/sliding window aggregation with optional watermark,
 - run-to-completion helper (availableNow + memory sink) that turns a
   bounded stream into a DataFrame — used for oracle-checked streaming
-  queries and tests.
+  queries and tests,
+- the generation layout of the curation daemon's roots (kept corpus,
+  quarantine, signature stores): ``batch_id=N`` dirs folded into
+  ``compacted=<id>`` generations, listed once (``_live_dirs``) for the
+  one reader (``read_generations``) and the one fold
+  (``compact_generations``).
 """
 
 from __future__ import annotations
@@ -131,77 +136,6 @@ def windowed_counts(
     )
 
 
-def windowed_counts_to_files(
-    spark: SparkSession,
-    source_path: str,
-    out_dir: str,
-    checkpoint: str,
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-    max_files_per_trigger: int = 1,
-    files_per_batch: int = 1,
-    compact_every: int | None = None,
-):
-    """The production shape of the window aggregation: a long-running
-    file sink whose small-file growth is BOUNDED (r5 judge item 8).
-
-    A naive append file sink on a windowed agg writes
-    shuffle-partitions files per micro-batch — at 100 TB with a trigger
-    every few minutes that is millions of kilobyte files per day, and
-    the listing alone eventually dominates reads. Two levers here:
-
-    - each micro-batch lands as ONE ``batch_id=N`` directory coalesced
-      to ``files_per_batch`` files (append-mode emission: only closed
-      windows, immutable once written; overwrite of the batch's own
-      slot = exactly-once under replay, streaming/dedup.py's pattern);
-    - every ``compact_every`` batches, ``compact_window_sink`` folds all
-      committed batch directories into a single ``compacted=<max_id>``
-      generation. The reader rule (``read_window_sink``) — newest
-      generation + batch dirs ABOVE its id — makes compaction safe
-      under crash/replay with no transaction log: a replayed batch that
-      was already folded in re-creates its dir, but the reader ignores
-      batch ids at or below the generation, and a crash between the
-      generation write and the input cleanup leaves only dirs the
-      reader skips (the next compaction removes them).
-
-    Drains ``source_path`` with availableNow and returns the finished
-    query. Watermark is mandatory: append mode emits a window only once
-    it closes.
-    """
-    stream = (
-        spark.readStream.schema(events_stream_schema(spark, source_path))
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format("parquet")
-        .load(stage_as_dir(source_path))
-    )
-    stream = stream.withColumn("ts_micro", event_timestamp(stream))
-    agg = windowed_counts(stream, window, slide, watermark=watermark)
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        batch.coalesce(files_per_batch).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # only ids < batch_id are committed; this batch stays out
-            compact_window_sink(
-                batch.sparkSession,
-                out_dir,
-                num_files=files_per_batch,
-                before_batch=batch_id,
-            )
-
-    q = (
-        agg.writeStream.foreachBatch(_process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def _sink_ids(
     out_dir: str, prefix: str, committed_only: bool = False
 ) -> list[int]:
@@ -267,97 +201,131 @@ def _sink_max_id(spark: SparkSession, root: str) -> int | None:
     return max(ids) if ids else None
 
 
-def compact_window_sink(
+def _live_dirs(
+    root: str, before_batch: int | None = None
+) -> tuple[int, list[str]]:
+    """The generation layout's one listing: ``(cur, paths)`` where
+    ``cur`` is the newest COMMITTED ``compacted=<id>`` generation (-1 =
+    never folded) and ``paths`` are the live dirs — that generation,
+    then the committed ``batch_id`` dirs above it (and below
+    ``before_batch``), in id order.
+
+    The rule is what makes the fold safe with no transaction log:
+    batch dirs at or below the generation are replay or crash leftovers
+    already folded in, and a dir without Spark's ``_SUCCESS`` marker
+    (a write that died midway) is never live — an uncommitted
+    generation cannot shadow the dirs it was folding, and an
+    uncommitted batch waits for the stream's replay to overwrite it
+    (folding its partial rows would freeze them: the replayed dir would
+    land at or below the new generation and be skipped forever).
+
+    A root still carrying the retired ``_folded/`` layout (a bucketed
+    catalog-table fold) raises: its folded rows live under
+    ``_folded_data/``, which this listing never sees, so reading on
+    would silently drop them."""
+    legacy = os.path.join(root, "_folded")
+    if os.path.isdir(legacy):
+        raise ValueError(
+            f"store at {root!r} has a retired fold layout ({legacy!r}); "
+            f"its folded rows are not readable — rebuild the store"
+        )
+    cur = max(_sink_ids(root, "compacted", committed_only=True), default=-1)
+    paths = [os.path.join(root, f"compacted={cur}")] if cur >= 0 else []
+    paths += [
+        os.path.join(root, f"batch_id={i}")
+        for i in sorted(_sink_ids(root, "batch_id", committed_only=True))
+        if i > cur and (before_batch is None or i < before_batch)
+    ]
+    return cur, paths
+
+
+def read_generations(
+    spark: SparkSession, root: str, before_batch: int | None = None
+) -> DataFrame | None:
+    """Rows of a generation root — the kept corpus, the quarantine or a
+    signature store — or None when it is absent or empty; batch ids
+    pruned to ``< before_batch``.
+
+    A local root is read through ``_live_dirs``, folded or not, so
+    every reader and the fold agree on its contents. A root that is
+    not a local directory (hdfs://, s3a:// — never folded, since the
+    fold is local-filesystem) is read whole, existence probed by
+    ATTEMPTING the read so such a store is never reported as absent.
+
+    Concurrency caveat: the listing resolves eagerly but the files read
+    lazily, so a fold running before the consuming action can delete
+    listed dirs (the read then fails rather than losing rows).
+    Single-writer is assumed throughout (one stream owns the root)."""
+    if not os.path.isdir(root):
+        try:
+            df = spark.read.parquet(root)
+        except AnalysisException:  # PATH_NOT_FOUND
+            return None
+        if before_batch is not None and "batch_id" in df.columns:
+            df = df.filter(F.col("batch_id") < before_batch)
+        return df
+    cur, paths = _live_dirs(root, before_batch)
+    if before_batch is not None and before_batch <= cur:
+        # a fresh-checkpoint re-delivery ("replay" mode) needs the
+        # per-batch_id slots the fold consumed — batch N's legitimate
+        # store (batches < N) is no longer separable from the
+        # generation. Failing fast beats the silent alternative (batch
+        # 0 would see the WHOLE prior corpus as stored and drop every
+        # one of its own docs as duplicates).
+        raise ValueError(
+            f"store at {root!r} was folded through batch {cur}; a "
+            f"re-delivery below that is impossible — reuse the original "
+            f"checkpoint or use on_existing_store='continue'"
+        )
+    return spark.read.parquet(*paths) if paths else None
+
+
+def compact_generations(
     spark: SparkSession,
-    out_dir: str,
+    root: str,
     num_files: int = 1,
     before_batch: int | None = None,
 ) -> int:
-    """Fold the sink's committed ``batch_id=N`` directories (plus the
-    previous generation) into one ``compacted=<max_id>`` generation of
+    """Fold a generation root's live dirs (``_live_dirs``: the current
+    generation plus the committed batch dirs above it, below
+    ``before_batch``) into one ``compacted=<max_id>`` generation of
     ``num_files`` parquet files, then remove the consumed inputs.
-    Idempotent and crash-tolerant BY THE READER RULE (see
-    windowed_counts_to_files) plus _SUCCESS validation: a generation
-    only counts once its write COMMITTED, so consumed inputs are
-    redundant the moment the new generation exists, a write that
-    crashed midway is garbage-collected and redone (never shadowing the
-    inputs it was folding), and deletion order cannot lose or duplicate
-    rows for ``read_window_sink``. Returns the current generation id
-    (-1 = nothing compacted yet). The one fold of the kept corpus, the
-    quarantine and the signature stores (curate.compact_kept,
-    dedup.compact_signature_store); also callable between sessions as
-    nightly maintenance.
-    """
+    Returns the current generation id (-1 = nothing folded yet, which
+    includes an absent root).
+
+    Crash-tolerant by the listing rule alone: the new generation is
+    live only once its write commits, so the inputs are redundant from
+    that moment and their removal can stop anywhere; leftovers are
+    skipped by every reader and removed here on the next run, together
+    with uncommitted or superseded generations. Idempotent; the one
+    fold of the kept corpus, the quarantine (in-stream cadence and the
+    curate-maintain CLI) and the signature stores
+    (dedup.compact_signature_store). Single-writer: the owning stream
+    must not be running."""
     import shutil
 
-    # only COMMITTED generations count (_SUCCESS marker): a generation
-    # whose write crashed midway must not shadow the inputs it was
-    # folding — its dir is garbage to be removed and redone
-    gens = sorted(_sink_ids(out_dir, "compacted", committed_only=True))
-    cur = gens[-1] if gens else -1
-    for g in _sink_ids(out_dir, "compacted"):
-        # stale older generations (crash between write and cleanup) and
-        # uncommitted partial writes are never read — remove both
+    cur, paths = _live_dirs(root, before_batch)
+    # uncommitted and superseded generations, and batch dirs the
+    # current generation already holds, are never live: remove them
+    for g in _sink_ids(root, "compacted"):
         if g != cur:
             shutil.rmtree(
-                os.path.join(out_dir, f"compacted={g}"), ignore_errors=True
+                os.path.join(root, f"compacted={g}"), ignore_errors=True
             )
-    # fold only COMMITTED batch dirs: a batch whose write crashed has no
-    # _SUCCESS and will be overwritten by the stream's replay — folding
-    # its partial rows into a generation would freeze them as the
-    # canonical copy (the replayed dir lands at or below the generation
-    # id and is skipped forever)
-    eligible = sorted(
-        i
-        for i in _sink_ids(out_dir, "batch_id", committed_only=True)
-        if i > cur and (before_batch is None or i < before_batch)
-    )
-    # batch ids <= cur were already folded in (a replay re-created the
-    # dir); redundant by the reader rule — just remove them
-    for i in _sink_ids(out_dir, "batch_id"):
+    for i in _sink_ids(root, "batch_id"):
         if i <= cur:
             shutil.rmtree(
-                os.path.join(out_dir, f"batch_id={i}"), ignore_errors=True
+                os.path.join(root, f"batch_id={i}"), ignore_errors=True
             )
-    if not eligible:
-        return cur
-    new_gen = eligible[-1]
-    paths = [os.path.join(out_dir, f"compacted={cur}")] if cur >= 0 else []
-    paths += [os.path.join(out_dir, f"batch_id={i}") for i in eligible]
+    if len(paths) == (1 if cur >= 0 else 0):
+        return cur  # no committed batch dir above the generation
+    new_gen = int(paths[-1].rsplit("=", 1)[1])
     spark.read.parquet(*paths).coalesce(num_files).write.mode(
         "overwrite"
-    ).parquet(os.path.join(out_dir, f"compacted={new_gen}"))
+    ).parquet(os.path.join(root, f"compacted={new_gen}"))
     for p in paths:
         shutil.rmtree(p, ignore_errors=True)
     return new_gen
-
-
-def read_window_sink(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read a windowed_counts_to_files sink: the newest compacted
-    generation plus every batch directory ABOVE its id. Batch dirs at or
-    below the generation are replay artifacts already folded in and are
-    skipped — this rule is what lets compaction run without a
-    transaction log. Only COMMITTED dirs (_SUCCESS marker) are read:
-    a half-written generation or batch never shadows real data.
-
-    Concurrency caveat: the directory listing resolves eagerly but the
-    files read lazily, so a compaction running between this call and
-    the consuming action can delete listed batch dirs (the read then
-    fails rather than silently losing rows). Call it between
-    compactions — or retry on failure; the retry sees the new
-    generation. Single-writer is assumed throughout (one streaming
-    query owns the sink)."""
-    gens = sorted(_sink_ids(out_dir, "compacted", committed_only=True))
-    cur = gens[-1] if gens else -1
-    paths = [os.path.join(out_dir, f"compacted={cur}")] if cur >= 0 else []
-    paths += [
-        os.path.join(out_dir, f"batch_id={i}")
-        for i in sorted(_sink_ids(out_dir, "batch_id", committed_only=True))
-        if i > cur
-    ]
-    if not paths:
-        raise ValueError(f"empty window sink at {out_dir!r}")
-    return spark.read.parquet(*paths)
 
 
 def interval_join_streams(

@@ -641,9 +641,11 @@ def test_cli_curate_replay_quarantine(spark, tmp_path, capsys):
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert report["units_passed"] == 1 and report["units_failed"] == 0
     assert report["replayed_rows"] == 1 and report["residual_rows"] == 0
-    from ffi_export_etl_spark.streaming.curate import read_kept
+    from ffi_export_etl_spark.streaming.events import read_generations
 
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {1, 50}
+    assert {
+        r["id"] for r in read_generations(spark, kept).collect()
+    } == {1, 50}
     import glob as _glob
 
     assert not _glob.glob(os.path.join(quarantine, "batch_id=*"))
@@ -659,10 +661,8 @@ def test_cli_curate_maintain(spark, tmp_path, capsys):
     import os
 
     from ffi_export_etl_spark.operators.validate import CheckSuite
-    from ffi_export_etl_spark.streaming.curate import (
-        read_kept,
-        streaming_curate,
-    )
+    from ffi_export_etl_spark.streaming.curate import streaming_curate
+    from ffi_export_etl_spark.streaming.events import read_generations
 
     src = str(tmp_path / "srcm")
     os.makedirs(src)
@@ -703,7 +703,9 @@ def test_cli_curate_maintain(spark, tmp_path, capsys):
     assert rep["kept_generation"] >= 0
     assert not _glob.glob(os.path.join(kept, "batch_id=*"))
     assert not _glob.glob(os.path.join(quarantine, "batch_id=*"))
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {1, 2}
+    assert {
+        r["id"] for r in read_generations(spark, kept).collect()
+    } == {1, 2}
 
     # idempotent rerun: nothing to fold, counts unchanged
     rc = main(["curate-maintain", "--kept", kept,
@@ -718,6 +720,16 @@ def test_cli_curate_maintain(spark, tmp_path, capsys):
     assert rc == 0
     rep3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep3 == {"kept_generation": -1, "kept_rows": 0}
+    # ... and so is an absent quarantine root: it folds and counts
+    # through the same layout as the kept corpus
+    rc = main(["curate-maintain", "--kept", str(tmp_path / "no_kept"),
+               "--quarantine", str(tmp_path / "no_quarantine")])
+    assert rc == 0
+    rep3q = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep3q == {
+        "kept_generation": -1, "kept_rows": 0,
+        "quarantine_generation": -1, "quarantined_rows": 0,
+    }
 
     # --exact-store/--minhash-store: the signature stores fold into
     # compacted generations (compact_signature_store); a pointed-

@@ -21,11 +21,13 @@ from pyspark.sql import functions as F
 
 from ffi_export_etl_spark.operators.validate import CheckSuite
 from ffi_export_etl_spark.streaming.curate import (
-    compact_kept,
     funnel_drop_rates,
-    read_kept,
     replay_quarantine,
     streaming_curate,
+)
+from ffi_export_etl_spark.streaming.events import (
+    compact_generations,
+    read_generations,
 )
 from ffi_export_etl_spark.streaming.dedup import compact_signature_store
 
@@ -38,6 +40,11 @@ TEXT_C = " ".join(f"c{i}" for i in range(30))
 TEXT_D = " ".join(f"d{i}" for i in range(30))
 TEXT_E = " ".join(f"e{i}" for i in range(30))
 TEXT_F = " ".join(f"f{i}" for i in range(30))
+
+
+def _ids(df):
+    return {r["id"] for r in df.collect()}
+
 
 def test_daily_ops_lifecycle(spark, tmp_path):
     # built inside the test: in_range constructs Columns, which needs
@@ -82,7 +89,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
         )
 
     def _maintain():
-        compact_kept(spark, roots["kept"], num_files=1)
+        compact_generations(spark, roots["kept"], num_files=1)
         compact_signature_store(spark, roots["exact"], 1)
         compact_signature_store(spark, roots["mh"], 1)
 
@@ -90,7 +97,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
     _drop("w0", [(1, TEXT_A, "web"), (2, TEXT_B, "web")])
     _drop("w1", [(3, TEXT_A, "web"), (4, TEXT_C, "web")])
     _drain(broken_suite)
-    assert {r["id"] for r in read_kept(spark, roots["kept"]).collect()} \
+    assert _ids(read_generations(spark, roots["kept"])) \
         == {1, 2, 4}
     _maintain()  # night 1: kept generation + store folds (headroom)
 
@@ -100,7 +107,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
     _drop("w3", [(5, TEXT_C.replace("c7", "C7"), "web"),
                  (6, TEXT_E, "web")])
     _drain(broken_suite)
-    kept_ids = {r["id"] for r in read_kept(spark, roots["kept"]).collect()}
+    kept_ids = _ids(read_generations(spark, roots["kept"]))
     assert kept_ids == {1, 2, 4, 6}                # 5 near-dup dropped
     assert os.path.isdir(os.path.join(roots["dlq"], "batch_id=2"))
     _maintain()  # night 2: folds day-2 deltas too
@@ -110,7 +117,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
     _drop("w4", [(7, TEXT_E, "web"), (8, "tiny", "web"),
                  (9, TEXT_F, "web")])
     _drain(broken_suite)
-    kept_ids = {r["id"] for r in read_kept(spark, roots["kept"]).collect()}
+    kept_ids = _ids(read_generations(spark, roots["kept"]))
     assert kept_ids == {1, 2, 4, 6, 9}
 
     # ---- the rule was wrong: fix it and replay the DLQ ----
@@ -127,7 +134,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
         profile_store_path=roots["profile"],
     )
     assert out["units_passed"] == 1 and out["units_failed"] == 0
-    kept_ids = {r["id"] for r in read_kept(spark, roots["kept"]).collect()}
+    kept_ids = _ids(read_generations(spark, roots["kept"]))
     assert kept_ids == {1, 2, 4, 6, 9, 999}
     assert not any(
         n.startswith(("batch_id=", "compacted="))
@@ -145,7 +152,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
         jaccard_threshold_pct=50,
     )
     assert again["units_passed"] == 0 and again["units_failed"] == 0
-    assert {r["id"] for r in read_kept(spark, roots["kept"]).collect()} \
+    assert _ids(read_generations(spark, roots["kept"])) \
         == {1, 2, 4, 6, 9, 999}
 
     # ---- monitoring stores: one funnel row-set per curated batch
@@ -176,7 +183,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
     # ---- final maintenance is idempotent, then the corpus ships as
     # verified training shards ----
     _maintain()
-    assert {r["id"] for r in read_kept(spark, roots["kept"]).collect()} \
+    assert _ids(read_generations(spark, roots["kept"])) \
         == {1, 2, 4, 6, 9, 999}
     from ffi_export_etl_spark.sinks.shards import (
         verify_training_shards,
@@ -185,7 +192,7 @@ def test_daily_ops_lifecycle(spark, tmp_path):
 
     shards = str(tmp_path / "shards")
     write_training_shards(
-        read_kept(spark, roots["kept"]).select(
+        read_generations(spark, roots["kept"]).select(
             "id", "source", "text", "n_words"
         ),
         shards, "id", rows_per_shard=3, checksums=True,

@@ -124,8 +124,6 @@ KEPT_UNREACHED_DEFS = {
         "inverse used by the quantization round-trip test",
     "operators.media_codecs:encode_ppm": "builds image fixtures",
     "operators.multimodal:set_decoder": "injects a fake decoder in tests",
-    "streaming.events:windowed_counts_to_files":
-        "the writer the generation-protocol tests drive",
     "sinks.files:csv_dump":
         "the reference's debug CSV path (parser/xml.py:758-765)",
     "plans.curation:release_curation_caches":

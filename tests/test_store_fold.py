@@ -2,11 +2,11 @@
 streaming signature stores, and its transparent read-back by the curate
 daemon (_read_store) across sessions.
 
-The contract under test is the window-sink discipline
+The contract under test is the generation layout
 (streaming/events.py): newest COMMITTED ``compacted=<id>`` generation +
 batch dirs above its id, commit marker = the generation write's
-_SUCCESS, crash windows covered by the reader rule instead of a
-transaction log.
+_SUCCESS. Its crash windows are in the fault matrix
+(test_fold_faults.py).
 """
 
 from __future__ import annotations
@@ -100,12 +100,11 @@ def test_fold_preserves_store_content_and_continues(spark, tmp_path):
     tables = spark.catalog.listTables()
     warehouse = _warehouse_files(spark)
     for root in stores:
-        fold = compact_signature_store(spark, root, 1)
         # replay headroom: of dirs {0, 1} only batch 0 folds — the newest
         # committed batch may still be unrecorded in the stream's
         # checkpoint, and folding it would wedge a checkpoint-reuse
         # restart on the fail-fast guard forever
-        assert fold == {"generation": 0, "folded_dirs": 1}
+        assert compact_signature_store(spark, root, 1) == 0
         # consumed dirs are gone; the held-back newest dir remains
         assert sorted(os.listdir(root)) == ["batch_id=1", "compacted=0"]
         # the reader view equals the pre-fold store content
@@ -154,50 +153,10 @@ def test_fold_preserves_store_content_and_continues(spark, tmp_path):
 
     # a second fold picks up the tail minus the new headroom dir and
     # replaces the generation
-    fold2 = compact_signature_store(spark, roots["exact"], 1)
-    assert fold2 == {"generation": 3, "folded_dirs": 3}
+    assert compact_signature_store(spark, roots["exact"], 1) == 3
     assert sorted(os.listdir(roots["exact"])) == [
         "batch_id=4", "compacted=3"
     ]
-
-
-def test_fold_noop_and_crash_windows(spark, tmp_path):
-    """Idempotence + both crash windows: a re-fold with no new dirs is a
-    no-op; a resurrected consumed dir (commit-then-clean crash) is
-    excluded by the reader rule and removed by the next fold; an
-    uncommitted generation (crash mid-write) is ignored by the reader
-    and removed by the next fold."""
-    roots = _session1(spark, tmp_path, "f2")
-    root = roots["exact"]
-    # stash a copy of batch 0's dir to simulate the crash window later
-    stash = str(tmp_path / "stash_b0")
-    shutil.copytree(os.path.join(root, "batch_id=0"), stash)
-    fold = compact_signature_store(spark, root, 1)
-    gen_dir = os.path.join(root, f"compacted={fold['generation']}")
-    view_cols = spark.read.parquet(gen_dir)
-    folded_rows = _rows(_read_store(spark, root, view_cols))
-    # no-op re-fold: same generation, nothing folded
-    again = compact_signature_store(spark, root, 1)
-    assert again == {"generation": fold["generation"], "folded_dirs": 0}
-    # commit-then-clean crash: the consumed dir reappears; the reader
-    # must not double-count it
-    shutil.copytree(stash, os.path.join(root, "batch_id=0"))
-    assert _rows(_read_store(spark, root, view_cols)) == folded_rows
-    # ... and the next fold just removes it (still a no-op fold)
-    third = compact_signature_store(spark, root, 1)
-    assert third["folded_dirs"] == 0
-    assert not os.path.isdir(os.path.join(root, "batch_id=0"))
-    # a generation whose write crashed (no _SUCCESS) must never shadow
-    # the committed one or the dirs above it
-    partial = os.path.join(root, "compacted=99")
-    view_cols.limit(1).write.parquet(partial)
-    os.remove(os.path.join(partial, "_SUCCESS"))
-    assert _rows(_read_store(spark, root, view_cols)) == folded_rows
-    assert store_row_count(spark, root) == len(folded_rows)
-    after = compact_signature_store(spark, root, 1)
-    assert after == {"generation": fold["generation"], "folded_dirs": 0}
-    assert not os.path.isdir(partial)
-    assert os.path.isdir(gen_dir)
 
 
 def test_retired_fold_layout_raises(spark, tmp_path):
@@ -245,8 +204,8 @@ def test_session_base_covers_sidecar_and_tail(spark, tmp_path):
     from ffi_export_etl_spark.streaming.dedup import _session_base
 
     roots = _session1(spark, tmp_path, "f4")
-    fold = compact_signature_store(spark, roots["exact"], 1)
-    assert fold["generation"] == 0           # headroom held back dir 1
+    gen = compact_signature_store(spark, roots["exact"], 1)
+    assert gen == 0                          # headroom held back dir 1
     base = _session_base(
         spark, str(tmp_path / "ckpt_f4_probe"), "exact", roots["exact"]
     )
@@ -257,4 +216,4 @@ def test_session_base_covers_sidecar_and_tail(spark, tmp_path):
     base2 = _session_base(
         spark, str(tmp_path / "ckpt_f4_probe2"), "exact", roots["exact"]
     )
-    assert base2 == fold["generation"] + 1
+    assert base2 == gen + 1

@@ -304,152 +304,6 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     assert spark.read.parquet(target).count() == 140
 
 
-@pytest.mark.slow_tail  # r12 suite split
-def test_compacting_window_sink_bounds_file_count(spark, tmp_path):
-    """r5 judge item 8: the windowed file sink's small-file growth is
-    bounded. Split the events table into 12 source files driven one per
-    micro-batch; with compact_every=4 the sink must end with far fewer
-    parquet data files than the one-dir-per-batch baseline, while
-    read_window_sink returns exactly the baseline's rows (compaction is
-    lossless and the reader rule skips replay artifacts)."""
-    import os
-
-    from ffi_export_etl_spark.streaming.events import (
-        compact_window_sink,
-        read_window_sink,
-        windowed_counts_to_files,
-    )
-
-    src = str(tmp_path / "src")
-    spark.read.parquet(_events_path()).repartition(12).write.parquet(src)
-
-    def data_files(d):
-        return [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    base_out = str(tmp_path / "out_nocompact")
-    windowed_counts_to_files(
-        spark, src, base_out, str(tmp_path / "ck1"),
-        window="30 minutes", watermark="10 minutes",
-    )
-    comp_out = str(tmp_path / "out_compact")
-    windowed_counts_to_files(
-        spark, src, comp_out, str(tmp_path / "ck2"),
-        window="30 minutes", watermark="10 minutes", compact_every=4,
-    )
-
-    n_base, n_comp = len(data_files(base_out)), len(data_files(comp_out))
-    assert n_base >= 12  # one dir (>=1 file) per micro-batch
-    assert n_comp <= 6, (n_comp, n_base)  # generation + tail batches
-
-    base_rows = {
-        tuple(r)
-        for r in spark.read.parquet(base_out).select(
-            F.col("window.start"), "event_type", "n_events", "value_sum"
-        ).collect()
-    }
-    comp_rows = {
-        tuple(r)
-        for r in read_window_sink(spark, comp_out).select(
-            F.col("window.start"), "event_type", "n_events", "value_sum"
-        ).collect()
-    }
-    assert comp_rows == base_rows and len(base_rows) > 0
-
-    # final maintenance compaction: everything folds into ONE generation
-    # of one file; a second run is a no-op at the same generation
-    gen = compact_window_sink(spark, comp_out)
-    assert len(data_files(comp_out)) == 1
-    assert compact_window_sink(spark, comp_out) == gen
-    comp_rows2 = {
-        tuple(r)
-        for r in read_window_sink(spark, comp_out).select(
-            F.col("window.start"), "event_type", "n_events", "value_sum"
-        ).collect()
-    }
-    assert comp_rows2 == base_rows
-
-    # replay artifact: re-create an already-folded batch dir (what a
-    # crash-replay of a consumed batch leaves behind) — the reader rule
-    # must skip it and the next compaction must clean it up
-    stale = os.path.join(comp_out, "batch_id=0")
-    spark.read.parquet(comp_out).limit(5).write.parquet(stale)
-    comp_rows3 = {
-        tuple(r)
-        for r in read_window_sink(spark, comp_out).select(
-            F.col("window.start"), "event_type", "n_events", "value_sum"
-        ).collect()
-    }
-    assert comp_rows3 == base_rows
-    compact_window_sink(spark, comp_out)
-    assert not os.path.isdir(stale)
-
-
-@pytest.mark.slow_tail  # r12 suite split
-def test_compaction_ignores_uncommitted_generation(spark, tmp_path):
-    """Crash-tolerance of the generation scheme: a compacted=<id> dir
-    WITHOUT _SUCCESS (a generation write that died midway) must never
-    become the current generation — the reader skips it, and the next
-    compaction garbage-collects it and re-folds the real inputs."""
-    import os
-    import shutil
-
-    from ffi_export_etl_spark.streaming.events import (
-        compact_window_sink,
-        read_window_sink,
-        windowed_counts_to_files,
-    )
-
-    src = str(tmp_path / "src")
-    spark.read.parquet(_events_path()).repartition(6).write.parquet(src)
-    out = str(tmp_path / "out")
-    windowed_counts_to_files(
-        spark, src, out, str(tmp_path / "ck"),
-        window="30 minutes", watermark="10 minutes",
-    )
-    want = {
-        tuple(r)
-        for r in read_window_sink(spark, out).select(
-            F.col("window.start"), "event_type", "n_events"
-        ).collect()
-    }
-
-    # simulate a generation write that crashed midway: data file
-    # present, no _SUCCESS, id higher than every batch
-    partial = os.path.join(out, "compacted=99")
-    os.makedirs(partial)
-    some_batch = next(
-        os.path.join(out, d) for d in os.listdir(out) if d.startswith("batch_id=")
-    )
-    for f in os.listdir(some_batch):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(some_batch, f), partial)
-            break
-
-    got = {
-        tuple(r)
-        for r in read_window_sink(spark, out).select(
-            F.col("window.start"), "event_type", "n_events"
-        ).collect()
-    }
-    assert got == want  # partial generation invisible to the reader
-
-    gen = compact_window_sink(spark, out)
-    assert not os.path.isdir(partial)  # garbage-collected, not adopted
-    assert gen < 99
-    got2 = {
-        tuple(r)
-        for r in read_window_sink(spark, out).select(
-            F.col("window.start"), "event_type", "n_events"
-        ).collect()
-    }
-    assert got2 == want
-
-
 def _ssj_write_one(spark, tmp_path, src, name, rows, age_s):
     """Stage one (ts micros, k) parquet file with a pinned mtime so the
     file source's batch order is deterministic (shared by the

@@ -198,14 +198,14 @@ def test_kept_compaction_bounds_files(spark, tmp_path):
     """r6 (judge item 7): a multi-day simulated drain with
     kept_compact_every folds the kept corpus into generations — the
     batch-dir count stays bounded instead of growing one dir per
-    micro-batch, read_kept sees every survivor exactly once on the
-    mixed layout, and final maintenance (compact_kept) leaves ONE
+    micro-batch, read_generations sees every survivor exactly once on the
+    mixed layout, and final maintenance (compact_generations) leaves ONE
     generation."""
     import glob
 
-    from ffi_export_etl_spark.streaming.curate import (
-        compact_kept,
-        read_kept,
+    from ffi_export_etl_spark.streaming.events import (
+        compact_generations,
+        read_generations,
     )
 
     src = str(tmp_path / "src_k")
@@ -235,14 +235,14 @@ def test_kept_compaction_bounds_files(spark, tmp_path):
     # leaves one generation + the tail batches since the last fold
     assert len(gen_dirs) == 1
     assert len(batch_dirs) <= 2, sorted(batch_dirs)
-    got = {r["id"] for r in read_kept(spark, kept).collect()}
+    got = {r["id"] for r in read_generations(spark, kept).collect()}
     assert got == {100 + i for i in range(n_waves)}
     # final maintenance: everything folds into one generation
-    gen = compact_kept(spark, kept, num_files=1)
+    gen = compact_generations(spark, kept, num_files=1)
     assert gen >= 0
     assert glob.glob(os.path.join(kept, "batch_id=*")) == []
     assert len(glob.glob(os.path.join(kept, "compacted=*"))) == 1
-    got2 = {r["id"] for r in read_kept(spark, kept).collect()}
+    got2 = {r["id"] for r in read_generations(spark, kept).collect()}
     assert got2 == got
     # exactly one data-bearing parquet file remains after num_files=1
     files = glob.glob(os.path.join(kept, "compacted=*", "*.parquet"))
@@ -254,13 +254,13 @@ def test_continue_mode_after_kept_compaction(spark, tmp_path):
     COMPACTED must base its absolute batch ids ABOVE the generation id.
     The plain-parquet base probe cannot parse the mixed compacted=/
     batch_id= layout and silently restarted at 0 — day-2 batches then
-    landed at or below the generation id, where read_kept skips them
+    landed at or below the generation id, where read_generations skips them
     and the next compaction deletes them (data loss)."""
     import glob
 
-    from ffi_export_etl_spark.streaming.curate import (
-        compact_kept,
-        read_kept,
+    from ffi_export_etl_spark.streaming.events import (
+        compact_generations,
+        read_generations,
     )
 
     src = str(tmp_path / "src_g")
@@ -285,7 +285,7 @@ def test_continue_mode_after_kept_compaction(spark, tmp_path):
         checkpoint=str(tmp_path / "ckpt_g1"),
         **common,
     )
-    gen = compact_kept(spark, kept, num_files=1)  # nightly maintenance
+    gen = compact_generations(spark, kept, num_files=1)  # nightly maintenance
     assert gen == 2
     # day 2: lost checkpoint + continue; one fresh wave
     spark.createDataFrame(
@@ -306,11 +306,11 @@ def test_continue_mode_after_kept_compaction(spark, tmp_path):
     ]
     assert tail and min(tail) > gen, sorted(tail)
     # ...so the generation-aware reader sees day 1 AND day 2
-    got = {r["id"] for r in read_kept(spark, kept).collect()}
+    got = {r["id"] for r in read_generations(spark, kept).collect()}
     assert got == {200, 201, 202, 210}
     # and a later compaction folds, never deletes, the day-2 rows
-    compact_kept(spark, kept, num_files=1)
-    got2 = {r["id"] for r in read_kept(spark, kept).collect()}
+    compact_generations(spark, kept, num_files=1)
+    got2 = {r["id"] for r in read_generations(spark, kept).collect()}
     assert got2 == got
 
 
@@ -508,7 +508,7 @@ def test_quarantine_compaction_bounds_file_count(spark, tmp_path):
     import glob
 
     from ffi_export_etl_spark.operators.validate import CheckSuite
-    from ffi_export_etl_spark.streaming.events import read_window_sink
+    from ffi_export_etl_spark.streaming.events import read_generations
 
     src = str(tmp_path / "src_qc")
     os.makedirs(src, exist_ok=True)
@@ -540,7 +540,7 @@ def test_quarantine_compaction_bounds_file_count(spark, tmp_path):
     assert len(batch_dirs) <= 2, sorted(batch_dirs)
     assert len(gen_dirs) == 1, sorted(gen_dirs)
     # compaction folded, never dropped: all 12 quarantined rows readable
-    quar = read_window_sink(spark, quarantine).collect()
+    quar = read_generations(spark, quarantine).collect()
     assert sorted(r["doc_id"] for r in quar) == sorted(
         [10 * i for i in range(n_waves)] * 2
     )
@@ -557,11 +557,8 @@ def test_replay_quarantine_end_to_end(spark, tmp_path):
     import glob
 
     from ffi_export_etl_spark.operators.validate import CheckSuite
-    from ffi_export_etl_spark.streaming.curate import (
-        read_kept,
-        replay_quarantine,
-    )
-    from ffi_export_etl_spark.streaming.events import read_window_sink
+    from ffi_export_etl_spark.streaming.curate import replay_quarantine
+    from ffi_export_etl_spark.streaming.events import read_generations
 
     src = str(tmp_path / "src_rq")
     os.makedirs(src, exist_ok=True)
@@ -600,8 +597,10 @@ def test_replay_quarantine_end_to_end(spark, tmp_path):
         input_suite=broken,
         quarantine_path=quarantine,
     )
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {1, 2}
-    assert len(read_window_sink(spark, quarantine).collect()) == 6
+    assert {
+        r["id"] for r in read_generations(spark, kept).collect()
+    } == {1, 2}
+    assert len(read_generations(spark, quarantine).collect()) == 6
 
     # the FIXED rule — dry run first: same accounting, nothing touched
     fixed = CheckSuite().not_null("doc_id").unique("doc_id")
@@ -612,8 +611,10 @@ def test_replay_quarantine_end_to_end(spark, tmp_path):
     )
     assert dry["dry_run"] and dry["units_passed"] == 2
     assert {u["id"] for u in dry["units"] if not u["passes"]} == {2}
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {1, 2}
-    assert len(read_window_sink(spark, quarantine).collect()) == 6
+    assert {
+        r["id"] for r in read_generations(spark, kept).collect()
+    } == {1, 2}
+    assert len(read_generations(spark, quarantine).collect()) == 6
 
     out = replay_quarantine(
         spark, quarantine, fixed,
@@ -624,13 +625,13 @@ def test_replay_quarantine_end_to_end(spark, tmp_path):
     assert out["replayed_rows"] == 4 and out["residual_rows"] == 2, out
     # replayed docs entered through the NORMAL curate flow: 14 is an
     # exact dup of stored doc 2 and was deduped away; 7, 8, 15 kept
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {
+    assert {r["id"] for r in read_generations(spark, kept).collect()} == {
         1, 2, 7, 8, 15,
     }
     # shrunken DLQ: only the genuinely bad unit remains, IN PLACE (no
     # synthetic generation id — review r8: one above the current max
     # could collide with a future quarantine batch slot and shadow it)
-    residue = read_window_sink(spark, quarantine).collect()
+    residue = read_generations(spark, quarantine).collect()
     assert sorted(r["doc_id"] for r in residue) == [9, 9]
     assert all("unique:doc_id" in r["_dq_error"] for r in residue)
     assert out["residual_generation"] is None
@@ -648,10 +649,10 @@ def test_replay_quarantine_end_to_end(spark, tmp_path):
         min_words=5, jaccard_threshold_pct=50,
     )
     assert out2["units_passed"] == 0 and out2["units_failed"] == 1, out2
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {
+    assert {r["id"] for r in read_generations(spark, kept).collect()} == {
         1, 2, 7, 8, 15,
     }
-    residue2 = read_window_sink(spark, quarantine).collect()
+    residue2 = read_generations(spark, quarantine).collect()
     assert sorted(r["doc_id"] for r in residue2) == [9, 9]
 
     # an EMPTY-after-fix replay: fix the residue by replaying with a
@@ -663,7 +664,7 @@ def test_replay_quarantine_end_to_end(spark, tmp_path):
         min_words=5, jaccard_threshold_pct=50,
     )
     assert out3["units_failed"] == 0 and out3["units_passed"] == 1, out3
-    kept_ids = {r["id"] for r in read_kept(spark, kept).collect()}
+    kept_ids = {r["id"] for r in read_generations(spark, kept).collect()}
     assert 9 in kept_ids
     assert not glob.glob(os.path.join(quarantine, "compacted=*"))
     assert not glob.glob(os.path.join(quarantine, "batch_id=*"))
@@ -689,10 +690,8 @@ def test_replay_quarantine_property_sweep(spark):
     from hypothesis import strategies as st
 
     from ffi_export_etl_spark.operators.validate import CheckSuite
-    from ffi_export_etl_spark.streaming.curate import (
-        read_kept,
-        replay_quarantine,
-    )
+    from ffi_export_etl_spark.streaming.curate import replay_quarantine
+    from ffi_export_etl_spark.streaming.events import read_generations
 
     def text_for(i: int) -> str:
         return " ".join(f"tok{i}x{j}" for j in range(12))
@@ -755,7 +754,9 @@ def test_replay_quarantine_property_sweep(spark):
             }
             pass_ids = {i for b in should_pass for i in units[b]}
             if pass_ids:
-                kept_ids = {r["id"] for r in read_kept(spark, kept).collect()}
+                kept_ids = {
+                    r["id"] for r in read_generations(spark, kept).collect()
+                }
                 assert kept_ids == pass_ids
             else:
                 assert not os.path.isdir(kept)
@@ -774,7 +775,7 @@ def test_replay_quarantine_property_sweep(spark):
             ) == after
             if pass_ids:
                 assert {
-                    r["id"] for r in read_kept(spark, kept).collect()
+                    r["id"] for r in read_generations(spark, kept).collect()
                 } == pass_ids
             # (c) kept set equals the direct non-quarantined run over
             # the passing units only
@@ -799,7 +800,7 @@ def test_replay_quarantine_property_sweep(spark):
                 )
                 assert {
                     r["id"]
-                    for r in read_kept(spark, direct_kept).collect()
+                    for r in read_generations(spark, direct_kept).collect()
                 } == pass_ids
         finally:
             shutil.rmtree(root, ignore_errors=True)
@@ -810,8 +811,8 @@ def test_replay_quarantine_property_sweep(spark):
 def test_replay_quarantine_no_resurrection_from_crash_window(
     spark, tmp_path
 ):
-    """Review r8: compact_window_sink's commit-then-clean crash window
-    can leave committed batch_id <= generation dirs beside the
+    """compact_generations's commit-then-clean crash window can
+    leave committed batch_id <= generation dirs beside the
     generation (already folded in, shadowed by the reader rule). When
     replay_quarantine deletes a PASSING generation, it must delete the
     shadowed stale dirs with it — otherwise their already-curated rows
@@ -820,11 +821,13 @@ def test_replay_quarantine_no_resurrection_from_crash_window(
 
     from ffi_export_etl_spark.operators.validate import CheckSuite
     from ffi_export_etl_spark.streaming.curate import (
-        read_kept,
         replay_quarantine,
         streaming_curate,
     )
-    from ffi_export_etl_spark.streaming.events import compact_window_sink
+    from ffi_export_etl_spark.streaming.events import (
+        compact_generations,
+        read_generations,
+    )
 
     src = str(tmp_path / "src_cw")
     os.makedirs(src)
@@ -858,7 +861,7 @@ def test_replay_quarantine_no_resurrection_from_crash_window(
     # fold the two quarantined dirs into a generation, then simulate
     # the crash window: re-create one consumed dir with its (already
     # folded) content, committed
-    gen = compact_window_sink(spark, quarantine, num_files=1)
+    gen = compact_generations(spark, quarantine, num_files=1)
     stale = spark.createDataFrame(
         [(21, text, "web", "data-quality checks failed: stale")],
         "doc_id: long, text: string, source: string, _dq_error: string",
@@ -880,7 +883,7 @@ def test_replay_quarantine_no_resurrection_from_crash_window(
     assert out["units_passed"] == 1 and out["units_failed"] == 0, out
     assert not glob.glob(os.path.join(quarantine, "compacted=*"))
     assert not glob.glob(os.path.join(quarantine, "batch_id=*"))
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {
+    assert {r["id"] for r in read_generations(spark, kept).collect()} == {
         1, 21, 22,
     }
 
@@ -927,13 +930,12 @@ def test_replay_quarantine_failing_generation_left_in_place(
 
     from ffi_export_etl_spark.operators.validate import CheckSuite
     from ffi_export_etl_spark.streaming.curate import (
-        read_kept,
         replay_quarantine,
         streaming_curate,
     )
     from ffi_export_etl_spark.streaming.events import (
-        compact_window_sink,
-        read_window_sink,
+        compact_generations,
+        read_generations,
     )
 
     src = str(tmp_path / "src_fg")
@@ -964,7 +966,7 @@ def test_replay_quarantine_failing_generation_left_in_place(
         input_suite=suite,
         quarantine_path=quarantine,
     )
-    gen = compact_window_sink(spark, quarantine, num_files=1)
+    gen = compact_generations(spark, quarantine, num_files=1)
     assert gen >= 0
 
     # replay with the SAME (correct) suite: the dup-id rows still fail
@@ -975,10 +977,10 @@ def test_replay_quarantine_failing_generation_left_in_place(
     )
     assert out["units_failed"] == 1 and out["units_passed"] == 0, out
     assert out["residual_generation"] == gen
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {1}
+    assert {r["id"] for r in read_generations(spark, kept).collect()} == {1}
     gen_dirs = glob.glob(os.path.join(quarantine, "compacted=*"))
     assert len(gen_dirs) == 1 and gen_dirs[0].endswith(f"compacted={gen}")
-    assert len(read_window_sink(spark, quarantine).collect()) == 4
+    assert len(read_generations(spark, quarantine).collect()) == 4
 
 
 def test_replay_quarantine_with_span_store(spark, tmp_path):
@@ -989,10 +991,10 @@ def test_replay_quarantine_with_span_store(spark, tmp_path):
     span stage included."""
     from ffi_export_etl_spark.operators.validate import CheckSuite
     from ffi_export_etl_spark.streaming.curate import (
-        read_kept,
         replay_quarantine,
         streaming_curate,
     )
+    from ffi_export_etl_spark.streaming.events import read_generations
 
     L = 5
     boiler = " ".join(f"rb{i}" for i in range(L))
@@ -1029,7 +1031,7 @@ def test_replay_quarantine_with_span_store(spark, tmp_path):
         ),
         quarantine_path=quarantine,
     )
-    assert {r["id"] for r in read_kept(spark, kept).collect()} == {1}
+    assert {r["id"] for r in read_generations(spark, kept).collect()} == {1}
     n_store_before = spark.read.parquet(span).count()
 
     out = replay_quarantine(
@@ -1040,7 +1042,7 @@ def test_replay_quarantine_with_span_store(spark, tmp_path):
     )
     assert out["units_passed"] == 1 and out["units_failed"] == 0, out
     texts = {
-        r["id"]: r["text"] for r in read_kept(spark, kept).collect()
+        r["id"]: r["text"] for r in read_generations(spark, kept).collect()
     }
     assert set(texts) == {1, 42}
     assert "rb0" in texts[1]       # the original keeper holds the run

@@ -1,7 +1,7 @@
 """compact_warehouse (sinks/files.py): fold the parquet warehouse's
 per-batch append files into sized files — rows preserved exactly,
-idempotent, crash windows repaired, schema-evolved appends merged.
-The batch-warehouse twin of the signature-store fold tests."""
+idempotent, schema-evolved appends merged. Its crash windows are in
+the fault matrix (test_fold_faults.py), with the generation fold's."""
 
 from __future__ import annotations
 
@@ -102,20 +102,6 @@ def test_compact_merges_evolved_schemas(spark, tmp_path):
     assert cols == {"k", "v", "w"}
 
 
-def test_crash_repair_promotes_completed_tmp(spark, warehouse):
-    """Crash between the two renames with the new data fully written
-    (tmp has _SUCCESS): the next run promotes the tmp to be the table."""
-    t = os.path.join(warehouse, "T")
-    before = _rows(spark, t)
-    compact_warehouse(spark, warehouse, min_files=2)
-    # re-enact the crash: the freshly folded table IS a completed tmp
-    os.rename(t, os.path.join(warehouse, ".compact_tmp.T"))
-    out = compact_warehouse(spark, warehouse, min_files=2)
-    assert os.path.isdir(t)
-    assert _rows(spark, t) == before
-    assert out["T"]["action"] == "skipped"  # promoted, already compact
-
-
 def test_partitioned_staging_invisible_to_whole_table_readers(
     spark, tmp_path
 ):
@@ -153,35 +139,6 @@ def test_partitioned_staging_invisible_to_whole_table_readers(
     assert _rows(spark, t) == before
     assert not os.path.isdir(os.path.join(t, ".compact_tmp.cell=0"))
     assert not os.path.isdir(os.path.join(t, ".compact_old.cell=0"))
-
-
-def test_crash_repair_restores_old_when_tmp_incomplete(spark, warehouse):
-    """Crash mid-write (no _SUCCESS in tmp) after the table rename: the
-    next run unwinds to the pre-fold table and refolds it."""
-    t = os.path.join(warehouse, "T")
-    tmp, old = _staging_paths(t)
-    before = _rows(spark, t)
-    os.rename(t, old)
-    os.makedirs(tmp)  # partial write, no _SUCCESS
-    with open(os.path.join(tmp, "part-junk.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    out = compact_warehouse(spark, warehouse, min_files=2)
-    assert out["T"]["action"] == "compacted"
-    assert _rows(spark, t) == before
-    assert not os.path.isdir(tmp)
-    assert not os.path.isdir(old)
-
-
-def test_stale_dirs_cleared_before_refold(spark, warehouse):
-    """Aborted-run residue (tmp/old sitting NEXT TO a live table) is
-    cleared, never read into the fold."""
-    t = os.path.join(warehouse, "T")
-    before = _rows(spark, t)
-    for stale in _staging_paths(t):
-        shutil.copytree(t, stale)
-    out = compact_warehouse(spark, warehouse, min_files=2)
-    assert out["T"]["rows"] == 20  # not doubled by the stale copies
-    assert _rows(spark, t) == before
 
 
 def test_explicit_tables_and_min_files(spark, warehouse, tmp_path):
