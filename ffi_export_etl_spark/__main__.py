@@ -74,6 +74,71 @@ def _stream_input_suite(args):
     )
 
 
+def _parse_increment_args(ap, argv: list[str]):
+    """Add the flags curate-stream and curate-replay-quarantine share —
+    the kept corpus and signature stores, the schema, and the per-batch
+    curate stages — then parse ``argv``."""
+    ap.add_argument("--kept", required=True,
+                    help="curated output root (batch_id=N dirs)")
+    ap.add_argument("--exact-store", required=True)
+    ap.add_argument("--minhash-store", required=True)
+    ap.add_argument("--span-store", default=None,
+                    help="window-digest store root (requires "
+                         "--span-dedup-tokens)")
+    ap.add_argument("--id-col", default="doc_id")
+    ap.add_argument("--text-col", default="text")
+    ap.add_argument("--source-col", default="source")
+    ap.add_argument("--min-words", type=int, default=20)
+    ap.add_argument("--jaccard-threshold-pct", type=int, default=20)
+    ap.add_argument("--shingle-mode", choices=("word", "char"),
+                    default="word")
+    ap.add_argument("--span-dedup-tokens", type=int, default=None)
+    ap.add_argument("--kept-compact-every", type=int, default=None,
+                    help="fold the kept corpus's batch dirs into one "
+                         "generation every N batches (bounds file "
+                         "count for cron-driven daemons)")
+    ap.add_argument("--profile-store", default=None,
+                    help="append one mergeable profile row per batch "
+                         "(HLL sketches + exact counts over the kept "
+                         "rows); report over it with the 'profile' "
+                         "subcommand's --from-store")
+    ap.add_argument("--input-html", action="store_true",
+                    help="arrivals are raw HTML: extract plain text "
+                         "before any stage (keep this flag constant "
+                         "across sessions of one store family)")
+    ap.add_argument("--c4-line-clean", action="store_true",
+                    help="C4 line rule + page-drop markers per batch")
+    ap.add_argument("--gopher-rules", action="store_true",
+                    help="Gopher document-quality heuristics per batch")
+    args = ap.parse_args(argv)
+    if (args.span_store is None) != (args.span_dedup_tokens is None):
+        ap.error("--span-store and --span-dedup-tokens go together")
+    return args
+
+
+def _increment_kwargs(args) -> dict:
+    """The store, schema and stage keywords both incremental commands
+    pass to the curate increment."""
+    return dict(
+        kept_path=args.kept,
+        exact_store_path=args.exact_store,
+        minhash_store_path=args.minhash_store,
+        id_col=args.id_col,
+        text_col=args.text_col,
+        source_col=args.source_col,
+        span_store_path=args.span_store,
+        kept_compact_every=args.kept_compact_every,
+        profile_store_path=args.profile_store,
+        min_words=args.min_words,
+        jaccard_threshold_pct=args.jaccard_threshold_pct,
+        shingle_mode=args.shingle_mode,
+        span_dedup_tokens=args.span_dedup_tokens,
+        input_html=args.input_html,
+        c4_line_clean=args.c4_line_clean,
+        gopher_rules=args.gopher_rules,
+    )
+
+
 def curate_stream_main(argv: list[str]) -> int:
     """``python -m ffi_export_etl_spark curate-stream``: the continuous
     (daily-increment) shape — drain a drop directory of parquet doc
@@ -89,29 +154,10 @@ def curate_stream_main(argv: list[str]) -> int:
     )
     ap.add_argument("--source-dir", required=True,
                     help="parquet doc files / glob to drain")
-    ap.add_argument("--kept", required=True,
-                    help="curated output root (batch_id=N dirs)")
-    ap.add_argument("--exact-store", required=True)
-    ap.add_argument("--minhash-store", required=True)
-    ap.add_argument("--span-store", default=None,
-                    help="window-digest store root (requires "
-                         "--span-dedup-tokens)")
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
-    ap.add_argument("--source-col", default="source")
-    ap.add_argument("--min-words", type=int, default=20)
-    ap.add_argument("--jaccard-threshold-pct", type=int, default=20)
-    ap.add_argument("--shingle-mode", choices=("word", "char"),
-                    default="word")
-    ap.add_argument("--span-dedup-tokens", type=int, default=None)
     ap.add_argument("--max-files-per-trigger", type=int, default=1)
     ap.add_argument("--on-existing-store", choices=("replay", "continue"),
                     default="replay")
-    ap.add_argument("--kept-compact-every", type=int, default=None,
-                    help="fold the kept corpus's batch dirs into one "
-                         "generation every N batches (bounds file "
-                         "count for cron-driven daemons)")
     ap.add_argument("--require-input-quality", action="store_true",
                     help="gate every micro-batch on data-quality "
                          "checks (non-null unique ids, non-null text)")
@@ -120,28 +166,13 @@ def curate_stream_main(argv: list[str]) -> int:
                          "(batch_id=N dirs with a _dq_error column) "
                          "instead of stopping the stream; requires "
                          "--require-input-quality")
-    ap.add_argument("--profile-store", default=None,
-                    help="append one mergeable profile row per batch "
-                         "(HLL sketches + exact counts over the kept "
-                         "rows); report over it with the 'profile' "
-                         "subcommand's --from-store")
     ap.add_argument("--funnel-store", default=None,
                     help="append per-stage survival rows (seq, stage, "
                          "docs, chars) per batch — the drop-rate "
                          "monitor: a drifting crawl mix moves the "
                          "exact/near-dup drop fractions batch over "
                          "batch before the kept profile drifts")
-    ap.add_argument("--input-html", action="store_true",
-                    help="arrivals are raw HTML: extract plain text "
-                         "before any stage (keep this flag constant "
-                         "across sessions of one store family)")
-    ap.add_argument("--c4-line-clean", action="store_true",
-                    help="C4 line rule + page-drop markers per batch")
-    ap.add_argument("--gopher-rules", action="store_true",
-                    help="Gopher document-quality heuristics per batch")
-    args = ap.parse_args(argv)
-    if (args.span_store is None) != (args.span_dedup_tokens is None):
-        ap.error("--span-store and --span-dedup-tokens go together")
+    args = _parse_increment_args(ap, argv)
     if args.quarantine is not None and not args.require_input_quality:
         ap.error("--quarantine requires --require-input-quality")
 
@@ -166,31 +197,16 @@ def curate_stream_main(argv: list[str]) -> int:
     streaming_curate(
         spark,
         source_dir=args.source_dir,
-        kept_path=args.kept,
-        exact_store_path=args.exact_store,
-        minhash_store_path=args.minhash_store,
         checkpoint=args.checkpoint,
-        id_col=args.id_col,
-        text_col=args.text_col,
-        source_col=args.source_col,
         max_files_per_trigger=args.max_files_per_trigger,
         on_existing_store=args.on_existing_store,
-        span_store_path=args.span_store,
-        kept_compact_every=args.kept_compact_every,
-        min_words=args.min_words,
-        jaccard_threshold_pct=args.jaccard_threshold_pct,
-        shingle_mode=args.shingle_mode,
-        span_dedup_tokens=args.span_dedup_tokens,
-        input_html=args.input_html,
-        c4_line_clean=args.c4_line_clean,
-        gopher_rules=args.gopher_rules,
         input_suite=(
             _stream_input_suite(args) if args.require_input_quality
             else None
         ),
         quarantine_path=args.quarantine,
-        profile_store_path=args.profile_store,
         funnel_store_path=args.funnel_store,
+        **_increment_kwargs(args),
     )
     # logical counts through the generation layout: 0 for a root a
     # zero-batch drain never created; a corrupt footer or an IO/auth
@@ -539,30 +555,11 @@ def curate_replay_main(argv: list[str]) -> int:
     )
     ap.add_argument("--quarantine", required=True,
                     help="the DLQ root written by curate-stream")
-    ap.add_argument("--kept", required=True)
-    ap.add_argument("--exact-store", required=True)
-    ap.add_argument("--minhash-store", required=True)
-    ap.add_argument("--span-store", default=None)
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
-    ap.add_argument("--source-col", default="source")
-    ap.add_argument("--min-words", type=int, default=20)
-    ap.add_argument("--jaccard-threshold-pct", type=int, default=20)
-    ap.add_argument("--shingle-mode", choices=("word", "char"),
-                    default="word")
-    ap.add_argument("--span-dedup-tokens", type=int, default=None)
-    ap.add_argument("--kept-compact-every", type=int, default=None)
-    ap.add_argument("--profile-store", default=None)
-    ap.add_argument("--input-html", action="store_true")
-    ap.add_argument("--c4-line-clean", action="store_true")
-    ap.add_argument("--gopher-rules", action="store_true")
     ap.add_argument("--dry-run", action="store_true",
                     help="preview only: re-run the suite per DLQ unit "
                          "and report which would pass, without staging, "
                          "curating, or deleting anything")
-    args = ap.parse_args(argv)
-    if (args.span_store is None) != (args.span_dedup_tokens is None):
-        ap.error("--span-store and --span-dedup-tokens go together")
+    args = _parse_increment_args(ap, argv)
 
     from .session import get_spark, tune
     from .streaming.curate import replay_quarantine
@@ -573,23 +570,8 @@ def curate_replay_main(argv: list[str]) -> int:
         spark,
         quarantine_path=args.quarantine,
         input_suite=_stream_input_suite(args),
-        kept_path=args.kept,
-        exact_store_path=args.exact_store,
-        minhash_store_path=args.minhash_store,
-        id_col=args.id_col,
-        text_col=args.text_col,
-        source_col=args.source_col,
-        span_store_path=args.span_store,
-        kept_compact_every=args.kept_compact_every,
-        profile_store_path=args.profile_store,
-        min_words=args.min_words,
-        jaccard_threshold_pct=args.jaccard_threshold_pct,
-        shingle_mode=args.shingle_mode,
-        span_dedup_tokens=args.span_dedup_tokens,
-        input_html=args.input_html,
-        c4_line_clean=args.c4_line_clean,
-        gopher_rules=args.gopher_rules,
         dry_run=args.dry_run,
+        **_increment_kwargs(args),
     )
     print(json.dumps(out, sort_keys=True))
     return 0

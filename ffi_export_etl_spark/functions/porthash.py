@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 # not optional).
 MERSENNE31 = 2_147_483_647
 
+# Every score that feeds a ranking or a sign test is rounded to this many
+# digits before it is compared, in the Spark plan and in the oracle SQL
+# (which writes the literal ``round(..., 6)``), so both engines rank alike.
+ROUND_DIGITS = 6
+
 
 def md5_long(col: Column, nchars: int = 15) -> Column:
     """Spark: md5-prefix hash of a string column as a non-negative BIGINT."""
@@ -71,23 +76,18 @@ def spark_perm(x: Column, a: int, b: int) -> Column:
     return (F.lit(a).cast("bigint") * x + F.lit(b)) % F.lit(MERSENNE31)
 
 
-def duck_sign_bucket(
-    dim: int,
-    plane_offset: int,
-    planes: int,
-    vec: str = "vv",
-    round_digits: int = 6,
-) -> str:
-    """DuckDB SQL fragment: sign-LSH bucket id over literal hyperplanes
-    ``plane_offset .. plane_offset+planes-1`` — matches the Spark
-    operators' rounded-dot sign convention bit for bit."""
+def duck_sign_bucket(dim: int, plane_offset: int, planes: int) -> str:
+    """DuckDB SQL fragment: sign-LSH bucket id of the list column ``vv``
+    over literal hyperplanes ``plane_offset .. plane_offset+planes-1`` —
+    matches the Spark operators' rounded-dot sign convention bit for
+    bit."""
     coefs = hyperplane_coefficients(dim, plane_offset + planes)
     terms = []
     for p in range(planes):
         lits = ", ".join(repr(c) for c in coefs[plane_offset + p])
         terms.append(
-            f"(CASE WHEN round(list_dot_product({vec}, [{lits}]), "
-            f"{round_digits}) >= 0 THEN CAST({1 << p} AS BIGINT) "
+            f"(CASE WHEN round(list_dot_product(vv, [{lits}]), "
+            f"{ROUND_DIGITS}) >= 0 THEN CAST({1 << p} AS BIGINT) "
             f"ELSE 0 END)"
         )
     return "(" + "\n                 + ".join(terms) + ")"

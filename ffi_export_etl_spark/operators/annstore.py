@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.porthash import ROUND_DIGITS
 from .pq import _adc_scores, _exact_rerank, pq_encode, pq_train
 from .similarity import (
     as_double,
@@ -94,6 +95,13 @@ def read_ann_index_meta(index_dir: str) -> dict:
             f"unsupported ann index version {meta.get('version')!r} at "
             f"{index_dir} (expected {_VERSION})"
         )
+    if meta.get("round_digits", ROUND_DIGITS) != ROUND_DIGITS:
+        # probes and codes are computed at ROUND_DIGITS; an index built
+        # at another rounding would be searched and extended off its grid
+        raise ValueError(
+            f"ann index at {index_dir} was built with round_digits="
+            f"{meta['round_digits']!r} (expected {ROUND_DIGITS})"
+        )
     return meta
 
 
@@ -106,7 +114,6 @@ def write_ann_index(
     coarse_k: int,
     m: int,
     pq_k: int,
-    round_digits: int = 6,
 ) -> dict:
     """Persist PRE-FITTED artifacts as a complete index: ``centroids``
     (cell, centroid), ``codebooks`` (sub, cell, centroid) and
@@ -145,7 +152,7 @@ def write_ann_index(
         "coarse_k": coarse_k,
         "m": m,
         "pq_k": pq_k,
-        "round_digits": round_digits,
+        "round_digits": ROUND_DIGITS,
         # The code table's schema rides the meta (r11): an EMPTY corpus
         # writes zero part files under codes/ (partitionBy writes only
         # _SUCCESS), so a schema-inferring read of the index would
@@ -170,7 +177,6 @@ def build_ann_index(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> dict:
     """Fit the coarse quantizer + PQ codebooks on ``vectors``, encode the
     corpus, and persist the index at ``index_dir``. Returns the meta
@@ -179,24 +185,22 @@ def build_ann_index(
     artifact and lands partitioned by cell."""
     cells = lloyd_cells(
         vectors, dim, k=coarse_k, iters=iters, id_col=id_col,
-        vec_col=vec_col, round_digits=round_digits,
+        vec_col=vec_col,
     )
     centroids = dimension_centroids(
         vectors.join(cells.withColumnRenamed("id", id_col), id_col),
-        dim, "cell", vec_col, round_digits,
+        dim, "cell", vec_col,
     )
     codebooks = pq_train(
         vectors, dim, m=m, k=pq_k, iters=iters, id_col=id_col,
-        vec_col=vec_col, round_digits=round_digits,
+        vec_col=vec_col,
     )
     codes = pq_encode(
-        vectors, codebooks, dim, m=m, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
+        vectors, codebooks, dim, m=m, id_col=id_col, vec_col=vec_col
     )
     return write_ann_index(
         index_dir, centroids, codebooks, codes.join(cells, "id"),
         dim=dim, coarse_k=coarse_k, m=m, pq_k=pq_k,
-        round_digits=round_digits,
     )
 
 
@@ -215,14 +219,12 @@ def _read_codes(spark: SparkSession, index_dir: str, meta: dict):
     return reader.parquet(os.path.join(index_dir, "codes"))
 
 
-def _assign_cells(
-    v: DataFrame, centroids: DataFrame, round_digits: int
-) -> DataFrame:
+def _assign_cells(v: DataFrame, centroids: DataFrame) -> DataFrame:
     """(id, cell): nearest coarse centroid by the probe discipline
     (rounded cosine, cell tiebreak) — nprobe=1 of probe_cells, so
     assignment and search probing can never use different metrics."""
     q = v.select(F.col("id").alias("query_id"), F.col("v").alias("qv"))
-    return probe_cells(q, centroids, 1, round_digits).select(
+    return probe_cells(q, centroids, 1).select(
         F.col("query_id").alias("id"), "cell"
     )
 
@@ -250,10 +252,10 @@ def ann_index_add(
     v = new_vectors.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
     )
-    cells = _assign_cells(v, centroids, meta["round_digits"])
+    cells = _assign_cells(v, centroids)
     codes = pq_encode(
         new_vectors, codebooks, meta["dim"], m=meta["m"], id_col=id_col,
-        vec_col=vec_col, round_digits=meta["round_digits"],
+        vec_col=vec_col,
     )
     delta = codes.join(cells, "id").persist()
     try:
@@ -300,7 +302,6 @@ def ann_index_search(
     vec_col: str = "embedding",
     rerank_vectors: DataFrame | None = None,
     rerank_id_col: str = "vec_id",
-    include_self: bool = False,
 ) -> DataFrame:
     """(query_id, nbr_id, adc_dist, rnk) — top-``k`` per query over the
     stored index, probing each query's ``nprobe`` nearest cells.
@@ -314,22 +315,18 @@ def ann_index_search(
     raw corpus vectors) the ADC shortlist is re-scored exactly
     (IVFADC+R): per query, ``k`` exact distance evaluations.
 
-    Inherited family semantics: by default a candidate whose id EQUALS
-    the query_id is excluded (_adc_scores' self-pair cut — the near-dup
-    convention), so a RETRIEVAL caller probing with corpus ids silently
-    never gets the query's own row back. Pass ``include_self=True`` for
-    retrieval semantics (a stored corpus vector queried by its own id
-    comes back at rank 1, ADC distance ~0), or give queries their own
-    id space."""
+    Inherited family semantics: a candidate whose id EQUALS the
+    query_id is excluded (_adc_scores' self-pair cut — the near-dup
+    convention), so a RETRIEVAL caller probing with corpus ids never
+    gets the query's own row back; give queries their own id space."""
     meta = read_ann_index_meta(index_dir)
-    rd = meta["round_digits"]
     centroids = spark.read.parquet(os.path.join(index_dir, "centroids"))
     codebooks = spark.read.parquet(os.path.join(index_dir, "codebooks"))
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         as_double(F.col(vec_col)).alias("qv"),
     )
-    probes = probe_cells(q, centroids, nprobe, rd).select(
+    probes = probe_cells(q, centroids, nprobe).select(
         "query_id", "cell"
     )
     # bounded by coarse_k — a driver-sized literal list, NOT data-sized;
@@ -350,7 +347,7 @@ def ann_index_search(
     scored = _adc_scores(
         sliced.select("id", "codes"), codebooks, queries,
         query_id_col=query_id_col, vec_col=vec_col, dim=meta["dim"],
-        m=meta["m"], round_digits=rd, include_self=include_self,
+        m=meta["m"],
     ).join(allowed, ["query_id", "nbr_id"], "left_semi")
     w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
     shortlist = (
@@ -363,5 +360,5 @@ def ann_index_search(
     return _exact_rerank(
         shortlist.select("query_id", "nbr_id"), rerank_vectors, queries,
         k, query_id_col=query_id_col, id_col=rerank_id_col,
-        vec_col=vec_col, round_digits=rd,
+        vec_col=vec_col,
     )

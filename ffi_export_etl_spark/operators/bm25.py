@@ -22,7 +22,7 @@ Scale design (the 100 TB shape):
 - The final per-query top-k is a window over candidate docs only.
 
 Engine portability: every per-term contribution is rounded to
-``round_digits`` before the sum and the summed score is rounded again,
+``ROUND_DIGITS`` before the sum and the summed score is rounded again,
 and ranking tiebreaks on doc id — so a DuckDB oracle replaying the same
 arithmetic (ln, round) ranks identically (precedent:
 operators/similarity.py rounded-cosine ranking).
@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.porthash import ROUND_DIGITS
 from .xplode import explode_nonempty
 from pyspark.sql.window import Window
 
@@ -78,7 +79,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Okapi BM25 top-k per query: (query_id, doc_id, score, rnk).
 
@@ -137,14 +137,14 @@ def bm25_topk(
             + F.lit(k1)
             * (1 - b + F.lit(b) * F.col("dl") / F.lit(float(avgdl)))
         ),
-        round_digits,
+        ROUND_DIGITS,
     )
     scored = (
         postings.withColumn("df", df)
         .join(F.broadcast(query_terms), "term")
         .withColumn("contrib", contrib)
         .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("contrib"), round_digits).alias("score"))
+        .agg(F.round(F.sum("contrib"), ROUND_DIGITS).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id")

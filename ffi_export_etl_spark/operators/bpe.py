@@ -191,7 +191,6 @@ def train_bpe_full(
     num_merges: int,
     min_pair_count: int = 2,
     batch_candidates: int = 64,
-    _stats: dict | None = None,
 ) -> list[tuple[str, str, int]]:
     """Learn ``num_merges`` BPE merges from a (word, n) table: the
     ordered merge list with the winning pair count kept per merge,
@@ -212,9 +211,7 @@ def train_bpe_full(
     count drops by the average batch size (A/B in PERFORMANCE.md).
     ``batch_candidates=1`` recovers the sequential trainer exactly.
     The recorded cnt per merge equals its sequential-round count
-    (disjointness keeps it unchanged by earlier batch members).
-    ``_stats``: optional dict, gets ``rounds`` (Spark rounds run) for
-    the A/B measurements."""
+    (disjointness keeps it unchanged by earlier batch members)."""
     syms = word_counts.select(
         F.split(F.col("word"), "").alias("symbols"), F.col("n")
     ).localCheckpoint(eager=True)
@@ -230,7 +227,6 @@ def train_bpe_full(
         ).distinct().collect()
     }
     merges: list[tuple[str, str, int]] = []
-    rounds = 0
     try:
         while len(merges) < num_merges:
             pairs = (
@@ -256,7 +252,6 @@ def train_bpe_full(
             cands = pairs.orderBy(
                 F.col("cnt").desc(), F.col("a"), F.col("b")
             ).limit(n_cand + 1).collect()
-            rounds += 1
             if not cands or cands[0]["cnt"] < min_pair_count:
                 break
             # candidates beyond the collected window are unseen: their
@@ -281,8 +276,6 @@ def train_bpe_full(
             syms = nxt
     finally:
         _release(syms)
-    if _stats is not None:
-        _stats["rounds"] = rounds
     return merges
 
 

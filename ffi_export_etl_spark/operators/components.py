@@ -252,7 +252,6 @@ def connected_components_alternating(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_rounds: int = 30,
 ) -> DataFrame:
     """(id, component) via alternating large-star/small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -261,7 +260,8 @@ def connected_components_alternating(
     Each round is two groupBy+join passes; the edge set contracts toward
     stars centered on each component's minimum vertex in O(log n) rounds
     even on a pure chain (vs O(diameter) for min-label propagation).
-    Rounds for a 1000-node chain: ~10, not ~1000.
+    Rounds for a 1000-node chain: ~10, not ~1000; more than 30 rounds
+    raise.
 
     large-star: for every vertex u, link each strictly-greater neighbor
     to m(u) = min(N(u) + {u}). small-star: direct edges toward the
@@ -282,7 +282,7 @@ def connected_components_alternating(
         .distinct()
     )
     prev_ids = _ckpt_ids(e)
-    for _ in range(max_rounds):
+    for _ in range(30):
         # ---- large-star ----
         nbrs = e.select("u", "v").union(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -338,7 +338,7 @@ def connected_components_alternating(
     else:
         raise RuntimeError(
             f"alternating connected components did not converge in "
-            f"{max_rounds} rounds"
+            "30 rounds"
         )
     # fixed point: e is a set of star edges in canonical (u < v) form, so
     # the CENTER is u (= the component minimum) and each v is a member.
@@ -356,7 +356,6 @@ def incremental_components(
     new_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_rounds: int = 30,
 ) -> DataFrame:
     """(id, component) after folding a NEW batch of edges into a STORED
     component labeling — the daily-increment shape for cluster
@@ -386,9 +385,7 @@ def incremental_components(
     # endpoints and the contraction's u != v filter would silently
     # drop those edges; unionByName's type coercion widens instead
     both = star.unionByName(new_edges.select(src, dst))
-    comp = connected_components_alternating(
-        both, src=src, dst=dst, max_rounds=max_rounds
-    )
+    comp = connected_components_alternating(both, src=src, dst=dst)
     ids = (
         stored.select("id")
         .unionByName(new_edges.select(F.col(src).alias("id")))

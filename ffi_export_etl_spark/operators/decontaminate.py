@@ -1,12 +1,11 @@
 """Benchmark decontamination — remove eval-set overlap from training data.
 
 The standard contamination rule (GPT-3 appendix / open reproductions):
-a training document is contaminated if it shares at least
-``min_overlap`` word n-gram shingles (n typically 8-13) with any
-benchmark document. Benchmarks are SMALL relative to a 100 TB corpus, so
-the benchmark shingle set is broadcast and the corpus side is one linear
-shingle scan + a broadcast hash join — no shuffle of corpus data beyond
-the per-doc overlap count.
+a training document is contaminated if it shares a word n-gram shingle
+(n typically 8-13) with any benchmark document. Benchmarks are SMALL
+relative to a 100 TB corpus, so the benchmark shingle set is broadcast
+and the corpus side is one linear shingle scan + a broadcast hash join —
+no shuffle of corpus data beyond the per-doc overlap count.
 
 Shingling reuses operators/shingles.py (distinct word n-grams, O(len)
 per document, native Column exprs).
@@ -29,11 +28,10 @@ def contamination_hits(
     bench_id_col: str = "bench_id",
     bench_text_col: str = "text",
     n: int = 8,
-    min_overlap: int = 1,
 ) -> DataFrame:
     """(id, bench_id, n_shared) for every corpus/benchmark document pair
-    sharing >= ``min_overlap`` distinct n-gram shingles — the audit
-    trail of WHAT matched, not just a drop flag."""
+    sharing a distinct n-gram shingle — the audit trail of WHAT matched,
+    not just a drop flag."""
     corpus_sh = shingle_table(docs, id_col, text_col, n)
     bench_sh = shingle_table(bench, bench_id_col, bench_text_col, n).select(
         F.col("id").alias("bench_id"), "shingle"
@@ -42,7 +40,6 @@ def contamination_hits(
         corpus_sh.join(F.broadcast(bench_sh), "shingle")
         .groupBy("id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_overlap)
     )
 
 
@@ -61,7 +58,7 @@ def contamination_containment(
     of the BENCHMARK document's distinct n-grams appear in the training
     document — the normalized contamination rule (PaLM / Llama style:
     an eval item is leaked when ~70% of its 8-grams occur verbatim),
-    which an absolute ``min_overlap`` count cannot express because eval
+    which an absolute shared-shingle count cannot express because eval
     items vary wildly in length.
 
     Same scale shape as contamination_hits: benchmark shingles (with
@@ -129,12 +126,11 @@ def decontaminate(
     bench_id_col: str = "bench_id",
     bench_text_col: str = "text",
     n: int = 8,
-    min_overlap: int = 1,
 ) -> DataFrame:
     """``docs`` minus every document contaminated by ``bench`` (schema
     preserved; broadcast anti-join against the contaminated-id set)."""
     hits = contamination_hits(
         docs, bench, id_col, text_col, bench_id_col, bench_text_col,
-        n, min_overlap,
+        n,
     ).select(F.col("id").alias(id_col)).distinct()
     return docs.join(F.broadcast(hits), id_col, "left_anti")

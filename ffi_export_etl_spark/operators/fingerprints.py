@@ -81,11 +81,10 @@ def winnow_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = DEFAULT_K,
-    w: int = DEFAULT_W,
 ) -> DataFrame:
     """(id, fingerprints array<bigint>, n_fingerprints) per document —
-    the winnowed signature set, sorted distinct so it is a stable
+    the winnowed signature set over ``DEFAULT_K``-token grams and
+    ``DEFAULT_W``-hash windows, sorted distinct so it is a stable
     engine-portable value. Documents shorter than k tokens get an
     empty set.
 
@@ -104,26 +103,23 @@ def winnow_fingerprints(
         F.split(F.col(text_col), r"\s+").alias("_toks"),
     )
     grams_df = toks_df.select(
-        "id", _gram_hashes(F.col("_toks"), k).alias("_grams")
+        "id", _gram_hashes(F.col("_toks"), DEFAULT_K).alias("_grams")
     )
     return grams_df.select(
-        "id", _selected_col(F.col("_grams"), w).alias("fingerprints")
+        "id", _selected_col(F.col("_grams"), DEFAULT_W).alias("fingerprints")
     ).withColumn("n_fingerprints", F.size("fingerprints"))
 
 
 def winnow_overlap_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = DEFAULT_K,
-    w: int = DEFAULT_W,
+    fingerprints: DataFrame,
     min_shared: int = 2,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b, n_shared) with id_a < id_b — document pairs sharing
-    at least ``min_shared`` selected fingerprints: the local-copy
-    screening report. By the winnowing guarantee, every pair sharing a
+    at least ``min_shared`` selected fingerprints of a
+    :func:`winnow_fingerprints` frame: the local-copy screening report
+    (text_langfp_pack reports the sets AND the overlap, so the per-doc
+    md5 selection pass runs once, not once per consumer). By the winnowing guarantee, every pair sharing a
     verbatim run of >= w + k - 1 tokens appears (with min_shared=1);
     raise ``min_shared`` to trade recall on short overlaps for a
     quieter report. ``max_bucket_size`` drops degenerate fingerprints
@@ -135,14 +131,7 @@ def winnow_overlap_pairs(
     grouped row, JVM array ops), then the pair-count aggregation. The
     exploded self-join alternative shuffles the fingerprint table
     twice on the same key; collecting the bucket halves that, and the
-    collected list is bounded by ``max_bucket_size``.
-
-    ``fingerprints``: a precomputed winnow_fingerprints frame for the
-    same (docs, k, w) — callers that already materialized the selection
-    (text_langfp_pack reports the sets AND the overlap) pass it here so
-    the per-doc md5 selection pass runs once, not once per consumer."""
-    if fingerprints is None:
-        fingerprints = winnow_fingerprints(docs, id_col, text_col, k, w)
+    collected list is bounded by ``max_bucket_size``."""
     # explode_nonempty, NOT plain explode: the optimizer would infer
     # `size(fingerprints) > 0` and push it below the staged projections
     # with the ENTIRE selection expression inlined — re-evaluated per

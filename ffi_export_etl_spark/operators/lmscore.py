@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.porthash import ROUND_DIGITS
 from .xplode import explode_nonempty
 
 __all__ = ["train_bigram_lm", "score_documents", "BOS"]
@@ -79,14 +80,12 @@ def score_documents(
     vocab_size: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: float = 1.0,
-    round_digits: int = 6,
 ) -> DataFrame:
     """(id, n_bigrams, sum_nlp_micro, avg_neg_logprob) per document —
     the perplexity proxy (exp of the avg would be perplexity; the log
-    stays monotone and portable). Lower = more reference-like. Add-k
-    smoothing: P(w2|w1) = (c12 + k) / (c1 + k * |V|); unseen words fall
-    out of the left joins as c = 0.
+    stays monotone and portable). Lower = more reference-like. Add-one
+    smoothing: P(w2|w1) = (c12 + 1) / (c1 + |V|); unseen words fall out
+    of the left joins as c = 0.
 
     Portability: each bigram's -ln P is quantized to integer
     MICRO-units (round(x * 1e6) as LONG), so the per-document sum is an
@@ -97,11 +96,8 @@ def score_documents(
     by one final division."""
     bg = _bigrams(docs, id_col, text_col)
     nlp = -F.log(
-        (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(k))
-        / (
-            F.coalesce(F.col("c1"), F.lit(0))
-            + F.lit(k) * F.lit(float(vocab_size))
-        )
+        (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(1.0))
+        / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(float(vocab_size)))
     )
     scored = (
         bg.join(bigrams, ["w1", "w2"], "left")
@@ -121,6 +117,6 @@ def score_documents(
         F.round(
             F.col("sum_nlp_micro")
             / (F.col("n_bigrams") * F.lit(1000000.0)),
-            round_digits,
+            ROUND_DIGITS,
         ).alias("avg_neg_logprob"),
     )

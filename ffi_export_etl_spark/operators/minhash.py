@@ -122,7 +122,6 @@ def minhash_signature_store(
     n: int | None = None,
     num_perm: int = 32,
     bands: int = 8,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """(id, band, bucket) — the persistable LSH index of a corpus.
 
@@ -130,7 +129,7 @@ def minhash_signature_store(
     it on (band, bucket) WITHOUT re-sketching the corpus: the
     daily-increment shape for a 100 TB collection."""
     sigs = signatures_from_shingles(
-        build_shingles(docs, id_col, text_col, n, shingle_mode), num_perm
+        build_shingles(docs, id_col, text_col, n), num_perm
     )
     return _banded(sigs, bands, num_perm // bands)
 
@@ -208,8 +207,6 @@ def minhash_near_duplicates(
     num_perm: int = 32,
     bands: int = 8,
     threshold_pct: int = 20,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-    cache_shingles: bool = False,
     shingle_mode: str = "word",
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard >= threshold_pct/100.
@@ -218,23 +215,20 @@ def minhash_near_duplicates(
     pinned to the candidate list), never all-pairs — that is the whole
     point at scale. Output has no LSH false positives; false negatives
     remain possible (the recall/cost tradeoff; tests measure recall vs the
-    brute-force jaccard_pairs).
+    brute-force jaccard_pairs). Buckets above ``DEFAULT_MAX_BUCKET``
+    are dropped from candidate generation.
 
-    ``cache_shingles``: the shingle pass feeds four downstream subplans
-    (signatures, sizes, both verification sides). True persists it so
-    the corpus is shingled once — right when the scan dominates (real
-    100 TB runs). Default False: at bench scale a clean fresh-JVM A/B
-    measured the two within noise of each other (cached plans pin their
-    partitioning away from AQE but skip recompute; recompute is cheap
-    here), so the default keeps cache memory free and AQE unconstrained,
-    and scan-bound corpora opt in.
+    The shingle pass feeds four downstream subplans (signatures, sizes,
+    both verification sides) and is recomputed, not persisted: at bench
+    scale a clean fresh-JVM A/B measured the two within noise of each
+    other (cached plans pin their partitioning away from AQE but skip
+    recompute; recompute is cheap here), and an unreleased persist would
+    pin the corpus's largest intermediate for the session lifetime.
     """
     rows_per_band = num_perm // bands
     sh = build_shingles(docs, id_col, text_col, n, shingle_mode)
-    if cache_shingles:
-        sh = sh.persist()
     sigs = signatures_from_shingles(sh, num_perm)
-    cands = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket_size)
+    cands = lsh_candidate_pairs(sigs, bands, rows_per_band, DEFAULT_MAX_BUCKET)
     # Verification joins each CANDIDATE doc's distinct-shingle SET (one
     # array row per doc) and intersects map-side — the r6 jaccard
     # lesson (operators/shingles.py): the former form joined the
@@ -282,7 +276,6 @@ def minhash_signature_store_with_sigs(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n: int | None = None,
     num_perm: int = 32,
     bands: int = 8,
     shingle_mode: str = "word",
@@ -301,7 +294,7 @@ def minhash_signature_store_with_sigs(
     shingle aggregation on both join branches (measured 3.9s -> 0.6s on
     a 1250-doc sf0.1 slice, identical rows)."""
     sigs = signatures_from_shingles(
-        build_shingles(docs, id_col, text_col, n, shingle_mode), num_perm
+        build_shingles(docs, id_col, text_col, None, shingle_mode), num_perm
     )
     sig_arr = F.array(*[F.col(f"h{i}") for i in range(num_perm)])
     return _banded(
@@ -316,7 +309,6 @@ def incremental_verified_pairs(
     new_store: DataFrame,
     stored_store: DataFrame,
     threshold_pct: int = 20,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """(id_a, id_b, est_jaccard_pct) near-dup pairs involving a new
     batch, VERIFIED against the signatures both sig-carrying stores
@@ -331,7 +323,6 @@ def incremental_verified_pairs(
     cands = incremental_candidate_pairs(
         new_store.select("id", "band", "bucket"),
         stored_store.select("id", "band", "bucket"),
-        max_bucket_size=max_bucket_size,
     )
     sigs = (
         new_store.select("id", "sig")

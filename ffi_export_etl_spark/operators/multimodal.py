@@ -86,7 +86,7 @@ def set_decoder(fn: Callable[[bytes, str], dict]) -> None:
     _decoder = fn
 
 
-def extract_features(media: DataFrame, batch_size_hint: int = 64) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + feature-extract media via Arrow-batched mapInPandas."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

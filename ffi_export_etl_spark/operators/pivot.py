@@ -32,18 +32,19 @@ class DuplicatePivotKeyError(ValueError):
 
 
 def assert_unique_pivot_keys(
-    df: DataFrame, index_cols: Sequence[str], field_col: str, sample: int = 5
+    df: DataFrame, index_cols: Sequence[str], field_col: str
 ) -> None:
-    """Distributed uniqueness assertion over (index, field) pairs."""
+    """Distributed uniqueness assertion over (index, field) pairs; the
+    error shows up to five offending keys."""
     dupes = (
         df.groupBy(*index_cols, field_col)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
     )
-    offenders = dupes.take(sample)
+    offenders = dupes.take(5)
     if offenders:
         raise DuplicatePivotKeyError(
-            f"duplicate pivot keys (showing <= {sample}): "
+            "duplicate pivot keys (showing <= 5): "
             + "; ".join(str(r.asDict()) for r in offenders)
         )
 
@@ -66,17 +67,3 @@ def eav_pivot(
         .agg(F.first(F.col(value_col), ignorenulls=True))
     )
 
-
-def split_by_column_values(
-    df: DataFrame, col: str, values: Sequence[str]
-) -> dict[str, DataFrame]:
-    """Partition a table into one DataFrame per value in ``values``,
-    dropping ``col`` — the reference's per-unit-system table fan-out
-    (parser/xml.py:290-302, 355-367).
-
-    The per-value loop is driver-side because each value names an output
-    table (same reason the reference loops); each branch is a pushed-down
-    equality filter over the SAME parent plan, so with the parent cached
-    this is value-count scans of cached data, not of source files.
-    """
-    return {v: df.filter(F.col(col) == v).drop(col) for v in values}

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.porthash import md5_long
+from ..functions.porthash import ROUND_DIGITS, md5_long
 from .similarity import as_double
 
 def _sq_l2(a, b):
@@ -76,7 +76,6 @@ def pq_train(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Codebooks: (sub, cell, centroid array<double>) — per-subspace
     k-means, all subspaces in one grouped Lloyd loop. Seeds: the k
@@ -110,7 +109,7 @@ def pq_train(
     )
     for _ in range(max(iters, 1)):
         scored = sv.join(F.broadcast(cents), "sub").withColumn(
-            "d", F.round(_sq_l2(F.col("sv"), F.col("centroid")), round_digits)
+            "d", F.round(_sq_l2(F.col("sv"), F.col("centroid")), ROUND_DIGITS)
         )
         # argmin(d, cell) as min(struct(d, cell)): partial-aggregable —
         # the old per-(id, sub) row_number window shuffled AND sorted
@@ -126,7 +125,7 @@ def pq_train(
             .select("id", "sub", F.col("_best.cell").alias("cell"), "sv")
         )
         aggs = [
-            F.round(F.avg(F.element_at("sv", i + 1)), round_digits).alias(
+            F.round(F.avg(F.element_at("sv", i + 1)), ROUND_DIGITS).alias(
                 f"c{i}"
             )
             for i in range(d_sub)
@@ -156,14 +155,13 @@ def pq_encode(
     m: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """(id, codes array<int>) — per-subspace nearest-centroid codes,
     deterministic (rounded distance, cell tiebreak). One corpus scan +
     one id-grain shuffle to collect the M codes into array order."""
     sv = _subvectors(vectors, dim, m, id_col, vec_col)
     scored = sv.join(F.broadcast(codebooks), "sub").withColumn(
-        "d", F.round(_sq_l2(F.col("sv"), F.col("centroid")), round_digits)
+        "d", F.round(_sq_l2(F.col("sv"), F.col("centroid")), ROUND_DIGITS)
     )
     # argmin(d, cell) via min(struct(d, cell)) — see pq_train: one
     # map-side-combined row per (id, sub) instead of a sorted window
@@ -190,19 +188,16 @@ def pq_topk(
     vec_col: str = "embedding",
     dim: int | None = None,
     m: int | None = None,
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """ADC top-k: (query_id, nbr_id, adc_dist, rnk), ascending squared-L2
     estimate. ``codes`` is pq_encode output; queries stay exact. The LUT
     (query x sub x cell) broadcasts; candidate cost is M lookups summed
-    map-side. ``include_self``: see :func:`_adc_scores` — default keeps
-    the dedup convention (a corpus-id query never retrieves itself)."""
+    map-side. A corpus-id query never retrieves itself (see
+    :func:`_adc_scores`)."""
     scored = _adc_scores(
         codes, codebooks, queries,
         query_id_col=query_id_col, vec_col=vec_col,
-        dim=dim, m=m, round_digits=round_digits,
-        include_self=include_self,
+        dim=dim, m=m,
     )
     w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
     return (
@@ -224,8 +219,6 @@ def pq_topk_rerank(
     vec_col: str = "embedding",
     dim: int | None = None,
     m: int | None = None,
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """ADC shortlist -> EXACT re-rank: (query_id, nbr_id, dist, rnk),
     ascending true squared L2. The recall fix from Jegou et al. 2011
@@ -245,13 +238,11 @@ def pq_topk_rerank(
     short = pq_topk(
         codes, codebooks, queries, k=rerank,
         query_id_col=query_id_col, vec_col=vec_col,
-        dim=dim, m=m, round_digits=round_digits,
-        include_self=include_self,
+        dim=dim, m=m,
     ).select("query_id", "nbr_id")
     return _exact_rerank(
         short, vectors, queries, k,
         query_id_col=query_id_col, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
     )
 
 
@@ -263,7 +254,6 @@ def _exact_rerank(
     query_id_col: str = "query_id",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact squared-L2 re-scoring of a (query_id, nbr_id) shortlist:
     the shared tail of pq_topk_rerank and ivfpq_topk_rerank. The
@@ -282,7 +272,7 @@ def _exact_rerank(
         .select(
             "query_id",
             "nbr_id",
-            F.round(_sq_l2(F.col("v"), F.col("qv")), round_digits).alias(
+            F.round(_sq_l2(F.col("v"), F.col("qv")), ROUND_DIGITS).alias(
                 "dist"
             ),
         )
@@ -303,7 +293,6 @@ def ivfpq_topk_rerank(
     dim: int,
     cells: DataFrame | None = None,
     centroids: DataFrame | None = None,
-    coarse_k: int = 16,
     nprobe: int = 3,
     k: int = 10,
     rerank: int = 100,
@@ -311,8 +300,6 @@ def ivfpq_topk_rerank(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """The full billion-vector serving stack (IVFADC+R, Jegou et al.
     2011): coarse cells prune the corpus to nprobe cells per query, ADC
@@ -328,15 +315,13 @@ def ivfpq_topk_rerank(
     short = ivfpq_topk(
         vectors if (cells is None or centroids is None) else None,
         codes, codebooks, queries, dim,
-        cells=cells, centroids=centroids, coarse_k=coarse_k,
+        cells=cells, centroids=centroids,
         nprobe=nprobe, k=rerank, m=m,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-        round_digits=round_digits, include_self=include_self,
     ).select("query_id", "nbr_id")
     return _exact_rerank(
         short, vectors, queries, k,
         query_id_col=query_id_col, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
     )
 
 
@@ -348,19 +333,15 @@ def _adc_scores(
     vec_col: str = "embedding",
     dim: int | None = None,
     m: int | None = None,
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """All (query_id, nbr_id, adc_dist) pairs — the unranked ADC core
     shared by exhaustive :func:`pq_topk` and :func:`ivfpq_topk` (which
     must apply its per-query cell cut BEFORE any truncation).
 
-    ``include_self=False`` (default) drops candidates whose id EQUALS
-    the query_id — the near-dup convention every dedup caller relies
-    on, and a sharp edge for retrieval: a corpus-id query can never
-    retrieve its own row. A retrieval caller probing with corpus ids
-    passes ``include_self=True`` (or gives queries their own id
-    space)."""
+    Candidates whose id EQUALS the query_id are dropped — the near-dup
+    convention every dedup caller relies on, and a sharp edge for
+    retrieval: a corpus-id query can never retrieve its own row, so a
+    retrieval caller gives queries their own id space."""
     # one-row aggregate over the model-sized codebook table -> driver
     # scalar (never data-sized)
     mm = m if m is not None else codebooks.agg(
@@ -377,18 +358,16 @@ def _adc_scores(
         "query_id",
         "sub",
         "cell",
-        F.round(_sq_l2(F.col("qv"), F.col("centroid")), round_digits)
+        F.round(_sq_l2(F.col("qv"), F.col("centroid")), ROUND_DIGITS)
         .alias("d"),
     )
     cand = codes.select(
         F.col("id").alias("nbr_id"),
         F.posexplode("codes").alias("sub", "cell"),
     )
-    scored = cand.join(F.broadcast(lut), ["sub", "cell"])
-    if not include_self:
-        scored = scored.filter(F.col("nbr_id") != F.col("query_id"))
     return (
-        scored
+        cand.join(F.broadcast(lut), ["sub", "cell"])
+        .filter(F.col("nbr_id") != F.col("query_id"))
         .groupBy("query_id", "nbr_id")
         # ordered fold, not SUM: float addition is order-sensitive and
         # an engine-replaying oracle must add the M terms in the same
@@ -400,7 +379,7 @@ def _adc_scores(
                     F.lit(0.0),
                     lambda a, x: a + x["d"],
                 ),
-                round_digits,
+                ROUND_DIGITS,
             ).alias("adc_dist")
         )
     )
@@ -414,27 +393,25 @@ def ivfpq_topk(
     dim: int,
     cells: DataFrame | None = None,
     centroids: DataFrame | None = None,
-    coarse_k: int = 16,
     nprobe: int = 3,
     k: int = 10,
     m: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """IVF+PQ — the billion-vector ANN shape: a coarse quantizer prunes
     the corpus to the ``nprobe`` cells nearest each query, and ADC ranks
     only the codes inside those cells. Corpus-side cost per query batch:
-    the cell equi-join's slice (~nprobe/coarse_k of the codes), never
+    the cell equi-join's slice (~nprobe/16 of the codes), never
     the whole code table — this is what bounds the ADC shuffle that
     exhaustive :func:`pq_topk` pays.
 
     Production passes STORED ``cells`` (id, cell) AND ``centroids``
     (cell, centroid) — then ``vectors`` may be None and no raw-vector
     scan happens at all. When either artifact is missing it is fitted /
-    derived from ``vectors`` (one corpus scan — the fit path).
+    derived from ``vectors`` (one corpus scan — the fit path, 16 coarse
+    cells).
 
     The per-query cell cut is applied to the SCORES, before any
     truncation: ranking first and filtering after would let an
@@ -452,19 +429,18 @@ def ivfpq_topk(
         from .similarity import lloyd_cells
 
         cells = lloyd_cells(
-            vectors, dim, k=coarse_k, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits,
+            vectors, dim, k=16, id_col=id_col, vec_col=vec_col
         )
     if centroids is None:
         centroids = dimension_centroids(
             vectors.join(cells.withColumnRenamed("id", id_col), id_col),
-            dim, "cell", vec_col, round_digits,
+            dim, "cell", vec_col,
         )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         as_double(F.col(vec_col)).alias("qv"),
     )
-    probes = probe_cells(q, centroids, nprobe, round_digits).select(
+    probes = probe_cells(q, centroids, nprobe).select(
         "query_id", "cell"
     )
     # ONE join attaches each code row's cell; the union-of-probed-cells
@@ -486,7 +462,6 @@ def ivfpq_topk(
     scored = _adc_scores(
         sliced.select("id", "codes"), codebooks, queries,
         query_id_col=query_id_col, vec_col=vec_col, dim=dim, m=m,
-        round_digits=round_digits, include_self=include_self,
     ).join(allowed, ["query_id", "nbr_id"], "left_semi")
     w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
     return (

@@ -57,10 +57,10 @@ def profile_table(df: DataFrame, rsd: float = 0.05) -> DataFrame:
     )
 
 
-def profile_batch(df: DataFrame, lg_config_k: int = 12) -> DataFrame:
+def profile_batch(df: DataFrame) -> DataFrame:
     """ONE wide row of mergeable profile state for a batch: row count,
     per-column non-null counts, typed min/max, and an HLL DataSketch
-    (``hll_sketch_agg``) of each column's STRING rendering (uniform
+    (``hll_sketch_agg``, lgConfigK 12) of each column's STRING rendering (uniform
     input type; distinct values stay distinct under the cast).
 
     This is the incremental-profiling primitive: profile each ingest
@@ -79,7 +79,7 @@ def profile_batch(df: DataFrame, lg_config_k: int = 12) -> DataFrame:
         aggs += [
             F.count(F.col(c)).alias(f"nn_{c}"),
             F.hll_sketch_agg(
-                F.col(c).cast("string"), F.lit(lg_config_k)
+                F.col(c).cast("string"), F.lit(12)
             ).alias(f"hll_{c}"),
             F.min(F.col(c)).alias(f"mn_{c}"),
             F.max(F.col(c)).alias(f"mx_{c}"),
@@ -138,9 +138,6 @@ def profile_from_batches(store: DataFrame) -> DataFrame:
 def profile_drift(
     old: DataFrame,
     new: DataFrame,
-    max_null_frac_delta: float = 0.05,
-    distinct_ratio_bounds: tuple[float, float] = (0.5, 2.0),
-    max_row_ratio_change: float = 0.5,
 ) -> DataFrame:
     """Schema/shape drift between two ``profile_table`` outputs — the
     "did today's batch silently degrade" report a recurring ingest
@@ -155,15 +152,15 @@ def profile_drift(
      minmax_changed, drift_reasons, drifted)
 
     Reasons: 'added' / 'removed' (column set changed), 'null_frac'
-    (non-null rate moved more than ``max_null_frac_delta``),
-    'cardinality' (approx-distinct ratio outside
-    ``distinct_ratio_bounds`` BOTH raw and row-volume-normalized: an
+    (non-null rate moved more than 0.05),
+    'cardinality' (approx-distinct ratio outside [0.5, 2]
+    BOTH raw and row-volume-normalized: an
     id-like column on a corpus that legitimately tripled triples its
     distinct count — raw ratio 3, normalized 1, no flag; a saturated
     enum column on the same corpus holds distinct steady — raw 1,
     normalized 1/3, no flag; a genuine collapse fails both),
-    'row_volume' (row-count ratio changed more than
-    ``max_row_ratio_change`` — reported on every column since profiles
+    'row_volume' (row-count ratio changed more than 0.5 — reported on
+    every column since profiles
     are per-column), 'minmax' (value range shifted, null-safe so a
     column going from all-NULL to valued reports; informational in
     drift_reasons only — NOT part of ``drifted`` because min/max move
@@ -206,23 +203,23 @@ def profile_drift(
             F.when(F.col("n_rows_old").isNull(), F.lit("added")),
             F.when(F.col("n_rows_new").isNull(), F.lit("removed")),
             F.when(
-                both & (null_delta > F.lit(max_null_frac_delta)),
+                both & (null_delta > F.lit(0.05)),
                 F.lit("null_frac"),
             ),
             F.when(
                 both
                 & (
-                    (distinct_ratio < F.lit(distinct_ratio_bounds[0]))
-                    | (distinct_ratio > F.lit(distinct_ratio_bounds[1]))
+                    (distinct_ratio < F.lit(0.5))
+                    | (distinct_ratio > F.lit(2.0))
                 )
                 & (
-                    (norm_distinct_ratio < F.lit(distinct_ratio_bounds[0]))
-                    | (norm_distinct_ratio > F.lit(distinct_ratio_bounds[1]))
+                    (norm_distinct_ratio < F.lit(0.5))
+                    | (norm_distinct_ratio > F.lit(2.0))
                 ),
                 F.lit("cardinality"),
             ),
             F.when(
-                both & (F.abs(row_ratio - 1) > F.lit(max_row_ratio_change)),
+                both & (F.abs(row_ratio - 1) > F.lit(0.5)),
                 F.lit("row_volume"),
             ),
             F.when(

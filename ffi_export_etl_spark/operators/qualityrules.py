@@ -132,8 +132,6 @@ def gopher_quality(
     docs,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
     extra_cols: tuple[str, ...] = (),
 ):
     """Gopher repetition-free quality heuristics, one row per document:
@@ -224,7 +222,7 @@ def gopher_quality(
     reasons = F.array_compact(
         F.array(
             F.when(
-                (nw < min_words) | (nw > max_words),
+                (nw < GOPHER_MIN_WORDS) | (nw > GOPHER_MAX_WORDS),
                 F.lit("word_count"),
             ),
             F.when(
@@ -301,11 +299,7 @@ def c4_page_drop_sql(col: str = "text") -> str:
     ) + ")"
 
 
-def gopher_sql_exprs(
-    col: str = "text",
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
-) -> tuple[str, str]:
+def gopher_sql_exprs(col: str = "text") -> tuple[str, str]:
     """(reasons_csv_expr, keep_expr): DuckDB twins of gopher_quality's
     decision columns — same thresholds, same declared reason order,
     exact integer/ratio math so both engines decide identically."""
@@ -342,7 +336,10 @@ def gopher_sql_exprs(
         f"list_transform({words}, w -> lower(w)), s)))"
     )
     flags = (
-        ("word_count", f"({nw} < {min_words} OR {nw} > {max_words})"),
+        (
+            "word_count",
+            f"({nw} < {GOPHER_MIN_WORDS} OR {nw} > {GOPHER_MAX_WORDS})",
+        ),
         ("mean_word_len",
          f"({nw} = 0 OR {tl} / {nw} < {GOPHER_MIN_MEAN_WORD_LEN}"
          f" OR {tl} / {nw} > {GOPHER_MAX_MEAN_WORD_LEN})"),

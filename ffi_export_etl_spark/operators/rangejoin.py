@@ -34,7 +34,6 @@ def tolerance_join(
     left_ts: str,
     right_ts: str,
     tolerance: int,
-    how: str = "inner",
 ) -> DataFrame:
     """All (left, right) pairs with |left_ts - right_ts| <= tolerance
     (integer timestamps, e.g. epoch micros). Right side is exploded to
@@ -51,7 +50,7 @@ def tolerance_join(
             )
         ),
     )
-    joined = lb.join(rb, "_b", how).filter(
+    joined = lb.join(rb, "_b").filter(
         F.abs(F.col(left_ts) - F.col(right_ts)) <= tolerance
     )
     return joined.drop("_b")
@@ -64,15 +63,13 @@ def interval_join(
     start_col: str,
     end_col: str,
     bin_width: int,
-    key: str | None = None,
 ) -> DataFrame:
     """Inner join of ``facts`` rows onto every ``intervals`` row whose
-    half-open range ``[start_col, end_col)`` contains ``facts.ts_col``
-    (and whose ``key`` matches, when given).
+    half-open range ``[start_col, end_col)`` contains ``facts.ts_col``.
 
     Shape: facts get one narrow projection ``bin = ts div bin_width``;
     each interval explodes to the bins it covers (fan-out
-    ``len/bin_width + 1`` rows); one equi-join on the bin (+ ``key``),
+    ``len/bin_width + 1`` rows); one equi-join on the bin,
     then the exact containment filter. Every qualifying (fact, interval)
     pair meets in EXACTLY one bin — the fact's own — so no post-dedup is
     needed. Choose ``bin_width`` near the MEDIAN interval length: much
@@ -91,7 +88,7 @@ def interval_join(
     """
     if bin_width <= 0:
         raise ValueError("bin_width must be a positive integer")
-    overlap = set(facts.columns) & set(intervals.columns) - {key or ""}
+    overlap = set(facts.columns) & set(intervals.columns)
     if overlap:
         raise ValueError(f"column names must be disjoint, shared: {overlap}")
 
@@ -108,9 +105,8 @@ def interval_join(
             ),
         )
     )
-    on = [_BIN] + ([key] if key else [])
     return (
-        f.join(iv, on=on)
+        f.join(iv, on=[_BIN])
         .filter(
             (F.col(ts_col) >= F.col(start_col))
             & (F.col(ts_col) < F.col(end_col))

@@ -41,17 +41,14 @@ def _key_hash(key_col, salt: str):
     )
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
+def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
     """Deterministic Bernoulli sample: keep rows where the key's md5 hash
     falls under ``fraction`` of the hash space. Stable across runs and
-    partitionings; vary ``salt`` for independent samples of the same
-    data. One scan, no shuffle. NULL keys participate via
+    partitionings. One scan, no shuffle. NULL keys participate via
     NULL_KEY_SENTINEL (all null-keyed rows make the same cut)."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError("fraction must be in [0, 1]")
-    h = _key_hash(key_col, salt)
+    h = _key_hash(key_col, "")
     threshold = int(fraction * HASH_SPACE)
     return df.filter(h < F.lit(threshold))
 
@@ -62,7 +59,6 @@ def weighted_sample(
     group_col: str,
     fractions: dict[str, float],
     default_fraction: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic data-mixture sampling: keep each row with the
     sampling rate assigned to its ``group_col`` value (e.g. per-source
@@ -71,7 +67,7 @@ def weighted_sample(
     default for unknown sources).
 
     Same machinery as :func:`hash_sample` — membership is a pure
-    function of (salt, key), so the mixture is reproducible under any
+    function of the key, so the mixture is reproducible under any
     partitioning/retry/engine, subsets nest as a group's fraction grows,
     and the decision is SQL-replayable for audits. One scan, no shuffle:
     the per-group threshold is a CASE expression, not a join.
@@ -81,7 +77,7 @@ def weighted_sample(
             raise ValueError(f"fraction for {g!r} must be in [0, 1]")
     if not 0.0 <= default_fraction <= 1.0:
         raise ValueError("default_fraction must be in [0, 1]")
-    h = _key_hash(key_col, salt)
+    h = _key_hash(key_col, "")
     threshold = F.lit(int(default_fraction * HASH_SPACE))
     for g, f in sorted(fractions.items()):
         threshold = F.when(
@@ -92,7 +88,6 @@ def weighted_sample(
 
 def stratified_take(
     df: DataFrame, label_col: str, key_col: str, n_per_label: int,
-    salt: str = "",
     prefilter_margin: int = 8,
 ) -> DataFrame:
     """Exactly min(n, |stratum|) rows per label, chosen by deterministic
@@ -120,7 +115,7 @@ def stratified_take(
     table scan that is four narrow scans, cheap; callers passing an
     EXPENSIVE derived frame should persist/checkpoint it first and own
     the release."""
-    h = _key_hash(key_col, salt)
+    h = _key_hash(key_col, "")
     ord_ = h % MERSENNE31
     lbl = F.col(label_col)
     counts = df.groupBy(label_col).agg(F.count(F.lit(1)).alias("_n"))
@@ -199,8 +194,9 @@ def split_train_val_test(
     Every row gets exactly one split (NULL keys via NULL_KEY_SENTINEL),
     the assignment survives repartitioning/retries/engines, and because
     the SAME hash axis drives hash_sample, a row in
-    hash_sample(df, key, f, salt) with f <= val_fraction is guaranteed
-    to sit in the val split — nested-subset audits stay possible.
+    hash_sample(df, key, f) with f <= val_fraction is guaranteed to
+    sit in the val split (at the default empty salt) — nested-subset
+    audits stay possible.
     One scan, no shuffle, SQL-replayable.
     """
     if val_fraction < 0 or test_fraction < 0:
@@ -276,7 +272,6 @@ def split_by_cluster(
     clusters: DataFrame,
     val_fraction: float = 0.01,
     test_fraction: float = 0.01,
-    salt: str = "",
 ) -> DataFrame:
     """Leakage-safe train/val/test split: the assignment hashes the
     row's near-dup CLUSTER id, not its own key, so every member of a
@@ -304,7 +299,7 @@ def split_by_cluster(
         .drop("_cl_id", "_cl_cluster")
     )
     return split_train_val_test(
-        joined, "_cl_key", val_fraction, test_fraction, salt
+        joined, "_cl_key", val_fraction, test_fraction
     ).withColumnRenamed("_cl_key", "cluster_key")
 
 
@@ -314,25 +309,23 @@ def token_budget_sample(
     group_col: str,
     tokens_col: str,
     budgets: dict[str, int],
-    default_budget: int = 0,
-    salt: str = "",
-    hash_block_bits: int = 10,
 ) -> DataFrame:
     """Token-BUDGET mixture sampling: real pretraining mixes are
     specified as "N tokens from source X", not fractions — this keeps,
     per group, the deterministic hash-ordered run of documents that
     starts strictly inside the group's budget (overshoot bounded by one
-    document; budget 0 keeps nothing).
+    document; budget 0 keeps nothing, and so does a group without a
+    budget).
 
     Membership = (cumulative tokens of all hash-earlier docs in the
-    group) < budget, on the SAME (salt, key) md5 axis as hash_sample /
+    group) < budget, on the SAME key md5 axis as hash_sample /
     weighted_sample — reproducible under any partitioning/retry/engine,
     SQL-replayable, and monotone: a bigger budget strictly grows the
     kept set (nested audits, like fraction-based sampling).
 
     Scale shape: a naive per-group cumsum window is a single reducer
     per group (one giant source = one hot partition). Instead the
-    uniform hash axis is cut into 2**hash_block_bits contiguous blocks:
+    uniform hash axis is cut into 2**10 contiguous blocks:
     cumsum WITHIN (group, block) is fully parallel, per-block totals
     (groups x blocks rows — tiny) turn into block prefix offsets with a
     window over the totals table only, broadcast back. Same two-pass
@@ -341,19 +334,13 @@ def token_budget_sample(
     for g, b in budgets.items():
         if b < 0:
             raise ValueError(f"budget for {g!r} must be >= 0")
-    if default_budget < 0:
-        raise ValueError("default_budget must be >= 0")
-    h = _key_hash(key_col, salt)  # uniform in [0, 2^60)
-    blk = F.shiftright(h, 60 - hash_block_bits)
+    h = _key_hash(key_col, "")  # uniform in [0, 2^60)
+    blk = F.shiftright(h, 60 - 10)
     toks = F.col(tokens_col).cast("long")
-    # NULL groups must not silently vanish in the (null-rejecting)
-    # offsets equi-join — they budget at default_budget like any other
-    # unnamed group, via the module's sentinel (a NULL_KEY_SENTINEL
-    # group named in ``budgets`` would collide, so that name is
-    # reserved; same convention as the key hash).
-    grp = F.coalesce(
-        F.col(group_col).cast("string"), F.lit(NULL_KEY_SENTINEL)
-    )
+    # a group without a positive budget (a NULL group included) keeps
+    # nothing, so its rows leave before the windows and the join
+    funded = sorted(g for g, b in budgets.items() if b > 0)
+    grp = F.col(group_col).cast("string")
     w_in = (
         Window.partitionBy("_grp", "_blk")
         .orderBy("_h", key_col)
@@ -361,6 +348,7 @@ def token_budget_sample(
     )
     within = (
         df.withColumn("_grp", grp)
+        .filter(F.col("_grp").isin(funded) if funded else F.lit(False))
         .withColumn("_h", h)
         .withColumn("_blk", blk)
         .withColumn("_cum_in", F.sum(toks).over(w_in))
@@ -378,9 +366,11 @@ def token_budget_sample(
         "_blk",
         F.coalesce(F.sum("_tot").over(w_blk), F.lit(0)).alias("_off"),
     )
-    budget = F.lit(default_budget)
-    for g, b in sorted(budgets.items()):
-        budget = F.when(F.col("_grp") == g, F.lit(b)).otherwise(budget)
+    budget = F.lit(0)
+    for g in funded:
+        budget = F.when(F.col("_grp") == g, F.lit(budgets[g])).otherwise(
+            budget
+        )
     cum_before = F.col("_off") + F.col("_cum_in") - toks
     return (
         within.join(F.broadcast(offsets), ["_grp", "_blk"])
@@ -389,28 +379,18 @@ def token_budget_sample(
     )
 
 
-def deterministic_shuffle(
-    df: DataFrame,
-    key_col,
-    salt: str = "",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def deterministic_shuffle(df: DataFrame, key_col) -> DataFrame:
     """Reproducible global shuffle for training-data ordering: sort by
-    the key's salted md5 hash (tiebreak on the key itself so exact-dup
-    keys still order totally). The order is a pure function of (keys,
-    salt) — any cluster, any partitioning, any engine lands the same
-    sequence, and a different salt is a fresh epoch-style reshuffle.
+    the key's md5 hash (tiebreak on the key itself so exact-dup keys
+    still order totally). The order is a pure function of the keys —
+    any cluster, any partitioning, any engine lands the same sequence.
 
     Spark executes orderBy as a range-partitioned sort: sampled range
     boundaries, then a per-partition sort — no single-partition
-    bottleneck. ``num_partitions`` sizes the output files
-    (repartitionByRange on the same axis keeps the global order).
+    bottleneck.
     """
-    h = _key_hash(key_col, salt)
+    h = _key_hash(key_col, "")
     key = F.col(key_col) if isinstance(key_col, str) else key_col
-    if num_partitions is not None:
-        df = df.repartitionByRange(num_partitions, h.asc(), key.asc())
-        return df.sortWithinPartitions(h.asc(), key.asc())
     return df.orderBy(h.asc(), key.asc())
 
 
@@ -482,7 +462,6 @@ def temperature_sample(
     source_col: str = "source",
     alpha: float = 0.5,
     total_budget: int | None = None,
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic temperature-mixture sample: membership =
     key hash under the source's :func:`temperature_mixture_rates` rate.
@@ -502,7 +481,7 @@ def temperature_sample(
         .cast("bigint")
         .alias("_threshold"),
     )
-    h = _key_hash(key_col, salt)
+    h = _key_hash(key_col, "")
     return (
         df.join(F.broadcast(rates), source_col)
         .filter(h < F.col("_threshold"))

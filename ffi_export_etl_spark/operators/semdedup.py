@@ -8,8 +8,10 @@ corpus/k-sized cells instead of the whole corpus, which is the entire
 trick that makes semantic dedup feasible at web scale.
 
 Built by composing this engine's existing primitives, all JVM-side:
-- operators/similarity.lloyd_cells — deterministic, engine-portable
-  k-means assignment (broadcast centroids, one corpus scan per round);
+- a cell assignment the caller passes in — operators/similarity.
+  lloyd_cells (deterministic, engine-portable k-means: broadcast
+  centroids, one corpus scan per round) or any other (id, cell) table,
+  such as the PCA grid of queries/similarity_q's pcasem arm;
 - a within-cell self-join + rounded cosine for pair generation (ONE
   shuffle by cell; a configurable cell-size cap skips degenerate cells
   instead of letting one hot cell go quadratic on the whole corpus —
@@ -31,38 +33,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import as_double, cosine, lloyd_cells
+from ..functions.porthash import ROUND_DIGITS
+from .similarity import as_double, cosine
 
 DEFAULT_MAX_CELL = 10_000
 
 
 def semdedup_pairs(
     vectors: DataFrame,
-    dim: int,
-    k: int = 16,
+    cells: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    iters: int = 2,
     max_cell_size: int | None = DEFAULT_MAX_CELL,
-    round_digits: int = 6,
-    cells: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b, cell, cos) — within-cell pairs with cosine >=
-    threshold, id_a < id_b.
+    threshold, id_a < id_b, over the (id, cell) assignment ``cells``.
 
     ``max_cell_size`` drops over-full cells from pair generation (a
     degenerate clustering then under-deduplicates instead of going
-    quadratic); size k so expected cell size corpus/k stays well under
-    it, and raise k as the corpus grows. Pass a precomputed ``cells``
-    (id, cell) to reuse a persisted assignment across runs/thresholds
-    instead of re-running Lloyd.
+    quadratic); size the clustering so expected cell size stays well
+    under it.
     """
-    if cells is None:
-        cells = lloyd_cells(
-            vectors, dim, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits,
-        )
     v = vectors.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
     ).join(cells, "id")
@@ -77,7 +69,7 @@ def semdedup_pairs(
         a.join(b, ["cell"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cos", F.round(cosine(F.col("va"), F.col("vb")), round_digits)
+            "cos", F.round(cosine(F.col("va"), F.col("vb")), ROUND_DIGITS)
         )
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cell", "cos")

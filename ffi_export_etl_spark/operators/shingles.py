@@ -147,35 +147,16 @@ def build_shingles(
     raise ValueError(f"unknown shingle mode {mode!r} (want word|char)")
 
 
-def build_shingle_arrays(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int | None,
-    mode: str = "word",
-) -> DataFrame:
-    """(id, shs) — build_shingles' per-document SET form (the exploded
-    table is its explode); consumed where whole sets are compared
-    map-side (jaccard_pairs verification)."""
-    if n is None:
-        n = default_shingle_n(mode)
-    if mode == "word":
-        return word_shingle_arrays(docs, id_col, text_col, n)
-    if mode == "char":
-        return char_shingle_arrays(docs, id_col, text_col, n)
-    raise ValueError(f"unknown shingle mode {mode!r} (want word|char)")
-
-
 def jaccard_pairs(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     n: int | None = None,
     threshold_pct: int = 20,
-    mode: str = "word",
     cache_shingles: bool = False,
 ) -> DataFrame:
-    """All doc pairs with n-gram Jaccard >= threshold_pct/100 — EXACT.
+    """All doc pairs with word n-gram Jaccard >= threshold_pct/100 —
+    EXACT.
 
     Candidates come from a prefix-filtered join: shingles are ranked
     rarest-first globally (document frequency, shingle tiebreak); doc a
@@ -206,7 +187,9 @@ def jaccard_pairs(
     # ``result._jaccard_persisted`` (the curate_documents pattern);
     # default False recomputes so ad-hoc callers never pin the largest
     # intermediate for the session lifetime.
-    arr = build_shingle_arrays(docs, id_col, text_col, n, mode)
+    if n is None:
+        n = default_shingle_n("word")
+    arr = word_shingle_arrays(docs, id_col, text_col, n)
     if cache_shingles:
         arr.persist()
     # n_sh rides through the explode — no separate sizes join

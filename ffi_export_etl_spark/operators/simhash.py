@@ -196,16 +196,15 @@ def simhash_near_duplicates(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """(id_a, id_b, hamming) pairs with Hamming(simhash) <= max_hamming.
 
     The 20-table Manku banding guarantees recall for max_hamming <=
     GUARANTEED_HAMMING (= 3); larger thresholds keep the probes but the
     guarantee lapses (a pair flipping bits in 4+ blocks can be missed).
-    ``max_bucket_size`` (default DEFAULT_MAX_BUCKET, None disables)
-    drops degenerate buckets — at 30 bits per band key those are
-    identical-fingerprint hubs, i.e. exact-duplicate clusters that
+    Buckets above DEFAULT_MAX_BUCKET are dropped as degenerate — at 30
+    bits per band key those are identical-fingerprint hubs, i.e.
+    exact-duplicate clusters that
     collide on every band and would contribute B^2/2 pairs each; members
     of a dropped bucket can still meet through another band only if they
     differ somewhere, so the cap trades hub recall for a hard bound on
@@ -216,4 +215,4 @@ def simhash_near_duplicates(
     expansion; the old banded self-join read it twice), so the persist
     bought nothing and stranded a cached plan per call.)"""
     fp = simhash_fingerprints(docs, id_col, text_col)
-    return _pairs_from_buckets(_banded(fp), max_hamming, max_bucket_size)
+    return _pairs_from_buckets(_banded(fp), max_hamming, DEFAULT_MAX_BUCKET)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.porthash import hyperplane_coefficients, md5_long
+from ..functions.porthash import ROUND_DIGITS, hyperplane_coefficients, md5_long
 from .minhash import DEFAULT_MAX_BUCKET
 
 
@@ -71,8 +71,6 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     k: int = 10,
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -80,9 +78,8 @@ def brute_force_topk(
     corpus is scanned once with no shuffle until the final per-query top-k
     window (partitioned by query_id, deterministic tiebreak on id).
     Cosine is rounded before ranking so rank order is engine-portable.
-    ``include_self=False`` (default) keeps the family's near-dup
-    convention — a corpus-id query never retrieves its own row; pass
-    True for retrieval semantics.
+    The family's near-dup convention holds: a corpus-id query never
+    retrieves its own row.
     """
     v = vectors.select(
         F.col(id_col).alias("nbr_id"), as_double(F.col(vec_col)).alias("v")
@@ -90,13 +87,9 @@ def brute_force_topk(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    on = (
-        F.lit(True) if include_self
-        else F.col("nbr_id") != F.col("query_id")
-    )
     scored = (
-        v.join(F.broadcast(q), on)
-        .withColumn("cos", F.round(cosine(F.col("v"), F.col("qv")), round_digits))
+        v.join(F.broadcast(q), F.col("nbr_id") != F.col("query_id"))
+        .withColumn("cos", F.round(cosine(F.col("v"), F.col("qv")), ROUND_DIGITS))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nbr_id"))
     return (
@@ -107,7 +100,7 @@ def brute_force_topk(
 
 
 def lsh_bucket(
-    vec: Column, dim: int, planes: int = 8, round_digits: int = 6
+    vec: Column, dim: int, planes: int = 8
 ) -> Column:
     """Sign-pattern bucket id (0..2^planes-1) of a vector.
 
@@ -116,7 +109,7 @@ def lsh_bucket(
     coefs = hyperplane_coefficients(dim, planes)
     bucket = F.lit(0).cast("long")
     for p in range(planes):
-        d = F.round(dot(vec, plane_lit(coefs[p])), round_digits)
+        d = F.round(dot(vec, plane_lit(coefs[p])), ROUND_DIGITS)
         bit = F.when(d >= 0, 1).otherwise(0)
         bucket = bucket + F.shiftleft(bit.cast("long"), p)
     return bucket
@@ -131,46 +124,32 @@ def lsh_topk(
     query_id_col: str = "query_id",
     k: int = 10,
     planes: int = 8,
-    probe_hamming: int = 1,
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates share (or nearly share) the query's
     LSH bucket.
 
     With ``planes`` sign bits the corpus splits into 2^planes buckets.
     Multi-probe: the (tiny, broadcast) QUERY side is exploded to every
-    bucket within ``probe_hamming`` bit flips — recall rises steeply for
-    zero extra cost on the corpus side, which is the side that matters at
-    scale. probe_hamming=1 probes planes+1 of 2^planes buckets.
+    bucket within one bit flip — planes+1 of 2^planes buckets, so recall
+    rises steeply for zero extra cost on the corpus side, which is the
+    side that matters at scale.
     """
     v = vectors.select(
         F.col(id_col).alias("nbr_id"), as_double(F.col(vec_col)).alias("v")
-    ).withColumn("bucket", lsh_bucket(F.col("v"), dim, planes, round_digits))
+    ).withColumn("bucket", lsh_bucket(F.col("v"), dim, planes))
     q = queries.select(
         F.col(query_id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("bucket", lsh_bucket(F.col("qv"), dim, planes, round_digits))
-    if probe_hamming >= 1:
-        flips = [F.col("bucket")] + [
-            F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(planes)
-        ]
-        if probe_hamming >= 2:
-            flips += [
-                F.col("bucket")
-                .bitwiseXOR(F.lit(1 << p))
-                .bitwiseXOR(F.lit(1 << r))
-                for p in range(planes)
-                for r in range(p + 1, planes)
-            ]
-        q = q.withColumn("bucket", F.explode(F.array(*flips)))
-    scored = v.join(F.broadcast(q), ["bucket"])
-    if not include_self:
-        scored = scored.filter(F.col("nbr_id") != F.col("query_id"))
+    ).withColumn("bucket", lsh_bucket(F.col("qv"), dim, planes))
+    flips = [F.col("bucket")] + [
+        F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(planes)
+    ]
+    q = q.withColumn("bucket", F.explode(F.array(*flips)))
     scored = (
-        scored
+        v.join(F.broadcast(q), ["bucket"])
+        .filter(F.col("nbr_id") != F.col("query_id"))
         .drop("bucket")
         .dropDuplicates(["query_id", "nbr_id"])
-        .withColumn("cos", F.round(cosine(F.col("v"), F.col("qv")), round_digits))
+        .withColumn("cos", F.round(cosine(F.col("v"), F.col("qv")), ROUND_DIGITS))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nbr_id"))
     return (
@@ -187,7 +166,6 @@ def signlsh_signature_store(
     vec_col: str = "embedding",
     tables: int = 4,
     planes_per_table: int = 8,
-    round_digits: int = 6,
 ) -> DataFrame:
     """(id, band, bucket) — the persistable sign-LSH index of an
     embedding corpus, one row per (vector, hash table). Column names
@@ -208,7 +186,7 @@ def signlsh_signature_store(
         for p in range(planes_per_table):
             d = F.round(
                 dot(F.col("v"), plane_lit(coefs[t * planes_per_table + p])),
-                round_digits,
+                ROUND_DIGITS,
             )
             bit = F.when(d >= 0, 1).otherwise(0)
             bucket = bucket + F.shiftleft(bit.cast("long"), p)
@@ -225,7 +203,6 @@ def lsh_banded_pairs(
     vec_col: str = "embedding",
     tables: int = 4,
     planes_per_table: int = 8,
-    round_digits: int = 6,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Distinct candidate (id_a, id_b) pairs sharing a sign-LSH bucket in
@@ -245,7 +222,7 @@ def lsh_banded_pairs(
     tables buy recall, more planes-per-table buy precision (smaller
     buckets)."""
     banded = signlsh_signature_store(
-        vectors, dim, id_col, vec_col, tables, planes_per_table, round_digits
+        vectors, dim, id_col, vec_col, tables, planes_per_table
     ).withColumnRenamed("band", "tbl")
     from .bucketpairs import bucket_pairs
 
@@ -270,7 +247,6 @@ def cosine_pairs_bucketed(
     threshold: float = 0.95,
     tables: int = 4,
     planes_per_table: int = 8,
-    round_digits: int = 6,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Embedding near-dup pairs: banded sign-LSH candidates verified by
@@ -279,7 +255,7 @@ def cosine_pairs_bucketed(
     verification touches candidates only."""
     cands = lsh_banded_pairs(
         vectors, dim, id_col, vec_col, tables, planes_per_table,
-        round_digits, max_bucket_size,
+        max_bucket_size=max_bucket_size,
     )
     v = vectors.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
@@ -289,7 +265,7 @@ def cosine_pairs_bucketed(
     return (
         cands.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cos", F.round(cosine(F.col("va"), F.col("vb")), round_digits))
+        .withColumn("cos", F.round(cosine(F.col("va"), F.col("vb")), ROUND_DIGITS))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -300,7 +276,6 @@ def dimension_centroids(
     dim: int,
     cell_col: str = "label",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """(cell, centroid: array<double>) — dimension-wise mean per cell,
     each component rounded so downstream rankings are engine-portable.
@@ -312,7 +287,7 @@ def dimension_centroids(
         F.col(cell_col).alias("cell"), as_double(F.col(vec_col)).alias("v")
     )
     aggs = [
-        F.round(F.avg(F.element_at("v", i + 1)), round_digits).alias(f"c{i}")
+        F.round(F.avg(F.element_at("v", i + 1)), ROUND_DIGITS).alias(f"c{i}")
         for i in range(dim)
     ]
     return (
@@ -328,7 +303,6 @@ def probe_cells(
     q: DataFrame,
     cents: DataFrame,
     nprobe: int,
-    round_digits: int = 6,
 ) -> DataFrame:
     """(query_id, qv, cell): each query's ``nprobe`` nearest coarse
     cells by ROUNDED centroid cosine with a cell tiebreak — the shared
@@ -338,7 +312,7 @@ def probe_cells(
     the centroid table broadcasts."""
     qc = q.join(F.broadcast(cents)).withColumn(
         "ccos",
-        F.round(cosine(F.col("qv"), F.col("centroid")), round_digits),
+        F.round(cosine(F.col("qv"), F.col("centroid")), ROUND_DIGITS),
     )
     wq = Window.partitionBy("query_id").orderBy(
         F.col("ccos").desc(), F.col("cell")
@@ -357,7 +331,6 @@ def lloyd_cells(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Deterministic, engine-portable k-means cell assignment: (id, cell).
 
@@ -385,7 +358,7 @@ def lloyd_cells(
     assign = None
     for _ in range(max(iters, 1)):
         scored = v.join(F.broadcast(cents)).withColumn(
-            "ccos", F.round(cosine(F.col("v"), F.col("centroid")), round_digits)
+            "ccos", F.round(cosine(F.col("v"), F.col("centroid")), ROUND_DIGITS)
         )
         # argmax(rounded ccos, tiebreak cell ASC) as max(struct(ccos,
         # -cell)) + first(v): a partial-aggregable groupBy instead of a
@@ -407,7 +380,7 @@ def lloyd_cells(
                 "id", (-F.col("_best._nc")).cast("int").alias("cell"), "v"
             )
         )
-        cents = dimension_centroids(assign, dim, "cell", "v", round_digits)
+        cents = dimension_centroids(assign, dim, "cell", "v")
     v.unpersist()
     return assign.select("id", "cell")
 
@@ -422,8 +395,6 @@ def ivf_topk(
     cell_col: str = "label",
     k: int = 10,
     nprobe: int = 3,
-    round_digits: int = 6,
-    include_self: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: partition the corpus into
     cells around centroids, probe only the ``nprobe`` cells nearest each
@@ -435,7 +406,7 @@ def ivf_topk(
     sign-LSH but with data-adaptive cells, which is why IVF recalls better
     on clustered embeddings.
     """
-    cents = dimension_centroids(vectors, dim, cell_col, vec_col, round_digits)
+    cents = dimension_centroids(vectors, dim, cell_col, vec_col)
     v = vectors.select(
         F.col(id_col).alias("nbr_id"),
         F.col(cell_col).alias("cell"),
@@ -445,12 +416,13 @@ def ivf_topk(
         F.col(query_id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
     # rank cells per query by ROUNDED centroid cosine; keep nprobe nearest
-    probes = probe_cells(q, cents, nprobe, round_digits)
-    scored = v.join(F.broadcast(probes), ["cell"])
-    if not include_self:
-        scored = scored.filter(F.col("nbr_id") != F.col("query_id"))
-    scored = scored.withColumn(
-        "cos", F.round(cosine(F.col("v"), F.col("qv")), round_digits)
+    probes = probe_cells(q, cents, nprobe)
+    scored = (
+        v.join(F.broadcast(probes), ["cell"])
+        .filter(F.col("nbr_id") != F.col("query_id"))
+        .withColumn(
+            "cos", F.round(cosine(F.col("v"), F.col("qv")), ROUND_DIGITS)
+        )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nbr_id"))
     return (
@@ -465,7 +437,6 @@ def cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    round_digits: int = 6,
 ) -> DataFrame:
     """All-pairs cosine >= threshold (exact; quadratic — small corpora and
     recall tests only; the registered dedup path is
@@ -477,7 +448,7 @@ def cosine_pairs(
     b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(cosine(F.col("va"), F.col("vb")), round_digits))
+        .withColumn("cos", F.round(cosine(F.col("va"), F.col("vb")), ROUND_DIGITS))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )

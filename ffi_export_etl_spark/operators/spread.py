@@ -25,11 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_per_doc(
-    docs: DataFrame, key_col: str, min_partitions: int | None = None
-) -> DataFrame:
+def spread_per_doc(docs: DataFrame, key_col: str) -> DataFrame:
     """Repartition ``docs`` by ``key_col`` iff the backing scan has fewer
-    input files than ``min_partitions`` (default: defaultParallelism).
+    input files than the session's defaultParallelism.
 
     ``inputFiles()`` is plan metadata (no job); non-file sources report
     an empty list and conservatively get the spread — correct either
@@ -39,12 +37,11 @@ def spread_per_doc(
     a derived input whose partitions were collapsed upstream (e.g.
     ``docs.coalesce(1)`` over a many-file corpus) reports many files and
     skips the spread, leaving the CPU-heavy stage narrow. Callers who
-    collapse partitions upstream should pass ``min_partitions`` above
-    the file count (forcing the spread) or repartition themselves; the
+    collapse partitions upstream should repartition themselves; the
     common shapes — raw scans, filters, column projections — preserve
     scan partitioning and are sized correctly by the file count.
     """
-    par = min_partitions or docs.sparkSession.sparkContext.defaultParallelism
+    par = docs.sparkSession.sparkContext.defaultParallelism
     try:
         n_files = len(docs.inputFiles())
     except Exception:  # non-file-backed plans: spread, the safe default

@@ -76,36 +76,16 @@ def extract_domain(col: Column | str) -> Column:
     return F.lower(F.regexp_extract(c, _DOMAIN_RE, 1))
 
 
-def filter_blocked_domains(
-    docs,
-    url_col: str = "url",
-    blocklist=None,
-    blocklist_df=None,
-    include_subdomains: bool = True,
-):
-    """Drop documents whose URL's domain is blocklisted — the standard
-    source-level web filter. Pass either an in-memory ``blocklist``
-    (list[str], embedded as literals) or a ``blocklist_df`` with a
-    ``domain`` column (broadcast anti-join — the shape for real
-    blocklists of millions of entries). ``include_subdomains`` also
-    blocks ``*.domain``."""
+def filter_blocked_domains(docs, blocklist, url_col: str = "url"):
+    """Drop documents whose URL's domain, or a parent domain of it, is
+    in ``blocklist`` (list[str], embedded as literals) — the standard
+    source-level web filter."""
     dom = extract_domain(url_col)
-    if (blocklist is None) == (blocklist_df is None):
-        raise ValueError("pass exactly one of blocklist / blocklist_df")
-    if blocklist is not None:
-        cond = F.lit(False)
-        for d in blocklist:
-            d = d.lower()
-            hit = dom == d
-            if include_subdomains:
-                hit = hit | dom.endswith("." + d)
-            cond = cond | hit
-        return docs.filter(~cond)
-    b = blocklist_df.select(F.lower(F.col("domain")).alias("_bd"))
-    on = dom == F.col("_bd")
-    if include_subdomains:
-        on = on | dom.endswith(F.concat(F.lit("."), F.col("_bd")))
-    return docs.join(F.broadcast(b), on, "left_anti")
+    cond = F.lit(False)
+    for d in blocklist:
+        d = d.lower()
+        cond = cond | ((dom == d) | dom.endswith("." + d))
+    return docs.filter(~cond)
 
 
 def dup_line_frac_of(lines: Column) -> Column:
@@ -127,7 +107,6 @@ def repetition_scores(
     docs,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_tokens: int = 10_000,
 ):
     """Within-document repetition metrics (the Gopher-rules quality
     signals that length/stopword stats miss):
@@ -147,7 +126,7 @@ def repetition_scores(
     equal run via one aggregate pass — O(n log n) per document,
     array-local (the naive count-per-distinct-bigram formulation is
     O(d*n) and was replaced after review). Tokens stay capped at
-    ``max_tokens`` (deterministic first-N truncation, same policy as the
+    10,000 (deterministic first-N truncation, same policy as the
     simhash fingerprint cap) to bound memory on pathological documents.
     """
     raw_lines = F.split(F.col(text_col), r"\n")
@@ -159,7 +138,7 @@ def repetition_scores(
     )
     dup_line_frac = dup_line_frac_of(raw_lines)
 
-    toks = F.slice(F.split(F.col(text_col), r"\s+"), 1, max_tokens)
+    toks = F.slice(F.split(F.col(text_col), r"\s+"), 1, 10_000)
     n_toks = F.size(toks)
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(n_toks - 1, F.lit(0))),
@@ -399,7 +378,6 @@ def compression_ratio(
     docs,
     id_col: str = "doc_id",
     text_col: str = "text",
-    level: int = 6,
 ):
     """(id, n_raw_bytes, n_compressed_bytes, compression_ratio) — the
     zlib-compressibility quality signal the large-corpus curation
@@ -413,7 +391,7 @@ def compression_ratio(
     ``mapInPandas`` kernel with stdlib zlib — the multimodal/BPE tier,
     one corpus scan, never row-at-a-time. Ratio for empty text is
     defined as 0.0 (nothing to judge; pair with the min-words quality
-    floor). Deterministic: zlib level fixed, UTF-8 bytes.
+    floor). Deterministic: zlib level 6, UTF-8 bytes.
     """
     import zlib
     from collections.abc import Iterator
@@ -444,7 +422,7 @@ def compression_ratio(
             raw = [
                 (t or "").encode("utf-8") for t in pdf["text"]
             ]
-            comp = [len(zlib.compress(b, level)) for b in raw]
+            comp = [len(zlib.compress(b, 6)) for b in raw]
             n_raw = [len(b) for b in raw]
             yield pd.DataFrame(
                 {

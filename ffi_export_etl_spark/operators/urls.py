@@ -21,14 +21,13 @@ not a fetchable address):
     migration is the most common recrawl variant); other schemes stay
     distinct; scheme-less and protocol-relative (``//host/p``) inputs
     parse as web URLs
-  - host lowercased; ``www.`` prefix dropped (optional)
+  - host lowercased; ``www.`` prefix dropped
   - userinfo stripped; default ports (http:80, https:443) stripped
   - fragment stripped
   - tracking query parameters removed case-insensitively (``utm_*``,
     gclid, fbclid, msclkid, igshid, mc_*; deliberately NOT bare
-    ``ref``, which sites use as a real resource selector — widen per
-    call via ``tracking_param_re``), remaining parameters SORTED for
-    order-insensitivity
+    ``ref``, which sites use as a real resource selector), remaining
+    parameters SORTED for order-insensitivity
   - trailing ``/`` trimmed (so ``/a/`` == ``/a``; bare host keeps none)
 Non-URL strings (no ``host.tld`` shape, including NULL/empty) pass
 through trimmed+lowercased so the expression is total — and
@@ -47,8 +46,7 @@ __all__ = ["canonicalize_url", "dedup_by_url", "TRACKING_PARAM_RE"]
 # parameter names that identify a tracking variant, not a resource.
 # Deliberately ONLY the unambiguous trackers: bare `ref` (and friends)
 # double as genuine resource selectors on many sites (?ref=<branch>),
-# and stripping one would collapse distinct pages — callers with a
-# known-tracker site can pass a wider pattern per call.
+# and stripping one would collapse distinct pages.
 TRACKING_PARAM_RE = (
     r"^(utm_[a-z]+|gclid|fbclid|msclkid|igshid|mc_cid|mc_eid)="
 )
@@ -84,23 +82,18 @@ def _is_url(col: Column | str) -> Column:
     )
 
 
-def canonicalize_url(
-    col: Column | str,
-    strip_www: bool = True,
-    tracking_param_re: str = TRACKING_PARAM_RE,
-) -> Column:
+def canonicalize_url(col: Column | str) -> Column:
     """Canonical URL string as a pure Column expression (see module
-    docstring for the normalization set). ``tracking_param_re`` is the
-    case-insensitive anchored pattern of query-parameter prefixes to
-    strip — override it per corpus when a site's trackers are known."""
+    docstring for the normalization set). Query parameters matching
+    ``TRACKING_PARAM_RE`` (case-insensitive, anchored) are stripped."""
     raw = F.trim(F.col(col) if isinstance(col, str) else col)
     # protocol-relative '//host/p' is a web URL with the scheme elided
     c = F.regexp_replace(raw, r"^//", "")
     scheme = F.lower(F.regexp_extract(c, _URL_RE, 1))
     scheme = F.when(scheme == "", F.lit("http")).otherwise(scheme)
-    host = F.lower(F.regexp_extract(c, _URL_RE, 2))
-    if strip_www:
-        host = F.regexp_replace(host, r"^www\.", "")
+    host = F.regexp_replace(
+        F.lower(F.regexp_extract(c, _URL_RE, 2)), r"^www\.", ""
+    )
     port = F.regexp_extract(c, _URL_RE, 3)
     port = F.when(
         (port == "")
@@ -119,7 +112,7 @@ def canonicalize_url(
             F.split(query, "&"),
             # tracking-param names match case-insensitively (UTM_Source
             # and utm_source are the same tracker)
-            lambda p: (p != "") & ~F.lower(p).rlike(tracking_param_re),
+            lambda p: (p != "") & ~F.lower(p).rlike(TRACKING_PARAM_RE),
         )
     )
     qtail = F.when(
@@ -142,8 +135,6 @@ def dedup_by_url(
     docs: DataFrame,
     url_col: str = "url",
     id_col: str = "doc_id",
-    strip_www: bool = True,
-    tracking_param_re: str = TRACKING_PARAM_RE,
 ) -> DataFrame:
     """Keep one document per canonical URL — the min-id occurrence (the
     engine's uniform keeper rule). One codegen'd projection + one
@@ -156,7 +147,7 @@ def dedup_by_url(
     a canonical key like NULL or '')."""
     keyed = docs.withColumn(
         "canonical_url",
-        canonicalize_url(url_col, strip_www, tracking_param_re),
+        canonicalize_url(url_col),
     )
     urlish = F.col(url_col).isNotNull() & _is_url(url_col)
     keepers = (

@@ -76,41 +76,38 @@ class CheckSuite:
         self._checks.append(check)
         return self
 
-    def not_null(self, col: str, max_violations: int = 0) -> "CheckSuite":
+    # every row-level and unique check passes only at zero violations
+
+    def not_null(self, col: str) -> "CheckSuite":
         return self._add(
-            _Check(f"not_null:{col}", "not_null", col, max_violations,
+            _Check(f"not_null:{col}", "not_null", col, 0,
                    F.col(col).isNull())
         )
 
-    def in_range(self, col: str, lo, hi,
-                 max_violations: int = 0) -> "CheckSuite":
+    def in_range(self, col: str, lo, hi) -> "CheckSuite":
         return self._add(
-            _Check(f"in_range:{col}", "in_range", col, max_violations,
+            _Check(f"in_range:{col}", "in_range", col, 0,
                    ~F.col(col).between(F.lit(lo), F.lit(hi))
                    | F.col(col).isNull())
         )
 
-    def accepted_values(self, col: str, values,
-                        max_violations: int = 0) -> "CheckSuite":
+    def accepted_values(self, col: str, values) -> "CheckSuite":
         vals = [F.lit(v) for v in values]
         return self._add(
-            _Check(f"accepted_values:{col}", "accepted_values", col,
-                   max_violations,
+            _Check(f"accepted_values:{col}", "accepted_values", col, 0,
                    ~F.col(col).isin(*vals) | F.col(col).isNull())
         )
 
-    def matches(self, col: str, pattern: str,
-                max_violations: int = 0) -> "CheckSuite":
+    def matches(self, col: str, pattern: str) -> "CheckSuite":
         return self._add(
-            _Check(f"matches:{col}", "matches", col, max_violations,
+            _Check(f"matches:{col}", "matches", col, 0,
                    ~F.col(col).rlike(pattern) | F.col(col).isNull())
         )
 
-    def satisfies(self, name: str, cond: Column, column: str = "",
-                  max_violations: int = 0) -> "CheckSuite":
+    def satisfies(self, name: str, cond: Column,
+                  column: str = "") -> "CheckSuite":
         """Generic row predicate; ``cond`` is the PASS condition."""
-        return self._add(
-            _Check(name, "satisfies", column, max_violations, ~cond))
+        return self._add(_Check(name, "satisfies", column, 0, ~cond))
 
     def null_fraction_at_most(self, col: str,
                               fraction: float) -> "CheckSuite":
@@ -121,12 +118,10 @@ class CheckSuite:
 
     # -- aggregate-level checks ---------------------------------------
 
-    def unique(self, col: str, max_violations: int = 0) -> "CheckSuite":
+    def unique(self, col: str) -> "CheckSuite":
         """Violations = non-null count - distinct count (exact; shares
         ONE expand with every other unique check)."""
-        return self._add(
-            _Check(f"unique:{col}", "unique", col, max_violations, None)
-        )
+        return self._add(_Check(f"unique:{col}", "unique", col, 0, None))
 
     def min_rows(self, n: int) -> "CheckSuite":
         return self._add(_Check(f"min_rows:{n}", "min_rows", "", n, None))

@@ -85,12 +85,9 @@ def curate_documents(
     temperature_alpha: float | None = None,
     temperature_budget: int | None = None,
     epochs: dict[str, float] | None = None,
-    epochs_default: float = 1.0,
-    epochs_salt: str = "epoch",
     split_val: float | None = None,
     split_test: float | None = None,
     split_salt: str = "split",
-    persist_intermediates: bool = True,
     funnel: list | None = None,
 ) -> DataFrame:
     """Returns the curated corpus: (id, source, text, n_words, cluster_id,
@@ -98,7 +95,8 @@ def curate_documents(
     near-dup cluster, quality-filtered, mixture-sampled, and positioned
     in the packed token stream. ``epochs`` ("N epochs of source X",
     r7) adds an ``epoch`` copy-index column and repeats each kept doc
-    into its own token-stream slices; ``split_val``/``split_test``
+    into its own token-stream slices (sources it does not name keep one
+    epoch); ``split_val``/``split_test``
     (r7) add a leakage-safe ``split`` column hashed on the near-dup
     cluster id the pipeline already computes.
 
@@ -128,10 +126,10 @@ def curate_documents(
     document-quality heuristics at the quality stage (both
     operators/qualityrules.py, judged on raw post-HTML text).
 
-    ``persist_intermediates`` (default on) persists the two most-reused
-    boundaries: ``scrubbed`` (consumed by the minhash pair pass, the
-    cluster attach, and the keeper join — without it the scan + scrub
-    regexes + boilerplate anti-join recompute per consumer) and the
+    The two most-reused boundaries are persisted: ``scrubbed``
+    (consumed by the minhash pair pass, the cluster attach, and the
+    keeper join — without it the scan + scrub regexes + boilerplate
+    anti-join recompute per consumer) and the
     mixture output (consumed by packing AND the final position join —
     without it the ENTIRE upstream pipeline runs twice). Measured on the
     composed sf0.1 run: steady-state 9.5s -> 6.1s with both persists
@@ -142,8 +140,7 @@ def curate_documents(
     returned DataFrame) — the persisted boundaries are attached to the
     result as ``result._curation_persisted``; call
     release_curation_caches(result) when done with it in a long-lived
-    session. At 100 TB prefer writing the mixture output to a staging
-    table instead — pass False and checkpoint externally.
+    session.
 
     ``funnel`` (default None, inert): pass a list to collect
     (stage_name, frame, text_col) at every enabled stage boundary —
@@ -167,11 +164,9 @@ def curate_documents(
     # mode the input frame and the final pre-scrub frame are persisted
     # too (raw corpus text, the price of the audit; the production
     # funnel=None path is untouched), handed back through
-    # _curation_persisted like the other boundaries. At 100 TB run
-    # audits with persist_intermediates=False and external staging
-    # tables, as the persist docstring already prescribes.
+    # _curation_persisted like the other boundaries.
     _funnel_persists: list[DataFrame] = []
-    if funnel is not None and persist_intermediates:
+    if funnel is not None:
         cur = cur.persist()
         _funnel_persists.append(cur)
     _mark("input", cur, text_col)
@@ -328,9 +323,7 @@ def curate_documents(
         from ..operators.scripts import needs_char_shingles
 
         scrub_cols.append(needs_char_shingles(scrub_expr).alias("_charish"))
-    scrubbed = cur.select(*scrub_cols)
-    if persist_intermediates:
-        scrubbed = scrubbed.persist()
+    scrubbed = cur.select(*scrub_cols).persist()
     _mark("scrub", scrubbed, "text")
 
     # shingle_mode="char" is the route for boundary-less scripts (CJK,
@@ -495,8 +488,7 @@ def curate_documents(
             mixed, "id", "source", "n_words", token_budgets
         )
         _mark("token_budget", mixed, "text")
-    if persist_intermediates:
-        mixed = mixed.persist()
+    mixed = mixed.persist()
     persisted_mix = mixed  # the handle to release, even if rebound below
     # temperature (alpha) mixing — the "no hand-tuned rates" mixture:
     # per-source rates derive from corpus shares in-plan
@@ -553,7 +545,7 @@ def curate_documents(
         import math as _math
 
         n_max = int(
-            _math.ceil(max([*epochs.values(), epochs_default, 1.0]))
+            _math.ceil(max([*epochs.values(), 1.0]))
         ) + 1
         # DISTINCT salt (review r7): the mixture/budget/temperature
         # samplers upstream condition on the salt-'' md5(id) axis; an
@@ -562,8 +554,7 @@ def curate_documents(
         # + epochs 2.5 would give EVERY kept doc the third copy —
         # effective 3.0 epochs, not 2.5)
         mixed = epoch_upsample(
-            mixed, "id", "source", epochs, epochs_default,
-            salt=epochs_salt,
+            mixed, "id", "source", epochs, 1.0, salt="epoch"
         ).withColumn(
             "_rid",
             (F.col("id").cast("long") * n_max + F.col("epoch")).cast(
@@ -612,11 +603,7 @@ def curate_documents(
         )
     # cached plans live in the CacheManager until explicitly unpersisted;
     # hand the caller the handles (see release_curation_caches)
-    out._curation_persisted = (
-        [scrubbed, persisted_mix, *_funnel_persists]
-        if persist_intermediates
-        else []
-    )
+    out._curation_persisted = [scrubbed, persisted_mix, *_funnel_persists]
     return out
 
 
@@ -665,8 +652,7 @@ def count_funnel_stages(stages: list, out: DataFrame | None = None) -> list[dict
 
 def release_curation_caches(result: DataFrame) -> None:
     """Unpersist the boundary caches a curate_documents result is
-    holding (no-op for persist_intermediates=False results or plain
-    DataFrames). Call after the result has been written/collected in a
+    holding (no-op for plain DataFrames). Call after the result has been written/collected in a
     long-lived session; per-process pipelines can rely on process exit
     instead."""
     for df in getattr(result, "_curation_persisted", []):

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from ..operators.components import dedup_clusters
 from ..operators.exactdedup import drop_known_duplicates, exact_signature_store
 from ..operators.minhash import (
-    DEFAULT_MAX_BUCKET,
     incremental_verified_pairs,
     minhash_signature_store_with_sigs,
 )
@@ -55,10 +54,8 @@ def curate_increment(
     source_col: str = "source",
     min_words: int = 20,
     jaccard_threshold_pct: int = 20,
-    n: int | None = None,
     num_perm: int = 32,
     bands: int = 8,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     shingle_mode: str = "word",
     span_store: DataFrame | None = None,
     span_dedup_tokens: int | None = None,
@@ -190,11 +187,11 @@ def curate_increment(
     _mark("exact_filter", scrubbed, "text")
 
     # shingle_mode AND width must match what the STORE was built with —
-    # signatures are only comparable within one shingle definition.
-    # n=None resolves per mode (shingles.default_shingle_n), the same
+    # signatures are only comparable within one shingle definition; the
+    # width resolves per mode (shingles.default_shingle_n), the same
     # resolution curate_documents applies when it builds the store.
     new_banded = minhash_signature_store_with_sigs(
-        scrubbed, "id", "text", n=n, num_perm=num_perm, bands=bands,
+        scrubbed, "id", "text", num_perm=num_perm, bands=bands,
         shingle_mode=shingle_mode,
     ).localCheckpoint()
     # pairs feed THREE consumers (both vs-stored semi-join arms and the
@@ -205,7 +202,6 @@ def curate_increment(
     pairs = incremental_verified_pairs(
         new_banded, minhash_store,
         threshold_pct=jaccard_threshold_pct,
-        max_bucket_size=max_bucket_size,
     ).select("id_a", "id_b").localCheckpoint()
 
     # any new doc paired with a STORED doc loses to the stored canonical

@@ -40,7 +40,7 @@ from ..functions.idents import (
     project_id,
     visit_id,
 )
-from ..operators.pivot import eav_pivot, split_by_column_values
+from ..operators.pivot import eav_pivot
 
 # Source tables never loaded to the warehouse (parser/xml.py:44-46).
 EXCLUDED_TABLES = (
@@ -466,11 +466,11 @@ class FFIPipeline:
         a single unit system drops the column. ``units`` is the
         already-collected unit list, so the split runs no Spark job."""
         table_name = method_table_name(method)
-        units = split_by_column_values(wide, "Method_UnitSystem", units)
         if len(units) > 1:
-            for unit, df in units.items():
-                if not drop_unit_when_multi:
-                    df = wide.filter(F.col("Method_UnitSystem") == unit)
+            for unit in units:
+                df = wide.filter(F.col("Method_UnitSystem") == unit)
+                if drop_unit_when_multi:
+                    df = df.drop("Method_UnitSystem")
                 name = (
                     f"{table_name}_{suffix}"
                     if unit == "English"

@@ -412,7 +412,7 @@ def _ivfpq_rr_arm(
 
 def _store_arm(
     spark: SparkSession, e: DataFrame, cb: DataFrame, codes: DataFrame,
-    cents: DataFrame, cells: DataFrame, index_dir: str | None = None,
+    cents: DataFrame, cells: DataFrame,
 ) -> DataFrame:
     """The PERSISTED index serving path (operators/annstore.py, gated
     r11 — judge r10 item 1): write the pack's fixed literal artifacts +
@@ -427,18 +427,15 @@ def _store_arm(
     by the row-for-row equality + PartitionFilters plan tests in
     tests/test_annstore.py.
 
-    The index lands in a caller-supplied ``index_dir`` (tests: plan
-    introspection on a surviving store) or a self-cleaned temp dir; the
-    result is MATERIALIZED (eager localCheckpoint) before the temp
-    cleanup so the returned frame never references deleted files."""
+    The index lands in a self-cleaned temp dir; the result is
+    MATERIALIZED (eager localCheckpoint) before the temp cleanup so the
+    returned frame never references deleted files."""
     import shutil
     import tempfile
 
     from ..operators.annstore import ann_index_search, write_ann_index
 
-    own = index_dir is None
-    if own:
-        index_dir = tempfile.mkdtemp(prefix="annpack_store_")
+    index_dir = tempfile.mkdtemp(prefix="annpack_store_")
     try:
         write_ann_index(
             index_dir, cents, cb, codes.join(cells, "id"),
@@ -456,8 +453,7 @@ def _store_arm(
             F.col("rnk").cast("int").alias("rnk"),
         ).localCheckpoint(eager=True)
     finally:
-        if own:
-            shutil.rmtree(index_dir, ignore_errors=True)
+        shutil.rmtree(index_dir, ignore_errors=True)
 
 
 def _pq_arm(
@@ -491,10 +487,9 @@ def _pcasem_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = red.select(F.col("vec_id").alias("id"), cell.alias("cell"))
     pairs = semdedup_pairs(
         red,
-        dim=PCA_K,
+        cells,
         threshold=PCASEM_THRESHOLD,
         vec_col="reduced",
-        cells=cells,
     )
     return pairs.select(
         F.lit("pcasem").alias("kind"),

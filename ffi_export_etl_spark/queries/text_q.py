@@ -358,7 +358,7 @@ def text_langfp_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("wfp_md5"),
     )
-    pairs = winnow_overlap_pairs(raw, min_shared=1, fingerprints=wfull)
+    pairs = winnow_overlap_pairs(wfull, min_shared=1)
     partners = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
@@ -438,24 +438,19 @@ QUERIES = {
 _DUCK_TOKS = "regexp_split_to_array(text, '\\s+')"
 
 
-def span_dedup_sql(
-    rel: str = "documents",
-    id_col: str = "doc_id",
-    span_tokens: int | None = None,
-) -> str:
+def span_dedup_sql(id_col: str = "doc_id") -> str:
     """DuckDB CTE chain replaying operators/spandedup.py exactly: the
     same overlapping-window md5 digests, the (min id, min pos) keeper
     rule via row_number, covered-index sets, and index-filter rebuild.
     Ends with ``sclean(id, text, n_removed_tokens, n_dup_windows)``.
-    ``span_tokens`` defaults to the operator's own DEFAULT_SPAN_TOKENS
-    so the gate's oracle can never drift from the Spark twin."""
-    from ..operators.spandedup import DEFAULT_SPAN_TOKENS
+    Windows are the operator's own DEFAULT_SPAN_TOKENS wide, so the
+    gate's oracle can never drift from the Spark twin."""
+    from ..operators.spandedup import DEFAULT_SPAN_TOKENS as L
 
-    L = DEFAULT_SPAN_TOKENS if span_tokens is None else span_tokens
     return f"""
     sdt AS (SELECT {id_col} AS id, text AS orig_text,
                    regexp_split_to_array(text, '\\s+') AS tk
-            FROM {rel}),
+            FROM documents),
     sw AS (SELECT id, i AS pos,
                   md5(array_to_string(tk[i : i + {L - 1}], ' ')) AS whash
            FROM sdt,
@@ -489,7 +484,7 @@ def span_dedup_sql(
                FROM sdt d LEFT JOIN scut c USING (id))"""
 
 
-def winnow_sql(rel: str = "documents", id_col: str = "doc_id") -> str:
+def winnow_sql(id_col: str = "doc_id") -> str:
     """DuckDB CTE chain replaying operators/fingerprints.py exactly at
     the operator's own defaults: the same k-gram md5_long hashes,
     rightmost-tie-irrelevant window minima as a sorted distinct set
@@ -509,7 +504,7 @@ def winnow_sql(rel: str = "documents", id_col: str = "doc_id") -> str:
     )
     return f"""
     wt AS (SELECT {id_col} AS id, regexp_split_to_array(text, '\\s+') AS tk
-           FROM {rel}),
+           FROM documents),
     wg AS (SELECT id,
                   CASE WHEN len(tk) >= {k}
                        THEN list_transform(

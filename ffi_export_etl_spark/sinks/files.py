@@ -56,7 +56,11 @@ def parquet_upsert(
     from pyspark.sql import Observation
     from pyspark.sql.types import StructType
 
-    if os.path.isdir(target_dir) and any(
+    # a compact_warehouse that died between its two renames leaves the
+    # table under its staging name: put it back before reading the keys,
+    # or this batch lands as a whole new table and the next fold's
+    # repair deletes the real history
+    if _repair_dir(target_dir) and any(
         f.endswith(".parquet") for f in os.listdir(target_dir)
     ):
         existing = spark.read.schema(

@@ -4,7 +4,7 @@ into the file layout a training job actually consumes.
 Requirements that make this more than ``df.write.parquet``:
 - DETERMINISTIC GLOBAL ORDER: data loaders stream shards in filename
   order; the example sequence must be reproducible run-to-run, so rows
-  are ordered by the salted key hash (operators/sampling.
+  are ordered by the key hash (operators/sampling.
   deterministic_shuffle — a range-partitioned sort, no single-partition
   bottleneck) and shard N's every row precedes shard N+1's.
 - BOUNDED SHARD SIZE: loaders want uniform ~file sizes; rows_per_shard
@@ -41,44 +41,30 @@ def write_training_shards(
     path: str,
     key_col: str,
     rows_per_shard: int = 100_000,
-    salt: str = "",
-    num_partitions: int | None = None,
     data_format: str = "parquet",
     checksums: bool = False,
-    order_col: str | None = None,
     shuffle_key=None,
-    compression: str | None = None,
 ) -> DataFrame:
     """Write ``df`` as ordered training shards under ``path``; returns
     the manifest DataFrame (file, n_rows, first_key, last_key — in
     stream order) after writing it to ``path + '/_manifest'``.
 
-    ``num_partitions`` sizes the range partitions explicitly; the
-    default keeps Spark's ``spark.sql.shuffle.partitions`` (counting the
-    corpus to derive it would cost an extra scan) and lets
-    maxRecordsPerFile bound rows within each partition.
+    The range partitions follow Spark's ``spark.sql.shuffle.partitions``
+    (counting the corpus to derive a count would cost an extra scan);
+    maxRecordsPerFile bounds rows within each partition.
 
     ``data_format`` selects the shard file format — ``parquet`` or
     ``orc`` (both Spark-native vectorized readers; maxRecordsPerFile
     and the within-partition physical order work identically) or
     ``jsonl`` (line-delimited JSON, the layout most LLM training
-    loaders stream; pair with ``compression="gzip"`` for the usual
-    .jsonl.gz shards). The manifest is ALWAYS parquet: it is a
+    loaders stream). The manifest is ALWAYS parquet: it is a
     control-plane artifact the loader reads driver-side, not training
     data. jsonl semantics: the sink's own read-back (manifest ranges,
     digests) uses schema INFERENCE over the written bytes — write-time
     and verify-time digests read identically, so integrity checks stay
     self-consistent — and per JSON-lines convention null fields are
     omitted row-wise, so an all-null column does not survive a round
-    trip. ``compression`` passes through to the writer for any format
-    (e.g. ``zstd`` parquet, ``gzip`` jsonl).
-
-    ``order_col`` switches the stream order from the deterministic
-    shuffle to CURRICULUM order: ascending ``order_col`` (e.g. a
-    quality or difficulty score), ties broken by the salted key hash
-    then the key — still a sampled range-partitioned total sort, still
-    reproducible. The default (None) remains the hash shuffle: training
-    normally wants decorrelated order, curriculum runs opt in.
+    trip.
 
     ``shuffle_key`` (optional computed Column) orders the stream in
     place of ``key_col``'s hash WITHOUT being written to the shards —
@@ -102,27 +88,14 @@ def write_training_shards(
             f"data_format must be one of {FORMATS}, got {data_format!r}"
         )
     skey = shuffle_key if shuffle_key is not None else key_col
-    if order_col is not None:
-        h0 = _key_hash(skey, salt)
-        if num_partitions is not None:
-            ordered = df.repartitionByRange(
-                num_partitions, F.col(order_col), h0, F.col(key_col)
-            ).sortWithinPartitions(F.col(order_col), h0, F.col(key_col))
-        else:
-            ordered = df.orderBy(F.col(order_col), h0, F.col(key_col))
-    else:
-        ordered = deterministic_shuffle(
-            df, skey, salt=salt, num_partitions=num_partitions
-        )
     fmt = _SPARK_FMT.get(data_format, data_format)
-    writer = (
-        ordered.write.mode("overwrite")
+    (
+        deterministic_shuffle(df, skey)
+        .write.mode("overwrite")
         .option("maxRecordsPerFile", rows_per_shard)
         .format(fmt)
+        .save(path)
     )
-    if compression is not None:
-        writer = writer.option("compression", compression)
-    writer.save(path)
     spark = df.sparkSession
     written = spark.read.format(fmt).load(path)
     files = sorted(written.inputFiles())
@@ -134,25 +107,18 @@ def write_training_shards(
     )
     if manifest is None:
         # non-pyarrow-reachable store: fall back to one distributed scan.
-        # first/last IN STREAM ORDER = min/max along whatever axis the
-        # sort used (hash shuffle — of the computed shuffle_key when
-        # given — or curriculum (order, hash, key)), not the raw key
-        # ordering. A shuffle_key Column must therefore be computable
+        # first/last IN STREAM ORDER = min/max along the hash-shuffle
+        # axis (of the computed shuffle_key when given), not the raw
+        # key ordering. A shuffle_key Column must therefore be computable
         # from the WRITTEN columns (it is: it exists to avoid writing a
         # derived copy of them).
-        h = _key_hash(skey, salt)
-        ord_expr = (
-            F.struct(F.col(order_col), h, F.col(key_col))
-            if order_col is not None
-            else h
-        )
         manifest = (
             written.select(
                 F.element_at(
                     F.split(F.input_file_name(), "/"), -1
                 ).alias("file"),
                 F.col(key_col).alias("_k"),
-                ord_expr.alias("_o"),
+                _key_hash(skey, "").alias("_o"),
             )
             .groupBy("file")
             .agg(

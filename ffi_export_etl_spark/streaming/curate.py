@@ -85,7 +85,6 @@ def streaming_curate(
     on_existing_store: str = "replay",
     span_store_path: str | None = None,
     kept_compact_every: int | None = None,
-    kept_files_per_generation: int = 4,
     input_suite=None,
     quarantine_path: str | None = None,
     profile_store_path: str | None = None,
@@ -114,8 +113,8 @@ def streaming_curate(
     appended like the other store deltas.
 
     ``kept_compact_every``: every N batches, fold the kept corpus's
-    committed batch dirs into one generation (file count stays
-    O(kept_files_per_generation + N), not O(total batches)).
+    committed batch dirs into one generation of 4 files (file count
+    stays O(N), not O(total batches)).
 
     ``input_suite`` (operators/validate.CheckSuite): per-batch quality
     gate, run on each micro-batch BEFORE any curation or store work
@@ -207,7 +206,7 @@ def streaming_curate(
                         compact_generations(
                             bs,
                             quarantine_path,
-                            num_files=kept_files_per_generation,
+                            num_files=4,
                             before_batch=cur_slot,
                         )
                 return
@@ -216,16 +215,15 @@ def streaming_curate(
         mh_like = minhash_signature_store_with_sigs(
             batch, id_col, text_col,
             shingle_mode=curate_kw.get("shingle_mode", "word"),
-            n=curate_kw.get("n"),
         )
-        span_kw = {}
+        span_store = None
         if span_store_path is not None:
             from ..operators.spandedup import span_digest_store
 
             span_like = span_digest_store(
                 batch, id_col, text_col, span_tokens
             )
-            span_kw["span_store"] = _read_store(
+            span_store = _read_store(
                 bs, span_store_path, span_like,
                 before_batch=bases[span_store_path] + batch_id,
             )
@@ -241,8 +239,8 @@ def streaming_curate(
             id_col=id_col,
             text_col=text_col,
             source_col=source_col,
+            span_store=span_store,
             funnel=funnel_stages,
-            **span_kw,
             **curate_kw,
         )
         sinks = [
@@ -303,7 +301,7 @@ def streaming_curate(
             compact_generations(
                 bs,
                 kept_path,
-                num_files=kept_files_per_generation,
+                num_files=4,
                 before_batch=bases[kept_path] + batch_id,
             )
 
@@ -334,9 +332,7 @@ def replay_quarantine(
     source_col: str = "source",
     span_store_path: str | None = None,
     kept_compact_every: int | None = None,
-    kept_files_per_generation: int = 4,
     profile_store_path: str | None = None,
-    funnel_store_path: str | None = None,
     dry_run: bool = False,
     **curate_kw,
 ) -> dict:
@@ -479,9 +475,7 @@ def replay_quarantine(
             on_existing_store="continue",
             span_store_path=span_store_path,
             kept_compact_every=kept_compact_every,
-            kept_files_per_generation=kept_files_per_generation,
             profile_store_path=profile_store_path,
-            funnel_store_path=funnel_store_path,
             **curate_kw,
         )
         # processed file names live in the checkpoint's source log;

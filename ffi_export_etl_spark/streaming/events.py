@@ -334,7 +334,6 @@ def interval_join_streams(
     key: str = "user_id",
     bound: str = "30 minutes",
     watermark: str = "30 minutes",
-    how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream interval join — enrichment-at-ingest
     (e.g. clicks joined to the purchases that follow them within
@@ -352,11 +351,7 @@ def interval_join_streams(
     watermark+bound horizon), never the stream prefix. Without the time
     bound the state would be unbounded (Spark would accept the query
     and grow until OOM — the silent failure mode this helper exists to
-    prevent). Inner matches emit as soon as both rows have arrived;
-    outer-side NULL extensions (how='leftOuter'/'rightOuter') emit only
-    once the watermark CLOSES the row's join window, one micro-batch
-    late — the same advance-at-batch-boundary rule the sliding-window
-    arm pins (see stage_with_late_filler)."""
+    prevent). Matches emit as soon as both rows have arrived."""
     l = left.withWatermark("ts_micro", watermark).alias("l")
     r = right.withWatermark("ts_micro", watermark).alias("r")
     cond = (
@@ -367,7 +362,7 @@ def interval_join_streams(
             <= F.col("l.ts_micro") + F.expr(f"INTERVAL {bound}")
         )
     )
-    return l.join(r, cond, how)
+    return l.join(r, cond)
 
 
 def run_to_completion(

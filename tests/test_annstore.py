@@ -18,6 +18,7 @@ from ffi_export_etl_spark.operators.annstore import (
     ann_index_search,
     build_ann_index,
     read_ann_index_meta,
+    write_ann_index,
 )
 from ffi_export_etl_spark.operators.pq import ivfpq_topk, pq_encode
 
@@ -163,6 +164,12 @@ def test_meta_guards(spark, index_fix, tmp_path):
         json.dump({"version": 999}, f)
     with pytest.raises(ValueError, match="version"):
         read_ann_index_meta(bad)
+    # an index written at another rounding is refused, not searched off
+    # its grid
+    with open(os.path.join(bad, "_meta.json"), "w") as f:
+        json.dump({**meta, "round_digits": 4}, f)
+    with pytest.raises(ValueError, match="round_digits"):
+        read_ann_index_meta(bad)
 
 
 @pytest.mark.slow_tail  # r12 suite split
@@ -259,41 +266,6 @@ def test_ann_index_cli_roundtrip(spark, tmp_path, capsys):
     assert spark.read.parquet(out_dir).count() == len(hits)
 
 
-def test_include_self_lets_a_corpus_id_query_retrieve_itself(
-    spark, index_fix
-):
-    """Judge r10 item 2: the family's self-pair cut (the near-dup
-    convention) means a RETRIEVAL caller probing with corpus ids never
-    gets the query's own row back. include_self=True is the explicit
-    retrieval switch: the stored vector queried by its own id comes
-    back (its ADC distance is just its quantization error); the default
-    stays exclusionary so every dedup caller and oracle hash is
-    untouched."""
-    vecs, df, _queries, index_dir, _meta = index_fix
-    some_id = sorted(vecs)[0]
-    self_q = df.filter(F.col("vec_id") == some_id).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    default = ann_index_search(spark, index_dir, self_q, k=10, nprobe=3)
-    assert (
-        default.filter(F.col("nbr_id") == some_id).count() == 0
-    )  # dedup convention preserved
-    incl = ann_index_search(
-        spark, index_dir, self_q, k=10, nprobe=3, include_self=True
-    )
-    rows = {r["nbr_id"]: r for r in incl.collect()}
-    assert some_id in rows  # retrieval semantics: you can find yourself
-    # the flag only ADDS the self candidate — every other retrieved row
-    # was already in the default result (the self hit displaces at most
-    # the old rank-k row), with ranks shifted by at most one
-    default_ids = {r["nbr_id"]: r["rnk"] for r in default.collect()}
-    non_self = {i: r["rnk"] for i, r in rows.items() if i != some_id}
-    assert set(non_self) <= set(default_ids)
-    assert len(non_self) >= len(rows) - 1
-    for i, rnk in non_self.items():
-        assert rnk - default_ids[i] in (0, 1)
-
-
 def test_gated_store_arm_matches_ivfpq_and_prunes(spark, tmp_path):
     """The r11 driver-gated 'store' arm (ann_pq_pack): built over the
     pack's literal artifacts it must (a) reproduce the 'ivfpq' arm row
@@ -303,7 +275,11 @@ def test_gated_store_arm_matches_ivfpq_and_prunes(spark, tmp_path):
     the codes scan (the 100 TB contract, extended to the gated arm per
     the r10 verdict)."""
     from ffi_export_etl_spark.queries.similarity_q import (
+        DIM,
+        IVFPQ_CELLS,
         IVFPQ_NPROBE,
+        PQ_K,
+        PQ_M,
         TOPK,
         _ivfpq_arm,
         _ivfpq_coarse,
@@ -321,15 +297,17 @@ def test_gated_store_arm_matches_ivfpq_and_prunes(spark, tmp_path):
     cents, cells = _ivfpq_coarse(spark, e)
     index_dir = str(tmp_path / "packidx")
 
-    got = _store_arm(
-        spark, e, cb, codes, cents, cells, index_dir=index_dir
-    ).collect()
+    got = _store_arm(spark, e, cb, codes, cents, cells).collect()
     want = _ivfpq_arm(spark, e, cb, codes, cents, cells).collect()
     retag = sorted(str(r.asDict() | {"kind": "store"}) for r in want)
     assert sorted(str(r.asDict()) for r in got) == retag and got
 
-    # caller-supplied dir survives the arm -> plan introspection on the
-    # exact store the gate searched
+    # the arm cleans its own index up: write the same store here for
+    # plan introspection on the search the gate runs
+    write_ann_index(
+        index_dir, cents, cb, codes.join(cells, "id"),
+        dim=DIM, coarse_k=IVFPQ_CELLS, m=PQ_M, pq_k=PQ_K,
+    )
     out = ann_index_search(
         spark, index_dir, _queries_df(e), k=TOPK, nprobe=IVFPQ_NPROBE
     )

@@ -58,10 +58,7 @@ def test_curate_increment_two_days(spark):
         ],
         "doc_id: long, source: string, text: string",
     )
-    out = curate_increment(
-        day1, exact_store, minhash_store, min_words=5,
-        max_bucket_size=None,
-    )
+    out = curate_increment(day1, exact_store, minhash_store, min_words=5)
     kept_ids = sorted(r["id"] for r in out["kept"].collect())
     assert kept_ids == [12, 14]
     assert sorted(
@@ -83,7 +80,7 @@ def test_curate_increment_two_days(spark):
         "doc_id: long, source: string, text: string",
     )
     out2 = curate_increment(
-        day2, exact2, minhash2, min_words=5, max_bucket_size=None
+        day2, exact2, minhash2, min_words=5
     )
     assert sorted(r["id"] for r in out2["kept"].collect()) == [22]
 
@@ -95,7 +92,7 @@ def test_curate_increment_two_days(spark):
         "doc_id: long, source: string, text: string",
     )
     out3 = curate_increment(
-        day2b, exact2, minhash2, min_words=5, max_bucket_size=None
+        day2b, exact2, minhash2, min_words=5
     )
     # near-dup of stored keeper 12 via the shared 11-token prefix -> drop
     assert [r["id"] for r in out3["kept"].collect()] == []

@@ -139,7 +139,7 @@ def test_curate_documents_containment_decontamination(spark):
         ).collect()
     }
     assert kept_norm == {2}
-    # absolute rule at min_overlap default 1 also drops doc 1; at the
+    # absolute rule (any shared n-gram) also drops doc 1; at the
     # normalized 80% bar doc 1 survives (57% < 80)
     kept_high = {
         r["id"]
@@ -154,8 +154,12 @@ def test_curate_documents_containment_decontamination(spark):
 def test_persist_intermediates_equivalent(spark):
     """The persisted-boundary fast path must land the identical result
     as the pure-lazy plan (persist is a performance choice, never a
-    semantic one)."""
-    from ffi_export_etl_spark.plans.curation import curate_documents
+    semantic one): collecting the result again after its caches are
+    released recomputes every boundary from the source."""
+    from ffi_export_etl_spark.plans.curation import (
+        curate_documents,
+        release_curation_caches,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -164,13 +168,12 @@ def test_persist_intermediates_equivalent(spark):
         ],
         "doc_id: long, source: string, text: string",
     )
-    rows = lambda persist: {
-        tuple(r)
-        for r in curate_documents(
-            docs, min_words=5, persist_intermediates=persist
-        ).collect()
-    }
-    assert rows(True) == rows(False)
+    out = curate_documents(docs, min_words=5)
+    assert out._curation_persisted
+    cached = {tuple(r) for r in out.collect()}
+    release_curation_caches(out)
+    assert all(not df.is_cached for df in out._curation_persisted)
+    assert {tuple(r) for r in out.collect()} == cached
 
 
 def test_paragraph_dedup_stage(spark):

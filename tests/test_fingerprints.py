@@ -73,7 +73,9 @@ def test_winnowing_guarantee_and_overlap_report(spark):
     assert not (fps[1] & fps[3]) and not (fps[2] & fps[3])
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in winnow_overlap_pairs(docs, min_shared=1).collect()
+        for r in winnow_overlap_pairs(
+            winnow_fingerprints(docs), min_shared=1
+        ).collect()
     }
     assert pairs == {(1, 2)}
 
@@ -85,10 +87,9 @@ def test_bucket_cap_drops_boilerplate_hubs(spark):
     run = _words("h", W + K - 1)
     rows = [(i, f"{run} {_words(f'u{i}_', 10)}") for i in range(6)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    assert winnow_overlap_pairs(docs, min_shared=1).count() > 0
-    capped = winnow_overlap_pairs(
-        docs, min_shared=1, max_bucket_size=3
-    ).count()
+    fps = winnow_fingerprints(docs)
+    assert winnow_overlap_pairs(fps, min_shared=1).count() > 0
+    capped = winnow_overlap_pairs(fps, min_shared=1, max_bucket_size=3).count()
     assert capped == 0
 
 
@@ -101,7 +102,7 @@ def test_overlap_pairs_single_bucket_shuffle(spark):
         [(1, _words("a", 20)), (2, _words("a", 20))],
         "doc_id long, text string",
     )
-    df = winnow_overlap_pairs(docs, min_shared=1)
+    df = winnow_overlap_pairs(winnow_fingerprints(docs), min_shared=1)
     plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )

@@ -13,7 +13,10 @@ write's ``_SUCCESS`` marker is removed — and then checks that:
 - the re-run leaves the same rows and dirs as an uninterrupted fold,
   and a further fold changes nothing;
 - for the generation roots, the row count is the same before the fold,
-  after it, and from every reader.
+  after it, and from every reader;
+- for the flat table, a loader upsert between the crash and the re-run
+  (the ``*+upsert`` cases) reads the stored keys from the repaired
+  table and inserts only its new key, and the re-run keeps the history.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import shutil
 import pytest
 from pyspark.errors import AnalysisException
 
-from ffi_export_etl_spark.sinks.files import compact_warehouse
+from ffi_export_etl_spark.sinks.files import compact_warehouse, parquet_upsert
 from ffi_export_etl_spark.streaming.dedup import (
     _read_store,
     compact_signature_store,
@@ -199,6 +202,7 @@ def _wh_dirs(wh):
 
 
 def _warehouse_case(spark, monkeypatch, tmp_path, base, layout, fault):
+    fault, upsert = fault.removesuffix("+upsert"), fault.endswith("+upsert")
     table_name = "T" if layout == "flat" else "codes"
 
     def state(wh):
@@ -237,6 +241,17 @@ def _warehouse_case(spark, monkeypatch, tmp_path, base, layout, fault):
         _unsuccess(tmp)
         with open(os.path.join(tmp, "part-torn.parquet"), "wb") as f:
             f.write(b"not parquet")
+
+    if upsert:
+        # the next loader batch: key 0 is stored history, key 100 is new
+        batch = spark.createDataFrame(
+            [(0, "u0", 0), (100, "u100", 0)], "k int, v string, cell int"
+        )
+        assert parquet_upsert(spark, batch, table, ["k"]) == 1
+        compact_warehouse(spark, wh, min_files=2)
+        new_row = _rows(batch.filter("k = 100"))
+        assert _wh_rows(spark, table) == sorted(before + new_row)
+        return
 
     try:
         between = _wh_rows(spark, table)
@@ -297,6 +312,12 @@ CASES = [
         "renamed_to_old",
         "renamed_to_old_tmp_uncommitted",
         "old_not_removed",
+    )
+] + [
+    pytest.param("warehouse", "flat", fault, id=f"flat-{fault}")
+    for fault in (
+        "renamed_to_old+upsert",
+        "renamed_to_old_tmp_uncommitted+upsert",
     )
 ]
 

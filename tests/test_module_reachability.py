@@ -200,3 +200,243 @@ def test_every_package_def_is_reached_from_an_entry_point():
         f"{sorted(unreached - kept)}; "
         f"expected-unreached now reached: {sorted(kept - unreached)}"
     )
+
+
+# Defaulted parameters no caller outside tests ever sets, each kept on
+# purpose: "module:def(param)" (or "module:Class.method(param)") -> why
+# it stays. A reason is one of: (a) a reference implementation tests
+# compare against; (b) a check on outside input; (c) a test seam that
+# lets a small test reach a path production inputs reach only at scale
+# (the test is named); (d) the reference Load step not wired yet;
+# (e) the JDBC Load stack.
+KEPT_UNSET_PARAMS = {
+    "operators.components:connected_components(max_iter)":
+        "(a) min-label reference; tests/test_scale_ops.py caps it to show "
+        "the non-convergence raise",
+    "operators.similarity:cosine_pairs(threshold)":
+        "(a) exact all-pairs reference semdedup_pairs is checked against",
+    "operators.bpe:train_bpe_full(batch_candidates)":
+        "(a) batch_candidates=1 is the sequential reference trainer the "
+        "batched selection is checked against (tests/test_operators.py::"
+        "test_bpe_batched_equals_sequential_in_fewer_rounds)",
+    "operators.pivot:eav_pivot(strict)":
+        "(b) the pandas .pivot uniqueness assertion on the export's keys",
+    "operators.fingerprints:winnow_overlap_pairs(max_bucket_size)":
+        "(c) tests/test_fingerprints.py::"
+        "test_bucket_cap_drops_boilerplate_hubs",
+    "operators.sampling:stratified_take(prefilter_margin)":
+        "(c) tests/test_operators.py::test_stratified_take_exact_counts "
+        "forces the rescue path",
+    "operators.semdedup:semdedup_pairs(max_cell_size)":
+        "(c) tests/test_semdedup.py::test_cell_cap_skips_degenerate_cells",
+    "__main__:main(argv)":
+        "(c) tests/test_cli.py drives every subcommand in-process",
+    "session:get_spark(master)":
+        "(c) tests/conftest.py runs the suite on local[4]",
+    "plans.batch_driver:process_exports(maps)":
+        "(d) LoadMaps, the TableMap/FieldMap projection",
+    "plans.batch_driver:process_exports_batched(maps)":
+        "(d) LoadMaps, the TableMap/FieldMap projection",
+    "plans.batch_driver:process_exports_glob(maps)":
+        "(d) LoadMaps, the TableMap/FieldMap projection",
+    "sinks.jdbc_exec:dbapi_staging_writer(placeholder)": "(e)",
+    "sinks.jdbc_exec:jdbc_merge_loader(dialect)": "(e)",
+    "sinks.jdbc_exec:spark_staging_writer(mode)": "(e)",
+    "sources.jdbc:JdbcCatalog.__init__(properties)": "(e)",
+    "sources.jdbc:read_table(lower_bound)": "(e)",
+    "sources.jdbc:read_table(num_partitions)": "(e)",
+    "sources.jdbc:read_table(partition_column)": "(e)",
+    "sources.jdbc:read_table(upper_bound)": "(e)",
+}
+
+# The callers that count: the package itself, the driver contract, the
+# bench scripts and the benchmark workloads.
+_CALLER_FILES = ("__spark_entry__.py", "bench.py", "bench_ffi.py")
+
+
+def _schema_name(param: str) -> bool:
+    """Column and edge-endpoint names describe the caller's schema, not
+    behaviour, so the parameter census exempts them."""
+    return param.endswith("_col") or param in ("src", "dst")
+
+
+def _defaulted_params(fn, skip_self: bool):
+    """(param, positional index or None) for every parameter of ``fn``
+    with a default; the index counts from the first argument a caller
+    passes (``self``/``cls`` excluded)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [
+        (arg.arg, i - skip_self)
+        for i, arg in enumerate(pos)
+        if i >= first
+    ]
+    out += [
+        (arg.arg, None)
+        for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _param_census() -> tuple[int, set[str]]:
+    """(defaulted parameter count, the unset ones that are not schema
+    names) over top-level defs and methods of top-level classes.
+
+    A parameter is set when some call outside tests/ to a callable of
+    its def's name (a class's name for ``__init__``) passes it by
+    keyword, passes enough positional arguments to reach it, forwards
+    ``*args``, or forwards a ``**`` mapping known to hold its name (see
+    ``carried``). Passing on the caller's own parameter counts only
+    while that parameter is set. Nested closures are out of scope:
+    their defaults are late-binding captures."""
+    fn_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+    params = []  # (key, callable name, param, positional index)
+    # callable name -> [(call, the def whose body holds it, or None)]
+    calls: dict[str, list[tuple[ast.Call, ast.FunctionDef | None]]] = {}
+    helpers: dict[str, ast.FunctionDef] = {}
+    prefixes: dict[int, str] = {}  # id(package def) -> "module:qualname"
+    callers = [
+        (os.path.join(ROOT, f), None) for f in _CALLER_FILES
+    ] + sorted(
+        (os.path.join(ROOT, "etlbench", f), None)
+        for f in os.listdir(os.path.join(ROOT, "etlbench"))
+        if f.endswith(".py")
+    ) + [
+        (path, module.removeprefix(f"{PKG}."))
+        for module, path in _package_modules().items()
+    ]
+    for path, short in callers:
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        scopes = []  # (statement, def, callable name, qualname)
+        for stmt in tree.body:
+            if isinstance(stmt, fn_types):
+                helpers[stmt.name] = stmt
+                scopes.append((stmt, stmt, stmt.name, stmt.name))
+            elif isinstance(stmt, ast.ClassDef):
+                scopes += [
+                    (m, m, stmt.name if m.name == "__init__" else m.name,
+                     f"{stmt.name}.{m.name}")
+                    if isinstance(m, fn_types) else (m, None, None, None)
+                    for m in stmt.body
+                ]
+            else:
+                scopes.append((stmt, None, None, None))
+        for top, fn, name, qual in scopes:
+            if short is not None and fn is not None:
+                prefixes[id(fn)] = f"{short}:{qual}"
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in fn.decorator_list
+                )
+                params += [
+                    (f"{short}:{qual}({p})", name, p, i)
+                    for p, i in _defaulted_params(
+                        fn, qual != name and not static
+                    )
+                ]
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                func = node.func
+                if isinstance(func, ast.Name):
+                    calls.setdefault(func.id, []).append((node, fn))
+                elif isinstance(func, ast.Attribute):
+                    calls.setdefault(func.attr, []).append((node, fn))
+
+    def carried(expr, enclosing, seen: frozenset = frozenset()) -> set[str]:
+        """The keys a ``**expr`` forward is known to carry: those of a
+        dict display or a ``dict(k=...)`` call, of the dict a helper def
+        returns, or, for the enclosing def's own ``**kwargs``, the keys
+        its callers put there. Any other mapping carries none, so it
+        cannot hide an unset knob."""
+        if isinstance(expr, ast.Dict):
+            return {
+                k.value for k in expr.keys
+                if isinstance(k, ast.Constant) and isinstance(k.value, str)
+            }
+        kwarg = enclosing.args.kwarg if enclosing is not None else None
+        if isinstance(expr, ast.Name) and kwarg and expr.id == kwarg.arg:
+            return forwarded_keys(enclosing, seen)
+        if not isinstance(expr, ast.Call):
+            return set()
+        func = expr.func
+        name = func.id if isinstance(func, ast.Name) else getattr(
+            func, "attr", None
+        )
+        if name == "dict":
+            return {k.arg for k in expr.keywords if k.arg is not None}
+        if name not in helpers or name in seen:
+            return set()
+        return set().union(*(
+            carried(r.value, None, seen | {name})
+            for r in ast.walk(helpers[name])
+            if isinstance(r, ast.Return) and r.value is not None
+        ))
+
+    def forwarded_keys(fn, seen: frozenset) -> set[str]:
+        """The keys callers of ``fn`` pass into its ``**kwargs``."""
+        if fn.name in seen:
+            return set()
+        a = fn.args
+        named = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        keys = set()
+        for c, enclosing in calls.get(fn.name, ()):
+            for k in c.keywords:
+                keys |= (
+                    {k.arg} if k.arg is not None
+                    else carried(k.value, enclosing, seen | {fn.name})
+                )
+        return keys - named
+
+    def passes(value, fn, unset: set[str]) -> bool:
+        """An argument sets the parameter unless it is the enclosing
+        def's own parameter passed through while that one is unset."""
+        prefix = prefixes.get(id(fn))
+        return not (
+            isinstance(value, ast.Name) and prefix is not None
+            and f"{prefix}({value.id})" in unset
+        )
+
+    def is_set(name, param, index, unset: set[str]) -> bool:
+        return any(
+            any(
+                (k.arg == param and passes(k.value, fn, unset))
+                or (k.arg is None and param in carried(k.value, fn))
+                for k in c.keywords
+            )
+            or any(isinstance(a, ast.Starred) for a in c.args)
+            or (
+                index is not None and len(c.args) > index
+                and passes(c.args[index], fn, unset)
+            )
+            for c, fn in calls.get(name, ())
+        )
+
+    # an unset parameter unsets what it is passed through to: grow the
+    # set until no pass-through changes it
+    unset: set[str] = set()
+    while True:
+        grown = {
+            key
+            for key, name, param, index in params
+            if not _schema_name(param)
+            and not is_set(name, param, index, unset)
+        }
+        if grown == unset:
+            break
+        unset = grown
+    return len(params), unset
+
+
+def test_every_default_parameter_is_set_by_a_caller():
+    _count, unset = _param_census()
+    kept = set(KEPT_UNSET_PARAMS)
+    assert unset == kept, (
+        "defaulted parameters no caller outside tests sets (delete the "
+        "knob and the branch behind it, or keep it in KEPT_UNSET_PARAMS "
+        f"with its reason): {sorted(unset - kept)}; "
+        f"kept but now set or gone: {sorted(kept - unset)}"
+    )

@@ -384,7 +384,7 @@ def test_ivfpq_rerank_full_stack(spark, pq_fix):
     queries = df.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=DIM, coarse_k=4, nprobe=2, m=M)
+    kw = dict(dim=DIM, nprobe=2, m=M)
     short = {
         (r["query_id"], r["nbr_id"])
         for r in ivfpq_topk(
@@ -465,47 +465,3 @@ def test_pq_codes_literal_equals_pq_encode(spark):
         r["id"]: list(r["codes"]) for r in _pq_codes_literal(e).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_pq_topk_include_self_retrieval_switch(spark):
-    """Judge r10 item 2 (pq family): with include_self=True a corpus-id
-    query CAN retrieve its own row — its ADC distance is exactly its
-    quantization error — while the default keeps the dedup convention
-    (self pair cut), so no oracle hash moves."""
-    vecs = _mkvecs(30)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs.items()],
-        "vec_id long, embedding array<double>",
-    )
-    cb = pq_train(df, DIM, m=M, k=K, iters=ITERS)
-    codes = pq_encode(df, cb, DIM, m=M)
-    self_q = df.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    default = pq_topk(codes, cb, self_q, k=5, dim=DIM, m=M).collect()
-    assert all(r["nbr_id"] != 0 for r in default)
-    incl = pq_topk(
-        codes, cb, self_q, k=5, dim=DIM, m=M, include_self=True
-    ).collect()
-    assert any(r["nbr_id"] == 0 for r in incl)
-
-
-def test_brute_force_include_self_is_rank_1(spark):
-    """Exact search with include_self=True must put the query's own row
-    at rank 1 with cosine 1.0 — the sanity anchor for the flag's
-    semantics across the approximate variants."""
-    from ffi_export_etl_spark.operators.similarity import brute_force_topk
-
-    vecs = _mkvecs(20)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs.items()],
-        "vec_id long, embedding array<double>",
-    )
-    q = df.filter(F.col("vec_id") == 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    default = brute_force_topk(df, q, k=5).collect()
-    assert all(r["nbr_id"] != 3 for r in default)
-    incl = brute_force_topk(df, q, k=5, include_self=True).collect()
-    top = next(r for r in incl if r["rnk"] == 1)
-    assert top["nbr_id"] == 3 and top["cos"] == 1.0

@@ -52,24 +52,6 @@ def test_parity_with_naive_join(spark, bin_width):
     assert n == len(got)
 
 
-def test_keyed_variant(spark):
-    f = spark.createDataFrame(
-        [(1, "a", 5), (2, "b", 5), (3, "a", 50)],
-        "fact_id int, key string, ts long",
-    )
-    iv = spark.createDataFrame(
-        [(100, "a", 0, 10), (101, "b", 0, 10)],
-        "iv_id int, key string, s long, e long",
-    )
-    got = {
-        (r[0], r[1])
-        for r in interval_join(f, iv, "ts", "s", "e", 4, key="key")
-        .select("fact_id", "iv_id")
-        .collect()
-    }
-    assert got == {(1, 100), (2, 101)}
-
-
 def test_rejects_bad_inputs(spark):
     f = spark.createDataFrame([(1, 0)], "fact_id int, ts long")
     iv = spark.createDataFrame([(1, 0, 5)], "fact_id int, s long, e long")

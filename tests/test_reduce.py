@@ -118,9 +118,7 @@ def test_pca_cells_compose_with_semdedup(spark):
     cells = lloyd_cells(
         red, dim=3, k=3, iters=2, id_col="vec_id", vec_col="reduced"
     )
-    pairs = semdedup_pairs(
-        df, dim=16, threshold=0.999, cells=cells
-    ).collect()
+    pairs = semdedup_pairs(df, cells, threshold=0.999).collect()
     assert any(
         (r["id_a"], r["id_b"]) == (0, 59) for r in pairs
     ), [tuple(r) for r in pairs]

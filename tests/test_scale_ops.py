@@ -39,7 +39,7 @@ def test_alternating_cc_solves_chain_in_log_rounds(spark):
     """large-star/small-star on a 1000-node chain: one component labeled
     0, within 30 rounds (actual ~10) — the documented O(log n) bound."""
     edges = _chain_edges(spark, 1000)
-    out = connected_components_alternating(edges, max_rounds=30)
+    out = connected_components_alternating(edges)
     rows = out.collect()
     assert len(rows) == 1000
     assert {r["component"] for r in rows} == {0}
@@ -105,10 +105,11 @@ def test_spread_skipped_on_many_file_scan(spark, tmp_path):
     many = str(tmp_path / "many")
     docs.coalesce(1).write.parquet(one)
     docs.repartition(32).write.parquet(many)
-    par = spark.sparkContext.defaultParallelism
+    # the suite's session runs local[4]: 32 files cover its parallelism
+    assert spark.sparkContext.defaultParallelism <= 32
 
     d_one, d_many = spark.read.parquet(one), spark.read.parquet(many)
-    assert spread_per_doc(d_many, "doc_id", min_partitions=min(par, 32)) is d_many
+    assert spread_per_doc(d_many, "doc_id") is d_many
     assert spread_per_doc(d_one, "doc_id") is not d_one
 
     plan = (

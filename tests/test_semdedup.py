@@ -8,7 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from ffi_export_etl_spark.operators.semdedup import semdedup_pairs
-from ffi_export_etl_spark.operators.similarity import cosine_pairs
+from ffi_export_etl_spark.operators.similarity import cosine_pairs, lloyd_cells
 
 DIM = 4
 
@@ -39,7 +39,9 @@ def test_semantic_dedup_planted_groups(spark):
     vecs = _corpus(spark)
     got = {
         (r["id_a"], r["id_b"])
-        for r in semdedup_pairs(vecs, DIM, k=4, threshold=0.999).collect()
+        for r in semdedup_pairs(
+            vecs, lloyd_cells(vecs, DIM, k=4), threshold=0.999
+        ).collect()
     }
     assert got == {
         (g * 10 + a, g * 10 + b)
@@ -55,7 +57,9 @@ def test_k1_equals_exact_all_pairs(spark):
     vecs = _corpus(spark)
     got = {
         (r["id_a"], r["id_b"], r["cos"])
-        for r in semdedup_pairs(vecs, DIM, k=1, threshold=0.99).collect()
+        for r in semdedup_pairs(
+            vecs, lloyd_cells(vecs, DIM, k=1), threshold=0.99
+        ).collect()
     }
     want = {
         (r["id_a"], r["id_b"], r["cos"])
@@ -70,7 +74,9 @@ def test_identical_vectors_share_a_cell(spark):
     can never be missed across a cluster boundary."""
     rows = [(i, [float(i % 5 == j) for j in range(5)]) for i in range(40)]
     vecs = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    cells = semdedup_pairs(vecs, 5, k=3, threshold=1.0).collect()
+    cells = semdedup_pairs(
+        vecs, lloyd_cells(vecs, 5, k=3), threshold=1.0
+    ).collect()
     pair_ids = {(r["id_a"], r["id_b"]) for r in cells}
     # identical vectors can never split across cells, so every pair of
     # the 8 exact copies of each of the 5 directions is found
@@ -82,7 +88,9 @@ def test_identical_vectors_share_a_cell(spark):
 def test_cell_cap_skips_degenerate_cells(spark):
     vecs = _corpus(spark)
     assert (
-        semdedup_pairs(vecs, DIM, k=1, threshold=0.5, max_cell_size=2).count()
+        semdedup_pairs(
+            vecs, lloyd_cells(vecs, DIM, k=1), threshold=0.5, max_cell_size=2
+        ).count()
         == 0
     )
 
@@ -99,7 +107,7 @@ def test_semdedup_pair_join_is_equi_on_cell(spark):
         "id: long, cell: int",
     )
     plan = (
-        semdedup_pairs(vecs, DIM, k=3, cells=cells)
+        semdedup_pairs(vecs, cells)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan

@@ -213,7 +213,7 @@ def test_write_training_shards_order_and_manifest(spark, tmp_path):
     )
     out = str(tmp_path / "shards")
     manifest = write_training_shards(
-        df, out, "doc_id", rows_per_shard=40, num_partitions=4
+        df, out, "doc_id", rows_per_shard=40
     ).collect()
 
     # shards stream back (filename order) as the exact shuffle order
@@ -244,7 +244,7 @@ def test_write_training_shards_order_and_manifest(spark, tmp_path):
     # rewrite is idempotent: same shard contents in the same stream
     # order (filenames carry a fresh job uuid, so compare content)
     manifest2 = write_training_shards(
-        df, out, "doc_id", rows_per_shard=40, num_partitions=4
+        df, out, "doc_id", rows_per_shard=40
     ).collect()
     content = lambda ms: [
         (m["n_rows"], m["first_key"], m["last_key"]) for m in ms
@@ -272,8 +272,7 @@ def test_write_training_shards_computed_shuffle_key(spark, tmp_path):
     )
     out = str(tmp_path / "shards_skey")
     manifest = write_training_shards(
-        df, out, "doc_id", rows_per_shard=32, num_partitions=4,
-        shuffle_key=skey,
+        df, out, "doc_id", rows_per_shard=32, shuffle_key=skey,
     ).collect()
 
     import glob as _glob
@@ -317,8 +316,7 @@ def test_write_training_shards_orc_format(spark, tmp_path):
     )
     out = str(tmp_path / "orc_shards")
     manifest = write_training_shards(
-        df, out, "doc_id", rows_per_shard=50, num_partitions=3,
-        data_format="orc",
+        df, out, "doc_id", rows_per_shard=50, data_format="orc",
     ).collect()
 
     import glob as _glob
@@ -413,29 +411,8 @@ def test_shard_checksums_and_verify(spark, tmp_path):
         verify_training_shards(spark, out2)
 
 
-def test_shard_curriculum_order(spark, tmp_path):
-    """order_col: shards stream in ascending score order (curriculum),
-    reproducibly; manifest key ranges reflect the curriculum axis."""
-    import glob
-
-    from ffi_export_etl_spark.sinks.shards import write_training_shards
-
-    rows = [(i, float((i * 37) % 100), f"doc {i}") for i in range(60)]
-    df = spark.createDataFrame(rows, "id long, score double, text string")
-    out = str(tmp_path / "cur_shards")
-    manifest = write_training_shards(
-        df, out, "id", rows_per_shard=10, order_col="score"
-    )
-    assert manifest.count() >= 2
-    seen = []
-    for f in sorted(glob.glob(out + "/part-*.parquet")):
-        seen += [r["score"] for r in spark.read.parquet(f).collect()]
-    assert len(seen) == 60
-    assert seen == sorted(seen)  # global nondecreasing curriculum
-
-
 def test_write_training_shards_jsonl_format(spark, tmp_path):
-    """data_format='jsonl' (+gzip): the layout most LLM training loaders
+    """data_format='jsonl': the layout most LLM training loaders
     stream — same deterministic stream order and manifest contract, the
     manifest coming from the distributed-scan path (no footers in
     JSON), and checksum verify self-consistent across the write-time
@@ -454,19 +431,18 @@ def test_write_training_shards_jsonl_format(spark, tmp_path):
     )
     out = str(tmp_path / "jsonl_shards")
     manifest = write_training_shards(
-        df, out, "doc_id", rows_per_shard=40, num_partitions=3,
-        data_format="jsonl", compression="gzip", checksums=True,
+        df, out, "doc_id", rows_per_shard=40,
+        data_format="jsonl", checksums=True,
     ).collect()
 
     import glob as _glob
-    import gzip as _gzip
 
-    files = sorted(_glob.glob(out + "/part-*.json.gz"))
+    files = sorted(_glob.glob(out + "/part-*.json"))
     assert len(files) == len(manifest) >= 4
-    # the shards ARE plain gzipped JSON lines a non-Spark loader can eat
+    # the shards ARE plain JSON lines a non-Spark loader can eat
     streamed = []
     for f in files:
-        with _gzip.open(f, "rt") as fh:
+        with open(f) as fh:
             rows = [_json.loads(line) for line in fh]
         assert len(rows) <= 40
         assert all(set(r) == {"doc_id", "text"} for r in rows)
@@ -485,9 +461,9 @@ def test_write_training_shards_jsonl_format(spark, tmp_path):
     assert rows and all(r["ok"] for r in rows)
     # corrupt one shard -> that entry (and only that entry) fails
     victim = files[0]
-    with _gzip.open(victim, "rt") as fh:
+    with open(victim) as fh:
         lines = fh.readlines()
-    with _gzip.open(victim, "wt") as fh:
+    with open(victim, "w") as fh:
         fh.writelines(lines[:-1])
     # drop Hadoop's local-FS .crc sidecar (see the parquet corruption
     # test: object stores have no sidecar; the manifest check is the

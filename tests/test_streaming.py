@@ -479,70 +479,6 @@ def test_interval_join_checkpoint_resume_exactly_once(spark, tmp_path):
 
 
 @pytest.mark.slow_tail  # r12 suite split
-def test_interval_join_left_outer_null_extension(spark, tmp_path):
-    """leftOuter stream-stream join: an unmatched left row emits its
-    NULL extension only once the watermark CLOSES its join window (one
-    micro-batch late, the advance-at-batch-boundary rule); matched rows
-    emit normally and never also emit a NULL row."""
-    from ffi_export_etl_spark.streaming.events import (
-        interval_join_streams,
-        run_to_completion,
-    )
-
-    left_src = tmp_path / "lo_left"
-    right_src = tmp_path / "lo_right"
-    left_src.mkdir()
-    right_src.mkdir()
-    base = 1_700_000_000_000_000
-    m = 60 * 10**6
-
-    # batch 0 — left: matched click k=1 at t=0, unmatched click k=2 at
-    # t=2min, open click k=3 at t=55min (window not closed by the final
-    # watermark -> must NOT null-emit); clock k=98 at 60min.
-    # right: match for k=1 at t=3min, clock k=99 at 60min.
-    _ssj_write_one(
-        spark, tmp_path, left_src, "a",
-        [(base, 1), (base + 2 * m, 2), (base + 55 * m, 3),
-         (base + 60 * m, 98)], 3600,
-    )
-    _ssj_write_one(
-        spark, tmp_path, right_src, "a",
-        [(base + 3 * m, 1), (base + 60 * m, 99)], 3600,
-    )
-    # batch 1 — fillers so the batch-0 watermark (60 - 10 = 50min)
-    # takes effect and closes k=1/k=2's windows (0..5min, 2..7min)
-    _ssj_write_one(spark, tmp_path, left_src, "b", [(base + 59 * m, 98)], 1800)
-    _ssj_write_one(spark, tmp_path, right_src, "b", [(base + 59 * m, 99)], 1800)
-
-    joined = interval_join_streams(
-        _ssj_stream(spark, left_src),
-        _ssj_stream(spark, right_src),
-        key="k",
-        bound="5 minutes",
-        watermark="10 minutes",
-        how="leftOuter",
-    ).select(
-        F.col("l.k").alias("k"),
-        F.col("l.ts").alias("l_ts"),
-        F.col("r.ts").alias("r_ts"),
-    )
-    rows = run_to_completion(joined, output_mode="append").collect()
-    got = {
-        (
-            r["k"],
-            (r["l_ts"] - base) // m,
-            None if r["r_ts"] is None else (r["r_ts"] - base) // m,
-        )
-        for r in rows
-        if r["k"] not in (98, 99)  # clocks null-emit once closed
-    }
-    # k=1 matched (no extra NULL row); k=2's closed window null-emits;
-    # k=3's window is still open at end of input -> withheld
-    assert got == {(1, 0, 3), (2, 2, None)}, got
-    assert len([r for r in rows if r["k"] == 1]) == 1
-
-
-@pytest.mark.slow_tail  # r12 suite split
 def test_interval_join_span_watermark_is_layout_independent(
     spark, tmp_path
 ):

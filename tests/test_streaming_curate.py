@@ -531,7 +531,6 @@ def test_quarantine_compaction_bounds_file_count(spark, tmp_path):
         input_suite=CheckSuite().unique("doc_id"),
         quarantine_path=quarantine,
         kept_compact_every=2,
-        kept_files_per_generation=1,
     )
     batch_dirs = glob.glob(os.path.join(quarantine, "batch_id=*"))
     gen_dirs = glob.glob(os.path.join(quarantine, "compacted=*"))

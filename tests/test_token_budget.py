@@ -24,15 +24,14 @@ def _docs(spark, sf_oracle):
 BUDGETS = {"src0": 700, "src1": 300, "src2": 0}
 
 
-def _spark_kept(spark, sf_oracle, budgets=BUDGETS, default=0, **kw):
+def _spark_kept(spark, sf_oracle, budgets=BUDGETS):
     out = token_budget_sample(
-        _docs(spark, sf_oracle), "doc_id", "source", "n_tok",
-        budgets, default_budget=default, **kw,
+        _docs(spark, sf_oracle), "doc_id", "source", "n_tok", budgets
     )
     return {r["doc_id"] for r in out.collect()}
 
 
-def _duck_kept(sf_oracle, budgets=BUDGETS, default=0):
+def _duck_kept(sf_oracle, budgets=BUDGETS):
     h = duck_md5_long(
         f"coalesce(CAST(doc_id AS VARCHAR), '{NULL_KEY_SENTINEL}')", 15
     )
@@ -58,7 +57,7 @@ def _duck_kept(sf_oracle, budgets=BUDGETS, default=0):
             FROM t
         )
         SELECT doc_id FROM c
-        WHERE cum_before < (CASE source {whens} ELSE {default} END)
+        WHERE cum_before < (CASE source {whens} ELSE 0 END)
     """).fetchall()
     return {r[0] for r in rows}
 
@@ -86,15 +85,17 @@ def test_budget_respected_with_bounded_overshoot(spark, sf_oracle):
 
 
 def test_budgets_nest(spark, sf_oracle):
-    small = _spark_kept(spark, sf_oracle, {"src0": 300}, default=0)
-    big = _spark_kept(spark, sf_oracle, {"src0": 1200}, default=0)
+    small = _spark_kept(spark, sf_oracle, {"src0": 300})
+    big = _spark_kept(spark, sf_oracle, {"src0": 1200})
     assert small <= big and len(small) < len(big)
 
 
 def test_block_count_invariance_and_partitioning(spark, sf_oracle):
+    """The block decomposition is exact: the kept set equals the
+    DuckDB single-window replay (no blocks at all) and does not move
+    with the input's partitioning."""
     base = _spark_kept(spark, sf_oracle)
-    few_blocks = _spark_kept(spark, sf_oracle, hash_block_bits=2)
-    assert base == few_blocks
+    assert base == _duck_kept(sf_oracle)
     docs = _docs(spark, sf_oracle).repartition(13)
     repart = {
         r["doc_id"]
@@ -108,12 +109,14 @@ def test_block_count_invariance_and_partitioning(spark, sf_oracle):
 def test_curation_pipeline_with_budgets(spark, sf_oracle):
     """curate_documents(token_budgets=...) bounds each source's output
     tokens (by the effective n_words measure) with one-doc overshoot."""
-    from ffi_export_etl_spark.plans.curation import curate_documents
+    from ffi_export_etl_spark.plans.curation import (
+        curate_documents,
+        release_curation_caches,
+    )
 
     docs = load_table(spark, sf_oracle, "documents")
     out = curate_documents(
-        docs, min_words=5, token_budgets={"src0": 300, "src1": 150},
-        persist_intermediates=False,
+        docs, min_words=5, token_budgets={"src0": 300, "src1": 150}
     )
     stats = {
         r["source"]: (r["tot"], r["mx"])
@@ -121,27 +124,19 @@ def test_curation_pipeline_with_budgets(spark, sf_oracle):
         .agg(F.sum("n_words").alias("tot"), F.max("n_words").alias("mx"))
         .collect()
     }
+    release_curation_caches(out)
     assert set(stats) <= {"src0", "src1"} and stats
     for src, (tot, mx) in stats.items():
         assert tot - mx < {"src0": 300, "src1": 150}[src]
 
 
 def test_null_group_budgets_at_default(spark):
-    """NULL-group rows must not silently vanish (the offsets equi-join
-    is null-rejecting without the sentinel): they budget at
-    default_budget like any other unnamed source."""
+    """NULL-group rows keep nothing, like any other source without a
+    budget, and a named group beside them keeps its own budget."""
     docs = spark.createDataFrame(
         [(1, None, 5), (2, None, 5), (3, "web", 5)],
         "doc_id: long, source: string, n_tok: long",
     )
-    kept_all = {
-        r["doc_id"]
-        for r in token_budget_sample(
-            docs, "doc_id", "source", "n_tok", {"web": 100},
-            default_budget=10**6,
-        ).collect()
-    }
-    assert kept_all == {1, 2, 3}
     kept_none = {
         r["doc_id"]
         for r in token_budget_sample(
@@ -152,10 +147,8 @@ def test_null_group_budgets_at_default(spark):
 
 
 def test_default_budget_and_validation(spark, sf_oracle):
-    everything = _spark_kept(spark, sf_oracle, {}, default=10**12)
-    assert everything == {
-        r["doc_id"] for r in _docs(spark, sf_oracle).collect()
-    }
+    # no budgets: every source is unnamed and budgets at 0
+    assert _spark_kept(spark, sf_oracle, {}) == set()
     with pytest.raises(ValueError, match=">= 0"):
         token_budget_sample(
             _docs(spark, sf_oracle), "doc_id", "source", "n_tok",

@@ -161,8 +161,3 @@ def test_bare_ref_param_is_a_resource_selector(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, url string")
     assert dedup_by_url(docs).count() == 2
-    # callers who KNOW ref is a tracker on their corpus can widen it
-    wide = dedup_by_url(
-        docs, tracking_param_re=r"^(utm_[a-z]+|gclid|fbclid|ref)="
-    )
-    assert sorted(r["doc_id"] for r in wide.collect()) == [1]

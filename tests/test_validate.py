@@ -77,12 +77,12 @@ def test_satisfies_and_thresholds(spark):
         CheckSuite()
         .satisfies("len_consistent", F.col("n") == F.length("text"),
                    column="n")
-        .satisfies("len_tolerant", F.col("n") == F.length("text"),
-                   column="n", max_violations=1),
+        .satisfies("n_positive", F.col("n") > 0, column="n"),
     )
     assert rep["len_consistent"]["n_violations"] == 1
-    assert not rep["len_consistent"]["passed"]
-    assert rep["len_tolerant"]["passed"]  # 1 violation allowed
+    assert rep["len_consistent"]["threshold"] == 0
+    assert not rep["len_consistent"]["passed"]  # no violation allowed
+    assert rep["n_positive"]["passed"]
 
 
 def test_empty_frame_and_empty_suite(spark):
